@@ -13,14 +13,25 @@ on this host the allocation storm makes the exchange anti-scale (4.8 s at
 local[4] → 36.7 s at local[32] for a pass-through).  The Arrow path reads
 the list column's flat values buffer zero-copy — one numpy view per batch.
 
+Every partial build — JVM-fed, native parquet scan, pre-aggregated,
+changelog — runs through ONE fold core (``_fold_fn``): fold an Arrow batch
+iterator into ``sketch.empty()`` with a per-batch step, emit the single
+(partition_id, n_items, state) row.  Every grouped build runs through one
+phase 1 (``_grouped_phase1_fn``) and one phase 2 (``_merge_grouped``).  What
+a sketch IS — whether its state is a pure function of the input multiset,
+how it takes weights, how long its params header is — is declared on the
+sketch class (sketches/base.py); the operators route on those declarations,
+never on kind names.
+
 ``build_sketch_preagg`` is the second scale lever: for draws from a modest
 key domain (tokens from a ~50k vocab), a JVM-side partial aggregation
 (explode → groupBy(key).count(), Tungsten hash agg with map-side combine)
 collapses the stream BEFORE it ever reaches Python — the Python workers see
 only (distinct key, weight) pairs (~50k/partition instead of millions), and
-weighted updates preserve exactness for Bloom/HLL (weight-insensitive) and
-CMS/t-digest (weight-additive).  For high-cardinality keys the direct path
-wins (no shuffle at all); the choice is a flag, not a heuristic.
+``update_weighted`` preserves exactness for every sketch whose
+``weight_mode`` is "insensitive" or "additive".  For high-cardinality keys
+the direct path wins (no shuffle at all); the choice is a flag, not a
+heuristic.
 
 Grouped builds ("one sketch per source") are the skew-prone case — the
 fixture's zipfian source weights put 45% of rows in one group.  The north
@@ -80,7 +91,6 @@ def _update(sketch, state, values, value_kind: str) -> int:
 
 def _arrow_values(col, value_kind: str):
     """Arrow column → flat numpy values + n (zero-copy where possible)."""
-    import pyarrow as pa
     if value_kind == "i32_array":
         # list<int32>: drop nulls, then read the flat values buffer directly
         if col.null_count:
@@ -96,6 +106,56 @@ def _arrow_values(col, value_kind: str):
         buf = arrow_strbuf(col)
         return buf if buf is not None else col.to_pylist()
     return col.to_numpy(zero_copy_only=False)
+
+
+def _elem_kind(value_kind: str) -> str:
+    return "i32" if value_kind == "i32_array" else value_kind
+
+
+def _fold_fn(sketch, step):
+    """The one fold core of every partial build → a ``mapInArrow`` function
+    folding its Arrow batch iterator into ``sketch.empty()`` and yielding the
+    single (partition_id, n_items, state) batch.  ``step(state, batch)``
+    folds one batch and returns how many items it ingested."""
+
+    def partial_fn(batches):
+        import pyarrow as pa
+        state = sketch.empty()
+        n = 0
+        for b in batches:
+            n += step(state, b)
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else 0
+        yield pa.RecordBatch.from_pydict({
+            "partition_id": pa.array([pid], pa.int64()),
+            "n_items": pa.array([n], pa.int64()),
+            "state": pa.array([sketch.serialize(state)], pa.binary()),
+        })
+
+    return partial_fn
+
+
+def _plain_step(sketch, value_kind: str):
+    """Fold step: unweighted update from column 0."""
+    elem_kind = _elem_kind(value_kind)
+
+    def step(state, b):
+        return _update(sketch, state, _arrow_values(b.column(0), value_kind),
+                       elem_kind)
+    return step
+
+
+def _weighted_step(sketch, elem_kind: str):
+    """Fold step: (distinct value, count) rows → ``update_weighted``;
+    n_items is the total weight (every ingested item)."""
+
+    def step(state, b):
+        vals = _arrow_values(b.column(0), elem_kind)
+        w = b.column(1).to_numpy(zero_copy_only=False)
+        if len(vals):
+            sketch.update_weighted(state, vals, w, elem_kind)
+        return int(w.sum())
+    return step
 
 
 def _bound_state_volume(sel: DataFrame, sketch) -> DataFrame:
@@ -126,16 +186,6 @@ def _bound_state_volume(sel: DataFrame, sketch) -> DataFrame:
         if slots < p:
             return sel.coalesce(slots)
     return sel
-
-
-# Sketches whose FINAL MERGED STATE is a pure function of the input multiset
-# (bit-OR / register-max / counter-sum merges): any re-partitioning of the
-# same rows folds to bit-identical blobs, so these may take the native-scan
-# fast path below without changing any declared query's output.  Order- or
-# partition-sensitive states (KLL compaction, t-digest centroids, MG,
-# reservoir, DDSketch collapse) must keep the plan-defined partitioning.
-_PARTITION_DETERMINISTIC_KINDS = frozenset(
-    ("bloom", "blocked_bloom", "hll", "cms", "countsketch"))
 
 
 def _attr_through_projects(df: DataFrame, cols: list[str]):
@@ -199,7 +249,6 @@ def _parquet_splits(spark, files: list[str], need_cols: list[str],
     round-robin splits.  Returns list[dict[file, [rg,...]]] or None."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from .merge import AUTO_TREE_THRESHOLD_BYTES
     units: list[tuple[str, int]] = []
     for f in files:
         if not os.path.exists(f):
@@ -275,51 +324,58 @@ def _iter_rg_tables(split: dict, cols: list[str], lookahead: int = 2):
             yield t
 
 
-def _native_parquet_partials(df: DataFrame, sketch, col: str,
-                             value_kind: str) -> DataFrame | None:
-    """Native-scan build: Python tasks read the parquet row groups directly
-    with pyarrow (vectorized C++ decode, zero JVM row↔Arrow transposition)
-    and fold them through the same kernels — measured ~25× less CPU than the
-    JVM scan → Arrow exchange for the same bytes (guide §4.2: keep the heavy
-    lifting in native code; the JVM boundary was ~90% of every build line's
-    CPU).  Only taken when the plan is provably a bare projected parquet
-    scan and the sketch's merged state is partition-independent, so the
-    final blob is bit-identical to the JVM path."""
-    if sketch.kind not in _PARTITION_DETERMINISTIC_KINDS:
+def _native_scan(df: DataFrame, sketch, cols: list[str], fn, schema: str,
+                 str_cols: tuple = ()) -> DataFrame | None:
+    """Native-scan source of the ungrouped and grouped builds: one task per
+    split of a driver ``range`` reads its parquet row groups with pyarrow
+    (vectorized C++ decode, no JVM row↔Arrow transposition) and feeds them
+    to ``fn`` as RecordBatches of ``cols`` — measured ~25× less CPU than the
+    JVM scan → Arrow exchange (the JVM boundary was ~90% of every build
+    line's CPU).  Taken only when the plan is provably a bare projected
+    parquet scan (``str_cols`` already parquet strings) and the sketch is
+    ``multiset_pure``: the splits re-partition the rows, so only then is the
+    blob bit-identical to the JVM path.  Else None."""
+    if not sketch.multiset_pure:
         return None
-    info = _attr_through_projects(df, [col])
+    info = _attr_through_projects(df, cols)
     if info is None:
         return None
-    (phys_col,), files = info
+    phys, files = info
+    if len(set(phys)) < len(phys):
+        return None
     spark = df.sparkSession
     from .merge import state_size_estimate
-    splits = _parquet_splits(spark, files, [phys_col],
-                             state_bytes=state_size_estimate(sketch))
+    splits = _parquet_splits(
+        spark, files, phys,
+        need_types={p: "string" for c, p in zip(cols, phys) if c in str_cols},
+        state_bytes=state_size_estimate(sketch))
     if splits is None:
         return None
     bc = spark.sparkContext.broadcast(splits)
-    elem_kind = "i32" if value_kind == "i32_array" else value_kind
 
-    def partial_fn(batches):
+    def native_fn(batches):
         import pyarrow as pa
-        state = sketch.empty()
-        n = 0
-        for b in batches:
-            for sid in b.column(0).to_pylist():
-                for t in _iter_rg_tables(bc.value[sid], [phys_col]):
-                    arr = t.column(0).combine_chunks()
-                    vals = _arrow_values(arr, value_kind)
-                    n += _update(sketch, state, vals, elem_kind)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([pid], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "state": pa.array([sketch.serialize(state)], pa.binary()),
-        })
+
+        def rg_batches():
+            for b in batches:
+                for sid in b.column(0).to_pylist():
+                    for t in _iter_rg_tables(bc.value[sid], phys):
+                        yield pa.RecordBatch.from_arrays(
+                            [t.column(p).combine_chunks() for p in phys],
+                            cols)
+
+        yield from fn(rg_batches())
 
     driver = spark.range(0, len(splits), 1, len(splits))
-    return driver.mapInArrow(partial_fn, PARTIAL_SCHEMA)
+    return driver.mapInArrow(native_fn, schema)
+
+
+def _native_parquet_partials(df: DataFrame, sketch, col: str,
+                             value_kind: str) -> DataFrame | None:
+    """Native-scan partials of ``build_sketch`` (see _native_scan)."""
+    return _native_scan(df, sketch, [col],
+                        _fold_fn(sketch, _plain_step(sketch, value_kind)),
+                        PARTIAL_SCHEMA)
 
 
 def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
@@ -331,104 +387,42 @@ def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array
         sel = sel.repartition(repartition)
     else:
         sel = _bound_state_volume(sel, sketch)
-
-    elem_kind = "i32" if value_kind == "i32_array" else value_kind
-
-    def partial_fn(batches):
-        import pyarrow as pa
-        state = sketch.empty()
-        n = 0
-        for b in batches:
-            vals = _arrow_values(b.column(0), value_kind)
-            n += _update(sketch, state, vals, elem_kind)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([pid], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "state": pa.array([sketch.serialize(state)], pa.binary()),
-        })
-
-    return sel.mapInArrow(partial_fn, PARTIAL_SCHEMA)
+    return sel.mapInArrow(_fold_fn(sketch, _plain_step(sketch, value_kind)),
+                          PARTIAL_SCHEMA)
 
 
 def build_sketch_preagg(df: DataFrame, sketch, col: str,
                         value_kind: str = "i32_array", fanin: int = 64,
                         shuffle_partitions: int | None = None) -> tuple[bytes, int]:
     """JVM-pre-aggregated build: explode → Tungsten partial groupBy(key) →
-    weighted sketch update over (distinct key, count) pairs.
+    ``update_weighted`` over (distinct key, count) pairs.
 
-    Exact for weight-insensitive sketches (Bloom/blocked-bloom/HLL: a key's
-    multiplicity never matters) and weight-additive ones (CMS counters,
-    t-digest centroid weights).  The Python boundary sees only the distinct
-    domain — for zipfian token streams that is a ~3000× reduction.  n_items
-    still counts every ingested token (sum of weights).
+    Exact for every sketch whose ``weight_mode`` is "insensitive" (a key's
+    multiplicity never matters) or "additive" (w copies ≡ one value of
+    weight w); ``weight_mode=None`` raises ValueError.  The Python boundary
+    sees only the distinct domain — for zipfian token streams that is a
+    ~3000× reduction.  n_items still counts every ingested token (sum of
+    weights).
     """
-    # The JVM pre-aggregation exists to shrink the JVM→Python boundary
-    # (Python sees only the distinct domain).  Under a native parquet scan
-    # there IS no boundary — and for the partition-deterministic kinds the
-    # direct fold produces a bit-identical final blob (weight-insensitive
-    # bits/registers; weight-additive counters fold the same counts), with
-    # n_items still the total ingested weight.  Route those there; sketches
-    # whose state depends on the (key, weight) stream shape (t-digest, KLL,
-    # MG, DDSketch) keep the JVM pre-aggregation below.
-    if sketch.kind in ("bloom", "blocked_bloom", "hll", "cms"):
-        partials = _native_parquet_partials(df, sketch, col, value_kind)
-        if partials is not None:
-            from .merge import merge_partials_auto
-            return merge_partials_auto(
-                partials, sketch, fanin=fanin,
-                est_rows=partials.rdd.getNumPartitions())
-    if value_kind == "i32_array":
-        flat = df.select(F.explode(F.col(col)).alias("v"))
-    else:
-        flat = df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
-    counts = flat.groupBy("v").agg(F.count("*").alias("cnt"))
+    from .merge import merge_partials_auto
+    if sketch.weight_mode is None:
+        raise ValueError(f"pre-aggregated build unsupported for {sketch.kind}")
+    # The JVM pre-aggregation exists to shrink the JVM→Python boundary.
+    # Under a native parquet scan there IS no boundary, and a multiset-pure
+    # sketch's direct fold is bit-identical to the weighted one (same bits,
+    # registers or counter sums; n_items still the total ingested count) —
+    # _native_parquet_partials takes exactly those sketches.
+    partials = _native_parquet_partials(df, sketch, col, value_kind)
+    if partials is not None:
+        return merge_partials_auto(partials, sketch, fanin=fanin)
+    v = F.explode(F.col(col)) if value_kind == "i32_array" else F.col(col)
+    counts = (df.select(v.alias("v")).where(F.col("v").isNotNull())
+              .groupBy("v").agg(F.count("*").alias("cnt")))
     if shuffle_partitions:
         counts = counts.repartition(shuffle_partitions)
-
-    supports_weights = sketch.kind in ("cms", "tdigest", "kll", "mg", "ddsketch")
-    elem_kind = "i32" if value_kind == "i32_array" else value_kind
-
-    def partial_fn(batches):
-        import pyarrow as pa
-        state = sketch.empty()
-        n = 0
-        for b in batches:
-            vals = _arrow_values(b.column(0), elem_kind if elem_kind != "i32" else "i32")
-            w = b.column(1).to_numpy(zero_copy_only=False)
-            if len(vals) == 0:
-                continue
-            if sketch.kind == "cms":
-                getattr(sketch, f"update_{'str' if elem_kind == 'str' else 'i32'}")(
-                    state, vals, weights=w)
-            elif sketch.kind in ("kll", "ddsketch"):
-                sketch.update_weighted(state, np.asarray(vals, np.float64), w)
-            elif sketch.kind == "mg":
-                sketch.update_weighted(state, np.asarray(vals, np.int64), w)
-            elif sketch.kind == "tdigest":
-                state.vmin = min(state.vmin, float(np.min(vals)))
-                state.vmax = max(state.vmax, float(np.max(vals)))
-                state.n += int(w.sum())
-                means = np.concatenate([state.means, np.asarray(vals, np.float64)])
-                weights = np.concatenate([state.weights, w.astype(np.float64)])
-                state.means, state.weights = sketch._compress(means, weights)
-            else:  # weight-insensitive: bloom / blocked_bloom / hll
-                _update(sketch, state, vals, elem_kind)
-            n += int(w.sum())
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([pid], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "state": pa.array([sketch.serialize(state)], pa.binary()),
-        })
-
-    if not supports_weights and sketch.kind not in ("bloom", "blocked_bloom", "hll"):
-        raise ValueError(f"pre-aggregated build unsupported for {sketch.kind}")
-    from .merge import merge_partials_auto
-    partials = counts.mapInArrow(partial_fn, PARTIAL_SCHEMA)
-    return merge_partials_auto(partials, sketch)
+    step = _weighted_step(sketch, _elem_kind(value_kind))
+    return merge_partials_auto(
+        counts.mapInArrow(_fold_fn(sketch, step), PARTIAL_SCHEMA), sketch)
 
 
 def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
@@ -444,28 +438,41 @@ def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
     If ``checkpoint`` and ``sketch_id`` are given, partial and final states
     are persisted with lineage — resumable builds.
     """
-    from .merge import merge_partials_auto, merge_partials_collect
     partials = None
     if repartition is None:
         partials = _native_parquet_partials(df, sketch, col, value_kind)
     if partials is None:
         partials = build_partials(df, sketch, col, value_kind, repartition)
-    partials_direct = partials  # one partial ROW per partition of THIS plan
-    if checkpoint is not None and sketch_id is not None:
+    return _merge_checkpointed(df, partials, sketch, fanin, checkpoint,
+                               sketch_id, tree_merge)
+
+
+def _merge_checkpointed(df: DataFrame, partials: DataFrame, sketch,
+                        fanin: int, checkpoint, sketch_id: str | None,
+                        tree_merge: bool | None = None) -> tuple[bytes, int]:
+    """One-row-per-partition partials → (final blob, n_items) through the
+    merge ``tree_merge`` picks (None: merge_partials_auto), persisting the
+    partial and final states when ``checkpoint`` and ``sketch_id`` are
+    given."""
+    from .merge import merge_partials_auto, merge_partials_collect
+    persist = checkpoint is not None and sketch_id is not None
+    # capture BEFORE the checkpoint round-trip: a read-back packs many
+    # partial rows per parquet partition, so getNumPartitions inside
+    # merge_partials_auto would under-count and mis-route a large fleet
+    # to the driver collect (ADVICE r4)
+    est_rows = partials.rdd.getNumPartitions() if tree_merge is None else None
+    if persist:
         partials = checkpoint.write_partials(sketch_id, sketch, partials,
                                              input_desc=_describe_input(df))
     if tree_merge:
         row = merge_partials_tree(partials, sketch, fanin=fanin).collect()[0]
         blob, n_items = bytes(row.state), int(row.n_items)
     elif tree_merge is None:
-        # a checkpoint read-back repacks many partial files per scan
-        # partition, so take P from the pre-checkpoint plan instead
-        blob, n_items = merge_partials_auto(
-            partials, sketch, fanin=fanin,
-            est_rows=partials_direct.rdd.getNumPartitions())
+        blob, n_items = merge_partials_auto(partials, sketch, fanin=fanin,
+                                            est_rows=est_rows)
     else:
         blob, n_items = merge_partials_collect(partials, sketch)
-    if checkpoint is not None and sketch_id is not None:
+    if persist:
         checkpoint.write_final(sketch_id, sketch, blob, n_items)
     return blob, n_items
 
@@ -493,29 +500,19 @@ def build_delta_partials(df: DataFrame, sketch, col: str, sign_col: str,
         sel = sel.repartition(repartition)
     else:
         sel = _bound_state_volume(sel, sketch)
-    updater = f"update_delta_{value_kind}"
-    if not hasattr(sketch, updater):
+    updater = getattr(sketch, f"update_delta_{value_kind}", None)
+    if updater is None:
         raise ValueError(f"{sketch.kind} does not support signed updates")
 
-    def partial_fn(batches):
-        import pyarrow as pa
-        state = sketch.empty()
-        n = 0
-        for b in batches:
-            vals = _arrow_values(b.column(0), value_kind)
-            signs = b.column(1).to_numpy(zero_copy_only=False).astype(np.int32)
-            if len(vals):
-                getattr(sketch, updater)(state, vals, signs)
-                n += len(vals)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([pid], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "state": pa.array([sketch.serialize(state)], pa.binary()),
-        })
+    def step(state, b):
+        vals = _arrow_values(b.column(0), value_kind)
+        if len(vals) == 0:
+            return 0
+        updater(state, vals,
+                b.column(1).to_numpy(zero_copy_only=False).astype(np.int32))
+        return len(vals)
 
-    return sel.mapInArrow(partial_fn, PARTIAL_SCHEMA)
+    return sel.mapInArrow(_fold_fn(sketch, step), PARTIAL_SCHEMA)
 
 
 # ``src`` is the ORIGIN SCAN PARTITION id, persisted with the row: the
@@ -712,7 +709,7 @@ def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
     column-range fold beyond it (build_delta_shard_partials).  Measured at
     sf1 (2^25-counter / 134 MB state): 143.6 s monolithic → sharded keeps
     full scan parallelism and one parallel merge wave."""
-    from .merge import merge_partials_auto, state_size_estimate
+    from .merge import state_size_estimate
     if sharded is None:
         sharded = (hasattr(sketch, "serialize_shard")
                    and state_size_estimate(sketch) > SHARD_ROUTE_THRESHOLD_BYTES)
@@ -723,20 +720,8 @@ def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
                                           sketch_id=sketch_id)
     partials = build_delta_partials(df, sketch, col, sign_col, value_kind,
                                     repartition)
-    est_rows = None
-    if checkpoint is not None and sketch_id is not None:
-        # capture BEFORE the checkpoint round-trip: a read-back packs many
-        # partial rows per parquet partition, so getNumPartitions inside
-        # merge_partials_auto would under-count and mis-route a large fleet
-        # to the driver collect (ADVICE r4; same pitfall build_sketch avoids)
-        est_rows = partials.rdd.getNumPartitions()
-        partials = checkpoint.write_partials(
-            sketch_id, sketch, partials, input_desc=_describe_input(df))
-    blob, n = merge_partials_auto(partials, sketch, fanin=fanin,
-                                  est_rows=est_rows)
-    if checkpoint is not None and sketch_id is not None:
-        checkpoint.write_final(sketch_id, sketch, blob, n)
-    return blob, n
+    return _merge_checkpointed(df, partials, sketch, fanin, checkpoint,
+                               sketch_id)
 
 
 def _describe_input(df: DataFrame) -> str:
@@ -752,95 +737,35 @@ GROUPED_SCHEMA = "group string, n_items long, state binary"
 
 def _native_grouped_partials(df: DataFrame, sketch, group_col: str, col: str,
                              value_kind: str) -> DataFrame | None:
-    """Map-side grouped build over a NATIVE parquet scan: Python tasks read
-    (group, values) row groups directly and fold them through the exact
-    phase-1 kernel the JVM-fed path uses — same per-group partial semantics,
-    none of the JVM row↔Arrow transposition.  Eligibility mirrors
-    _native_parquet_partials, plus the group column must already be a
-    parquet string column (the plan-side cast("string") must be an
-    identity for the fold to see identical labels)."""
-    if sketch.kind not in _PARTITION_DETERMINISTIC_KINDS:
-        return None
-    info = _attr_through_projects(df, [group_col, col])
-    if info is None:
-        return None
-    (g_phys, v_phys), files = info
-    if g_phys == v_phys:
-        return None
-    spark = df.sparkSession
-    from .merge import state_size_estimate
-    splits = _parquet_splits(spark, files, [g_phys, v_phys],
-                             need_types={g_phys: "string"},
-                             state_bytes=state_size_estimate(sketch))
-    if splits is None:
-        return None
-    bc = spark.sparkContext.broadcast(splits)
-    array_input = value_kind == "i32_array"
-    elem_kind = "i32" if array_input else value_kind
-    phase1 = _grouped_phase1_fn(sketch, array_input, elem_kind, 1)
-
-    def native_fn(batches):
-        import pyarrow as pa
-
-        def rg_batches():
-            for b in batches:
-                for sid in b.column(0).to_pylist():
-                    for t in _iter_rg_tables(bc.value[sid],
-                                             [g_phys, v_phys]):
-                        yield pa.RecordBatch.from_arrays(
-                            [t.column(g_phys).combine_chunks(),
-                             t.column(v_phys).combine_chunks()],
-                            ["group", "v"])
-
-        yield from phase1(rg_batches())
-
-    driver = spark.range(0, len(splits), 1, len(splits))
-    return driver.mapInArrow(native_fn, GROUPED_SCHEMA)
+    """Map-side grouped build over a NATIVE parquet scan (see _native_scan):
+    (group, values) row groups fold through the same phase 1 the JVM-fed
+    path uses.  The group column must already be a parquet string column
+    (the plan-side cast("string") must be an identity for the fold to see
+    identical labels)."""
+    phase1 = _grouped_phase1_fn(sketch, _plain_step(sketch, value_kind))
+    return _native_scan(df, sketch, [group_col, col], phase1, GROUPED_SCHEMA,
+                        str_cols=(group_col,))
 
 
-def _grouped_phase1_fn(sketch, array_input: bool, elem_kind: str,
-                       value_col_idx: int):
-    """Arrow-native grouped partial pass shared by the map-side and salted
-    strategies: dictionary-encode the group labels, bucket token values by
-    np.repeat of the label codes, fold one sketch state per group seen —
-    no pandas object columns, no per-row Python (string values are filtered
-    group-by-group with Arrow compute, not a zip loop)."""
+def _grouped_phase1_fn(sketch, step):
+    """Grouped phase 1 shared by every grouped route (map-side, salted,
+    native scan, JVM pre-aggregation) over (group, *step columns) batches:
+    dictionary-encode the group labels (a null label is its own group, as
+    in Spark's groupBy) and fold each group's rows into that group's state
+    through the same ``step`` the ungrouped fold core runs — no pandas
+    object columns, no per-row Python (rows are split with Arrow compute)."""
 
     def phase1(batches):
         import pyarrow as pa
-        states: dict[str, list] = {}
+        import pyarrow.compute as pc
+        states: dict = {}
         for b in batches:
-            enc = b.column(0).dictionary_encode()
+            enc = pc.dictionary_encode(b.column(0), null_encoding="encode")
             codes = enc.indices.to_numpy(zero_copy_only=False)
-            groups = enc.dictionary.to_pylist()
-            vcol = b.column(value_col_idx)
-            str_input = elem_kind == "str" and not array_input
-            if array_input:
-                import pyarrow.compute as pc
-                # list_value_length is null for null rows; flatten() skips
-                # them, so zero-fill keeps owner/flat aligned
-                lengths = pc.list_value_length(vcol).fill_null(0) \
-                    .to_numpy(zero_copy_only=False)
-                flat = vcol.flatten().to_numpy(zero_copy_only=False).astype(
-                    np.int32, copy=False)
-                owner = np.repeat(codes, lengths)
-            elif str_input:
-                flat = vcol  # stays an Arrow array; filtered per group below
-                owner = codes
-            else:
-                flat = vcol.to_numpy(zero_copy_only=False)
-                owner = codes
-            for gi, gname in enumerate(groups):
-                mask = owner == gi
-                if str_input:
-                    filt = flat.filter(pa.array(mask)).drop_null()
-                    buf = arrow_strbuf(filt)
-                    vals = buf if buf is not None else filt.to_pylist()
-                else:
-                    vals = flat[mask]
-                if gname not in states:
-                    states[gname] = [sketch.empty(), 0]
-                states[gname][1] += _update(sketch, states[gname][0], vals, elem_kind)
+            rest = pa.RecordBatch.from_arrays(b.columns[1:], b.schema.names[1:])
+            for gi, gname in enumerate(enc.dictionary.to_pylist()):
+                st = states.setdefault(gname, [sketch.empty(), 0])
+                st[1] += step(st[0], rest.filter(pa.array(codes == gi)))
         yield pa.RecordBatch.from_pydict({
             "group": pa.array(list(states.keys()), pa.string()),
             "n_items": pa.array([v[1] for v in states.values()], pa.int64()),
@@ -851,13 +776,17 @@ def _grouped_phase1_fn(sketch, array_input: bool, elem_kind: str,
     return phase1
 
 
-def _grouped_phase2_fn(sketch):
+def _merge_grouped(partials: DataFrame, sketch) -> DataFrame:
+    """Grouped phase 2: merge every (group, n_items, state) partial of a
+    group into one row."""
+
     def phase2(pdf: pd.DataFrame) -> pd.DataFrame:
         from .merge import merge_blobs
         blob, n = merge_blobs(sketch, list(pdf["state"]), pdf["n_items"].sum())
         return pd.DataFrame({"group": [pdf["group"].iloc[0]], "n_items": [n],
                              "state": [blob]})
-    return phase2
+
+    return partials.groupBy("group").applyInPandas(phase2, GROUPED_SCHEMA)
 
 
 # A map-side grouped build holds ALL G group states in EVERY task; above
@@ -924,13 +853,10 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
     Right when the group domain is too large for G × |state| to sit in one
     task's memory, at the price of shuffling the full data once.
     """
-    array_input = value_kind == "i32_array"
-    elem_kind = "i32" if array_input else value_kind
-    phase2 = _grouped_phase2_fn(sketch)
-
     if strategy == "auto":
         strategy, _ = _choose_grouped_strategy(df, sketch, group_col,
                                                group_cardinality)
+    phase1 = _grouped_phase1_fn(sketch, _plain_step(sketch, value_kind))
 
     if strategy == "mapside":
         partials = None
@@ -942,9 +868,8 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
                              F.col(col).alias("v"))
             if num_partitions:
                 base = base.repartition(num_partitions)
-            phase1 = _grouped_phase1_fn(sketch, array_input, elem_kind, 1)
             partials = base.mapInArrow(phase1, GROUPED_SCHEMA)
-        return partials.groupBy("group").applyInPandas(phase2, GROUPED_SCHEMA)
+        return _merge_grouped(partials, sketch)
 
     if strategy != "salted":
         raise ValueError(f"unknown grouped-build strategy {strategy!r}")
@@ -957,9 +882,8 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
     )
     shuffled = base.repartition(num_partitions, "group", "salt") if num_partitions \
         else base.repartition("group", "salt")
-    phase1 = _grouped_phase1_fn(sketch, array_input, elem_kind, 2)
-    partials = shuffled.mapInArrow(phase1, GROUPED_SCHEMA)
-    return partials.groupBy("group").applyInPandas(phase2, GROUPED_SCHEMA)
+    partials = shuffled.drop("salt").mapInArrow(phase1, GROUPED_SCHEMA)
+    return _merge_grouped(partials, sketch)
 
 
 def build_grouped_preagg(df: DataFrame, sketch, group_col: str, col: str,
@@ -970,70 +894,20 @@ def build_grouped_preagg(df: DataFrame, sketch, group_col: str, col: str,
     explode → groupBy(group, key).count(): the shuffle keys are (group, key)
     PAIRS, uniformly hashed, so a 45 %-heavy group spreads over the whole
     cluster with no salting at all; Python then sees only the per-group
-    distinct domain with weights.  Exact for weight-insensitive sketches
-    (Bloom/HLL) and weight-additive ones (CMS/t-digest).
+    distinct domain with weights.  Exact for every sketch whose
+    ``weight_mode`` is "insensitive" or "additive"; None raises ValueError.
     → DataFrame(group string, n_items long, state binary).
     """
-    if sketch.kind not in ("bloom", "blocked_bloom", "hll", "cms", "tdigest",
-                           "kll", "ddsketch"):
+    if sketch.weight_mode is None:
         raise ValueError(f"pre-aggregated grouped build unsupported for {sketch.kind}")
-    elem_kind = "i32" if value_kind == "i32_array" else value_kind
     v = F.explode(F.col(col)) if value_kind == "i32_array" else F.col(col)
     flat = (df.select(F.col(group_col).cast("string").alias("group"), v.alias("v"))
             .where(F.col("v").isNotNull()))  # null keys are not insertable
     counts = flat.groupBy("group", "v").agg(F.count("*").alias("cnt"))
-
-    def phase1(batches):
-        import pyarrow as pa
-        states: dict[str, list] = {}
-        for b in batches:
-            enc = b.column(0).dictionary_encode()
-            codes = enc.indices.to_numpy(zero_copy_only=False)
-            groups = enc.dictionary.to_pylist()
-            vals_all = (b.column(1) if elem_kind == "str"
-                        else b.column(1).to_numpy(zero_copy_only=False))
-            w_all = b.column(2).to_numpy(zero_copy_only=False)
-            for gi, gname in enumerate(groups):
-                mask = codes == gi
-                if elem_kind == "str":
-                    vals = vals_all.filter(pa.array(mask)).to_pylist()
-                else:
-                    vals = vals_all[mask]
-                w = w_all[mask]
-                if gname not in states:
-                    states[gname] = [sketch.empty(), 0]
-                st, _ = states[gname][0], None
-                if sketch.kind == "cms":
-                    getattr(sketch, f"update_{'str' if elem_kind == 'str' else 'i32'}")(
-                        st, vals, weights=w)
-                elif sketch.kind in ("kll", "ddsketch"):
-                    sketch.update_weighted(st, np.asarray(vals, np.float64), w)
-                elif sketch.kind == "tdigest":
-                    arr = np.asarray(vals, np.float64)
-                    st.vmin = min(st.vmin, float(arr.min()))
-                    st.vmax = max(st.vmax, float(arr.max()))
-                    st.n += int(w.sum())
-                    means = np.concatenate([st.means, arr])
-                    weights = np.concatenate([st.weights, w.astype(np.float64)])
-                    st.means, st.weights = sketch._compress(means, weights)
-                else:
-                    _update(sketch, st, vals, elem_kind)
-                states[gname][1] += int(w.sum())
-        yield pa.RecordBatch.from_pydict({
-            "group": pa.array(list(states.keys()), pa.string()),
-            "n_items": pa.array([s[1] for s in states.values()], pa.int64()),
-            "state": pa.array([sketch.serialize(s[0]) for s in states.values()],
-                              pa.binary()),
-        })
-
-    def phase2(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .merge import merge_blobs
-        blob, n = merge_blobs(sketch, list(pdf["state"]), pdf["n_items"].sum())
-        return pd.DataFrame({"group": [pdf["group"].iloc[0]], "n_items": [n],
-                             "state": [blob]})
-
-    partials = counts.mapInArrow(phase1, GROUPED_SCHEMA)
-    return partials.groupBy("group").applyInPandas(phase2, GROUPED_SCHEMA)
+    step = _weighted_step(sketch, _elem_kind(value_kind))
+    partials = counts.mapInArrow(_grouped_phase1_fn(sketch, step),
+                                 GROUPED_SCHEMA)
+    return _merge_grouped(partials, sketch)
 
 
 def build_grouped_single_writer(df: DataFrame, kind: str, params, group_col: str,

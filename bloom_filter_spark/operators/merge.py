@@ -7,8 +7,8 @@ shuffle volume per level is (#rows × |state|), never the input data.
 
 Safety: partial blobs carry their params in the serialized header; merging
 states built under different params silently corrupts estimates, so every
-merge first checks header equality (the kernel-level foot-gun found during
-verification).
+merge first checks that the first ``sketch.header_len`` bytes are equal
+(the kernel-level foot-gun found during verification).
 """
 
 from __future__ import annotations
@@ -18,28 +18,10 @@ from pyspark.sql import DataFrame, functions as F
 
 PARTIAL_SCHEMA = "partition_id long, n_items long, state binary"
 
-# fixed-size header prefix per kind that must be identical across mergeable
-# blobs (params + seeds; see each sketch's serialize())
-_HEADER_LEN = {
-    "bloom": 16,          # u32 m | u32 k | u64 seed
-    "cbloom": 16,         # u32 m | u32 k | u64 seed (counters follow)
-    "blocked_bloom": 16,
-    "cuckoo": 20,         # cuckoo never merges; listed for completeness
-    "hll": 12,            # u32 b | u64 seed
-    "cms": 32,            # u32 d | u32 w | u64 seed | f64 eps | f64 delta
-    "countsketch": 16,    # u32 d | u32 w | u64 seed
-    "kll": 12,            # u32 k | u64 seed (n/counter follow, may differ)
-    "tdigest": 8,         # f64 compression
-    "mg": 4,              # u32 k (n/offset follow, may differ)
-    "reservoir": 12,      # u32 k | u64 seed
-    "kmv": 12,            # u32 k | u64 seed (count follows, may differ)
-    "ddsketch": 20,       # f64 alpha | u32 max_bins | f64 min_value
-}
-
 
 def merge_blobs(sketch, blobs: list, n_items: int) -> tuple[bytes, int]:
     """Fold-merge serialized states (header-checked); returns (blob, n)."""
-    hlen = _HEADER_LEN[sketch.kind]
+    hlen = sketch.header_len
     head = bytes(blobs[0][:hlen])
     cls = type(sketch)
     _, acc = cls.deserialize(bytes(blobs[0]))

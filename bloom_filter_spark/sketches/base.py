@@ -17,6 +17,22 @@ merges are associative up to their published estimate bound (verified by the
 merge-permutation tests, SURVEY.md §2.7).  Cuckoo is NOT union-mergeable
 (bucket overflow) and is scoped to single-writer grouped builds — it does not
 register a merge.
+
+Each registered class also declares what it is; the operators route on
+these declarations, never on kind names:
+
+    multiset_pure   the merged state depends only on the input multiset, so
+                    re-partitioned routes (native parquet scan, the preagg
+                    reroute) give bit-identical blobs.  False is always safe.
+    weight_mode     "insensitive" (multiplicity never matters), "additive"
+                    (w copies ≡ one value of weight w) or None (no weighted
+                    route: the pre-aggregated builds raise ValueError).
+    header_len      bytes of serialized params/seed that must be equal
+                    before two blobs may merge (merge_blobs).
+    update_weighted(state, values, weights, value_kind)
+                    whenever weight_mode is set: fold each value with an
+                    integer count, hashing ``value_kind`` (i32|i64|str|f64)
+                    exactly as the unweighted ``update_<value_kind>`` does.
 """
 
 from __future__ import annotations
@@ -29,6 +45,9 @@ import numpy as np
 @runtime_checkable
 class MergeableSketch(Protocol):
     kind: str
+    multiset_pure: bool
+    weight_mode: str | None
+    header_len: int
 
     def empty(self): ...
 
@@ -41,6 +60,16 @@ class MergeableSketch(Protocol):
 
 # kind-tag → sketch class registry (populated by each module at import time).
 SKETCH_KINDS: dict[str, type] = {}
+
+
+def hashed_update_weighted(self, state, values, weights, value_kind) -> None:
+    """``update_weighted`` of the hashed sketches: the unweighted
+    ``update_<value_kind>``, passed the weights when weight-additive."""
+    update = getattr(self, f"update_{value_kind}")
+    if self.weight_mode == "additive":
+        update(state, values, weights)
+    else:
+        update(state, values)
 
 
 def register(cls):

@@ -25,7 +25,7 @@ import numpy as np
 
 from ..core import hashing, xxh3
 from ..core.serde import Reader, pack_u32, pack_u64
-from .base import register
+from .base import hashed_update_weighted, register
 
 _LN2 = math.log(2.0)
 
@@ -63,6 +63,8 @@ class BlockedBloomParams:
 @register
 class BlockedBloomSketch:
     kind = "blocked_bloom"
+    multiset_pure = True
+    weight_mode = "insensitive"
 
     def __init__(self, params: BlockedBloomParams):
         self.params = params
@@ -114,6 +116,8 @@ class BlockedBloomSketch:
         lo, hi = self._two_hashes(values, "str")
         self._update(state, self._positions(lo, hi))
 
+    update_weighted = hashed_update_weighted
+
     def _contains(self, state: np.ndarray, pos: np.ndarray) -> np.ndarray:
         words = state[(pos >> np.uint64(6)).astype(np.int64)]
         hit = (words >> (pos & np.uint64(63))) & np.uint64(1)
@@ -133,6 +137,8 @@ class BlockedBloomSketch:
 
     def merge(self, a: np.ndarray, b: np.ndarray) -> np.ndarray:
         return np.bitwise_or(a, b)
+
+    header_len = 16  # u32 m | u32 k | u64 seed
 
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params

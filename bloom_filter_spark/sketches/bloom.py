@@ -31,7 +31,7 @@ import numpy as np
 
 from ..core import hashing, xxh3
 from ..core.serde import Reader, pack_u32, pack_u64
-from .base import register
+from .base import hashed_update_weighted, register
 
 _LN2 = math.log(2.0)
 
@@ -78,6 +78,8 @@ class BloomParams:
 @register
 class BloomSketch:
     kind = "bloom"
+    multiset_pure = True
+    weight_mode = "insensitive"
 
     def __init__(self, params: BloomParams):
         self.params = params
@@ -149,6 +151,8 @@ class BloomSketch:
     def update_str(self, state: np.ndarray, values) -> None:
         self._update_hashes(state, self._hash(values, "str"))
 
+    update_weighted = hashed_update_weighted
+
     # -- probe ------------------------------------------------------------
     def _contains_hashes(self, state: np.ndarray, h: np.ndarray) -> np.ndarray:
         """k vectorized probe passes with an AND accumulator (no (N,k)
@@ -208,6 +212,8 @@ class BloomSketch:
         return -(p.m / p.k) * math.log1p(-x / p.m)
 
     # -- serde (reference byte layout, bloom/filter.go:63-92) --------------
+    header_len = 16  # u32 m | u32 k | u64 seed
+
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params
         if p.m >= 1 << 32:

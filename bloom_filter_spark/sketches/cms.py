@@ -24,7 +24,7 @@ import numpy as np
 
 from ..core import hashing
 from ..core.serde import Reader, pack_u32, pack_u64, pack_f64
-from .base import register
+from .base import hashed_update_weighted, register
 
 
 @dataclass(frozen=True)
@@ -53,6 +53,11 @@ class CMSParams:
 @register
 class CMSSketch:
     kind = "cms"
+    weight_mode = "additive"
+
+    # conservative update raises cells against the running estimate, so
+    # its state depends on how the stream is batched
+    multiset_pure = property(lambda self: not self.params.conservative)
 
     def __init__(self, params: CMSParams):
         self.params = params
@@ -127,6 +132,8 @@ class CMSSketch:
     def update_str(self, state, values, weights=None) -> None:
         self._update(state, values, "str", weights)
 
+    update_weighted = hashed_update_weighted
+
     def _point(self, state, h: np.ndarray) -> np.ndarray:
         ests = np.stack([state[j, self._row_idx_from(h, j)]
                          for j in range(self.params.d)])
@@ -143,6 +150,8 @@ class CMSSketch:
 
     def merge(self, a, b) -> np.ndarray:
         return a + b
+
+    header_len = 32  # u32 d | u32 w | u64 seed | f64 eps | f64 delta
 
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params

@@ -36,7 +36,7 @@ import numpy as np
 
 from ..core import hashing
 from ..core.serde import Reader, pack_u32, pack_u64
-from .base import register
+from .base import hashed_update_weighted, register
 
 _SIGN_SEED_MIX = 0x9E3779B97F4A7C15  # golden-ratio odd constant
 
@@ -58,6 +58,8 @@ class CountSketchParams:
 @register
 class CountSketch:
     kind = "countsketch"
+    multiset_pure = True
+    weight_mode = "additive"
 
     def __init__(self, params: CountSketchParams):
         self.params = params
@@ -153,6 +155,8 @@ class CountSketch:
     def update_str(self, state, values, weights=None) -> None:
         self._update(state, values, "str", weights)
 
+    update_weighted = hashed_update_weighted
+
     def _point(self, state, h: np.ndarray, hs: np.ndarray) -> np.ndarray:
         p = self.params
         ests = np.stack([self._signs(hs, j) * state[j, self._row(h, j, p.w)]
@@ -178,6 +182,8 @@ class CountSketch:
 
     def merge(self, a, b) -> np.ndarray:
         return a + b
+
+    header_len = 16  # u32 d | u32 w | u64 seed
 
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params

@@ -48,6 +48,9 @@ _DTYPE = np.int32
 @register
 class CountingBloomSketch:
     kind = "cbloom"
+    # counter sums are order-free, but no changelog route re-partitions yet
+    multiset_pure = False
+    weight_mode = None
 
     def __init__(self, params: BloomParams):
         # _hash below is splitmix64-only; silently accepting an xxh3-family
@@ -302,6 +305,8 @@ class CountingBloomSketch:
         return pack_u32(m) + pack_u32(k) + pack_u64(seed) + body
 
     # -- serde (engine layout; the reference has no counting filter) -------
+    header_len = 16  # u32 m | u32 k | u64 seed (counters follow)
+
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params
         header = pack_u32(p.m) + pack_u32(p.k) + pack_u64(p.seed)

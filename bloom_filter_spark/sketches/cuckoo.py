@@ -67,6 +67,9 @@ class CuckooParams:
 @register
 class CuckooFilter:
     kind = "cuckoo"
+    # no union merge and a sequential eviction walk: single-writer only
+    multiset_pure = False
+    weight_mode = None
 
     def __init__(self, params: CuckooParams):
         self.params = params
@@ -251,6 +254,8 @@ class CuckooFilter:
         return out
 
     # -- serde (filter.go:143-179) ---------------------------------------------
+    header_len = 20  # u32 m | u64 fp_seed | u64 seed
+
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params
         return (pack_u32(p.m) + pack_u64(p.fp_seed) + pack_u64(p.seed)

@@ -105,6 +105,9 @@ def _fold(keys_a, cnts_a, keys_b, cnts_b):
 @register
 class DDSketch:
     kind = "ddsketch"
+    # bin collapse depends on when the store first overflows max_bins
+    multiset_pure = False
+    weight_mode = "additive"
 
     def __init__(self, params: DDSketchParams):
         self.params = params
@@ -173,7 +176,8 @@ class DDSketch:
     update_i32 = update
     update_f64 = update
 
-    def update_weighted(self, state: DDState, values, weights) -> None:
+    def update_weighted(self, state: DDState, values, weights,
+                        value_kind: str = "f64") -> None:
         self.update(state, values, weights)
 
     # -- merge ---------------------------------------------------------------
@@ -228,6 +232,8 @@ class DDSketch:
         return out
 
     # -- serde ---------------------------------------------------------------
+    header_len = 20  # f64 alpha | u32 max_bins | f64 min_value
+
     def serialize(self, state: DDState) -> bytes:
         p = self.params
         head = (pack_f64(p.alpha) + pack_u32(p.max_bins)
@@ -237,7 +243,7 @@ class DDSketch:
                 + pack_u32(state.neg_keys.size)
                 # collapse flag rides AFTER the 20-byte param header that
                 # merge_blobs equality-checks, so a collapsed partial still
-                # merges with a clean one (operators/merge.py:36)
+                # merges with a clean one (header_len above)
                 + pack_u32(1 if state.collapsed else 0))
         return (head
                 + state.pos_keys.astype("<i8").tobytes()

@@ -19,7 +19,7 @@ import numpy as np
 
 from ..core import hashing
 from ..core.serde import Reader, pack_u32, pack_u64
-from .base import register
+from .base import hashed_update_weighted, register
 
 
 @dataclass(frozen=True)
@@ -51,6 +51,8 @@ def _alpha(m: int) -> float:
 @register
 class HLLSketch:
     kind = "hll"
+    multiset_pure = True
+    weight_mode = "insensitive"
 
     def __init__(self, params: HLLParams):
         self.params = params
@@ -80,6 +82,8 @@ class HLLSketch:
     def update_str(self, state, values) -> None:
         self._update_hashes(state, hashing.hash64_str(values, self.params.seed))
 
+    update_weighted = hashed_update_weighted
+
     def merge(self, a, b) -> np.ndarray:
         return np.maximum(a, b)
 
@@ -91,6 +95,8 @@ class HLLSketch:
             if zeros:
                 return m * np.log(m / zeros)  # linear counting
         return float(raw)
+
+    header_len = 12  # u32 b | u64 seed
 
     def serialize(self, state: np.ndarray) -> bytes:
         """LE u32 b | u64 seed | u8 mode | payload.

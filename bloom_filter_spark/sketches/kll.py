@@ -57,6 +57,9 @@ class KLLState:
 @register
 class KLLSketch:
     kind = "kll"
+    # compaction depends on the order values arrive in
+    multiset_pure = False
+    weight_mode = "additive"
 
     def __init__(self, params: KLLParams):
         self.params = params
@@ -86,7 +89,7 @@ class KLLSketch:
     update_f64 = update
 
     def update_weighted(self, state: KLLState, values: np.ndarray,
-                        weights: np.ndarray) -> None:
+                        weights: np.ndarray, value_kind: str = "f64") -> None:
         """Insert each value with an integer weight — equivalent rank
         semantics to inserting ``w`` copies: weight w decomposes in binary
         and the value enters compactor level l once per set bit 2^l (an
@@ -173,6 +176,8 @@ class KLLSketch:
         return x[np.minimum(pos, x.size - 1)]
 
     # -- serde -----------------------------------------------------------------
+    header_len = 12  # u32 k | u64 seed (n/counter follow, may differ)
+
     def serialize(self, state: KLLState) -> bytes:
         head = (pack_u32(self.params.k) + pack_u64(self.params.seed)
                 + pack_u64(state.n) + pack_u64(state.counter)

@@ -58,6 +58,9 @@ class KMVState:
 @register
 class KMVSketch:
     kind = "kmv"
+    # order-free, but no KMV build takes a re-partitioned route yet
+    multiset_pure = False
+    weight_mode = None
 
     def __init__(self, params: KMVParams):
         self.params = params
@@ -120,6 +123,8 @@ class KMVSketch:
         return only.size / theta
 
     # -- serde ----------------------------------------------------------------
+    header_len = 12  # u32 k | u64 seed (count follows, may differ)
+
     def serialize(self, state: KMVState) -> bytes:
         p = self.params
         return (pack_u32(p.k) + pack_u64(p.seed) + pack_u32(state.hashes.size)

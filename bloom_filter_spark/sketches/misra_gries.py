@@ -51,6 +51,9 @@ class MGState:
 @register
 class MGSketch:
     kind = "mg"
+    # the k-th-count decrement depends on the order keys arrive in
+    multiset_pure = False
+    weight_mode = "additive"
 
     def __init__(self, params: MGParams):
         self.params = params
@@ -88,7 +91,7 @@ class MGSketch:
     update_i32 = update_i64
 
     def update_weighted(self, state: MGState, values: np.ndarray,
-                        weights: np.ndarray) -> None:
+                        weights: np.ndarray, value_kind: str = "i64") -> None:
         vals = np.asarray(values, np.int64)
         w = np.asarray(weights, np.int64)
         keep = w > 0
@@ -132,6 +135,8 @@ class MGSketch:
         return state.offset
 
     # -- serde ------------------------------------------------------------------
+    header_len = 4  # u32 k (n/offset follow, may differ)
+
     def serialize(self, state: MGState) -> bytes:
         head = (pack_u32(self.params.k) + pack_u64(state.n)
                 + pack_u64(state.offset) + pack_u32(state.keys.size))

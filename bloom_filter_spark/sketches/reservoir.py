@@ -48,6 +48,9 @@ class ReservoirState:
 @register
 class ReservoirSketch:
     kind = "reservoir"
+    # a seeded random draw over arrival order; no weighted equivalent
+    multiset_pure = False
+    weight_mode = None
 
     def __init__(self, params: ReservoirParams):
         self.params = params
@@ -107,6 +110,8 @@ class ReservoirSketch:
             rng.permutation(b.sample)[:k_out - s],
         ])
         return out
+
+    header_len = 12  # u32 k | u64 seed
 
     def serialize(self, state: ReservoirState) -> bytes:
         head = (pack_u32(self.params.k) + pack_u64(self.params.seed)

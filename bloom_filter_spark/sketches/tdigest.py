@@ -49,6 +49,9 @@ class TDigestState:
 @register
 class TDigestSketch:
     kind = "tdigest"
+    # centroid boundaries depend on the order values are compressed in
+    multiset_pure = False
+    weight_mode = "additive"
 
     def __init__(self, params: TDigestParams):
         self.params = params
@@ -76,20 +79,30 @@ class TDigestSketch:
         new_x = np.add.reduceat(w * x, starts) / new_w
         return new_x, new_w
 
-    def update(self, state: TDigestState, values: np.ndarray) -> None:
+    def update(self, state: TDigestState, values: np.ndarray,
+               weights=None) -> None:
+        """Insert values (NaN dropped); ``weights`` gives each one an integer
+        multiplicity (rows with weight ≤ 0 dropped), else 1."""
         vals = np.asarray(values, np.float64)
-        vals = vals[~np.isnan(vals)]
+        w = (np.ones(vals.size, np.int64) if weights is None
+             else np.asarray(weights, np.int64))
+        keep = ~np.isnan(vals) & (w > 0)
+        vals, w = vals[keep], w[keep]
         if vals.size == 0:
             return
         state.vmin = min(state.vmin, float(vals.min()))
         state.vmax = max(state.vmax, float(vals.max()))
-        state.n += int(vals.size)
+        state.n += int(w.sum())
         means = np.concatenate([state.means, vals])
-        weights = np.concatenate([state.weights, np.ones(vals.size, np.float64)])
+        weights = np.concatenate([state.weights, w.astype(np.float64)])
         state.means, state.weights = self._compress(means, weights)
 
     update_i32 = update
     update_f64 = update
+
+    def update_weighted(self, state: TDigestState, values, weights,
+                        value_kind: str = "f64") -> None:
+        self.update(state, values, weights)
 
     def merge(self, a: TDigestState, b: TDigestState) -> TDigestState:
         means = np.concatenate([a.means, b.means])
@@ -121,6 +134,8 @@ class TDigestSketch:
         mid = np.cumsum(w) - 0.5 * w
         r = np.interp(vals, x, mid, left=0.0, right=total)
         return r / total
+
+    header_len = 8  # f64 compression
 
     def serialize(self, state: TDigestState) -> bytes:
         head = (pack_f64(self.params.compression) + pack_u64(state.n)

@@ -1,0 +1,182 @@
+"""Sketch declarations (multiset_pure, weight_mode, header_len,
+update_weighted) hold for every registered kind, and the operators route on
+them instead of on kind names.  No Spark session needed."""
+
+from __future__ import annotations
+
+import ast
+import math
+import os
+
+import numpy as np
+import pytest
+
+from bloom_filter_spark.operators.merge import merge_blobs
+from bloom_filter_spark.sketches import (
+    SKETCH_KINDS, BlockedBloomParams, BloomParams, CMSParams, CMSSketch,
+    CountSketchParams, CuckooParams, DDSketchParams, HLLParams, KLLParams,
+    KMVParams, MGParams, ReservoirParams, TDigestParams, TDigestSketch)
+
+# two param sets per kind whose serialized headers differ
+PARAMS = {
+    "bloom": (BloomParams(n=1000, p=0.01), BloomParams(n=5000, p=0.01)),
+    "cbloom": (BloomParams(n=1000, p=0.01), BloomParams(n=5000, p=0.01)),
+    "blocked_bloom": (BlockedBloomParams(n=1000, p=0.01),
+                      BlockedBloomParams(n=20_000, p=0.01)),
+    "cuckoo": (CuckooParams(n=1000, load_factor=0.8),
+               CuckooParams(n=1000, load_factor=0.8, seed=7)),
+    "hll": (HLLParams(b=10), HLLParams(b=12)),
+    "cms": (CMSParams(eps=0.01, delta=0.01), CMSParams(eps=0.001, delta=0.01)),
+    "countsketch": (CountSketchParams(w=1 << 10, d=5),
+                    CountSketchParams(w=1 << 11, d=5)),
+    "kll": (KLLParams(k=200), KLLParams(k=100)),
+    "tdigest": (TDigestParams(100), TDigestParams(200)),
+    "mg": (MGParams(k=64), MGParams(k=128)),
+    "reservoir": (ReservoirParams(k=64), ReservoirParams(k=128)),
+    "kmv": (KMVParams(k=64), KMVParams(k=128)),
+    "ddsketch": (DDSketchParams(alpha=0.01), DDSketchParams(alpha=0.02)),
+}
+
+# the routing the operators had when these facts lived in kind tuples
+EXPECTED = {
+    "bloom": (True, "insensitive"),
+    "blocked_bloom": (True, "insensitive"),
+    "hll": (True, "insensitive"),
+    "cms": (True, "additive"),
+    "countsketch": (True, "additive"),
+    "kll": (False, "additive"),
+    "tdigest": (False, "additive"),
+    "mg": (False, "additive"),
+    "ddsketch": (False, "additive"),
+    "cbloom": (False, None),
+    "cuckoo": (False, None),
+    "reservoir": (False, None),
+    "kmv": (False, None),
+}
+
+KINDS = sorted(SKETCH_KINDS)
+
+
+def _sketch(kind, which=0):
+    return SKETCH_KINDS[kind](PARAMS[kind][which])
+
+
+def _fill(sk, values):
+    state = sk.empty()
+    insert = getattr(sk, "update_i32", None) or sk.insert_i32
+    insert(state, values)
+    return state
+
+
+def _values(seed=0, n=5000):
+    rng = np.random.default_rng(seed)
+    return rng.zipf(1.3, n).clip(max=1 << 20).astype(np.int32)
+
+
+PURE = [k for k in KINDS if _sketch(k).multiset_pure]
+WEIGHTED_PURE = [k for k in PURE if _sketch(k).weight_mode is not None]
+
+
+def test_every_registered_kind_has_params():
+    assert set(PARAMS) == set(SKETCH_KINDS) == set(EXPECTED)
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_declares_all_three_attributes(kind):
+    cls = SKETCH_KINDS[kind]
+    for attr in ("multiset_pure", "weight_mode", "header_len"):
+        assert hasattr(cls, attr), f"{kind} lacks {attr}"
+    sk = _sketch(kind)
+    assert isinstance(sk.multiset_pure, bool)
+    assert sk.weight_mode in ("insensitive", "additive", None)
+    assert isinstance(cls.header_len, int) and cls.header_len > 0
+    # a weighted route needs update_weighted, and only a weighted route has it
+    assert hasattr(sk, "update_weighted") == (sk.weight_mode is not None)
+    assert (sk.multiset_pure, sk.weight_mode) == EXPECTED[kind]
+
+
+def test_conservative_cms_is_not_multiset_pure():
+    assert not CMSSketch(CMSParams(eps=0.01, delta=0.01,
+                                   conservative=True)).multiset_pure
+
+
+@pytest.mark.parametrize("kind", PURE)
+def test_multiset_pure_ignores_order_and_chunking(kind):
+    sk = _sketch(kind)
+    v = _values()
+    ref = sk.serialize(_fill(sk, v))
+    perm = np.random.default_rng(1).permutation(v)
+    st = sk.empty()
+    for chunk in np.array_split(perm, 7):
+        sk.update_i32(st, chunk)
+    assert sk.serialize(st) == ref
+    # and through a merge of two partials over a different split
+    a, b = np.array_split(perm[::-1], [1234])
+    merged = sk.merge(_fill(sk, a), _fill(sk, b))
+    assert sk.serialize(merged) == ref
+
+
+@pytest.mark.parametrize("value_kind", ["i32", "i64", "str"])
+@pytest.mark.parametrize("kind", WEIGHTED_PURE)
+def test_update_weighted_equals_repeated_plain_update(kind, value_kind):
+    sk = _sketch(kind)
+    v = _values()
+    if value_kind == "i64":
+        v = v.astype(np.int64) * 5_000_000_000  # beyond int32
+    uniq, counts = np.unique(v, return_counts=True)
+    rep = np.repeat(uniq, counts)
+    if value_kind == "str":
+        uniq, rep = [f"k{x}" for x in uniq], [f"k{x}" for x in rep]
+    weighted = sk.empty()
+    sk.update_weighted(weighted, uniq, counts, value_kind)
+    plain = sk.empty()
+    getattr(sk, f"update_{value_kind}")(plain, rep)
+    assert sk.serialize(weighted) == sk.serialize(plain)
+
+
+def test_cms_weighted_i64_key_is_never_undercounted():
+    sk = CMSSketch(CMSParams(eps=0.01, delta=0.01))
+    st = sk.empty()
+    sk.update_weighted(st, np.array([5_000_000_000], np.int64),
+                       np.array([1], np.int64), "i64")
+    assert sk.point_i64(st, np.array([5_000_000_000], np.int64))[0] >= 1
+
+
+def test_tdigest_update_weighted_drops_nan_like_update():
+    sk = TDigestSketch(TDigestParams(100))
+    with_nan = sk.empty()
+    sk.update_weighted(with_nan, np.array([1.0, 2.0, math.nan, 3.0]),
+                       np.array([2, 1, 5, 3]))
+    without = sk.empty()
+    sk.update_weighted(without, np.array([1.0, 2.0, 3.0]),
+                       np.array([2, 1, 3]))
+    assert sk.serialize(with_nan) == sk.serialize(without)
+    assert with_nan.vmin == 1.0 and with_nan.vmax == 3.0 and with_nan.n == 6
+    assert np.isfinite(sk.quantiles(with_nan, [0.1, 0.5, 0.9])).all()
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_header_len_covers_params_and_gates_merge(kind):
+    cls = SKETCH_KINDS[kind]
+    hlen = cls.header_len
+    sk_a, sk_b = _sketch(kind, 0), _sketch(kind, 1)
+    a, b = sk_a.serialize(sk_a.empty()), sk_b.serialize(sk_b.empty())
+    assert a[:hlen] != b[:hlen]
+    with pytest.raises(ValueError, match="refusing"):
+        merge_blobs(sk_a, [a, b], 0)
+    # the header holds params only: data never changes it
+    filled = sk_a.serialize(_fill(sk_a, _values()))
+    assert filled[:hlen] == a[:hlen]
+
+
+def test_build_operators_never_dispatch_on_kind():
+    """operators/build.py routes on declarations; a comparison against
+    ``.kind`` is a kind tuple creeping back."""
+    import bloom_filter_spark.operators.build as build
+    tree = ast.parse(open(os.path.abspath(build.__file__)).read())
+    offenders = [
+        node.lineno for node in ast.walk(tree)
+        if isinstance(node, ast.Compare)
+        and any(isinstance(x, ast.Attribute) and x.attr == "kind"
+                for x in [node.left, *node.comparators])]
+    assert offenders == [], f"build.py compares .kind at lines {offenders}"

@@ -12,8 +12,9 @@ from bloom_filter_spark.operators import (
     build_sketch, cms_point_udf, membership_udf, merge_partials_tree,
 )
 from bloom_filter_spark.sketches import (
-    BloomParams, BloomSketch, CMSParams, CMSSketch, CuckooParams,
-    HLLParams, HLLSketch, KLLParams, KLLSketch, TDigestParams, TDigestSketch,
+    BloomParams, BloomSketch, CMSParams, CMSSketch, CountSketch,
+    CountSketchParams, CuckooParams, HLLParams, HLLSketch, KLLParams,
+    KLLSketch, TDigestParams, TDigestSketch,
 )
 
 
@@ -227,10 +228,37 @@ def test_grouped_paths_produce_identical_states(spark, tokens_df):
 
 def test_preagg_direct_identical_cms(spark, tokens_df):
     from bloom_filter_spark.operators import build_sketch_preagg
-    sk = CMSSketch(CMSParams(eps=0.001, delta=0.01))
-    direct, n1 = build_sketch(tokens_df, sk, "tokens", "i32_array")
-    pre, n2 = build_sketch_preagg(tokens_df, sk, "tokens", "i32_array")
-    assert direct == pre and n1 == n2
+    # i64 keys far beyond int32 (a JVM-fed plan: the hash is computed)
+    hashed = tokens_df.select(F.xxhash64("doc_id").alias("h"))
+    for sk in (CMSSketch(CMSParams(eps=0.001, delta=0.01)),
+               CountSketch(CountSketchParams(w=1 << 12, d=5))):
+        for df, col, value_kind in ((tokens_df, "tokens", "i32_array"),
+                                    (hashed, "h", "i64")):
+            direct, n1 = build_sketch(df, sk, col, value_kind)
+            pre, n2 = build_sketch_preagg(df, sk, col, value_kind)
+            assert direct == pre and n1 == n2
+
+
+def test_grouped_routes_keep_null_group(spark):
+    """A null group label is its own group on every grouped route (as in
+    Spark's groupBy): its rows are counted, never silently dropped."""
+    from bloom_filter_spark.operators import build_grouped_preagg
+    df = spark.createDataFrame(
+        [("a", [1, 2]), (None, [3]), ("a", [2, 4]), ("b", [5, 6, 7])],
+        "source string, tokens array<int>").repartition(2)
+    sk = HLLSketch(HLLParams(b=10))
+    routes = [
+        build_grouped(df, sk, "source", "tokens", "i32_array",
+                      strategy="mapside"),
+        build_grouped(df, sk, "source", "tokens", "i32_array", n_salts=4,
+                      strategy="salted"),
+        build_grouped_preagg(df, sk, "source", "tokens"),
+    ]
+    states = [{r.group: (r.n_items, bytes(r.state)) for r in g.collect()}
+              for g in routes]
+    assert states[0] == states[1] == states[2]
+    assert states[0][None][0] == 1
+    assert sum(n for n, _ in states[0].values()) == 8
 
 
 def test_register_sql_probes(spark, sf_small, bloom_blob):

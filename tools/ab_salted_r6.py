@@ -9,7 +9,9 @@ b486b9a..HEAD` on the executed i32 salted path shows ZERO kernel changes —
 `_grouped_phase1_fn`'s i32 branch, `_grouped_phase2_fn`/`merge_blobs`,
 sketches/hll.py, sources/fixtures.py and the bench lambda are all
 byte-identical between the r4 and r5 binaries (the r5 StrBuf edit touches
-only the `str_input` branch, dead on this i32_array line).  So an r4-kernel
+only the `str_input` branch, dead on this i32_array line).  Those two
+functions are now `_grouped_phase1_fn(sketch, step)`, which folds each
+group's rows through the ungrouped fold step, and `_merge_grouped`.  So an r4-kernel
 vs r5-kernel interleave would compare a binary with itself; the remaining
 discriminator is RELATIVE cost in one session:
 
