@@ -3,10 +3,10 @@
 Runs the same operations as bench.py, each under a dedicated job group, and
 records per line what host contention cannot forge: executor CPU seconds,
 shuffle read/write bytes, task counts and input records, pulled from the
-Spark REST API (the tools/ab_salted_metrics.py method the r6 adjudications
-validated).  Wall seconds ride along but are advisory on this host — the r6
-verdict showed identical binaries varying up to 6.7× wall during contended
-windows.
+Spark REST API per job group (the method the r6 adjudications validated,
+BENCH/AB_salted_metrics_r6.json).  Wall seconds ride along but are advisory
+on a contended host — the r6 verdict showed identical binaries varying up
+to 6.7× wall during contended windows.
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
         python bench_extra.py [--out PATH] [--lines a,b,c]

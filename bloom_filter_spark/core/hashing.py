@@ -387,8 +387,8 @@ def set_bits(bits: np.ndarray, idx: np.ndarray, m: int) -> None:
     # staging is O(m) per call regardless of batch size — a 10k-row Arrow
     # batch against a 2^26-bit filter would pay a 67 MB bool alloc +
     # packbits for 70k updates.  Measured crossover ≈ updates = m/64..m/32
-    # (see table in tools/ab_strbuf.py history); route sparse batches to
-    # the O(updates) ufunc.at path instead.
+    # (single-core kernel timing); route sparse batches to the O(updates)
+    # ufunc.at path instead.
     if 64 <= m <= _PACKBITS_MAX_BITS and idx.size >= (m >> 5):
         bb = np.zeros(m, dtype=bool)
         bb[idx.astype(np.int64)] = True

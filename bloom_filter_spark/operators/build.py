@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..core.hashing import StrBuf, arrow_strbuf
 from ..sketches.base import sketch_for_kind
-from .merge import PARTIAL_SCHEMA, merge_partials_tree
+from .merge import PARTIAL_SCHEMA, merge_partials_tree, state_size_estimate
 
 
 def _flatten_arrays(col: pd.Series) -> np.ndarray:
@@ -65,27 +65,34 @@ def _flatten_arrays(col: pd.Series) -> np.ndarray:
     return np.concatenate(arrs).astype(np.int32, copy=False)
 
 
+_DTYPES = {"i32": np.int32, "i64": np.int64, "f64": np.float64}
+
+
+def _keys(values, value_kind: str):
+    """Extracted values → what the kernels take for ``value_kind`` (i32 |
+    i64 | f64 | str): a numpy array of that dtype, or for str the zero-copy
+    StrBuf (else the non-null strings).  Shared by the plain build step and
+    every probe, so a key is probed exactly as it was inserted."""
+    if value_kind == "str":
+        if isinstance(values, StrBuf):  # zero-copy Arrow path, nulls dropped
+            return values
+        return [v for v in values if v is not None]
+    if value_kind not in _DTYPES:
+        raise ValueError(f"unknown value_kind {value_kind}")
+    return np.asarray(values, _DTYPES[value_kind])
+
+
 def _update(sketch, state, values, value_kind: str) -> int:
     if len(values) == 0:
         return 0
-    if value_kind == "i32":
-        sketch.update_i32(state, np.asarray(values, np.int32))
-    elif value_kind == "i64":
-        if hasattr(sketch, "update_i64"):
-            sketch.update_i64(state, np.asarray(values, np.int64))
-        elif hasattr(sketch, "update"):  # quantile sketches take floats
-            sketch.update(state, np.asarray(values, np.float64))
-        else:
-            raise ValueError(f"{sketch.kind} does not support i64 values")
-    elif value_kind == "f64":
-        sketch.update(state, np.asarray(values, np.float64))
-    elif value_kind == "str":
-        if isinstance(values, StrBuf):  # zero-copy Arrow path, nulls dropped
-            sketch.update_str(state, values)
-        else:
-            sketch.update_str(state, [v for v in values if v is not None])
-    else:
-        raise ValueError(f"unknown value_kind {value_kind}")
+    cast = value_kind
+    update = getattr(sketch, "update" if cast == "f64" else f"update_{cast}",
+                     None)
+    if update is None and cast == "i64":  # quantile sketches take floats
+        update, cast = getattr(sketch, "update", None), "f64"
+    if update is None:
+        raise ValueError(f"{sketch.kind} does not support {value_kind} values")
+    update(state, _keys(values, cast))
     return len(values)
 
 
@@ -171,7 +178,7 @@ def _bound_state_volume(sel: DataFrame, sketch) -> DataFrame:
     core; only partition counts in EXCESS of the slots are trimmed).
     Narrow sketches (bloom/HLL/CMS ≤ a few MB) are never touched.
     Measured: 600k-doc cbloom changelog fold 93 s → 14 s at sf0.1."""
-    from .merge import AUTO_TREE_THRESHOLD_BYTES, state_size_estimate
+    from .merge import AUTO_TREE_THRESHOLD_BYTES
     sz = state_size_estimate(sketch)
     p = sel.rdd.getNumPartitions()
     if p * sz > AUTO_TREE_THRESHOLD_BYTES:
@@ -324,19 +331,19 @@ def _iter_rg_tables(split: dict, cols: list[str], lookahead: int = 2):
             yield t
 
 
-def _native_scan(df: DataFrame, sketch, cols: list[str], fn, schema: str,
-                 str_cols: tuple = ()) -> DataFrame | None:
-    """Native-scan source of the ungrouped and grouped builds: one task per
-    split of a driver ``range`` reads its parquet row groups with pyarrow
-    (vectorized C++ decode, no JVM row↔Arrow transposition) and feeds them
-    to ``fn`` as RecordBatches of ``cols`` — measured ~25× less CPU than the
-    JVM scan → Arrow exchange (the JVM boundary was ~90% of every build
-    line's CPU).  Taken only when the plan is provably a bare projected
-    parquet scan (``str_cols`` already parquet strings) and the sketch is
-    ``multiset_pure``: the splits re-partition the rows, so only then is the
-    blob bit-identical to the JVM path.  Else None."""
-    if not sketch.multiset_pure:
-        return None
+def _native_scan(df: DataFrame, cols: list[str], fn, schema: str,
+                 str_cols: tuple = (),
+                 state_bytes: int | None = None) -> DataFrame | None:
+    """Native-scan source of the builds and of ``membership_scan``: one task
+    per split of a driver ``range`` reads its parquet row groups with
+    pyarrow (vectorized C++ decode, no JVM row↔Arrow transposition) and
+    feeds them to ``fn`` as RecordBatches of ``cols`` — measured ~25× less
+    CPU than the JVM scan → Arrow exchange (the JVM boundary was ~90% of
+    every build line's CPU).  Taken only when the plan is provably a bare
+    projected parquet scan (``str_cols`` already parquet strings); else
+    None.  The splits re-partition the rows, so a build caller must also
+    know its sketch is ``multiset_pure``.  ``state_bytes`` sizes the split
+    count (see _parquet_splits)."""
     info = _attr_through_projects(df, cols)
     if info is None:
         return None
@@ -344,11 +351,10 @@ def _native_scan(df: DataFrame, sketch, cols: list[str], fn, schema: str,
     if len(set(phys)) < len(phys):
         return None
     spark = df.sparkSession
-    from .merge import state_size_estimate
     splits = _parquet_splits(
         spark, files, phys,
         need_types={p: "string" for c, p in zip(cols, phys) if c in str_cols},
-        state_bytes=state_size_estimate(sketch))
+        state_bytes=state_bytes)
     if splits is None:
         return None
     bc = spark.sparkContext.broadcast(splits)
@@ -373,9 +379,12 @@ def _native_scan(df: DataFrame, sketch, cols: list[str], fn, schema: str,
 def _native_parquet_partials(df: DataFrame, sketch, col: str,
                              value_kind: str) -> DataFrame | None:
     """Native-scan partials of ``build_sketch`` (see _native_scan)."""
-    return _native_scan(df, sketch, [col],
+    if not sketch.multiset_pure:
+        return None
+    return _native_scan(df, [col],
                         _fold_fn(sketch, _plain_step(sketch, value_kind)),
-                        PARTIAL_SCHEMA)
+                        PARTIAL_SCHEMA,
+                        state_bytes=state_size_estimate(sketch))
 
 
 def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
@@ -630,7 +639,7 @@ def merge_shard_partials(partials: DataFrame, sketch,
     keyed by (shard_id, floor(src / fanin)) fold fanin-sized slices first —
     src renumbers densely each level (same invariant as merge._tree_level),
     so every task's input stays ≈ the merge byte budget regardless of P."""
-    from .merge import AUTO_TREE_THRESHOLD_BYTES, state_size_estimate
+    from .merge import AUTO_TREE_THRESHOLD_BYTES
     cls = type(sketch)
     shard_sz = max(1, state_size_estimate(sketch) // sketch.shard_count())
     fanin = max(2, int(AUTO_TREE_THRESHOLD_BYTES // shard_sz))
@@ -709,7 +718,6 @@ def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
     column-range fold beyond it (build_delta_shard_partials).  Measured at
     sf1 (2^25-counter / 134 MB state): 143.6 s monolithic → sharded keeps
     full scan parallelism and one parallel merge wave."""
-    from .merge import state_size_estimate
     if sharded is None:
         sharded = (hasattr(sketch, "serialize_shard")
                    and state_size_estimate(sketch) > SHARD_ROUTE_THRESHOLD_BYTES)
@@ -742,9 +750,12 @@ def _native_grouped_partials(df: DataFrame, sketch, group_col: str, col: str,
     path uses.  The group column must already be a parquet string column
     (the plan-side cast("string") must be an identity for the fold to see
     identical labels)."""
+    if not sketch.multiset_pure:
+        return None
     phase1 = _grouped_phase1_fn(sketch, _plain_step(sketch, value_kind))
-    return _native_scan(df, sketch, [group_col, col], phase1, GROUPED_SCHEMA,
-                        str_cols=(group_col,))
+    return _native_scan(df, [group_col, col], phase1, GROUPED_SCHEMA,
+                        str_cols=(group_col,),
+                        state_bytes=state_size_estimate(sketch))
 
 
 def _grouped_phase1_fn(sketch, step):
@@ -801,7 +812,6 @@ def _choose_grouped_strategy(df: DataFrame, sketch, group_col: str,
     the task budget → map-side combine (no data shuffle); beyond it →
     salted repartition (task memory divides by P).  ``group_cardinality``
     skips the approx_count_distinct job when the caller knows the domain."""
-    from .merge import state_size_estimate
     if group_cardinality is None:
         group_cardinality = int(df.select(
             F.approx_count_distinct(group_col, rsd=0.15)).collect()[0][0])

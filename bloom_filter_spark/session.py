@@ -64,9 +64,9 @@ def get_spark(app_name: str = "bloom_filter_spark",
                                str(32 * 1024 * 1024)))
         .config("spark.driver.memory",
                 driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # UI off by default (saves a jetty server per test session); the
-        # metrics A/B tools flip it on to read stage-level CPU/shuffle
-        # totals from the REST API (tools/ab_salted_metrics.py)
+        # UI off by default (saves a jetty server per test session);
+        # bench_extra.py flips it on to read stage-level CPU/shuffle totals
+        # from the REST API
         .config("spark.ui.enabled",
                 os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -53,7 +53,7 @@ def main() -> None:
                       F.sum(F.col("member").cast("long")).alias("hits")).collect()[0]
         metrics = {"n_probes": int(agg.n), "hits": int(agg.hits)}
     elif args.mode == "point":
-        udf = cms_point_udf(spark, blob, args.key_kind)
+        udf = cms_point_udf(spark, blob, args.key_kind, kind=args.kind)
         res = probes.withColumn("est_count", udf(F.col(args.col)))
         agg = res.agg(F.count("*").alias("n")).collect()[0]
         metrics = {"n_probes": int(agg.n)}

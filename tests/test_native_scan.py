@@ -89,3 +89,22 @@ def test_native_membership_scan_totals(spark, tokens):
     nat = membership_scan(tokens, "tokens", spark, blob, "bloom") \
         .agg(F.sum("n_probed"), F.sum("n_member")).collect()[0]
     assert tuple(nat) == (n, n)  # zero FN over the ingested stream
+    # the JVM source must give the same totals, on present and absent keys:
+    # a row-keeping Filter makes the native scan decline
+    jvm_src = tokens.where(F.col("n_tok") >= 0)
+    assert jvm_src.count() == tokens.count()
+    assert _attr_through_projects(jvm_src.select("tokens"), ["tokens"]) is None
+    absent = tokens.select(
+        F.transform("tokens", F.bitwise_not).alias("tokens"),
+        F.concat("doc_id", F.lit("#")).alias("doc_id"))
+    for col, value_kind in (("tokens", "i32_array"), ("doc_id", "str")):
+        for keys in (tokens, absent):
+            blob, _ = build_sketch(keys, BloomSketch(BloomParams(n=4096, p=0.01)),
+                                   col, value_kind)
+            scans = [membership_scan(src, col, spark, blob, "bloom", value_kind)
+                     for src in (tokens, jvm_src)]
+            assert "Range" in scans[0]._jdf.queryExecution() \
+                .optimizedPlan().toString()  # the native source ran
+            nat, jvm = [tuple(s.agg(F.sum("n_probed"), F.sum("n_member"))
+                              .collect()[0]) for s in scans]
+            assert nat == jvm, (col, value_kind, nat, jvm)

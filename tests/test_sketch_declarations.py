@@ -180,3 +180,27 @@ def test_build_operators_never_dispatch_on_kind():
         and any(isinstance(x, ast.Attribute) and x.attr == "kind"
                 for x in [node.left, *node.comparators])]
     assert offenders == [], f"build.py compares .kind at lines {offenders}"
+
+
+def test_probe_operators_never_compare_a_kind_to_literals():
+    """operators/probe.py routes on the probe methods a class defines; a
+    ``kind``/``key_kind``/``value_kind`` compared against a string literal
+    is a kind table creeping back."""
+    import bloom_filter_spark.operators.probe as probe
+    tree = ast.parse(open(os.path.abspath(probe.__file__)).read())
+
+    def is_kind(x):
+        name = x.id if isinstance(x, ast.Name) else getattr(x, "attr", "")
+        return name.endswith("kind")
+
+    def is_literal(x):
+        elts = x.elts if isinstance(x, (ast.Tuple, ast.List, ast.Set)) else [x]
+        return bool(elts) and all(isinstance(e, ast.Constant)
+                                  and isinstance(e.value, str) for e in elts)
+
+    offenders = [
+        node.lineno for node in ast.walk(tree)
+        if isinstance(node, ast.Compare)
+        and any(is_kind(x) for x in [node.left, *node.comparators])
+        and any(is_literal(x) for x in [node.left, *node.comparators])]
+    assert offenders == [], f"probe.py compares a kind at lines {offenders}"

@@ -270,6 +270,16 @@ def test_register_sql_probes(spark, sf_small, bloom_blob):
     n = spark.sql("SELECT count(*) c FROM probes_v WHERE NOT tok_contains(token)") \
              .collect()[0].c
     assert n == 0  # zero FN through the SQL surface
+    # a point_* class registers <prefix>_count: Count-Sketch estimates match
+    # the kernel's, key for key
+    cs = CountSketch(CountSketchParams(w=1 << 12, d=5))
+    cs_blob, _ = build_sketch(spark.read.parquet(f"{sf_small}/tokens.parquet"),
+                              cs, "tokens", "i32_array")
+    register_sql_probes(spark, "cs", cs_blob, "countsketch", "i32")
+    got = spark.sql("SELECT token, cs_count(token) est FROM probes_v").collect()
+    _, state = CountSketch.deserialize(cs_blob)
+    want = cs.point_i32(state, np.array([r.token for r in got], np.int32))
+    assert [r.est for r in got] == want.tolist()
 
 
 def test_membership_scan_scalar_and_str(spark, sf_small, bloom_blob):
@@ -289,6 +299,78 @@ def test_membership_scan_scalar_and_str(spark, sf_small, bloom_blob):
             .agg(F.sum("n_probed").alias("n"), F.sum("n_member").alias("h"))
             .collect()[0])
     assert agg2.n == agg2.h  # zero FN over every doc id
+    # i64 keys beyond int32 (xxhash64 of the token) probe as i64
+    hashed = pres.select(F.xxhash64("token").alias("h"))
+    hblob, _ = build_sketch(hashed, BloomSketch(BloomParams(n=10_000, p=0.01)),
+                            "h", "i64")
+    agg3 = (membership_scan(hashed, "h", spark, hblob, "bloom", "i64")
+            .agg(F.sum("n_probed").alias("n"), F.sum("n_member").alias("h"))
+            .collect()[0])
+    assert agg3.n == agg3.h == 10_000  # zero FN over every i64 key
+
+
+def test_probe_input_contract(spark, tokens_df, bloom_blob, tmp_path,
+                              monkeypatch, capsys):
+    """Every probe factory rejects, at creation, a key kind its sketch has
+    no probe method for; NULL in is NULL out for every rank kind; and
+    job_probe's point mode deserializes the kind it is given."""
+    import importlib.util
+    import json
+    import os
+    import sys
+
+    from bloom_filter_spark.operators import (
+        SketchCheckpoint, membership_scan, rank_udf)
+    from bloom_filter_spark.sketches import CountingBloomSketch
+    _, bblob = bloom_blob
+    cms = CMSSketch(CMSParams(eps=0.01, delta=0.01))
+    cms_blob = cms.serialize(cms.empty())
+    cb = CountingBloomSketch(BloomParams(n=1000, p=0.01))
+    cb_blob = cb.serialize(cb.empty())
+    for make in (lambda: cms_point_udf(spark, cms_blob, "f64"),
+                 lambda: cms_point_udf(spark, cb_blob, "i64", kind="cbloom"),
+                 lambda: membership_udf(spark, cms_blob, "cms", "i32"),
+                 lambda: membership_udf(spark, bblob, "bloom", "f64"),
+                 lambda: membership_scan(tokens_df, "n_tok", spark, bblob,
+                                         "bloom", "f64"),
+                 lambda: rank_udf(spark, cms_blob, "cms")):
+        with pytest.raises(ValueError):
+            make()
+
+    vals = spark.createDataFrame([(1.0,), (None,), (50.0,)], "x double")
+    for sketch in (KLLSketch(KLLParams(k=200)),
+                   TDigestSketch(TDigestParams(100))):
+        blob, _ = build_sketch(tokens_df, sketch, "n_tok", "f64")
+        rank = rank_udf(spark, blob, sketch.kind)
+        got = {r.x: r.r for r in vals.select("x", rank("x").alias("r"))
+               .collect()}
+        assert got[None] is None, sketch.kind
+        assert 0.0 <= got[1.0] <= got[50.0] <= 1.0, (sketch.kind, got)
+
+    cs = CountSketch(CountSketchParams(w=1 << 12, d=5))
+    ck = SketchCheckpoint(str(tmp_path / "ckpt"))
+    build_sketch(tokens_df, cs, "tokens", "i32_array", checkpoint=ck,
+                 sketch_id="cs_t")
+    probes = str(tmp_path / "probes.parquet")
+    tokens_df.select(F.explode("tokens").alias("token")).limit(200) \
+             .write.parquet(probes)
+    out = str(tmp_path / "out")
+    spec = importlib.util.spec_from_file_location("job_probe", os.path.join(
+        os.path.dirname(__file__), "..", "jobs", "job_probe.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setattr(sys, "argv", [
+        "job_probe.py", "--checkpoint", str(tmp_path / "ckpt"),
+        "--sketch-id", "cs_t", "--kind", "countsketch", "--probes", probes,
+        "--mode", "point", "--out", out])
+    job.main()
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1]
+                      )["n_probes"] == 200
+    rows = spark.read.parquet(out).collect()
+    blob, _ = ck.read_final(spark, "cs_t")
+    _, state = CountSketch.deserialize(blob)
+    want = cs.point_i32(state, np.array([r.token for r in rows], np.int32))
+    assert [r.est_count for r in rows] == want.tolist()
 
 
 def test_reservoir_distributed_build(spark, tokens_df):
