@@ -6,9 +6,9 @@ reference Go library ``rag-nar1/Bloom-Filter`` (/root/reference), extended —
 per the project north rule — with HyperLogLog, count-min sketch, t-digest and
 KLL quantile sketches, each implemented as a *mergeable aggregation*:
 
-    partition-local vectorized build (numpy inside ``mapInPandas``)
-        → associative merge tree (``applyInPandas``)
-        → broadcast probe / estimate (scalar ``pandas_udf``)
+    partition-local vectorized build (numpy inside ``mapInArrow``)
+        → associative merge levels (keyed ``groupBy(...).applyInArrow``)
+        → broadcast probe / estimate (scalar ``arrow_udf``)
 
 All heavy math is numpy over Arrow batches; there is no per-row Python in any
 hot path.  Relational operators (scan/filter/join/group-by/window) are taken

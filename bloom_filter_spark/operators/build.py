@@ -17,8 +17,8 @@ Every partial build — JVM-fed, native parquet scan, pre-aggregated,
 changelog — runs through ONE fold core (``_fold_fn``): fold an Arrow batch
 iterator into ``sketch.empty()`` with a per-batch step, emit the single
 (partition_id, n_items, state) row.  Every grouped build runs through one
-phase 1 (``_grouped_phase1_fn``) and one phase 2 (``_merge_grouped``).  What
-a sketch IS — whether its state is a pure function of the input multiset,
+phase 1 (``_grouped_phase1_fn``); every merge is merge.py's one Arrow level.
+What a sketch IS — whether its state is a pure function of the input multiset,
 how it takes weights, how long its params header is — is declared on the
 sketch class (sketches/base.py); the operators route on those declarations,
 never on kind names.
@@ -48,21 +48,13 @@ import os
 import zlib
 
 import numpy as np
-import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.hashing import StrBuf, arrow_strbuf
 from ..sketches.base import sketch_for_kind
-from .merge import PARTIAL_SCHEMA, merge_partials_tree, state_size_estimate
-
-
-def _flatten_arrays(col: pd.Series) -> np.ndarray:
-    """Series of array<int32> cells → one flat int32 vector (no row loop)."""
-    arrs = [a for a in col.to_numpy() if a is not None and len(a)]
-    if not arrs:
-        return np.empty(0, np.int32)
-    return np.concatenate(arrs).astype(np.int32, copy=False)
+from .merge import (PARTIAL_SCHEMA, _byte_fanin, _merge_levels,
+                    state_size_estimate)
 
 
 _DTYPES = {"i32": np.int32, "i64": np.int64, "f64": np.float64}
@@ -119,6 +111,11 @@ def _elem_kind(value_kind: str) -> str:
     return "i32" if value_kind == "i32_array" else value_kind
 
 
+def _partition_id() -> int:
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else 0
+
+
 def _fold_fn(sketch, step):
     """The one fold core of every partial build → a ``mapInArrow`` function
     folding its Arrow batch iterator into ``sketch.empty()`` and yielding the
@@ -131,10 +128,8 @@ def _fold_fn(sketch, step):
         n = 0
         for b in batches:
             n += step(state, b)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
         yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([pid], pa.int64()),
+            "partition_id": pa.array([_partition_id()], pa.int64()),
             "n_items": pa.array([n], pa.int64()),
             "state": pa.array([sketch.serialize(state)], pa.binary()),
         })
@@ -442,7 +437,7 @@ def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
 
     Merge strategy: AUTO by default — driver-side fold (one job) while
     P × |state| stays under merge.AUTO_TREE_THRESHOLD_BYTES, the fanin-ary
-    applyInPandas tree beyond it (thousands of GB-scale Bloom partials must
+    Arrow merge tree beyond it (thousands of GB-scale Bloom partials must
     never be collect()ed).  ``tree_merge=True``/``False`` forces a path.
     If ``checkpoint`` and ``sketch_id`` are given, partial and final states
     are persisted with lineage — resumable builds.
@@ -466,15 +461,15 @@ def _merge_checkpointed(df: DataFrame, partials: DataFrame, sketch,
     from .merge import merge_partials_auto, merge_partials_collect
     persist = checkpoint is not None and sketch_id is not None
     # capture BEFORE the checkpoint round-trip: a read-back packs many
-    # partial rows per parquet partition, so getNumPartitions inside
-    # merge_partials_auto would under-count and mis-route a large fleet
-    # to the driver collect (ADVICE r4)
-    est_rows = partials.rdd.getNumPartitions() if tree_merge is None else None
+    # partial rows per parquet partition, so its getNumPartitions would
+    # under-count, mis-route and mis-plan the merge (ADVICE r4)
+    est_rows = (None if tree_merge is False
+                else partials.rdd.getNumPartitions())
     if persist:
         partials = checkpoint.write_partials(sketch_id, sketch, partials,
                                              input_desc=_describe_input(df))
     if tree_merge:
-        row = merge_partials_tree(partials, sketch, fanin=fanin).collect()[0]
+        row = _merge_levels(partials, sketch, fanin, est_rows).collect()[0]
         blob, n_items = bytes(row.state), int(row.n_items)
     elif tree_merge is None:
         blob, n_items = merge_partials_auto(partials, sketch, fanin=fanin,
@@ -614,11 +609,9 @@ def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
             blobs = [sketch.serialize_shard_from_cells(
                 idx[cuts[i]:cuts[i + 1]], dl[cuts[i]:cuts[i + 1]],
                 i, n_shards) for i in range(n_shards)]
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
         yield pa.RecordBatch.from_pydict({
             "shard_id": pa.array(list(range(n_shards)), pa.int32()),
-            "src": pa.array([pid] * n_shards, pa.int64()),
+            "src": pa.array([_partition_id()] * n_shards, pa.int64()),
             "n_items": pa.array([n] + [0] * (n_shards - 1), pa.int64()),
             "state": pa.array(blobs, pa.binary()),
         })
@@ -628,53 +621,23 @@ def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
 
 def merge_shard_partials(partials: DataFrame, sketch,
                          est_partials: int | None = None) -> DataFrame:
-    """(shard_id, n_items, state)* → ONE dense row per shard via
-    groupBy(shard_id) counter-sum waves — merge parallelism = n_shards, and
-    each reducer holds one shard accumulator, never the whole filter.
-
-    Per-task INPUT is byte-bounded too: applyInPandas materializes a whole
-    group, so a P-partition scan would hand one reducer P same-shard blobs
-    (1000 dense 8 MB partials = 8 GB in one task).  When P exceeds the
-    byte-aware fanin (merge budget / dense shard bytes), pre-merge levels
-    keyed by (shard_id, floor(src / fanin)) fold fanin-sized slices first —
-    src renumbers densely each level (same invariant as merge._tree_level),
-    so every task's input stays ≈ the merge byte budget regardless of P."""
-    from .merge import AUTO_TREE_THRESHOLD_BYTES
-    cls = type(sketch)
-    shard_sz = max(1, state_size_estimate(sketch) // sketch.shard_count())
-    fanin = max(2, int(AUTO_TREE_THRESHOLD_BYTES // shard_sz))
-    if est_partials is None:
-        est_partials = partials.rdd.getNumPartitions()
-
-    def merge_level(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("src")  # reproducible fold order
-        blob = cls.merge_shard_blobs(list(pdf["state"]))
-        return pd.DataFrame({"shard_id": [int(pdf["shard_id"].iloc[0])],
-                             "src": [int(pdf["grp"].iloc[0])],
-                             "n_items": [int(pdf["n_items"].sum())],
-                             "state": [blob]})
-
-    def merge_final(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("src")
-        blob = cls.merge_shard_blobs(list(pdf["state"]))
-        return pd.DataFrame({"shard_id": [int(pdf["shard_id"].iloc[0])],
-                             "n_items": [int(pdf["n_items"].sum())],
-                             "state": [blob]})
-
+    """(shard_id, src, n_items, state)* → ONE dense row per shard: the Arrow
+    merge levels keyed by shard_id, ordered by src, folding with the
+    counter-sum ``merge_shard_blobs`` — merge parallelism = n_shards, each
+    reducer holds one shard, never the whole filter.  Per-task input is
+    byte-bounded: when ``est_partials`` (default: the partition count)
+    exceeds the fanin (merge budget / dense shard bytes), pre-merge levels
+    keyed by (shard_id, floor(src / fanin)) fold fanin-sized slices first
+    (1000 dense 8 MB partials would otherwise be 8 GB in one task)."""
+    shard_sz = state_size_estimate(sketch) // sketch.shard_count()
     if "src" not in partials.columns:
         # legacy input (pre-src layout): one mapInArrow task per scan
         # partition means the physical partition id IS the origin — only
         # sound because nothing re-partitioned between fold and merge
         partials = partials.withColumn("src", F.spark_partition_id())
-    df = partials
-    p = est_partials
-    while p > fanin:
-        df = (df.withColumn("grp", F.floor(F.col("src") / fanin))
-                .groupBy("shard_id", "grp")
-                .applyInPandas(merge_level, SHARD_SCHEMA))
-        p = -(-p // fanin)
-    return df.groupBy("shard_id").applyInPandas(
-        merge_final, "shard_id int, n_items long, state binary")
+    return _merge_levels(partials, sketch, _byte_fanin(shard_sz), est_partials,
+                         keys=("shard_id",), order="src",
+                         fold=type(sketch).merge_shard_blobs).drop("src")
 
 
 def build_delta_sketch_sharded(df: DataFrame, sketch, col: str, sign_col: str,
@@ -740,7 +703,9 @@ def _describe_input(df: DataFrame) -> str:
         return "<derived>"
 
 
-GROUPED_SCHEMA = "group string, n_items long, state binary"
+# phase-1 rows carry their origin partition as ``src``: phase 2 orders its
+# fold and its fanin levels by it, then drops it
+GROUPED_SCHEMA = "group string, src long, n_items long, state binary"
 
 
 def _native_grouped_partials(df: DataFrame, sketch, group_col: str, col: str,
@@ -779,6 +744,7 @@ def _grouped_phase1_fn(sketch, step):
                 st[1] += step(st[0], rest.filter(pa.array(codes == gi)))
         yield pa.RecordBatch.from_pydict({
             "group": pa.array(list(states.keys()), pa.string()),
+            "src": pa.array([_partition_id()] * len(states), pa.int64()),
             "n_items": pa.array([v[1] for v in states.values()], pa.int64()),
             "state": pa.array([sketch.serialize(v[0]) for v in states.values()],
                               pa.binary()),
@@ -787,17 +753,15 @@ def _grouped_phase1_fn(sketch, step):
     return phase1
 
 
-def _merge_grouped(partials: DataFrame, sketch) -> DataFrame:
-    """Grouped phase 2: merge every (group, n_items, state) partial of a
-    group into one row."""
-
-    def phase2(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .merge import merge_blobs
-        blob, n = merge_blobs(sketch, list(pdf["state"]), pdf["n_items"].sum())
-        return pd.DataFrame({"group": [pdf["group"].iloc[0]], "n_items": [n],
-                             "state": [blob]})
-
-    return partials.groupBy("group").applyInPandas(phase2, GROUPED_SCHEMA)
+def _merge_grouped(partials: DataFrame, sketch,
+                   est_rows: int | None = None) -> DataFrame:
+    """Grouped phase 2: the Arrow merge levels keyed by group, ordered by
+    src, fold each group's partials into one (group, n_items, state) row.
+    A route behind a shuffle passes ``est_rows`` (partials per group):
+    under AQE, getNumPartitions would run that shuffle once more."""
+    return _merge_levels(partials, sketch,
+                         _byte_fanin(state_size_estimate(sketch)), est_rows,
+                         keys=("group",), order="src").drop("src")
 
 
 # A map-side grouped build holds ALL G group states in EVERY task; above
@@ -879,7 +843,7 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
             if num_partitions:
                 base = base.repartition(num_partitions)
             partials = base.mapInArrow(phase1, GROUPED_SCHEMA)
-        return _merge_grouped(partials, sketch)
+        return _merge_grouped(partials, sketch, num_partitions or None)
 
     if strategy != "salted":
         raise ValueError(f"unknown grouped-build strategy {strategy!r}")
@@ -893,7 +857,8 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
     shuffled = base.repartition(num_partitions, "group", "salt") if num_partitions \
         else base.repartition("group", "salt")
     partials = shuffled.drop("salt").mapInArrow(phase1, GROUPED_SCHEMA)
-    return _merge_grouped(partials, sketch)
+    # a group's rows hash into at most n_salts (group, salt) partitions
+    return _merge_grouped(partials, sketch, n_salts)
 
 
 def build_grouped_preagg(df: DataFrame, sketch, group_col: str, col: str,
@@ -917,7 +882,8 @@ def build_grouped_preagg(df: DataFrame, sketch, group_col: str, col: str,
     step = _weighted_step(sketch, _elem_kind(value_kind))
     partials = counts.mapInArrow(_grouped_phase1_fn(sketch, step),
                                  GROUPED_SCHEMA)
-    return _merge_grouped(partials, sketch)
+    return _merge_grouped(partials, sketch, int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
 
 
 def build_grouped_single_writer(df: DataFrame, kind: str, params, group_col: str,
@@ -927,31 +893,30 @@ def build_grouped_single_writer(df: DataFrame, kind: str, params, group_col: str
     The whole group flows through ONE task (the reference's insert semantics
     are inherently sequential — /root/reference/filter/cuckoo/filter.go:39-66
     random-walk eviction); the eviction RNG is seeded from the group name so
-    builds are deterministic.  Returns (group, n_items, n_failed, state).
+    builds are deterministic.  Values are extracted as the build does and
+    go to ``insert_<elem kind>`` (ValueError at call time if the class has
+    none).  Returns (group, n_items, n_failed, state).
     """
     cls = sketch_for_kind(kind)
-    array_input = value_kind == "i32_array"
+    elem_kind = _elem_kind(value_kind)
+    insert = f"insert_{elem_kind}"
+    if not hasattr(cls, insert):
+        raise ValueError(f"{kind} does not support {value_kind} values")
 
-    def build_one(pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_one(table):
+        import pyarrow as pa
         sk = cls(params)
         state = sk.empty()
-        group = pdf["group"].iloc[0]
+        group = table.column("group")[0].as_py()
         rng_seed = zlib.crc32(str(group).encode())  # process-stable, unlike hash()
-        if array_input:
-            vals = _flatten_arrays(pdf["v"])
-            failed = sk.insert_i32(state, vals, rng_seed)
-            n = int(vals.size)
-        elif value_kind == "str":
-            vals = [v for v in pdf["v"].dropna()]
-            failed = sk.insert_str(state, vals, rng_seed)
-            n = len(vals)
-        else:
-            vals = pdf["v"].dropna().to_numpy()
-            failed = sk.insert_i32(state, np.asarray(vals, np.int32), rng_seed)
-            n = int(len(vals))
-        return pd.DataFrame({"group": [group], "n_items": [n],
-                             "n_failed": [failed], "state": [sk.serialize(state)]})
+        vals = _arrow_values(table.column("v").combine_chunks(), value_kind)
+        failed = getattr(sk, insert)(state, _keys(vals, elem_kind), rng_seed)
+        return pa.Table.from_arrays(
+            [table.column("group").slice(0, 1), pa.array([len(vals)], pa.int64()),
+             pa.array([failed], pa.int64()),
+             pa.array([sk.serialize(state)], pa.binary())],
+            names=["group", "n_items", "n_failed", "state"])
 
     base = df.select(F.col(group_col).cast("string").alias("group"), F.col(col).alias("v"))
-    return base.groupBy("group").applyInPandas(
+    return base.groupBy("group").applyInArrow(
         build_one, "group string, n_items long, n_failed long, state binary")

@@ -27,7 +27,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .merge import merge_partials_tree
+from .merge import _merge_levels
 
 PARTIAL_TABLE_SCHEMA = ("sketch_id string, kind string, level int, partition_id long, "
                         "n_items long, state binary, params_json string, "
@@ -147,7 +147,8 @@ class SketchCheckpoint:
                fanin: int = 64) -> tuple[bytes, int]:
         """Rebuild the final state from the LATEST complete run's partials.
         Layout auto-detected from the level column: SHARD_LEVEL rows merge
-        per shard and reassemble; monolithic rows run the fanin tree."""
+        per shard and reassemble; monolithic rows run the fanin tree.  Both
+        plan levels from counted rows (a read-back under-counts partitions)."""
         base = os.path.join(self._tbl("sketch_state"), f"sketch_id={sketch_id}")
         raw = spark.read.parquet(self._latest_run_path(base))
         if raw.where(F.col("level") == SHARD_LEVEL).limit(1).count():
@@ -186,7 +187,8 @@ class SketchCheckpoint:
             n = int(sum(r.n_items for r in rows))
         else:
             partials = raw.select("partition_id", "n_items", "state")
-            row = merge_partials_tree(partials, sketch, fanin=fanin).collect()[0]
+            row = _merge_levels(partials, sketch, fanin,
+                                est_rows=partials.count()).collect()[0]
             blob, n = bytes(row.state), int(row.n_items)
         self.write_final(sketch_id, sketch, blob, n)
         return blob, n

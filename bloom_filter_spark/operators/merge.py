@@ -1,9 +1,9 @@
-"""Associative merge tree over partial sketch states.
+"""The merge side of the mergeable aggregation: one Arrow merge level.
 
-P partial rows → ⌈P/fanin⌉ → … → 1, mirroring ``treeAggregate`` semantics on
-the DataFrame API (SURVEY.md §4.2).  Each level is a
-``groupBy(partition_id / fanin).applyInPandas`` over *state rows only* —
-shuffle volume per level is (#rows × |state|), never the input data.
+The fanin tree, grouped phase 2 and the per-shard counter merge are one
+keyed, fanin-bounded Arrow group-fold (``_tree_level``) over *state rows
+only* — shuffle volume per level is (#rows × |state|), never the input
+data — stacked by one planner (``_merge_levels``) into one lazy plan.
 
 Safety: partial blobs carry their params in the serialized header; merging
 states built under different params silently corrupts estimates, so every
@@ -13,8 +13,8 @@ merge first checks that the first ``sketch.header_len`` bytes are equal
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 PARTIAL_SCHEMA = "partition_id long, n_items long, state binary"
 
@@ -38,8 +38,8 @@ def merge_partials_collect(partials: DataFrame, sketch) -> tuple[bytes, int]:
     """Driver-side fold of the partial states — ONE Spark job.
 
     Correct choice when P × |state| is small (a few hundred MB-scale blobs):
-    the tree's extra persist/count/shuffle jobs cost ~0.5-1 s of fixed
-    latency each, which dominates short builds and caps scaling efficiency.
+    each tree level is another shuffle stage with ~0.5-1 s of fixed
+    latency, which dominates short builds and caps scaling efficiency.
     SURVEY.md §3.1: 'final merge (single task or driver)'.  Rows are folded
     in partition_id order so the result is reproducible and identical to the
     tree path for order-sensitive merges (KLL/t-digest compaction).
@@ -60,8 +60,8 @@ AUTO_TREE_THRESHOLD_BYTES = 256 << 20
 # two guard different memories: the tree threshold caps a single MERGE
 # TASK's input (executor memory), while this caps one .collect() on the
 # driver.  A driver comfortably folds a few hundred MB of state blobs in
-# one job (~0.1 s measured for 32 × 8.4 MB), whereas the tree's
-# persist/count/level jobs cost seconds of fixed latency — routing
+# one job (~0.1 s measured for 32 × 8.4 MB), whereas the tree's shuffle
+# levels cost seconds of fixed latency — routing
 # mid-sized fleets (256-512 MB of partials) to the tree tripled a 3.8M-key
 # str-build's merge for no memory benefit.  At 1000 executors × 8 MB
 # states (8 GB) the tree still takes over.
@@ -124,50 +124,80 @@ def merge_partials_auto(partials: DataFrame, sketch, fanin: int = 64,
     else:
         route_bytes = task_bytes = threshold_bytes
     if est_rows * sz > route_bytes:
-        # byte-aware fanin: a WIDE state (e.g. a 33 MB counting-bloom
-        # counter array) with the default fanin=64 would funnel 2+ GB into
-        # ONE merge task; cap each task's input at the executor byte
-        # budget, so memory per merge task stays bounded no matter how
-        # large a single state is
-        per_task = max(2, int(task_bytes // max(1, sz)))
-        row = merge_partials_tree(partials, sketch,
-                                  fanin=min(fanin, per_task)).collect()[0]
+        # byte-aware fanin: 64 WIDE states (33 MB counting-bloom arrays)
+        # would funnel 2+ GB into ONE merge task
+        row = _merge_levels(partials, sketch,
+                            min(fanin, _byte_fanin(sz, task_bytes)),
+                            est_rows).collect()[0]
         return bytes(row.state), int(row.n_items)
     return merge_partials_collect(partials, sketch)
 
 
-def _tree_level(df: DataFrame, sketch, fanin: int) -> DataFrame:
-    """One fanin-ary merge level: group by floor(partition_id / fanin),
-    fold each group, emit the GROUP INDEX as the output partition_id.
+def _byte_fanin(state_bytes: int, budget: int | None = None) -> int:
+    """Rows of ``state_bytes`` one merge task may fold within ``budget``
+    (default AUTO_TREE_THRESHOLD_BYTES); at least 2, so every level
+    shrinks."""
+    if budget is None:
+        budget = AUTO_TREE_THRESHOLD_BYTES
+    return max(2, int(budget // max(1, state_bytes)))
 
-    INVARIANT (load-bearing for the byte-aware fanin cap in
-    merge_partials_auto): outputs are renumbered to the dense group ids
-    0..⌈P/fanin⌉-1, so floor-div grouping at the NEXT level packs at most
-    ``fanin`` rows per task again.  Emitting original ids instead would let
-    level-2 groups span fanin² consecutive inputs and silently funnel
-    fanin× the byte budget through one merge task — pinned by
+
+def _tree_level(df: DataFrame, sketch, fanin: int | None, keys: tuple = (),
+                order: str = "partition_id", fold=None) -> DataFrame:
+    """THE merge level: ``groupBy(*keys, floor(order / fanin))`` (``keys``
+    alone when ``fanin`` is None: the final fold), then ``applyInArrow``
+    folds each group with ``fold(blobs) -> blob`` (default: header-checked
+    ``merge_blobs``) and sums n_items.  FOLD ORDER: sorted by the order
+    column within a group, so KLL / t-digest never see arrival order.
+    INVARIANT (load-bearing for every byte-aware fanin): the order column
+    is renumbered to the group index (0 after the final fold), so the NEXT
+    level again packs at most ``fanin`` rows per task — original ids would
+    let level-2 groups span fanin² inputs.  Pinned by
     tests/test_spark_build.py::test_merge_tree_level_renumbers_dense."""
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("partition_id")  # reproducible fold order
-        blob, n = merge_blobs(sketch, list(pdf["state"]), pdf["n_items"].sum())
-        return pd.DataFrame({"partition_id": [int(pdf["grp"].iloc[0])],
-                             "n_items": [n], "state": [blob]})
+    fold = fold or (lambda blobs: merge_blobs(sketch, blobs, 0)[0])
+    schema = StructType([df.schema[k] for k in keys] + [
+        StructField(order, LongType()), StructField("n_items", LongType()),
+        StructField("state", BinaryType())])
+    by = list(keys)
+    if fanin:
+        df = df.withColumn("_grp", F.floor(F.col(order) / fanin))
+        by.append("_grp")
 
-    return (df.withColumn("grp", F.floor(F.col("partition_id") / fanin))
-              .groupBy("grp")
-              .applyInPandas(merge_group, PARTIAL_SCHEMA))
+    def fold_group(table):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        table = table.sort_by(order)
+        state = table.column("state")
+        grp = table.column("_grp")[0].as_py() if fanin else 0
+        return pa.Table.from_arrays(
+            [*(table.column(k).slice(0, 1) for k in keys),
+             pa.array([grp], pa.int64()),
+             pa.array([pc.sum(table.column("n_items")).as_py()], pa.int64()),
+             pa.array([fold(state.to_pylist())], state.type)],
+            names=schema.names)
+
+    return df.groupBy(*by).applyInArrow(fold_group, schema)
+
+
+def _merge_levels(df: DataFrame, sketch, fanin: int,
+                  est_rows: int | None = None, keys: tuple = (),
+                  order: str = "partition_id", fold=None) -> DataFrame:
+    """THE level planner: while the estimated rows per key (default: the
+    partition count) exceed ``fanin``, add a ``_tree_level``; then fold
+    each key once.  No persist, no count job: the merge runs in the
+    caller's one action.  An under-estimate loses no rows, it only loads
+    the final fold with more than ``fanin``."""
+    if est_rows is None:
+        est_rows = df.rdd.getNumPartitions()
+    while est_rows > fanin:
+        df = _tree_level(df, sketch, fanin, keys, order, fold)
+        est_rows = -(-est_rows // fanin)
+    return _tree_level(df, sketch, None, keys, order, fold)
 
 
 def merge_partials_tree(partials: DataFrame, sketch, fanin: int = 64) -> DataFrame:
     """Reduce a partials DataFrame to a single (partition_id=0, n_items, state)
-    row via a fanin-ary tree of applyInPandas merges.  Use for LARGE fleets
-    of partials (P ≫ fanin) where a driver collect would be the bottleneck;
-    otherwise prefer merge_partials_collect."""
-    df = partials.persist()
-    count = df.count()
-    while count > 1:
-        nxt = _tree_level(df, sketch, fanin).persist()
-        new_count = nxt.count()
-        df.unpersist()
-        df, count = nxt, new_count
-    return df
+    row via a fanin-ary tree of Arrow merge levels.  Use for LARGE fleets
+    (P ≫ fanin) where a driver collect would be the bottleneck; otherwise
+    prefer merge_partials_collect."""
+    return _merge_levels(partials, sketch, fanin)

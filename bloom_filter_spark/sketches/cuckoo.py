@@ -15,7 +15,7 @@ Mirrors /root/reference/filter/cuckoo/filter.go:
 Distributed scoping (SURVEY.md §2.3): cuckoo filters are NOT safely
 union-mergeable (bucket overflow breaks the ≤8-copies-per-fingerprint
 invariant), and the reference never merges them.  This engine builds cuckoo
-filters single-writer — per group via ``groupBy(key).applyInPandas`` — and
+filters single-writer — per group via ``groupBy(key).applyInArrow`` — and
 registers no merge.  The eviction random walk uses a seeded generator so
 builds are deterministic.
 

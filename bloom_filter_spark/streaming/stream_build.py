@@ -2,7 +2,7 @@
 
 The mergeable-sketch algebra makes streaming ingestion trivial: each
 micro-batch builds partial states with the SAME batch operators
-(mapInPandas → merge tree), and ``foreachBatch`` folds the batch's state
+(mapInArrow → Arrow merge), and ``foreachBatch`` folds the batch's state
 into the running sketch with the associative merge.  After any prefix of
 micro-batches the accumulated state is bit-identical to a batch build over
 the same rows (Bloom/HLL/CMS) — the streaming/batch equivalence test.

@@ -204,3 +204,27 @@ def test_probe_operators_never_compare_a_kind_to_literals():
         and any(is_kind(x) for x in [node.left, *node.comparators])
         and any(is_literal(x) for x in [node.left, *node.comparators])]
     assert offenders == [], f"probe.py compares a kind at lines {offenders}"
+
+
+def test_merge_and_build_operators_have_one_arrow_merge_level():
+    """Every merge is the one Arrow level in merge._tree_level: the merge
+    and build operators call no applyInPandas and no persist(), import no
+    pandas, and only _tree_level applies an Arrow group-fold in merge.py."""
+    import bloom_filter_spark.operators.build as build
+    import bloom_filter_spark.operators.merge as merge
+    for mod in (build, merge):
+        tree = ast.parse(open(os.path.abspath(mod.__file__)).read())
+        attrs = {node.attr for node in ast.walk(tree)
+                 if isinstance(node, ast.Attribute)}
+        assert not attrs & {"applyInPandas", "persist"}, mod.__name__
+        imported = {alias.name.split(".")[0] for node in ast.walk(tree)
+                    if isinstance(node, (ast.Import, ast.ImportFrom))
+                    for alias in node.names}
+        imported |= {node.module.split(".")[0] for node in ast.walk(tree)
+                     if isinstance(node, ast.ImportFrom) and node.module}
+        assert "pandas" not in imported, mod.__name__
+    tree = ast.parse(open(os.path.abspath(merge.__file__)).read())
+    folders = {fn.name for fn in tree.body if isinstance(fn, ast.FunctionDef)
+               and any(isinstance(n, ast.Attribute) and n.attr == "applyInArrow"
+                       for n in ast.walk(fn))}
+    assert folders == {"_tree_level"}

@@ -1,5 +1,5 @@
 """End-to-end distributed sketch lifecycle on Spark (SURVEY.md §3.1 M1):
-scan → mapInPandas partial build → applyInPandas merge tree → broadcast
+scan → mapInArrow partial build → applyInArrow merge tree → broadcast
 probe — the reference's main.go workload, distributed.
 """
 
@@ -65,6 +65,30 @@ def test_merge_tree_multilevel(spark, tokens_df):
     row = merge_partials_tree(partials, sketch, fanin=4).collect()[0]
     blob, _ = build_sketch(tokens_df, sketch, "tokens", "i32_array", repartition=8)
     assert bytes(row.state) == blob
+
+
+def test_merge_tree_runs_as_one_job_and_caches_nothing(spark, tokens_df):
+    """The tree plans its levels from the partition count, with no
+    persist/count jobs: 32 partials at fanin 4 (two pre-merge levels and
+    the final fold) collect in ONE Spark job and leave nothing cached.
+    AQE submits every shuffle stage as its own job, so the jobs are
+    counted with AQE off, where one action is one job."""
+    sketch = BloomSketch(BloomParams(n=60_000, p=0.01))
+    partials = build_partials(tokens_df, sketch, "tokens", "i32_array",
+                              repartition=32)
+    sc = spark.sparkContext
+    cached = sc._jsc.sc().getPersistentRDDs().size()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("merge_tree_one_job", "merge_partials_tree")
+        row = merge_partials_tree(partials, sketch, fanin=4).collect()[0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert row.partition_id == 0
+    assert len(sc.statusTracker().getJobIdsForGroup("merge_tree_one_job")) == 1
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached
 
 
 def test_merge_auto_routes_by_state_volume(spark, tokens_df):
@@ -177,6 +201,21 @@ def test_cuckoo_grouped_single_writer(spark, tokens_df):
     docs = tokens_df.where(F.col("source") == "src_00").select("doc_id").toPandas()
     cf, state = CuckooFilter.deserialize(by_group["src_00"])
     assert cf.contains_str(state, docs["doc_id"].tolist()).all()
+    # i64 keys insert through insert_i64 (no int32 truncation): every
+    # inserted key of every group must probe present through contains_i64
+    params = CuckooParams(n=30_000, load_factor=0.8)
+    hashed = tokens_df.select("source", F.xxhash64("doc_id").alias("h"))
+    res64 = {r.group: bytes(r.state) for r in build_grouped_single_writer(
+        hashed, "cuckoo", params, "source", "h", "i64").collect()}
+    keys = hashed.toPandas().groupby("source")["h"]
+    assert set(res64) == set(keys.groups)
+    for group, h in keys:
+        cf, state = CuckooFilter.deserialize(res64[group])
+        assert cf.contains_i64(state, h.to_numpy(np.int64)).all(), group
+    # a value kind the class cannot insert fails at call time
+    with pytest.raises(ValueError, match="f64"):
+        build_grouped_single_writer(tokens_df, "cuckoo", params, "source",
+                                    "n_tok", "f64")
 
 
 def test_checkpoint_resume(spark, tokens_df, tmp_path, bloom_blob):
@@ -633,6 +672,46 @@ def test_merge_tree_level_renumbers_dense(spark):
     assert ids1 == [0, 1, 2]  # floor-div groups of the sparse ids
     ids2 = sorted(r.partition_id for r in _tree_level(lvl1, sk, 2).collect())
     assert ids2 == [0, 1]  # renumbered dense → next level packs ≤ fanin
+
+
+def test_grouped_phase2_honours_byte_fanin(spark, tokens_df, monkeypatch):
+    """Grouped phase 2 runs the same byte-bounded merge levels as the
+    tree: with the merge budget patched down to a fanin of 2, 16 partials
+    per group fold through three pre-merge levels (16 → 8 → 4 → 2 rows per
+    group), one hash Exchange each, before the final per-group fold — and
+    every group's (n_items, state) is unchanged.  Planning phase 2 runs no
+    Spark job on any route (under AQE, reading the partition count of a
+    shuffled input would run its shuffle)."""
+    from bloom_filter_spark.operators import build_grouped_preagg
+    from bloom_filter_spark.operators import merge as merge_mod
+
+    sc = spark.sparkContext
+    sc.setJobGroup("grouped_planning", "build_grouped planning")
+    try:
+        for strategy in ("mapside", "salted"):
+            build_grouped(tokens_df, HLLSketch(HLLParams(b=12)), "source",
+                          "tokens", num_partitions=16, strategy=strategy)
+        build_grouped_preagg(tokens_df, HLLSketch(HLLParams(b=12)), "source",
+                             "tokens")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("grouped_planning") == []
+
+    def run():
+        df = build_grouped(tokens_df, HLLSketch(HLLParams(b=12)), "source",
+                           "tokens", "i32_array", num_partitions=16,
+                           strategy="mapside")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert df.columns == ["group", "n_items", "state"]
+        return ({r.group: (r.n_items, bytes(r.state)) for r in df.collect()},
+                plan.count("Exchange hashpartitioning"))
+
+    want, exchanges = run()
+    assert exchanges == 1  # the input repartition is round-robin
+    monkeypatch.setattr(merge_mod, "AUTO_TREE_THRESHOLD_BYTES", 1)  # fanin=2
+    got, exchanges = run()
+    assert exchanges == 1 + 3
+    assert got == want and len(want) > 0
 
 
 def test_cbloom_sharded_multilevel_merge_parity(spark, tokens_df, monkeypatch):

@@ -27,6 +27,10 @@ NOT under /root/testdata — tools/check_correctness.py's guard exists
 precisely so casual gates cannot wander off the driver data; this tool is
 the deliberate exception and says so loudly.
 
+The _SUCCESS marker holds GEN_VERSION; a marker from another generator
+version (or none) regenerates the tables.  Query names not in SUBSET, or a
+selection that runs no query, exit non-zero.
+
 Usage: python tools/gate_sf1_subset.py [--json BENCH/gate_sf1_subset.json]
                                        [query ...]
 """
@@ -44,12 +48,16 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from check_correctness import canon  # noqa: E402  (tools/ is sys.path[0])
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC_DIR = "/root/testdata/sf0.1"
 OUT_ROOT = os.path.join(REPO, ".sf1_testdata")
 OUT_DIR = os.path.join(OUT_ROOT, "sf1")
 COPIES = 10
 STRIDE = 10_000_000
+# written into the _SUCCESS marker; bump whenever the derived tables change
+GEN_VERSION = "sf1-subset-2"
 
 # int64 entity-key columns to shift per table (copy i adds i*STRIDE)
 KEY_SHIFTS = {
@@ -150,7 +158,10 @@ def _scaled_documents() -> pa.Table:
 def ensure_sf1_testdata() -> str:
     marker = os.path.join(OUT_DIR, "_SUCCESS")
     if os.path.exists(marker):
-        return OUT_DIR
+        with open(marker) as f:
+            if f.read().strip() == GEN_VERSION:
+                return OUT_DIR
+        os.remove(marker)  # another generator version: regenerate
     os.makedirs(OUT_DIR, exist_ok=True)
     for name in COPY_VERBATIM:
         pq.write_table(pq.read_table(f"{SRC_DIR}/{name}.parquet"),
@@ -158,26 +169,9 @@ def ensure_sf1_testdata() -> str:
     for name in KEY_SHIFTS:
         pq.write_table(_scaled_table(name), f"{OUT_DIR}/{name}.parquet")
     pq.write_table(_scaled_documents(), f"{OUT_DIR}/documents.parquet")
-    open(marker, "w").close()
+    with open(marker, "w") as f:
+        f.write(GEN_VERSION)
     return OUT_DIR
-
-
-def canon(df) -> str:
-    # identical to tools/check_correctness.py::canon
-    df = df.reindex(sorted(df.columns), axis=1)
-    rows = []
-    for _, row in df.iterrows():
-        cells = []
-        for v in row:
-            if isinstance(v, float):
-                cells.append(f"{v:.9g}")
-            elif isinstance(v, bool):
-                cells.append(str(bool(v)))
-            else:
-                cells.append(str(v))
-        rows.append("|".join(cells))
-    rows.sort()
-    return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
 def main() -> int:
@@ -193,6 +187,11 @@ def main() -> int:
         json_path = argv[i + 1]
         del argv[i:i + 2]
     only = set(argv)
+    unknown = sorted(only - set(SUBSET))
+    if unknown:
+        print(f"error: not in the sf1 subset: {', '.join(unknown)}",
+              file=sys.stderr)
+        return 2
 
     sf_dir = ensure_sf1_testdata()
     # DELIBERATE exception to check_correctness.py's /root/testdata guard:
@@ -269,6 +268,9 @@ def main() -> int:
             print(f"ok    {name}: rows={len(sdf)} hash match "
                   f"(spark {spark_took:.1f}s, oracle {oracle_took:.1f}s)")
             record[name] = {"ok": True, **rec}
+    if not record:
+        print("error: no query ran", file=sys.stderr)
+        return 2
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     if json_path:
         import json as _json
