@@ -2,8 +2,7 @@ from .build import build_partials, build_sketch, build_grouped  # noqa: F401
 from .build import build_delta_partials, build_delta_sketch  # noqa: F401
 from .build import (build_delta_shard_partials, build_delta_sketch_sharded,  # noqa: F401
                     merge_shard_partials)
-from .merge import (merge_partials_tree, merge_partials_auto, merge_blobs,  # noqa: F401
-                    PARTIAL_SCHEMA)
+from .merge import merge_partials_auto, merge_blobs, PARTIAL_SCHEMA  # noqa: F401
 from .probe import membership_udf, cms_point_udf, rank_udf, membership_scan  # noqa: F401
 from .checkpoint import SketchCheckpoint  # noqa: F401
 from .build import build_grouped_single_writer, build_grouped_preagg, build_sketch_preagg  # noqa: F401

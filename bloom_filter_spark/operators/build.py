@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..core.hashing import StrBuf, arrow_strbuf
 from ..sketches.base import sketch_for_kind
 from .merge import (PARTIAL_SCHEMA, _byte_fanin, _merge_levels,
-                    state_size_estimate)
+                    merge_partials_auto)
 
 
 _DTYPES = {"i32": np.int32, "i64": np.int64, "f64": np.float64}
@@ -174,9 +174,8 @@ def _bound_state_volume(sel: DataFrame, sketch) -> DataFrame:
     Narrow sketches (bloom/HLL/CMS ≤ a few MB) are never touched.
     Measured: 600k-doc cbloom changelog fold 93 s → 14 s at sf0.1."""
     from .merge import AUTO_TREE_THRESHOLD_BYTES
-    sz = state_size_estimate(sketch)
     p = sel.rdd.getNumPartitions()
-    if p * sz > AUTO_TREE_THRESHOLD_BYTES:
+    if p * sketch.state_bytes_max > AUTO_TREE_THRESHOLD_BYTES:
         sc = sel.sparkSession.sparkContext
         task_cpus = int(sc.getConf().get("spark.task.cpus", "1") or "1")
         slots = max(1, sc.defaultParallelism // task_cpus)
@@ -379,7 +378,7 @@ def _native_parquet_partials(df: DataFrame, sketch, col: str,
     return _native_scan(df, [col],
                         _fold_fn(sketch, _plain_step(sketch, value_kind)),
                         PARTIAL_SCHEMA,
-                        state_bytes=state_size_estimate(sketch))
+                        state_bytes=sketch.state_bytes_max)
 
 
 def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
@@ -396,8 +395,7 @@ def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array
 
 
 def build_sketch_preagg(df: DataFrame, sketch, col: str,
-                        value_kind: str = "i32_array", fanin: int = 64,
-                        shuffle_partitions: int | None = None) -> tuple[bytes, int]:
+                        value_kind: str = "i32_array") -> tuple[bytes, int]:
     """JVM-pre-aggregated build: explode → Tungsten partial groupBy(key) →
     ``update_weighted`` over (distinct key, count) pairs.
 
@@ -408,7 +406,6 @@ def build_sketch_preagg(df: DataFrame, sketch, col: str,
     ~3000× reduction.  n_items still counts every ingested token (sum of
     weights).
     """
-    from .merge import merge_partials_auto
     if sketch.weight_mode is None:
         raise ValueError(f"pre-aggregated build unsupported for {sketch.kind}")
     # The JVM pre-aggregation exists to shrink the JVM→Python boundary.
@@ -418,64 +415,50 @@ def build_sketch_preagg(df: DataFrame, sketch, col: str,
     # _native_parquet_partials takes exactly those sketches.
     partials = _native_parquet_partials(df, sketch, col, value_kind)
     if partials is not None:
-        return merge_partials_auto(partials, sketch, fanin=fanin)
+        return merge_partials_auto(partials, sketch)
     v = F.explode(F.col(col)) if value_kind == "i32_array" else F.col(col)
     counts = (df.select(v.alias("v")).where(F.col("v").isNotNull())
               .groupBy("v").agg(F.count("*").alias("cnt")))
-    if shuffle_partitions:
-        counts = counts.repartition(shuffle_partitions)
     step = _weighted_step(sketch, _elem_kind(value_kind))
     return merge_partials_auto(
         counts.mapInArrow(_fold_fn(sketch, step), PARTIAL_SCHEMA), sketch)
 
 
 def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
-                 repartition: int | None = None, fanin: int = 64,
-                 checkpoint=None, sketch_id: str | None = None,
-                 tree_merge: bool | None = None) -> tuple[bytes, int]:
+                 repartition: int | None = None, checkpoint=None,
+                 sketch_id: str | None = None) -> tuple[bytes, int]:
     """Full build: partials → merge → (final state blob, n_items).
 
-    Merge strategy: AUTO by default — driver-side fold (one job) while
-    P × |state| stays under merge.AUTO_TREE_THRESHOLD_BYTES, the fanin-ary
-    Arrow merge tree beyond it (thousands of GB-scale Bloom partials must
-    never be collect()ed).  ``tree_merge=True``/``False`` forces a path.
-    If ``checkpoint`` and ``sketch_id`` are given, partial and final states
-    are persisted with lineage — resumable builds.
+    The merge is merge.merge_partials_auto, planned from the sketch's
+    declared ``state_bytes_max``: a driver-side fold (one job) while
+    P × state_bytes_max fits merge.DRIVER_COLLECT_MAX_BYTES, the Arrow
+    merge levels at the byte fanin beyond it (thousands of GB-scale Bloom
+    partials must never be collect()ed).  If ``checkpoint`` and
+    ``sketch_id`` are given, partial and final states are persisted with
+    lineage, and ``SketchCheckpoint.resume`` replays the same merge plan.
     """
     partials = None
     if repartition is None:
         partials = _native_parquet_partials(df, sketch, col, value_kind)
     if partials is None:
         partials = build_partials(df, sketch, col, value_kind, repartition)
-    return _merge_checkpointed(df, partials, sketch, fanin, checkpoint,
-                               sketch_id, tree_merge)
+    return _merge_checkpointed(df, partials, sketch, checkpoint, sketch_id)
 
 
 def _merge_checkpointed(df: DataFrame, partials: DataFrame, sketch,
-                        fanin: int, checkpoint, sketch_id: str | None,
-                        tree_merge: bool | None = None) -> tuple[bytes, int]:
-    """One-row-per-partition partials → (final blob, n_items) through the
-    merge ``tree_merge`` picks (None: merge_partials_auto), persisting the
-    partial and final states when ``checkpoint`` and ``sketch_id`` are
-    given."""
-    from .merge import merge_partials_auto, merge_partials_collect
+                        checkpoint, sketch_id: str | None) -> tuple[bytes, int]:
+    """One-row-per-partition partials → (final blob, n_items) through
+    merge_partials_auto, persisting the partial and final states when
+    ``checkpoint`` and ``sketch_id`` are given."""
     persist = checkpoint is not None and sketch_id is not None
     # capture BEFORE the checkpoint round-trip: a read-back packs many
     # partial rows per parquet partition, so its getNumPartitions would
     # under-count, mis-route and mis-plan the merge (ADVICE r4)
-    est_rows = (None if tree_merge is False
-                else partials.rdd.getNumPartitions())
+    est_rows = partials.rdd.getNumPartitions()
     if persist:
         partials = checkpoint.write_partials(sketch_id, sketch, partials,
                                              input_desc=_describe_input(df))
-    if tree_merge:
-        row = _merge_levels(partials, sketch, fanin, est_rows).collect()[0]
-        blob, n_items = bytes(row.state), int(row.n_items)
-    elif tree_merge is None:
-        blob, n_items = merge_partials_auto(partials, sketch, fanin=fanin,
-                                            est_rows=est_rows)
-    else:
-        blob, n_items = merge_partials_collect(partials, sketch)
+    blob, n_items = merge_partials_auto(partials, sketch, est_rows)
     if persist:
         checkpoint.write_final(sketch_id, sketch, blob, n_items)
     return blob, n_items
@@ -629,7 +612,7 @@ def merge_shard_partials(partials: DataFrame, sketch,
     exceeds the fanin (merge budget / dense shard bytes), pre-merge levels
     keyed by (shard_id, floor(src / fanin)) fold fanin-sized slices first
     (1000 dense 8 MB partials would otherwise be 8 GB in one task)."""
-    shard_sz = state_size_estimate(sketch) // sketch.shard_count()
+    shard_sz = sketch.state_bytes_max // sketch.shard_count()
     if "src" not in partials.columns:
         # legacy input (pre-src layout): one mapInArrow task per scan
         # partition means the physical partition id IS the origin — only
@@ -669,7 +652,7 @@ def build_delta_sketch_sharded(df: DataFrame, sketch, col: str, sign_col: str,
 
 
 def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
-                       value_kind: str = "str", fanin: int = 64,
+                       value_kind: str = "str",
                        repartition: int | None = None,
                        sharded: bool | None = None,
                        checkpoint=None,
@@ -683,7 +666,7 @@ def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
     full scan parallelism and one parallel merge wave."""
     if sharded is None:
         sharded = (hasattr(sketch, "serialize_shard")
-                   and state_size_estimate(sketch) > SHARD_ROUTE_THRESHOLD_BYTES)
+                   and sketch.state_bytes_max > SHARD_ROUTE_THRESHOLD_BYTES)
     if sharded:
         return build_delta_sketch_sharded(df, sketch, col, sign_col,
                                           value_kind, repartition=repartition,
@@ -691,8 +674,7 @@ def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
                                           sketch_id=sketch_id)
     partials = build_delta_partials(df, sketch, col, sign_col, value_kind,
                                     repartition)
-    return _merge_checkpointed(df, partials, sketch, fanin, checkpoint,
-                               sketch_id)
+    return _merge_checkpointed(df, partials, sketch, checkpoint, sketch_id)
 
 
 def _describe_input(df: DataFrame) -> str:
@@ -720,7 +702,7 @@ def _native_grouped_partials(df: DataFrame, sketch, group_col: str, col: str,
     phase1 = _grouped_phase1_fn(sketch, _plain_step(sketch, value_kind))
     return _native_scan(df, [group_col, col], phase1, GROUPED_SCHEMA,
                         str_cols=(group_col,),
-                        state_bytes=state_size_estimate(sketch))
+                        state_bytes=sketch.state_bytes_max)
 
 
 def _grouped_phase1_fn(sketch, step):
@@ -759,9 +741,8 @@ def _merge_grouped(partials: DataFrame, sketch,
     src, fold each group's partials into one (group, n_items, state) row.
     A route behind a shuffle passes ``est_rows`` (partials per group):
     under AQE, getNumPartitions would run that shuffle once more."""
-    return _merge_levels(partials, sketch,
-                         _byte_fanin(state_size_estimate(sketch)), est_rows,
-                         keys=("group",), order="src").drop("src")
+    return _merge_levels(partials, sketch, _byte_fanin(sketch.state_bytes_max),
+                         est_rows, keys=("group",), order="src").drop("src")
 
 
 # A map-side grouped build holds ALL G group states in EVERY task; above
@@ -779,13 +760,13 @@ def _choose_grouped_strategy(df: DataFrame, sketch, group_col: str,
     if group_cardinality is None:
         group_cardinality = int(df.select(
             F.approx_count_distinct(group_col, rsd=0.15)).collect()[0][0])
-    est_bytes = group_cardinality * state_size_estimate(sketch)
+    est_bytes = group_cardinality * sketch.state_bytes_max
     if est_bytes > MAPSIDE_STATE_BUDGET_BYTES:
         import logging
         logging.getLogger("bloom_filter_spark").warning(
             "build_grouped: ~%d groups x %d-byte states (= %.1f MB) exceeds "
             "the %d MB map-side task budget; routing to strategy='salted'",
-            group_cardinality, state_size_estimate(sketch), est_bytes / 1e6,
+            group_cardinality, sketch.state_bytes_max, est_bytes / 1e6,
             MAPSIDE_STATE_BUDGET_BYTES >> 20)
         return "salted", group_cardinality
     return "mapside", group_cardinality

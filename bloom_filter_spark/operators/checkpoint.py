@@ -12,9 +12,11 @@ Table layout (one directory per logical table under ``root``):
                  params_json, input_desc, created_utc
   sketch_final:  sketch_id, kind, n_items, state, params_json, created_utc
 
-Resume = read the persisted partials for a sketch_id and re-run the merge
-tree (the serde + associative merge make resume equivalent to a fresh build
-— reference round-trip invariant, /root/reference/filter/bloom/filter_test.go:187-233).
+Resume = read the persisted partials for a sketch_id and replay the build's
+merge plan: the same router (merge_partials_auto) planned from the same row
+count and the sketch's ``state_bytes_max``, so even order-sensitive sketches
+(KLL / t-digest compaction) resume to the direct build's bytes — reference
+round-trip invariant, /root/reference/filter/bloom/filter_test.go:187-233.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .merge import _merge_levels
+from .merge import merge_partials_auto
 
 PARTIAL_TABLE_SCHEMA = ("sketch_id string, kind string, level int, partition_id long, "
                         "n_items long, state binary, params_json string, "
@@ -36,7 +38,7 @@ PARTIAL_TABLE_SCHEMA = ("sketch_id string, kind string, level int, partition_id 
 # level sentinel marking SHARDED partial layout in sketch_state: rows are
 # (shard_id-as-partition_id, n_items, column-range state), many rows per id
 # (one per scan partition) — resumed via the per-shard merge + reassembly
-# instead of the fanin tree
+# instead of the monolithic router
 SHARD_LEVEL = -1
 FINAL_TABLE_SCHEMA = ("sketch_id string, kind string, n_items long, state binary, "
                       "params_json string, created_utc double")
@@ -143,12 +145,14 @@ class SketchCheckpoint:
                 .orderBy(F.col("created_utc").desc()).limit(1).collect())
         return bytes(rows[0].state), int(rows[0].n_items)
 
-    def resume(self, spark: SparkSession, sketch_id: str, sketch,
-               fanin: int = 64) -> tuple[bytes, int]:
+    def resume(self, spark: SparkSession, sketch_id: str,
+               sketch) -> tuple[bytes, int]:
         """Rebuild the final state from the LATEST complete run's partials.
         Layout auto-detected from the level column: SHARD_LEVEL rows merge
-        per shard and reassemble; monolithic rows run the fanin tree.  Both
-        plan levels from counted rows (a read-back under-counts partitions)."""
+        per shard and reassemble; monolithic rows go through the build's
+        router (merge_partials_auto), so resume takes the direct build's
+        route and merge levels.  Both plan from counted rows (a read-back
+        under-counts partitions)."""
         base = os.path.join(self._tbl("sketch_state"), f"sketch_id={sketch_id}")
         raw = spark.read.parquet(self._latest_run_path(base))
         if raw.where(F.col("level") == SHARD_LEVEL).limit(1).count():
@@ -187,8 +191,6 @@ class SketchCheckpoint:
             n = int(sum(r.n_items for r in rows))
         else:
             partials = raw.select("partition_id", "n_items", "state")
-            row = _merge_levels(partials, sketch, fanin,
-                                est_rows=partials.count()).collect()[0]
-            blob, n = bytes(row.state), int(row.n_items)
+            blob, n = merge_partials_auto(partials, sketch, partials.count())
         self.write_final(sketch_id, sketch, blob, n)
         return blob, n

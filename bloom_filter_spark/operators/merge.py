@@ -4,6 +4,9 @@ The fanin tree, grouped phase 2 and the per-shard counter merge are one
 keyed, fanin-bounded Arrow group-fold (``_tree_level``) over *state rows
 only* — shuffle volume per level is (#rows × |state|), never the input
 data — stacked by one planner (``_merge_levels``) into one lazy plan.
+Every merge decision reads one size, the class's declared
+``state_bytes_max``: one route rule (``merge_partials_auto``: driver fold
+or merge levels) and one fanin rule (``_byte_fanin``).
 
 Safety: partial blobs carry their params in the serialized header; merging
 states built under different params silently corrupts estimates, so every
@@ -68,78 +71,32 @@ AUTO_TREE_THRESHOLD_BYTES = 256 << 20
 DRIVER_COLLECT_MAX_BYTES = 512 << 20
 
 
-def state_size_estimate(sketch) -> int:
-    """Driver-side WORST-CASE serialized-size estimate: exact for
-    fixed-size states (bloom / blocked_bloom / hll / cms — the big ones);
-    for the variable-size sketches the cap is derived from their params
-    (k entries × entry width) so the routing guard never under-counts a
-    full state the way len(serialize(empty())) would."""
-    if sketch.kind == "hll":
-        # sparse serde makes an EMPTY state ~17 B while a dense partial is
-        # 13 + 2^b (16 KiB at b=14, 1 MiB at b=20) — size the router on the
-        # dense worst case or every HLL fleet would route to driver collect
-        return 13 + (1 << sketch.params.b)
-    if sketch.kind == "bloom":
-        return 16 + sketch.params.n_words * 8
-    if sketch.kind == "cbloom":
-        # params-derived: serializing a zeroed 2^27-counter array just to
-        # measure it would churn ~GBs of driver allocations per build
-        return 16 + sketch.params.m * 4
-    if sketch.kind == "ddsketch":
-        # params-derived cap: max_bins (keys + counts) × i64 per sign store
-        # (48 = 20B param header + n + zero + 2 size u32s + collapse flag)
-        return 48 + 4 * sketch.params.max_bins * 8
-    base = len(sketch.serialize(sketch.empty()))
-    k = getattr(sketch.params, "k", None)
-    if k is not None:  # KMV/reservoir: k×u64; MG: k×(key+count); KLL: ~3k
-        return base + int(k) * 16 + 64
-    if getattr(sketch.params, "compression", None) is not None:
-        return base + int(sketch.params.compression) * 32 + 64  # t-digest
-    return base
-
-
-def merge_partials_auto(partials: DataFrame, sketch, fanin: int = 64,
-                        threshold_bytes: int | None = None,
+def merge_partials_auto(partials: DataFrame, sketch,
                         est_rows: int | None = None) -> tuple[bytes, int]:
-    """Merge-strategy router: driver fold when P × |state| is small, the
-    fanin-ary executor tree when collecting the partials would blow the
-    driver (the caller no longer has to remember a flag at 1000-executor
-    scale).  ``est_rows`` should be the partial-ROW count when the caller
-    knows it (build_sketch passes the pre-checkpoint partition count —
-    a checkpoint read-back packs many partial files per scan partition, so
-    getNumPartitions there would under-count); otherwise P is read from
-    the plan (one row per partition on the direct path, no job)."""
+    """THE merge router, planned from ``sketch.state_bytes_max`` alone:
+    driver fold while est_rows × state_bytes_max fits
+    DRIVER_COLLECT_MAX_BYTES, else the executor merge levels at the byte
+    fanin.  ``est_rows`` is the partial-ROW count when the caller knows it
+    (build_sketch passes the pre-checkpoint partition count, resume its
+    counted rows — a checkpoint read-back packs many partial files per scan
+    partition, so getNumPartitions there would under-count); otherwise P
+    is read from the plan (one row per partition on the direct path, no
+    job).  Both routes fold in partition_id order, so a resume that passes
+    the build's row count replays the build's plan byte for byte."""
     if est_rows is None:
         est_rows = partials.rdd.getNumPartitions()
-    sz = state_size_estimate(sketch)
-    # default (None): route collect-vs-tree on the DRIVER budget
-    # (DRIVER_COLLECT_MAX_BYTES) and cap each tree task at the executor
-    # budget (AUTO_TREE_THRESHOLD_BYTES).  An explicit threshold_bytes
-    # keeps its historical single-knob meaning for BOTH — tests force the
-    # tree with 0 — and a sentinel of None (not default-value equality)
-    # distinguishes the cases, so passing the default constant explicitly
-    # behaves identically to passing it implicitly (code-review r5).
-    if threshold_bytes is None:
-        route_bytes, task_bytes = DRIVER_COLLECT_MAX_BYTES, AUTO_TREE_THRESHOLD_BYTES
-    else:
-        route_bytes = task_bytes = threshold_bytes
-    if est_rows * sz > route_bytes:
-        # byte-aware fanin: 64 WIDE states (33 MB counting-bloom arrays)
-        # would funnel 2+ GB into ONE merge task
-        row = _merge_levels(partials, sketch,
-                            min(fanin, _byte_fanin(sz, task_bytes)),
+    sz = sketch.state_bytes_max
+    if est_rows * sz > DRIVER_COLLECT_MAX_BYTES:
+        row = _merge_levels(partials, sketch, _byte_fanin(sz),
                             est_rows).collect()[0]
         return bytes(row.state), int(row.n_items)
     return merge_partials_collect(partials, sketch)
 
 
-def _byte_fanin(state_bytes: int, budget: int | None = None) -> int:
-    """Rows of ``state_bytes`` one merge task may fold within ``budget``
-    (default AUTO_TREE_THRESHOLD_BYTES); at least 2, so every level
-    shrinks."""
-    if budget is None:
-        budget = AUTO_TREE_THRESHOLD_BYTES
-    return max(2, int(budget // max(1, state_bytes)))
+def _byte_fanin(state_bytes: int) -> int:
+    """THE fanin rule: rows of ``state_bytes`` one merge task may fold
+    within AUTO_TREE_THRESHOLD_BYTES; at least 2, so every level shrinks."""
+    return max(2, int(AUTO_TREE_THRESHOLD_BYTES // max(1, state_bytes)))
 
 
 def _tree_level(df: DataFrame, sketch, fanin: int | None, keys: tuple = (),
@@ -194,10 +151,3 @@ def _merge_levels(df: DataFrame, sketch, fanin: int,
         est_rows = -(-est_rows // fanin)
     return _tree_level(df, sketch, None, keys, order, fold)
 
-
-def merge_partials_tree(partials: DataFrame, sketch, fanin: int = 64) -> DataFrame:
-    """Reduce a partials DataFrame to a single (partition_id=0, n_items, state)
-    row via a fanin-ary tree of Arrow merge levels.  Use for LARGE fleets
-    (P ≫ fanin) where a driver collect would be the bottleneck; otherwise
-    prefer merge_partials_collect."""
-    return _merge_levels(partials, sketch, fanin)

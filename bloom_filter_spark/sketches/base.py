@@ -29,6 +29,11 @@ these declarations, never on kind names:
                     route: the pre-aggregated builds raise ValueError).
     header_len      bytes of serialized params/seed that must be equal
                     before two blobs may merge (merge_blobs).
+    state_bytes_max the serialized worst case, derived from the class's own
+                    layout and params (exact for fixed-size states).  Every
+                    merge plan reads it: the driver-fold vs merge-level
+                    route, the byte fanin, the wide-state and grouped
+                    strategy guards.
     update_weighted(state, values, weights, value_kind)
                     whenever weight_mode is set: fold each value with an
                     integer count, hashing ``value_kind`` (i32|i64|str|f64)
@@ -48,6 +53,7 @@ class MergeableSketch(Protocol):
     multiset_pure: bool
     weight_mode: str | None
     header_len: int
+    state_bytes_max: int
 
     def empty(self): ...
 

@@ -139,6 +139,7 @@ class BlockedBloomSketch:
         return np.bitwise_or(a, b)
 
     header_len = 16  # u32 m | u32 k | u64 seed
+    state_bytes_max = property(lambda self: 16 + self.params.n_words * 8)
 
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params

@@ -213,6 +213,7 @@ class BloomSketch:
 
     # -- serde (reference byte layout, bloom/filter.go:63-92) --------------
     header_len = 16  # u32 m | u32 k | u64 seed
+    state_bytes_max = property(lambda self: 16 + self.params.n_words * 8)
 
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params

@@ -152,6 +152,8 @@ class CMSSketch:
         return a + b
 
     header_len = 32  # u32 d | u32 w | u64 seed | f64 eps | f64 delta
+    state_bytes_max = property(
+        lambda self: 32 + self.params.d * self.params.w * 8)
 
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params

@@ -184,6 +184,8 @@ class CountSketch:
         return a + b
 
     header_len = 16  # u32 d | u32 w | u64 seed
+    state_bytes_max = property(
+        lambda self: 16 + self.params.d * self.params.w * 8)
 
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params

@@ -306,6 +306,7 @@ class CountingBloomSketch:
 
     # -- serde (engine layout; the reference has no counting filter) -------
     header_len = 16  # u32 m | u32 k | u64 seed (counters follow)
+    state_bytes_max = property(lambda self: 16 + self.params.m * 4)
 
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params

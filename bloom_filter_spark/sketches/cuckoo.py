@@ -255,6 +255,7 @@ class CuckooFilter:
 
     # -- serde (filter.go:143-179) ---------------------------------------------
     header_len = 20  # u32 m | u64 fp_seed | u64 seed
+    state_bytes_max = property(lambda self: 20 + self.params.m * SLOTS)
 
     def serialize(self, state: np.ndarray) -> bytes:
         p = self.params

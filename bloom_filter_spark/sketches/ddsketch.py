@@ -233,6 +233,8 @@ class DDSketch:
 
     # -- serde ---------------------------------------------------------------
     header_len = 20  # f64 alpha | u32 max_bins | f64 min_value
+    # two stores of at most max_bins (key, count) i64 pairs
+    state_bytes_max = property(lambda self: 48 + self.params.max_bins * 32)
 
     def serialize(self, state: DDState) -> bytes:
         p = self.params

@@ -97,6 +97,8 @@ class HLLSketch:
         return float(raw)
 
     header_len = 12  # u32 b | u64 seed
+    # the dense layout: the sparse one is only chosen when it is smaller
+    state_bytes_max = property(lambda self: 13 + self.params.m)
 
     def serialize(self, state: np.ndarray) -> bytes:
         """LE u32 b | u64 seed | u8 mode | payload.

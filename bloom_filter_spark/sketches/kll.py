@@ -177,6 +177,10 @@ class KLLSketch:
 
     # -- serde -----------------------------------------------------------------
     header_len = 12  # u32 k | u64 seed (n/counter follow, may differ)
+    # every mutation ends in _compress, leaving at most _total_cap(levels)
+    # items; an item at level h weighs 2^h of the u64 n, so ≤ 64 levels
+    state_bytes_max = property(
+        lambda self: 32 + 64 * 4 + self._total_cap(64) * 8)
 
     def serialize(self, state: KLLState) -> bytes:
         head = (pack_u32(self.params.k) + pack_u64(self.params.seed)

@@ -124,6 +124,7 @@ class KMVSketch:
 
     # -- serde ----------------------------------------------------------------
     header_len = 12  # u32 k | u64 seed (count follows, may differ)
+    state_bytes_max = property(lambda self: 16 + self.params.k * 8)
 
     def serialize(self, state: KMVState) -> bytes:
         p = self.params

@@ -64,6 +64,8 @@ class MGSketch:
     def _fold(self, state: MGState, keys: np.ndarray, counts: np.ndarray) -> None:
         all_keys = np.concatenate([state.keys, keys])
         all_counts = np.concatenate([state.counts, counts])
+        if all_keys.size == 0:  # e.g. merging two empty partials
+            return
         order = np.argsort(all_keys, kind="stable")
         k_sorted = all_keys[order]
         c_sorted = all_counts[order]
@@ -136,6 +138,7 @@ class MGSketch:
 
     # -- serde ------------------------------------------------------------------
     header_len = 4  # u32 k (n/offset follow, may differ)
+    state_bytes_max = property(lambda self: 24 + self.params.k * 16)
 
     def serialize(self, state: MGState) -> bytes:
         head = (pack_u32(self.params.k) + pack_u64(state.n)

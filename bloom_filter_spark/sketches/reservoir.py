@@ -112,6 +112,7 @@ class ReservoirSketch:
         return out
 
     header_len = 12  # u32 k | u64 seed
+    state_bytes_max = property(lambda self: 32 + self.params.k * 8)
 
     def serialize(self, state: ReservoirState) -> bytes:
         head = (pack_u32(self.params.k) + pack_u64(self.params.seed)

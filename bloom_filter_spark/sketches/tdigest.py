@@ -136,6 +136,9 @@ class TDigestSketch:
         return r / total
 
     header_len = 8  # f64 compression
+    # _compress keeps one centroid per bucket 0..int(compression)
+    state_bytes_max = property(
+        lambda self: 36 + (int(self.params.compression) + 1) * 16)
 
     def serialize(self, state: TDigestState) -> bytes:
         head = (pack_f64(self.params.compression) + pack_u64(state.n)

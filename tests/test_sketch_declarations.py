@@ -1,6 +1,7 @@
 """Sketch declarations (multiset_pure, weight_mode, header_len,
-update_weighted) hold for every registered kind, and the operators route on
-them instead of on kind names.  No Spark session needed."""
+state_bytes_max, update_weighted) hold for every registered kind, and the
+operators route on them instead of on kind names.  No Spark session
+needed."""
 
 from __future__ import annotations
 
@@ -84,7 +85,8 @@ def test_every_registered_kind_has_params():
 @pytest.mark.parametrize("kind", KINDS)
 def test_declares_all_three_attributes(kind):
     cls = SKETCH_KINDS[kind]
-    for attr in ("multiset_pure", "weight_mode", "header_len"):
+    for attr in ("multiset_pure", "weight_mode", "header_len",
+                 "state_bytes_max"):
         assert hasattr(cls, attr), f"{kind} lacks {attr}"
     sk = _sketch(kind)
     assert isinstance(sk.multiset_pure, bool)
@@ -169,6 +171,76 @@ def test_header_len_covers_params_and_gates_merge(kind):
     assert filled[:hlen] == a[:hlen]
 
 
+# kinds whose serialized length depends on params alone
+FIXED_SIZE = {"bloom", "blocked_bloom", "cbloom", "cms", "countsketch",
+              "cuckoo"}
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_state_bytes_max_bounds_filled_and_merged_states(kind):
+    """``state_bytes_max`` is a true worst case: no state filled with 10^6
+    values (in 100 batches, as a partial build folds them), nor a merge of
+    8 such partials, serializes longer; fixed-size kinds hit it exactly.
+    Half the values are zipfian (heavy hitters survive Misra-Gries), half
+    spread over all of int32 (both DDSketch stores, every KLL level)."""
+    sk = _sketch(kind)
+    if not hasattr(sk, "merge"):
+        # cuckoo (single-writer, no merge): its layout is params-only, and
+        # inserts past capacity only walk the eviction path
+        blob = sk.serialize(_fill(sk, _values(n=sk.params.n)))
+        assert len(blob) == sk.state_bytes_max
+        return
+    rng = np.random.default_rng(7)
+    blobs = []
+    for seed in range(8):
+        r = np.random.default_rng(seed)
+        v = np.concatenate([r.zipf(1.3, 500_000).clip(max=1 << 30),
+                            r.integers(-(1 << 31), 1 << 31, 500_000)]
+                           ).astype(np.int32)
+        st = sk.empty()
+        for chunk in np.array_split(rng.permutation(v), 100):
+            sk.update_i32(st, chunk)
+        blobs.append(sk.serialize(st))
+    blobs.append(merge_blobs(sk, blobs, 0)[0])
+    assert sk.state_bytes_max >= max(len(b) for b in blobs)
+    if kind in FIXED_SIZE:
+        assert {len(b) for b in blobs} == {sk.state_bytes_max}
+
+
+def _compares_kind_to_literal(tree):
+    def is_kind(x):
+        name = x.id if isinstance(x, ast.Name) else getattr(x, "attr", "")
+        return name.endswith("kind")
+
+    def is_literal(x):
+        elts = x.elts if isinstance(x, (ast.Tuple, ast.List, ast.Set)) else [x]
+        return bool(elts) and all(isinstance(e, ast.Constant)
+                                  and isinstance(e.value, str) for e in elts)
+
+    return [node.lineno for node in ast.walk(tree)
+            if isinstance(node, ast.Compare)
+            and any(is_kind(x) for x in [node.left, *node.comparators])
+            and any(is_literal(x) for x in [node.left, *node.comparators])]
+
+
+def test_merge_and_checkpoint_operators_plan_from_declarations():
+    """operators/merge.py and operators/checkpoint.py plan every merge from
+    ``state_bytes_max``: no ``kind`` compared to a string literal, and no
+    ``getattr(<sketch>.params, ...)`` probing a params object for fields."""
+    import bloom_filter_spark.operators.checkpoint as checkpoint
+    import bloom_filter_spark.operators.merge as merge
+    for mod in (merge, checkpoint):
+        tree = ast.parse(open(os.path.abspath(mod.__file__)).read())
+        assert _compares_kind_to_literal(tree) == [], mod.__name__
+        probes = [
+            node.lineno for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name) and node.func.id == "getattr"
+            and node.args and isinstance(node.args[0], ast.Attribute)
+            and node.args[0].attr == "params"]
+        assert probes == [], f"{mod.__name__} probes params at {probes}"
+
+
 def test_build_operators_never_dispatch_on_kind():
     """operators/build.py routes on declarations; a comparison against
     ``.kind`` is a kind tuple creeping back."""
@@ -188,21 +260,7 @@ def test_probe_operators_never_compare_a_kind_to_literals():
     is a kind table creeping back."""
     import bloom_filter_spark.operators.probe as probe
     tree = ast.parse(open(os.path.abspath(probe.__file__)).read())
-
-    def is_kind(x):
-        name = x.id if isinstance(x, ast.Name) else getattr(x, "attr", "")
-        return name.endswith("kind")
-
-    def is_literal(x):
-        elts = x.elts if isinstance(x, (ast.Tuple, ast.List, ast.Set)) else [x]
-        return bool(elts) and all(isinstance(e, ast.Constant)
-                                  and isinstance(e.value, str) for e in elts)
-
-    offenders = [
-        node.lineno for node in ast.walk(tree)
-        if isinstance(node, ast.Compare)
-        and any(is_kind(x) for x in [node.left, *node.comparators])
-        and any(is_literal(x) for x in [node.left, *node.comparators])]
+    offenders = _compares_kind_to_literal(tree)
     assert offenders == [], f"probe.py compares a kind at lines {offenders}"
 
 

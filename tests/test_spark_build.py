@@ -9,8 +9,9 @@ from pyspark.sql import functions as F
 
 from bloom_filter_spark.operators import (
     SketchCheckpoint, build_grouped, build_grouped_single_writer, build_partials,
-    build_sketch, cms_point_udf, membership_udf, merge_partials_tree,
+    build_sketch, cms_point_udf, membership_udf,
 )
+from bloom_filter_spark.operators.merge import _merge_levels
 from bloom_filter_spark.sketches import (
     BloomParams, BloomSketch, CMSParams, CMSSketch, CountSketch,
     CountSketchParams, CuckooParams, HLLParams, HLLSketch, KLLParams,
@@ -62,7 +63,7 @@ def test_merge_tree_multilevel(spark, tokens_df):
     # force a 3-level tree (fanin 4 over 32 partitions) — same result
     sketch = BloomSketch(BloomParams(n=60_000, p=0.01))
     partials = build_partials(tokens_df, sketch, "tokens", "i32_array", repartition=32)
-    row = merge_partials_tree(partials, sketch, fanin=4).collect()[0]
+    row = _merge_levels(partials, sketch, 4).collect()[0]
     blob, _ = build_sketch(tokens_df, sketch, "tokens", "i32_array", repartition=8)
     assert bytes(row.state) == blob
 
@@ -81,8 +82,8 @@ def test_merge_tree_runs_as_one_job_and_caches_nothing(spark, tokens_df):
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        sc.setJobGroup("merge_tree_one_job", "merge_partials_tree")
-        row = merge_partials_tree(partials, sketch, fanin=4).collect()[0]
+        sc.setJobGroup("merge_tree_one_job", "_merge_levels")
+        row = _merge_levels(partials, sketch, 4).collect()[0]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
@@ -91,25 +92,28 @@ def test_merge_tree_runs_as_one_job_and_caches_nothing(spark, tokens_df):
     assert sc._jsc.sc().getPersistentRDDs().size() == cached
 
 
-def test_merge_auto_routes_by_state_volume(spark, tokens_df):
+def test_merge_auto_routes_by_state_volume(spark, tokens_df, monkeypatch):
     """The router must pick the executor tree when P x |state| exceeds the
     threshold and the driver fold otherwise — byte-identical results."""
+    from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.operators.merge import (
-        merge_partials_auto, merge_partials_collect, state_size_estimate)
+        merge_partials_auto, merge_partials_collect)
     sketch = BloomSketch(BloomParams(n=60_000, p=0.01))
     partials = build_partials(tokens_df, sketch, "tokens", "i32_array",
                               repartition=16).cache()
     collect_blob, n1 = merge_partials_collect(partials, sketch)
-    # threshold 0 forces the tree path (any P x |state| exceeds it)
-    tree_blob, n2 = merge_partials_auto(partials, sketch, fanin=4,
-                                        threshold_bytes=0)
-    # huge threshold forces the driver fold
-    fold_blob, n3 = merge_partials_auto(partials, sketch,
-                                        threshold_bytes=1 << 60)
+    # budgets 0 force the tree path (any P x |state| exceeds them)
+    monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", 0)
+    monkeypatch.setattr(merge_mod, "AUTO_TREE_THRESHOLD_BYTES", 0)
+    tree_blob, n2 = merge_partials_auto(partials, sketch)
+    # huge budgets force the driver fold
+    monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", 1 << 60)
+    monkeypatch.setattr(merge_mod, "AUTO_TREE_THRESHOLD_BYTES", 1 << 60)
+    fold_blob, n3 = merge_partials_auto(partials, sketch)
     partials.unpersist()
     assert collect_blob == tree_blob == fold_blob
     assert n1 == n2 == n3
-    assert state_size_estimate(sketch) > 0
+    assert sketch.state_bytes_max > 0
 
 
 def test_hll_distributed_estimate(spark, tokens_df):
@@ -232,6 +236,28 @@ def test_checkpoint_resume(spark, tokens_df, tmp_path, bloom_blob):
     assert blob3 == direct_blob
 
 
+@pytest.mark.parametrize("budgets", ["default", "fanin2_tree"])
+def test_resume_replays_the_build_merge_plan(spark, tokens_df, tmp_path,
+                                             monkeypatch, budgets):
+    """KLL / t-digest states depend on compaction order (KLL±), so a resume
+    must replay the build's merge plan, not just some valid merge: 80
+    checkpointed partials resume to the direct build's exact bytes, both at
+    the default budgets (driver fold) and with the budgets patched so the
+    router takes a fanin-2 tree of merge levels."""
+    from bloom_filter_spark.operators import merge as merge_mod
+    if budgets == "fanin2_tree":
+        monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", 0)
+        monkeypatch.setattr(merge_mod, "AUTO_TREE_THRESHOLD_BYTES", 1)
+    ck = SketchCheckpoint(str(tmp_path / "ckpt"))
+    for sketch, col, kind in (
+            (KLLSketch(KLLParams(k=64)), "tokens", "i32_array"),
+            (TDigestSketch(TDigestParams(50)), "n_tok", "f64")):
+        sid = f"{sketch.kind}_{budgets}"
+        direct = build_sketch(tokens_df, sketch, col, kind, repartition=80,
+                              checkpoint=ck, sketch_id=sid)
+        assert ck.resume(spark, sid, sketch) == direct, sketch.kind
+
+
 def test_mismatched_params_merge_refused(spark, tokens_df):
     a = build_partials(tokens_df.limit(100), BloomSketch(BloomParams(n=1000, p=0.01)),
                        "tokens", "i32_array", repartition=1)
@@ -239,7 +265,7 @@ def test_mismatched_params_merge_refused(spark, tokens_df):
                        "tokens", "i32_array", repartition=1)
     both = a.union(b)
     with pytest.raises(Exception, match="different params|PythonException|refusing"):
-        merge_partials_tree(both, BloomSketch(BloomParams(n=1000, p=0.01))).collect()
+        _merge_levels(both, BloomSketch(BloomParams(n=1000, p=0.01)), 4).collect()
 
 
 def test_grouped_paths_produce_identical_states(spark, tokens_df):
@@ -514,13 +540,12 @@ def test_wide_state_fold_auto_coalesces(spark, tokens_df):
     keep their input parallelism."""
     from bloom_filter_spark.operators.build import (_bound_state_volume,
                                                     build_partials)
-    from bloom_filter_spark.operators.merge import (AUTO_TREE_THRESHOLD_BYTES,
-                                                    state_size_estimate)
+    from bloom_filter_spark.operators.merge import AUTO_TREE_THRESHOLD_BYTES
     from bloom_filter_spark.sketches import (BloomParams, BloomSketch,
                                              CountingBloomSketch)
 
     wide = CountingBloomSketch(BloomParams(n=600_000, p=0.01))  # ~33 MB state
-    sz = state_size_estimate(wide)
+    sz = wide.state_bytes_max
     assert sz > 8 << 20
     many = tokens_df.select("doc_id").repartition(64)
     parts = build_partials(many, wide, "doc_id", "str").count()
@@ -831,7 +856,7 @@ def test_shard_merge_exactly_one_exchange_per_wave(spark):
     # column or the level renumbering)
     from bloom_filter_spark.operators import merge as merge_mod
     fanin = max(2, int(merge_mod.AUTO_TREE_THRESHOLD_BYTES
-                       // max(1, merge_mod.state_size_estimate(sk)
+                       // max(1, sk.state_bytes_max
                               // sk.shard_count())))
     waves = 1
     p = 1000 * fanin  # pretend a 1000x fleet: ceil-log_fanin levels

@@ -17,9 +17,12 @@ testdata (read-only, untouched):
     referential integrity within each copy;
   - documents: 10 copies with doc_id shifted and, for copies 1-9, the word
     order permuted with a seed derived from (copy, md5(text)) — identical
-    texts stay identical (planted dup families scale linearly) while
+    texts stay identical (planted EXACT-dup families scale linearly) while
     cross-copy texts stop being near-duplicates (keeps the quadratic
-    dedup oracles tractable).
+    dedup oracles tractable).  Near-duplicate pairs are re-permuted per
+    text (their md5s differ), so in copies 1-9 they stop being similar:
+    the sf1 near-dup coverage is the sf0.1 set, and near-dup density does
+    not scale (the JSON record says so under "neardup_coverage").
 Token/probe fixtures resolve through SPARK_GRAFT_ORACLE_SF=sf1 as usual
 (fixtures.ensure_fixtures generates the 6 M-row sf1 token table on first
 use).  The output dir lives under the repo (.sf1_testdata/, gitignored),
@@ -70,6 +73,9 @@ KEY_SHIFTS = {
     "embeddings": ["vec_id"],
 }
 COPY_VERBATIM = ["region", "nation"]
+NEARDUP_COVERAGE = ("the sf0.1 set: near-duplicate pairs are re-permuted "
+                    "per text in copies 1-9, so near-dup density does not "
+                    "scale (exact-dup families do)")
 
 # Scale-sensitive queries: AQE join-flip candidates (contamination, the
 # minhash/jaccard dedup family, as-of/range joins, Q18/Q21, prefilter
@@ -278,6 +284,7 @@ def main() -> int:
         with open(json_path, "w") as f:
             _json.dump({"sf_dir": sf_dir, "sf": "sf1 (synthetic, 10x "
                         "key-shifted sf0.1; see tool docstring)",
+                        "neardup_coverage": NEARDUP_COVERAGE,
                         "n_queries": len(record), "n_ok": ok,
                         "all_ok": failures == 0, "queries": record}, f,
                        indent=1)
