@@ -16,8 +16,13 @@ the list column's flat values buffer zero-copy — one numpy view per batch.
 Every partial build — JVM-fed, native parquet scan, pre-aggregated,
 changelog — runs through ONE fold core (``_fold_fn``): fold an Arrow batch
 iterator into ``sketch.empty()`` with a per-batch step, emit the single
-(partition_id, n_items, state) row.  Every grouped build runs through one
-phase 1 (``_grouped_phase1_fn``); every merge is merge.py's one Arrow level.
+(partition_id, n_items, state) row.  The sharded changelog fold is the same
+loop with one start/emit hook: it starts from the sketch's own sparse
+accumulator and emits one row per column-range shard.  Both changelog
+builds share one signed step (nulls dropped in the task) and, like every
+multiset-pure build, read a bare parquet scan natively.  Every grouped
+build runs through one phase 1 (``_grouped_phase1_fn``); every merge is
+merge.py's one Arrow level.
 What a sketch IS — whether its state is a pure function of the input multiset,
 how it takes weights, how long its params header is — is declared on the
 sketch class (sketches/base.py); the operators route on those declarations,
@@ -116,23 +121,25 @@ def _partition_id() -> int:
     return ctx.partitionId() if ctx is not None else 0
 
 
-def _fold_fn(sketch, step):
+def _fold_fn(sketch, step, out=None):
     """The one fold core of every partial build → a ``mapInArrow`` function
-    folding its Arrow batch iterator into ``sketch.empty()`` and yielding the
-    single (partition_id, n_items, state) batch.  ``step(state, batch)``
-    folds one batch and returns how many items it ingested."""
+    folding its Arrow batch iterator into one state and yielding one batch.
+    ``step(state, batch)`` folds one batch and returns how many items it
+    ingested.  ``out`` is the one hook on the state the fold starts from
+    and the rows it emits, a pair ``(start() -> state, rows(state, n) ->
+    {column: pa.Array})``; by default ``sketch.empty()`` and the single
+    (partition_id, n_items, state) row."""
+    start, rows = out or (sketch.empty, lambda state, n: {
+        "partition_id": [_partition_id()], "n_items": [n],
+        "state": [sketch.serialize(state)]})
 
     def partial_fn(batches):
         import pyarrow as pa
-        state = sketch.empty()
+        state = start()
         n = 0
         for b in batches:
             n += step(state, b)
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([_partition_id()], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "state": pa.array([sketch.serialize(state)], pa.binary()),
-        })
+        yield pa.RecordBatch.from_pydict(rows(state, n))
 
     return partial_fn
 
@@ -447,26 +454,80 @@ def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
 
 def _merge_checkpointed(df: DataFrame, partials: DataFrame, sketch,
                         checkpoint, sketch_id: str | None) -> tuple[bytes, int]:
-    """One-row-per-partition partials → (final blob, n_items) through
-    merge_partials_auto, persisting the partial and final states when
-    ``checkpoint`` and ``sketch_id`` are given."""
+    """Partials → (final blob, n_items): one-row-per-partition partials
+    through merge_partials_auto, sharded ones (a ``shard_id`` column)
+    through merge_shards_reassembled — persisting the partial and final
+    states when ``checkpoint`` and ``sketch_id`` are given."""
     persist = checkpoint is not None and sketch_id is not None
+    sharded = "shard_id" in partials.columns
     # capture BEFORE the checkpoint round-trip: a read-back packs many
     # partial rows per parquet partition, so its getNumPartitions would
     # under-count, mis-route and mis-plan the merge (ADVICE r4)
     est_rows = partials.rdd.getNumPartitions()
     if persist:
-        partials = checkpoint.write_partials(sketch_id, sketch, partials,
-                                             input_desc=_describe_input(df))
-    blob, n_items = merge_partials_auto(partials, sketch, est_rows)
+        write = (checkpoint.write_shard_partials if sharded
+                 else checkpoint.write_partials)
+        partials = write(sketch_id, sketch, partials,
+                         input_desc=_describe_input(df))
+    merge = merge_shards_reassembled if sharded else merge_partials_auto
+    blob, n_items = merge(partials, sketch, est_rows)
     if persist:
         checkpoint.write_final(sketch_id, sketch, blob, n_items)
     return blob, n_items
 
 
+def _signed_step(update, value_kind: str):
+    """Fold step of both changelog builds over (key, sign) batches: rows
+    with a null key or a null sign drop under one joint validity mask (a
+    kept null sign would become an arbitrary delta), then
+    ``update(state, keys, int32 signs)``."""
+
+    def step(state, b):
+        import pyarrow.compute as pc
+        keys, signs = b.column(0), b.column(1)
+        if keys.null_count or signs.null_count:
+            valid = pc.and_(pc.is_valid(keys), pc.is_valid(signs))
+            keys, signs = keys.filter(valid), signs.filter(valid)
+        if len(keys) == 0:
+            return 0
+        update(state, _arrow_values(keys, value_kind),
+               signs.to_numpy(zero_copy_only=False).astype(np.int32))
+        return len(keys)
+    return step
+
+
+def _changelog_partials(df: DataFrame, sketch, col: str, sign_col: str,
+                        value_kind: str, out=None,
+                        schema: str = PARTIAL_SCHEMA) -> DataFrame:
+    """The one source of both changelog builds: ``_fold_fn`` (with the
+    start/emit hook ``out``) over (key, sign) batches through
+    ``_signed_step`` — read by the native parquet scan when the plan is a
+    bare scan (counter sums are multiset-pure), else by the JVM scan.  The
+    default monolithic layout ships whole states, so its JVM scan bounds
+    P × |state| (_bound_state_volume)."""
+    from pyspark.sql.types import IntegralType
+    update = getattr(sketch, f"update_delta_{value_kind}", None)
+    if update is None:
+        raise ValueError(f"{sketch.kind} does not support signed updates")
+    sign_type = df.schema[sign_col].dataType
+    if not isinstance(sign_type, IntegralType):
+        raise ValueError(f"sign column {sign_col!r} must be an integer type,"
+                         f" not {sign_type.simpleString()}")
+    fold = _fold_fn(sketch, _signed_step(update, value_kind), out)
+    partials = None
+    if sketch.multiset_pure:
+        partials = _native_scan(df, [col, sign_col], fold, schema,
+                                state_bytes=sketch.state_bytes_max)
+    if partials is None:
+        sel = df.select(F.col(col).alias("v"), F.col(sign_col).alias("s"))
+        if out is None:
+            sel = _bound_state_volume(sel, sketch)
+        partials = sel.mapInArrow(fold, schema)
+    return partials
+
+
 def build_delta_partials(df: DataFrame, sketch, col: str, sign_col: str,
-                         value_kind: str = "str",
-                         repartition: int | None = None) -> DataFrame:
+                         value_kind: str = "str") -> DataFrame:
     """Changelog fold: one partial per partition over (key, ±1) rows.
 
     Distributed deletes for counter-summed sketches (counting bloom):
@@ -475,31 +536,10 @@ def build_delta_partials(df: DataFrame, sketch, col: str, sign_col: str,
     elsewhere — its counters go locally negative and the merge sum restores
     the global multiset).  Requires the classic counting-filter discipline:
     globally, deletes ≤ inserts per key.  The sketch must implement
-    ``update_delta_{str,i32}``.
+    ``update_delta_{str,i32}``; the sign column must be an integer type.
+    Rows with a null key or a null sign are skipped.
     """
-    # null keys AND null signs are dropped in-plan: _arrow_values drop_null
-    # would desync the parallel signs column inside the kernel, and a null
-    # sign surviving to to_numpy() becomes NaN → an arbitrary int32 delta
-    sel = (df.where(F.col(col).isNotNull() & F.col(sign_col).isNotNull())
-           .select(F.col(col).alias("v"),
-                   F.col(sign_col).cast("int").alias("s")))
-    if repartition:
-        sel = sel.repartition(repartition)
-    else:
-        sel = _bound_state_volume(sel, sketch)
-    updater = getattr(sketch, f"update_delta_{value_kind}", None)
-    if updater is None:
-        raise ValueError(f"{sketch.kind} does not support signed updates")
-
-    def step(state, b):
-        vals = _arrow_values(b.column(0), value_kind)
-        if len(vals) == 0:
-            return 0
-        updater(state, vals,
-                b.column(1).to_numpy(zero_copy_only=False).astype(np.int32))
-        return len(vals)
-
-    return sel.mapInArrow(_fold_fn(sketch, step), PARTIAL_SCHEMA)
+    return _changelog_partials(df, sketch, col, sign_col, value_kind)
 
 
 # ``src`` is the ORIGIN SCAN PARTITION id, persisted with the row: the
@@ -518,88 +558,33 @@ SHARD_ROUTE_THRESHOLD_BYTES = 32 << 20
 
 
 def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
-                               value_kind: str = "str",
-                               n_shards: int | None = None,
-                               repartition: int | None = None) -> DataFrame:
-    """Changelog fold emitting SHARDED partials: each partition folds its
-    slice into a local dense counter array, then ships it as ``n_shards``
-    column-range rows (shard_id, n_items, state) — sparse-encoded when few
-    cells are touched, so per-partition shuffle bytes track the rows the
-    partition actually wrote (≈ rows × k × 8 B), not the filter width.
+                               value_kind: str = "str") -> DataFrame:
+    """Changelog fold emitting SHARDED partials: the fold of
+    build_delta_partials, started from the sketch's ``shard_fold`` state
+    (task memory and shard bytes track the rows a partition wrote, not the
+    filter width) and emitting ``sketch.shard_count()`` column-range rows
+    (shard_id, src, n_items, state) per partition.
 
-    Scan parallelism is NEVER coalesced here (that is the point): the merge
+    The JVM scan is NEVER coalesced here (that is the point): the merge
     is a single groupBy(shard_id) with one reducer per shard, so a 1000-task
     scan of a 10^10-cell filter shuffles data-proportional bytes into
-    width-proportional parallel reducers.  Per-task transient memory is
-    data-proportional too: partitions accumulate sparse (cell, ±delta)
-    pairs (12 B per key-hash) and only materialize the dense local array
-    once the pairs would outweigh it (≥ m/3 entries) — a small partition
-    against a 10^10-cell filter never allocates the filter.  ``n_items``
-    rides only shard-0 rows so the global count sums cleanly."""
-    if not hasattr(sketch, "serialize_shard"):
+    width-proportional parallel reducers.  ``n_items`` rides only shard-0
+    rows so the global count sums cleanly."""
+    if not hasattr(sketch, "shard_fold"):
         raise ValueError(f"{sketch.kind} does not support sharded states")
-    sel = (df.where(F.col(col).isNotNull() & F.col(sign_col).isNotNull())
-           .select(F.col(col).alias("v"),
-                   F.col(sign_col).cast("int").alias("s")))
-    if repartition:
-        sel = sel.repartition(repartition)
-    if n_shards is None:
-        n_shards = sketch.shard_count()
-    updater = f"update_delta_{value_kind}"
-    if not hasattr(sketch, updater):
-        raise ValueError(f"{sketch.kind} does not support signed updates")
-    # entries beyond which the sparse pair buffers (12 B each) cost more
-    # than the dense array (4 B per cell) — switch point of the fold
-    dense_break = sketch.params.m // 3
+    n_shards = sketch.shard_count()  # on the driver: the tasks capture it
 
-    def partial_fn(batches):
+    def rows(acc, n):
         import pyarrow as pa
-        dense = None
-        idx_chunks, d_chunks, entries = [], [], 0
-        n = 0
-        for b in batches:
-            vals = _arrow_values(b.column(0), value_kind)
-            signs = b.column(1).to_numpy(zero_copy_only=False).astype(np.int32)
-            if len(vals) == 0:
-                continue
-            n += len(vals)
-            if dense is None:
-                ci, cd = sketch.delta_cells(vals, signs, value_kind)
-                idx_chunks.append(ci)
-                d_chunks.append(cd)
-                entries += ci.size
-                if entries > dense_break:  # sparse no longer pays — switch
-                    dense = sketch.empty()
-                    for a, dl in zip(idx_chunks, d_chunks):
-                        np.add.at(dense, a, dl)
-                    idx_chunks, d_chunks = [], []
-            else:
-                getattr(sketch, updater)(dense, vals, signs)
-        if dense is not None:
-            blobs = [sketch.serialize_shard(dense, i, n_shards)
-                     for i in range(n_shards)]
-        else:
-            idx = (np.concatenate(idx_chunks) if idx_chunks
-                   else np.empty(0, np.int64))
-            dl = (np.concatenate(d_chunks) if d_chunks
-                  else np.empty(0, np.int32))
-            # one sort, then each shard slices its contiguous cell range —
-            # emission is O(E log E + shards), not O(shards × E)
-            order = np.argsort(idx, kind="stable")
-            idx, dl = idx[order], dl[order]
-            lows = [sketch.shard_bounds(i, n_shards)[0] for i in range(n_shards)]
-            cuts = np.searchsorted(idx, lows + [sketch.params.m])
-            blobs = [sketch.serialize_shard_from_cells(
-                idx[cuts[i]:cuts[i + 1]], dl[cuts[i]:cuts[i + 1]],
-                i, n_shards) for i in range(n_shards)]
-        yield pa.RecordBatch.from_pydict({
-            "shard_id": pa.array(list(range(n_shards)), pa.int32()),
+        return {
+            "shard_id": pa.array(range(n_shards), pa.int32()),
             "src": pa.array([_partition_id()] * n_shards, pa.int64()),
             "n_items": pa.array([n] + [0] * (n_shards - 1), pa.int64()),
-            "state": pa.array(blobs, pa.binary()),
-        })
+            "state": pa.array(acc.shard_blobs(n_shards), pa.binary()),
+        }
 
-    return sel.mapInArrow(partial_fn, SHARD_SCHEMA)
+    return _changelog_partials(df, sketch, col, sign_col, value_kind,
+                               (sketch.shard_fold, rows), SHARD_SCHEMA)
 
 
 def merge_shard_partials(partials: DataFrame, sketch,
@@ -623,57 +608,39 @@ def merge_shard_partials(partials: DataFrame, sketch,
                          fold=type(sketch).merge_shard_blobs).drop("src")
 
 
-def build_delta_sketch_sharded(df: DataFrame, sketch, col: str, sign_col: str,
-                               value_kind: str = "str",
-                               n_shards: int | None = None,
-                               repartition: int | None = None,
-                               checkpoint=None,
-                               sketch_id: str | None = None) -> tuple[bytes, int]:
-    """Sharded changelog fold → merged monolithic state blob (bit-identical
-    to the monolithic path — integer counter addition commutes, so shard
-    order and partition order never matter).  With ``checkpoint`` +
-    ``sketch_id`` the shard partials persist to the lineage table first
-    (level = SHARD_LEVEL) and the merge consumes the checkpointed rows —
-    wide-state builds resume exactly like monolithic ones."""
-    partials = build_delta_shard_partials(df, sketch, col, sign_col,
-                                          value_kind, n_shards, repartition)
-    est = partials.rdd.getNumPartitions()
-    if checkpoint is not None and sketch_id is not None:
-        partials = checkpoint.write_shard_partials(
-            sketch_id, sketch, partials, input_desc=_describe_input(df))
-    rows = merge_shard_partials(partials, sketch, est_partials=est).collect()
+def merge_shards_reassembled(partials: DataFrame, sketch,
+                             est_partials: int | None = None
+                             ) -> tuple[bytes, int]:
+    """Sharded partials → (monolithic state blob, n_items): the per-shard
+    merge, then reassembly — the one sharded tail of the build
+    (_merge_checkpointed) and of SketchCheckpoint.resume.  Completeness is
+    checked from the blob headers by ``reassemble_shards``."""
+    rows = merge_shard_partials(partials, sketch, est_partials).collect()
     if not rows:
         return sketch.serialize(sketch.empty()), 0
-    blob = type(sketch).reassemble_shards([r.state for r in rows])
-    n_items = int(sum(r.n_items for r in rows))
-    if checkpoint is not None and sketch_id is not None:
-        checkpoint.write_final(sketch_id, sketch, blob, n_items)
-    return blob, n_items
+    return (type(sketch).reassemble_shards([r.state for r in rows]),
+            int(sum(r.n_items for r in rows)))
 
 
 def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
-                       value_kind: str = "str",
-                       repartition: int | None = None,
-                       sharded: bool | None = None,
-                       checkpoint=None,
+                       value_kind: str = "str", checkpoint=None,
                        sketch_id: str | None = None) -> tuple[bytes, int]:
     """Changelog fold → merged state blob (see build_delta_partials).
 
-    Routing: AUTO by default — the monolithic blob-per-partition fold while
-    the dense state stays under SHARD_ROUTE_THRESHOLD_BYTES, the sharded
-    column-range fold beyond it (build_delta_shard_partials).  Measured at
-    sf1 (2^25-counter / 134 MB state): 143.6 s monolithic → sharded keeps
-    full scan parallelism and one parallel merge wave."""
-    if sharded is None:
-        sharded = (hasattr(sketch, "serialize_shard")
-                   and sketch.state_bytes_max > SHARD_ROUTE_THRESHOLD_BYTES)
-    if sharded:
-        return build_delta_sketch_sharded(df, sketch, col, sign_col,
-                                          value_kind, repartition=repartition,
-                                          checkpoint=checkpoint,
-                                          sketch_id=sketch_id)
-    partials = build_delta_partials(df, sketch, col, sign_col, value_kind,
-                                    repartition)
+    Routing on the declared ``state_bytes_max``: the monolithic
+    blob-per-partition fold while the dense state stays under
+    SHARD_ROUTE_THRESHOLD_BYTES, the sharded column-range fold beyond it
+    (build_delta_shard_partials).  Both routes run the one fold core over
+    the native parquet scan when the plan is a bare scan, and both give
+    the same bytes (integer counter addition commutes).  Measured at sf1
+    (2^25-counter / 134 MB state): 143.6 s monolithic → sharded keeps full
+    scan parallelism and one parallel merge wave.  With ``checkpoint`` +
+    ``sketch_id`` the partials persist first (sharded ones at level
+    SHARD_LEVEL) and ``SketchCheckpoint.resume`` replays the same merge."""
+    build = (build_delta_shard_partials if hasattr(sketch, "shard_fold")
+             and sketch.state_bytes_max > SHARD_ROUTE_THRESHOLD_BYTES
+             else build_delta_partials)
+    partials = build(df, sketch, col, sign_col, value_kind)
     return _merge_checkpointed(df, partials, sketch, checkpoint, sketch_id)
 
 

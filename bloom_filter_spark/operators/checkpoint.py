@@ -158,17 +158,16 @@ class SketchCheckpoint:
         if raw.where(F.col("level") == SHARD_LEVEL).limit(1).count():
             from pyspark.sql import Window
 
-            from .build import merge_shard_partials
+            from .build import merge_shards_reassembled
             shards = (raw.where(F.col("level") == SHARD_LEVEL)
                       .select(F.col("partition_id").cast("int")
                               .alias("shard_id"),
                               *(["src"] if "src" in raw.columns else []),
                               "n_items", "state"))
-            # count jobs run on the PRE-window plan: neither depends on the
-            # synthesized src, and putting them after the window would
-            # re-shuffle/sort every state blob once per count job
+            # the count job runs on the PRE-window plan: it does not depend
+            # on the synthesized src, and putting it after the window would
+            # re-shuffle/sort every state blob once more
             cnt = shards.count()
-            n_shards = shards.select("shard_id").distinct().count()
             if "src" not in raw.columns:
                 # legacy (pre-src) checkpoint: the parquet read-back packs
                 # many same-shard rows per partition, so the merge's
@@ -184,11 +183,10 @@ class SketchCheckpoint:
                     "shard_id",
                     (F.row_number().over(w) - 1).cast("long").alias("src"),
                     "n_items", "state")
-            rows = merge_shard_partials(
-                shards, sketch,
-                est_partials=-(-cnt // max(1, n_shards))).collect()
-            blob = type(sketch).reassemble_shards([r.state for r in rows])
-            n = int(sum(r.n_items for r in rows))
+            # the shard count only sizes the level plan: reassembly checks
+            # the shard set from the blob headers
+            blob, n = merge_shards_reassembled(
+                shards, sketch, -(-cnt // sketch.shard_count()))
         else:
             partials = raw.select("partition_id", "n_items", "state")
             blob, n = merge_partials_auto(partials, sketch, partials.count())

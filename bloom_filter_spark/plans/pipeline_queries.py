@@ -636,14 +636,13 @@ def q_streaming_windowed_value_quantiles(spark, sf_dir):
     rows = []
     for g, blob in stream_blobs.items():
         _, st = DDSketch.deserialize(blob)
-        # the byte-parity gate above is only guaranteed while no store has
-        # collapsed (merge order then affects which buckets spill) — fail
-        # LOUDLY here rather than let `streaming_equals_batch` flake
-        # (ADVICE r5; sketches/ddsketch.py module docstring)
+        # a collapsed store brackets only the quantiles above its collapsed
+        # mass — fail LOUDLY here rather than let the bracket check below
+        # flake (ADVICE r5; sketches/ddsketch.py module docstring)
         assert not st.collapsed, (
-            f"DDSketch store collapsed for window {g}: byte-level "
-            "streaming==batch parity is no longer guaranteed; raise "
-            "max_bins or drop the byte gate for this data")
+            f"DDSketch store collapsed for window {g}: quantiles at or "
+            "below the collapsed mass lose the α bracket; raise max_bins "
+            "for this data")
         for q, r, lo, hi in sk.bracket(st, qs):
             rows.append((g, q, st.n, r, lo, hi))
     bdf = spark.createDataFrame(

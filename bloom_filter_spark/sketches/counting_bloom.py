@@ -44,12 +44,15 @@ from .bloom import BloomParams
 # same-cell inserts — unreachable before the filter is useless anyway.
 _DTYPE = np.int32
 
+# dense bytes per column-range shard (see shard_count); a module constant so
+# a test can shrink it to get several shards out of a small filter
+SHARD_TARGET_BYTES = 8 << 20
+
 
 @register
 class CountingBloomSketch:
     kind = "cbloom"
-    # counter sums are order-free, but no changelog route re-partitions yet
-    multiset_pure = False
+    multiset_pure = True
     weight_mode = None
 
     def __init__(self, params: BloomParams):
@@ -94,10 +97,11 @@ class CountingBloomSketch:
 
     # -- build ------------------------------------------------------------
     def _apply_delta(self, state, h: np.ndarray, delta) -> None:
-        idx = self._indices(h)
-        d = np.asarray(delta, _DTYPE)
-        for i in range(idx.shape[0]):
-            np.add.at(state, idx[i], d)
+        idx, d = self._cells(h, delta)
+        if isinstance(state, ShardFold):
+            state.add(idx, d)
+        else:
+            np.add.at(state, idx, d)
 
     def update_i32(self, state, values) -> None:
         self._apply_delta(state, self._hash(values, "i32"), 1)
@@ -196,9 +200,10 @@ class CountingBloomSketch:
     # Layout (LE): u32 m | u32 k | u64 seed | u32 n_shards | u32 shard_id |
     #              u8 mode | mode 0: dense <i4 cells[lo:hi]
     #                       | mode 1: u32 nnz | <u4 rel_idx×nnz | <i4 val×nnz
-    def shard_count(self, target_bytes: int = 8 << 20) -> int:
-        """Number of column-range shards so a dense shard ≈ target_bytes."""
-        return max(1, -(-self.params.m * 4 // target_bytes))
+    def shard_count(self) -> int:
+        """Number of column-range shards so a dense shard ≈
+        SHARD_TARGET_BYTES."""
+        return max(1, -(-self.params.m * 4 // SHARD_TARGET_BYTES))
 
     def shard_bounds(self, shard_id: int, n_shards: int) -> tuple[int, int]:
         m = self.params.m
@@ -227,12 +232,11 @@ class CountingBloomSketch:
         """Hashed (cell index, ±delta) pairs for a batch — k entries per
         key, NO dense array.  np.add.at of these pairs reproduces
         _apply_delta exactly (addition commutes over duplicates)."""
-        h = self._hash(values, kind)
-        idx = self._indices(h)  # (k, N)
-        d = np.asarray(signs, _DTYPE)
-        if d.ndim == 0:
-            d = np.full(h.size, d, _DTYPE)
-        return idx.ravel(), np.tile(d, self.params.k)
+        return self._cells(self._hash(values, kind), signs)
+
+    def _cells(self, h: np.ndarray, delta) -> tuple[np.ndarray, np.ndarray]:
+        d = np.broadcast_to(np.asarray(delta, _DTYPE), h.shape)
+        return self._indices(h).ravel(), np.tile(d, self.params.k)
 
     def serialize_shard_from_cells(self, idx: np.ndarray, delta: np.ndarray,
                                    shard_id: int, n_shards: int) -> bytes:
@@ -246,6 +250,11 @@ class CountingBloomSketch:
         if m_.any():
             np.add.at(seg, idx[m_] - lo, delta[m_])
         return self._emit_segment(seg, shard_id, n_shards)
+
+    def shard_fold(self) -> "ShardFold":
+        """Empty state of the sharded changelog fold: ``update_delta_*``
+        folds into it like into ``empty()``, ``shard_blobs`` emits it."""
+        return ShardFold(self)
 
     _SHARD_HEADER_LEN = 24
 
@@ -331,3 +340,50 @@ class CountingBloomSketch:
         object.__setattr__(params, "m", m)
         object.__setattr__(params, "n_words", (m >> 6) + 1)
         return cls(params), state
+
+
+class ShardFold:
+    """Per-task state of the sharded changelog fold: sparse (cell, ±delta)
+    pairs (12 B per key-hash) until they would outweigh the dense counter
+    array (4 B per cell, so m/3 pairs), then that array — a small
+    partition against a 10^10-cell filter never allocates the filter.
+    Both regimes emit the same shard blobs (counter addition commutes over
+    duplicate cells)."""
+
+    def __init__(self, sketch: CountingBloomSketch):
+        self.sketch, self.dense, self.cells, self.entries = sketch, None, [], 0
+
+    def _pairs(self) -> tuple[np.ndarray, np.ndarray]:
+        return (np.concatenate([c[0] for c in self.cells]
+                               or [np.empty(0, np.int64)]),
+                np.concatenate([c[1] for c in self.cells]
+                               or [np.empty(0, _DTYPE)]))
+
+    def add(self, idx: np.ndarray, delta: np.ndarray) -> None:
+        """Fold flat (cell index, ±delta) pairs."""
+        if self.dense is None:
+            self.cells.append((idx, delta))
+            self.entries += idx.size
+            if self.entries <= self.sketch.params.m // 3:
+                return
+            self.dense = self.sketch.empty()  # sparse no longer pays
+            idx, delta = self._pairs()
+            self.cells = []
+        np.add.at(self.dense, idx, delta)
+
+    def shard_blobs(self, n_shards: int) -> list:
+        """One blob per shard id, sparse-encoded where few cells moved."""
+        sk = self.sketch
+        if self.dense is not None:
+            return [sk.serialize_shard(self.dense, i, n_shards)
+                    for i in range(n_shards)]
+        # one sort, then each shard slices its contiguous cell range —
+        # emission is O(E log E + shards), not O(shards × E)
+        idx, delta = self._pairs()
+        order = np.argsort(idx, kind="stable")
+        idx, delta = idx[order], delta[order]
+        lows = [sk.shard_bounds(i, n_shards)[0] for i in range(n_shards)]
+        cuts = np.searchsorted(idx, lows + [sk.params.m])
+        return [sk.serialize_shard_from_cells(
+            idx[cuts[i]:cuts[i + 1]], delta[cuts[i]:cuts[i + 1]], i, n_shards)
+            for i in range(n_shards)]

@@ -26,16 +26,18 @@ quantiles above the collapsed mass (the paper's collapsing variant; with
 collapse).
 
 State is a pair of sorted (keys int64, counts int64) arrays per sign plus
-the zero counter — O(#bins) bytes, independent of n.  Fully deterministic:
-no RNG anywhere, so distributed ≡ local bit-for-bit under any partition
-split (unlike KLL/t-digest whose merges are only bound-equivalent) —
-CONDITIONAL on no store ever exceeding ``max_bins``: once `_collapse`
-fires, which buckets spill depends on fold/batch boundaries, so two
-equal-content builds can produce different (still α-valid above the
-collapsed mass) byte states.  ``DDState.collapsed`` records that event and
-rides the serialized blob, so any parity gate (streaming ≡ batch,
-distributed ≡ local) can ASSERT the flag is False instead of silently
-comparing bytes whose equality is no longer guaranteed (ADVICE r5).
+the zero counter — O(#bins) bytes, independent of n.  Fully deterministic
+and a pure function of the input MULTISET: no RNG anywhere, and the
+collapse is order-free too.  It keeps the ``max_bins`` largest keys
+present and adds all lower mass to the lowest kept key; a key drops only
+once ``max_bins`` larger keys are present, so spilled mass can only settle
+on the ``max_bins``-th largest key of the whole input.  The final store is
+therefore the top ``max_bins`` keys of the input's key set, under any
+batch split, partition split and merge order — distributed ≡ local
+bit-for-bit (unlike KLL/t-digest, whose merges are only bound-equivalent).
+``DDState.collapsed`` rides the serialized blob and records whether a
+store's key set exceeded ``max_bins`` (estimates are then α-valid only
+above the collapsed mass).
 """
 
 from __future__ import annotations
@@ -82,9 +84,8 @@ class DDState:
         self.neg_cnts = z64 if neg_cnts is None else neg_cnts
         self.zero = int(zero)
         self.n = int(n)
-        # True once any store has spilled past max_bins: estimates stay
-        # α-valid above the collapsed mass, but byte-level merge-order /
-        # batch-boundary invariance is forfeit (see module docstring)
+        # True iff a store's key set exceeded max_bins: estimates stay
+        # α-valid above the collapsed mass (see module docstring)
         self.collapsed = bool(collapsed)
 
 
@@ -105,8 +106,7 @@ def _fold(keys_a, cnts_a, keys_b, cnts_b):
 @register
 class DDSketch:
     kind = "ddsketch"
-    # bin collapse depends on when the store first overflows max_bins
-    multiset_pure = False
+    multiset_pure = True
     weight_mode = "additive"
 
     def __init__(self, params: DDSketchParams):

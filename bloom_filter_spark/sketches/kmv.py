@@ -58,8 +58,8 @@ class KMVState:
 @register
 class KMVSketch:
     kind = "kmv"
-    # order-free, but no KMV build takes a re-partitioned route yet
-    multiset_pure = False
+    # the state is the k smallest distinct hashes of the input
+    multiset_pure = True
     weight_mode = None
 
     def __init__(self, params: KMVParams):

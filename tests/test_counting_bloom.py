@@ -187,7 +187,7 @@ def test_delta_cells_equivalence_and_cell_serialization():
                 cb.serialize_shard(dense, i, n_shards)
 
 
-def test_legacy_srcless_shard_checkpoint_resume(spark, tmp_path):
+def test_legacy_srcless_shard_checkpoint_resume(spark, tmp_path, monkeypatch):
     """A sharded checkpoint written WITHOUT the src column (pre-r5 layout)
     must resume to the exact direct-fold blob: resume() synthesizes a
     distinct per-row src so the fanin byte budget stays sound and the fold
@@ -195,16 +195,18 @@ def test_legacy_srcless_shard_checkpoint_resume(spark, tmp_path):
     from bloom_filter_spark.operators.build import (
         build_delta_shard_partials, build_delta_sketch)
     from bloom_filter_spark.operators.checkpoint import SketchCheckpoint
-    from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
+    from bloom_filter_spark.sketches import (BloomParams, CountingBloomSketch,
+                                             counting_bloom)
     rows = ([(f"doc_{i}", 1) for i in range(3000)]
             + [(f"doc_{i}", -1) for i in range(0, 3000, 5)])
     df = spark.createDataFrame(rows, "id string, sign int").repartition(9)
     sk = CountingBloomSketch(BloomParams(n=5000, p=0.01))
     ck = SketchCheckpoint(str(tmp_path / "ck"))
+    monkeypatch.setattr(counting_bloom, "SHARD_TARGET_BYTES",
+                        sk.params.m * 4 // 4)  # 4 shards
     partials = build_delta_shard_partials(df, sk, "id", "sign",
-                                          value_kind="str", n_shards=4)
+                                          value_kind="str")
     ck.write_shard_partials("legacy", sk, partials.drop("src"))
     blob, n = ck.resume(spark, "legacy", sk)
-    direct, nd = build_delta_sketch(df, sk, "id", "sign", value_kind="str",
-                                    sharded=False)
+    direct, nd = build_delta_sketch(df, sk, "id", "sign", value_kind="str")
     assert blob == direct and n == nd

@@ -12,13 +12,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from bloom_filter_spark.operators import (
+    build_delta_partials, build_delta_shard_partials, build_delta_sketch,
     build_grouped, build_sketch, build_sketch_preagg, membership_scan)
+from bloom_filter_spark.operators import build as build_mod
 from bloom_filter_spark.operators.build import (
     _attr_through_projects, _native_grouped_partials, _native_parquet_partials)
 from bloom_filter_spark.sketches import (
-    BloomParams, BloomSketch, CMSParams, CMSSketch, CountSketch,
-    CountSketchParams, HLLParams, HLLSketch, KLLParams, KLLSketch,
-    TDigestParams, TDigestSketch)
+    BloomParams, BloomSketch, CMSParams, CMSSketch, CountingBloomSketch,
+    CountSketch, CountSketchParams, DDSketch, DDSketchParams, HLLParams,
+    HLLSketch, KLLParams, KLLSketch, KMVParams, KMVSketch, TDigestParams,
+    TDigestSketch, counting_bloom)
 from bloom_filter_spark.sources.fixtures import ensure_fixtures
 
 
@@ -48,20 +51,27 @@ def test_eligibility_guards(tokens):
         "i32_array") is None
 
 
-@pytest.mark.parametrize("sketch", [
-    BloomSketch(BloomParams(n=4096, p=0.01)),
-    HLLSketch(HLLParams(b=12)),
-    CMSSketch(CMSParams(eps=0.001, delta=0.01)),
-    CountSketch(CountSketchParams(w=1 << 12, d=5)),
-], ids=["bloom", "hll", "cms", "countsketch"])
-def test_native_build_bit_identical(tokens, sketch):
-    assert _native_parquet_partials(
-        tokens, sketch, "tokens", "i32_array") is not None
-    blob_native, n_native = build_sketch(tokens, sketch, "tokens", "i32_array")
+@pytest.mark.parametrize("sketch, col, value_kind", [
+    (BloomSketch(BloomParams(n=4096, p=0.01)), "tokens", "i32_array"),
+    (HLLSketch(HLLParams(b=12)), "tokens", "i32_array"),
+    (CMSSketch(CMSParams(eps=0.001, delta=0.01)), "tokens", "i32_array"),
+    (CountSketch(CountSketchParams(w=1 << 12, d=5)), "tokens", "i32_array"),
+    (KMVSketch(KMVParams(k=64)), "tokens", "i32_array"),
+    (DDSketch(DDSketchParams(alpha=0.01)), "n_tok", "f64"),
+    (DDSketch(DDSketchParams(alpha=0.01, max_bins=16)), "n_tok", "f64"),
+], ids=["bloom", "hll", "cms", "countsketch", "kmv", "ddsketch",
+        "ddsketch_collapsed"])
+def test_native_build_bit_identical(tokens, sketch, col, value_kind):
+    assert _native_parquet_partials(tokens, sketch, col, value_kind) \
+        is not None
+    blob_native, n_native = build_sketch(tokens, sketch, col, value_kind)
     # repartition pins the JVM mapInArrow path
-    blob_jvm, n_jvm = build_sketch(tokens, sketch, "tokens", "i32_array",
+    blob_jvm, n_jvm = build_sketch(tokens, sketch, col, value_kind,
                                    repartition=5)
     assert blob_native == blob_jvm and n_native == n_jvm
+    if isinstance(sketch, DDSketch):  # one store collapses, one does not
+        _, state = DDSketch.deserialize(blob_native)
+        assert state.collapsed == (sketch.params.max_bins == 16)
 
 
 def test_native_preagg_reroute_matches_direct(tokens):
@@ -108,3 +118,69 @@ def test_native_membership_scan_totals(spark, tokens):
             nat, jvm = [tuple(s.agg(F.sum("n_probed"), F.sum("n_member"))
                               .collect()[0]) for s in scans]
             assert nat == jvm, (col, value_kind, nat, jvm)
+
+
+@pytest.fixture(scope="module")
+def changelog(spark, tmp_path_factory):
+    """Two parquet files of (doc_id, sign) rows in 250-row groups: inserts,
+    then deletes of every third key (so each delete sits in another row
+    group than its insert), with null keys and null signs in both."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    root = tmp_path_factory.mktemp("changelog")
+    keys = [f"doc_{i:05d}" for i in range(3000)]
+    inserts = keys + [None] * 20 + keys[:30]
+    deletes = keys[::3] + [None] * 10 + keys[1:40:3]
+    for i, (ks, sign) in enumerate(((inserts, 1), (deletes, -1))):
+        signs = [None if j % 97 == 5 else sign for j in range(len(ks))]
+        pq.write_table(
+            pa.table({"doc_id": pa.array(ks, pa.string()),
+                      "sign": pa.array(signs, pa.int32())}),
+            str(root / f"part-{i}.parquet"), row_group_size=250)
+    return spark.read.parquet(str(root))
+
+
+def _read_by(df):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "native" if "Range" in plan else "jvm"
+
+
+def test_native_changelog_bit_identical(changelog, monkeypatch):
+    """Both changelog routes fold a bare parquet scan natively and give
+    the JVM source's (blob, n_items): monolithic, and sharded in the
+    sparse (wide filter) and dense (narrow filter) regimes.  A sign column
+    that is not an integer type is refused."""
+    # a row-keeping Filter makes the native scan decline
+    jvm_src = changelog.where(F.coalesce("sign", F.lit(0)) >= -1)
+    assert jvm_src.count() == changelog.count()
+
+    def cb(cap):
+        return CountingBloomSketch(BloomParams(n=cap, p=0.01))
+
+    def build(src, cap):
+        return build_delta_sketch(src, cb(cap), "doc_id", "sign", "str")
+
+    assert _read_by(build_delta_partials(
+        changelog, cb(4000), "doc_id", "sign")) == "native"
+    assert _read_by(build_delta_partials(
+        jvm_src, cb(4000), "doc_id", "sign")) == "jvm"
+    mono = build(changelog, 4000)
+    assert mono == build(jvm_src, 4000)
+    assert mono[1] == changelog.dropna().count()
+
+    # sparse: per-split entries stay far below m/3; dense: they cross it
+    for cap in (200_000, 300):
+        want = build(changelog, cap)
+        with monkeypatch.context() as mp:
+            mp.setattr(build_mod, "SHARD_ROUTE_THRESHOLD_BYTES", 0)
+            mp.setattr(counting_bloom, "SHARD_TARGET_BYTES",
+                       -(-cb(cap).params.m * 4 // 3))
+            assert cb(cap).shard_count() == 3
+            for src, route in ((changelog, "native"), (jvm_src, "jvm")):
+                assert _read_by(build_delta_shard_partials(
+                    src, cb(cap), "doc_id", "sign")) == route
+                assert build(src, cap) == want, (cap, route)
+
+    text_sign = changelog.withColumn("sign", F.col("sign").cast("string"))
+    with pytest.raises(ValueError, match="sign"):
+        build(text_sign, 4000)

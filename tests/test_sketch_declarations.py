@@ -12,11 +12,13 @@ import os
 import numpy as np
 import pytest
 
+from bloom_filter_spark.operators.build import _update
 from bloom_filter_spark.operators.merge import merge_blobs
 from bloom_filter_spark.sketches import (
     SKETCH_KINDS, BlockedBloomParams, BloomParams, CMSParams, CMSSketch,
-    CountSketchParams, CuckooParams, DDSketchParams, HLLParams, KLLParams,
-    KMVParams, MGParams, ReservoirParams, TDigestParams, TDigestSketch)
+    CountSketchParams, CuckooParams, DDSketch, DDSketchParams, HLLParams,
+    KLLParams, KMVParams, MGParams, ReservoirParams, TDigestParams,
+    TDigestSketch)
 
 # two param sets per kind whose serialized headers differ
 PARAMS = {
@@ -38,7 +40,8 @@ PARAMS = {
     "ddsketch": (DDSketchParams(alpha=0.01), DDSketchParams(alpha=0.02)),
 }
 
-# the routing the operators had when these facts lived in kind tuples
+# the routing the operators had when these facts lived in kind tuples, with
+# the three order-free kinds (ddsketch, cbloom, kmv) since declared pure
 EXPECTED = {
     "bloom": (True, "insensitive"),
     "blocked_bloom": (True, "insensitive"),
@@ -48,11 +51,11 @@ EXPECTED = {
     "kll": (False, "additive"),
     "tdigest": (False, "additive"),
     "mg": (False, "additive"),
-    "ddsketch": (False, "additive"),
-    "cbloom": (False, None),
+    "ddsketch": (True, "additive"),
+    "cbloom": (True, None),
     "cuckoo": (False, None),
     "reservoir": (False, None),
-    "kmv": (False, None),
+    "kmv": (True, None),
 }
 
 KINDS = sorted(SKETCH_KINDS)
@@ -102,26 +105,58 @@ def test_conservative_cms_is_not_multiset_pure():
                                    conservative=True)).multiset_pure
 
 
+def _has_update(sk, value_kind):
+    """Whether the build's ``_update`` dispatch reaches an update of
+    ``sk`` for ``value_kind`` (f64 is ``update``, and i64 falls back to
+    it)."""
+    name = "update" if value_kind == "f64" else f"update_{value_kind}"
+    return hasattr(sk, name) or (value_kind == "i64"
+                                 and hasattr(sk, "update"))
+
+
+def _fold(sk, values, value_kind, n_chunks=1):
+    st = sk.empty()
+    for chunk in np.array_split(values, n_chunks):
+        _update(sk, st, chunk, value_kind)
+    return st
+
+
+def _assert_order_free(sk, v, value_kind):
+    """The state of ``v`` ignores order, batching and the partial split."""
+    ref = sk.serialize(_fold(sk, v, value_kind))
+    perm = np.random.default_rng(1).permutation(v)
+    assert sk.serialize(_fold(sk, perm, value_kind, 7)) == ref
+    # and through a merge of two partials over a different split
+    a, b = np.array_split(perm[::-1], [1234])
+    merged = sk.merge(_fold(sk, a, value_kind), _fold(sk, b, value_kind, 3))
+    assert sk.serialize(merged) == ref
+
+
 @pytest.mark.parametrize("kind", PURE)
 def test_multiset_pure_ignores_order_and_chunking(kind):
     sk = _sketch(kind)
-    v = _values()
-    ref = sk.serialize(_fill(sk, v))
-    perm = np.random.default_rng(1).permutation(v)
-    st = sk.empty()
-    for chunk in np.array_split(perm, 7):
-        sk.update_i32(st, chunk)
-    assert sk.serialize(st) == ref
-    # and through a merge of two partials over a different split
-    a, b = np.array_split(perm[::-1], [1234])
-    merged = sk.merge(_fill(sk, a), _fill(sk, b))
-    assert sk.serialize(merged) == ref
+    kinds = [vk for vk in ("i32", "i64", "f64") if _has_update(sk, vk)]
+    assert kinds
+    for value_kind in kinds:
+        _assert_order_free(sk, _values(), value_kind)
+
+
+def test_collapsed_ddsketch_is_multiset_pure():
+    """DDSketch's collapse keeps the top max_bins keys of the input key
+    set, so even a collapsed store is order-free."""
+    sk = DDSketch(DDSketchParams(alpha=0.01, max_bins=16))
+    rng = np.random.default_rng(3)
+    v = rng.lognormal(0.0, 6.0, 5000) * rng.choice([-1.0, 1.0], 5000)
+    assert _fold(sk, v, "f64").collapsed
+    _assert_order_free(sk, v, "f64")
 
 
 @pytest.mark.parametrize("value_kind", ["i32", "i64", "str"])
 @pytest.mark.parametrize("kind", WEIGHTED_PURE)
 def test_update_weighted_equals_repeated_plain_update(kind, value_kind):
     sk = _sketch(kind)
+    if not _has_update(sk, value_kind):
+        pytest.skip(f"{kind} has no {value_kind} update")
     v = _values()
     if value_kind == "i64":
         v = v.astype(np.int64) * 5_000_000_000  # beyond int32
@@ -132,7 +167,7 @@ def test_update_weighted_equals_repeated_plain_update(kind, value_kind):
     weighted = sk.empty()
     sk.update_weighted(weighted, uniq, counts, value_kind)
     plain = sk.empty()
-    getattr(sk, f"update_{value_kind}")(plain, rep)
+    _update(sk, plain, rep, value_kind)
     assert sk.serialize(weighted) == sk.serialize(plain)
 
 
@@ -252,6 +287,36 @@ def test_build_operators_never_dispatch_on_kind():
         and any(isinstance(x, ast.Attribute) and x.attr == "kind"
                 for x in [node.left, *node.comparators])]
     assert offenders == [], f"build.py compares .kind at lines {offenders}"
+
+
+def test_build_operators_never_reach_into_a_sketch_state():
+    """operators/build.py folds changelogs through sketch methods alone:
+    no ``np.add.at``, no ``.params``, no counting-Bloom shard-cell helper,
+    and no sharding or repartition knob on a ``build_delta*`` function."""
+    import bloom_filter_spark.operators.build as build
+    tree = ast.parse(open(os.path.abspath(build.__file__)).read())
+    helpers = {"shard_bounds", "delta_cells", "serialize_shard_from_cells"}
+    offenders = []
+    for node in ast.walk(tree):
+        name = (node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name)
+                else node.value if isinstance(node, ast.Constant)
+                and isinstance(node.value, str) else None)
+        if name == "params" and isinstance(node, ast.Attribute):
+            offenders.append((node.lineno, ".params"))
+        if name in helpers:
+            offenders.append((node.lineno, name))
+        if (name == "at" and isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Attribute)
+                and node.value.attr == "add"):
+            offenders.append((node.lineno, "add.at"))
+        if (isinstance(node, ast.FunctionDef)
+                and node.name.startswith("build_delta")):
+            args = node.args
+            offenders += [(node.lineno, a.arg)
+                          for a in args.posonlyargs + args.args + args.kwonlyargs
+                          if a.arg in {"sharded", "n_shards", "repartition"}]
+    assert offenders == [], f"build.py: {offenders}"
 
 
 def test_probe_operators_never_compare_a_kind_to_literals():

@@ -560,13 +560,23 @@ def test_wide_state_fold_auto_coalesces(spark, tokens_df):
     assert _bound_state_volume(many, narrow).rdd.getNumPartitions() == 64
 
 
-def test_cbloom_sharded_fold_bit_parity(spark, tokens_df):
+def _shard_route(mp, sketch, n_shards):
+    """Route build_delta_sketch to the sharded fold, with ``n_shards``
+    column-range shards for ``sketch``."""
+    from bloom_filter_spark.operators import build as build_mod
+    from bloom_filter_spark.sketches import counting_bloom
+    mp.setattr(build_mod, "SHARD_ROUTE_THRESHOLD_BYTES", 0)
+    mp.setattr(counting_bloom, "SHARD_TARGET_BYTES",
+               -(-sketch.params.m * 4 // n_shards))
+    assert sketch.shard_count() == n_shards
+
+
+def test_cbloom_sharded_fold_bit_parity(spark, tokens_df, monkeypatch):
     """Sharded changelog fold ≡ monolithic fold bit-for-bit: deletes land on
     different partitions than their inserts (locally negative shards), shard
     rows mix sparse and dense encodings, and the reassembled blob must equal
     the monolithic path's exactly (counter addition commutes)."""
-    from bloom_filter_spark.operators import (build_delta_sketch,
-                                              build_delta_sketch_sharded)
+    from bloom_filter_spark.operators import build_delta_sketch
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
 
     docs = tokens_df.select("doc_id")
@@ -581,10 +591,11 @@ def test_cbloom_sharded_fold_bit_parity(spark, tokens_df):
         return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
 
     mono_blob, mono_n = build_delta_sketch(changelog, fresh(), "doc_id",
-                                           "sign", "str", sharded=False)
+                                           "sign", "str")
     for n_shards in (1, 5):
-        blob, n = build_delta_sketch_sharded(changelog, fresh(), "doc_id",
-                                             "sign", "str", n_shards=n_shards)
+        _shard_route(monkeypatch, fresh(), n_shards)
+        blob, n = build_delta_sketch(changelog, fresh(), "doc_id",
+                                     "sign", "str")
         assert blob == mono_blob and n == mono_n
 
 
@@ -601,7 +612,7 @@ def test_cbloom_delta_route_auto_shards_wide_state(spark, tokens_df, monkeypatch
         return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
 
     mono, _ = build_mod.build_delta_sketch(changelog, fresh(), "doc_id",
-                                           "sign", "str", sharded=False)
+                                           "sign", "str")
     # force the auto route down the sharded path for this narrow filter
     monkeypatch.setattr(build_mod, "SHARD_ROUTE_THRESHOLD_BYTES", 1024)
     auto, _ = build_mod.build_delta_sketch(changelog, fresh(), "doc_id",
@@ -610,9 +621,9 @@ def test_cbloom_delta_route_auto_shards_wide_state(spark, tokens_df, monkeypatch
 
 
 def test_cbloom_delta_fold_drops_null_signs(spark, tokens_df):
-    """A null sign must be filtered in-plan, not coerced to a garbage
-    delta (ADVICE r3): folding a changelog with null signs equals folding
-    the same changelog with those rows removed."""
+    """A null sign must be dropped by the fold's validity mask, not
+    coerced to a garbage delta (ADVICE r3): folding a changelog with null
+    signs equals folding the same changelog with those rows removed."""
     from bloom_filter_spark.operators import build_delta_sketch
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
 
@@ -743,8 +754,7 @@ def test_cbloom_sharded_multilevel_merge_parity(spark, tokens_df, monkeypatch):
     """When partials-per-shard exceed the byte-aware fanin, pre-merge
     levels must fold fanin-sized slices first (bounding per-task input) and
     still reassemble bit-identically to the monolithic fold."""
-    from bloom_filter_spark.operators import (build_delta_sketch,
-                                              build_delta_sketch_sharded)
+    from bloom_filter_spark.operators import build_delta_sketch
     from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
 
@@ -755,20 +765,20 @@ def test_cbloom_sharded_multilevel_merge_parity(spark, tokens_df, monkeypatch):
         return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
 
     mono, n_mono = build_delta_sketch(changelog, fresh(), "doc_id", "sign",
-                                      "str", sharded=False)
+                                      "str")
     monkeypatch.setattr(merge_mod, "AUTO_TREE_THRESHOLD_BYTES", 1)  # fanin=2
-    blob, n = build_delta_sketch_sharded(changelog, fresh(), "doc_id",
-                                         "sign", "str", n_shards=3)
+    _shard_route(monkeypatch, fresh(), 3)
+    blob, n = build_delta_sketch(changelog, fresh(), "doc_id", "sign", "str")
     assert blob == mono and n == n_mono
 
 
-def test_cbloom_sharded_sparse_and_dense_switch_parity(spark, tokens_df):
+def test_cbloom_sharded_sparse_and_dense_switch_parity(spark, tokens_df,
+                                                       monkeypatch):
     """The sparse-accumulation fold must be bit-identical to the monolithic
     path in BOTH regimes: a wide filter where partitions stay sparse end to
     end, and a narrow filter where every partition crosses the m/3
     break-even and switches to the dense array mid-fold."""
-    from bloom_filter_spark.operators import (build_delta_sketch,
-                                              build_delta_sketch_sharded)
+    from bloom_filter_spark.operators import build_delta_sketch
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
 
     parity = (F.ascii(F.substring("doc_id", -1, 1)) % 2).alias("par")
@@ -782,21 +792,24 @@ def test_cbloom_sharded_sparse_and_dense_switch_parity(spark, tokens_df):
     for cap in (200_000, 300):
         mono, n_mono = build_delta_sketch(
             changelog, CountingBloomSketch(BloomParams(n=cap, p=0.01)),
-            "doc_id", "sign", "str", sharded=False)
-        blob, n = build_delta_sketch_sharded(
-            changelog, CountingBloomSketch(BloomParams(n=cap, p=0.01)),
-            "doc_id", "sign", "str", n_shards=5)
+            "doc_id", "sign", "str")
+        with monkeypatch.context() as mp:
+            _shard_route(mp, CountingBloomSketch(BloomParams(n=cap, p=0.01)),
+                         5)
+            blob, n = build_delta_sketch(
+                changelog, CountingBloomSketch(BloomParams(n=cap, p=0.01)),
+                "doc_id", "sign", "str")
         assert blob == mono and n == n_mono, cap
 
 
-def test_sharded_changelog_checkpoint_resume(spark, tokens_df, tmp_path):
+def test_sharded_changelog_checkpoint_resume(spark, tokens_df, tmp_path,
+                                             monkeypatch):
     """Sharded (wide-state) changelog partials persist through the lineage
     table under the SHARD_LEVEL marker and resume to the SAME blob
     bit-for-bit — wide-state builds are as resumable as monolithic ones,
     and resume() auto-detects the layout."""
     from bloom_filter_spark.operators import (SketchCheckpoint,
-                                              build_delta_sketch,
-                                              build_delta_sketch_sharded)
+                                              build_delta_sketch)
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
 
     parity = (F.ascii(F.substring("doc_id", -1, 1)) % 2).alias("par")
@@ -810,10 +823,11 @@ def test_sharded_changelog_checkpoint_resume(spark, tokens_df, tmp_path):
         return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
 
     direct, n_direct = build_delta_sketch(changelog, fresh(), "doc_id",
-                                          "sign", "str", sharded=False)
+                                          "sign", "str")
     ck = SketchCheckpoint(str(tmp_path / "ckpt"))
-    built, n_built = build_delta_sketch_sharded(
-        changelog, fresh(), "doc_id", "sign", "str", n_shards=5,
+    _shard_route(monkeypatch, fresh(), 5)
+    built, n_built = build_delta_sketch(
+        changelog, fresh(), "doc_id", "sign", "str",
         checkpoint=ck, sketch_id="cb_shard")
     assert built == direct and n_built == n_direct
     # resume from the persisted shard partials alone
@@ -824,7 +838,7 @@ def test_sharded_changelog_checkpoint_resume(spark, tokens_df, tmp_path):
     assert fblob == direct and fn == n_direct
 
 
-def test_shard_merge_exactly_one_exchange_per_wave(spark):
+def test_shard_merge_exactly_one_exchange_per_wave(spark, monkeypatch):
     """Plan-shape pin for merge_shard_partials (VERDICT r4 #7): each merge
     wave is ONE hash Exchange (the groupBy on shard_id / (shard_id, grp)).
     The trap this guards: deriving the fold key from an expression
@@ -834,14 +848,17 @@ def test_shard_merge_exactly_one_exchange_per_wave(spark):
     beyond its own groupBy."""
     from bloom_filter_spark.operators.build import (
         build_delta_shard_partials, merge_shard_partials)
-    from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
+    from bloom_filter_spark.sketches import (BloomParams, CountingBloomSketch,
+                                             counting_bloom)
 
     df = spark.createDataFrame(
         [(f"doc_{i}", 1) for i in range(2000)], "id string, sign int"
     ).repartition(8)
     sk = CountingBloomSketch(BloomParams(n=4000, p=0.01))
+    monkeypatch.setattr(counting_bloom, "SHARD_TARGET_BYTES",
+                        sk.params.m * 4 // 4)  # 4 shards
     partials = build_delta_shard_partials(df, sk, "id", "sign",
-                                          value_kind="str", n_shards=4)
+                                          value_kind="str")
 
     # single wave (P <= fanin): exactly one Exchange in the whole merge
     merged = merge_shard_partials(partials, sk, est_partials=8)
