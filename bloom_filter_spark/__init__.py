@@ -24,6 +24,11 @@ Layout:
     functions/  training-data pipeline ops (dedup, similarity, text stats,
                 multimodal plumbing) and relational query library
     streaming/  structured-streaming incremental sketch build
+    zipcache    worker-only: keep zip-import directories across Spark tasks
 """
 
+from . import zipcache
+
 __version__ = "0.1.0"
+
+zipcache.install()
