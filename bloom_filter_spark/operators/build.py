@@ -49,6 +49,7 @@ with no salting.
 
 from __future__ import annotations
 
+import itertools
 import os
 import zlib
 
@@ -58,7 +59,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..core.hashing import StrBuf, arrow_strbuf
 from ..sketches.base import sketch_for_kind
-from .merge import (PARTIAL_SCHEMA, _byte_fanin, _merge_levels,
+from .merge import (PARTIAL_SCHEMA, _byte_fanin, _fits_driver, _merge_levels,
                     merge_partials_auto)
 
 
@@ -565,11 +566,12 @@ def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
     filter width) and emitting ``sketch.shard_count()`` column-range rows
     (shard_id, src, n_items, state) per partition.
 
-    The JVM scan is NEVER coalesced here (that is the point): the merge
-    is a single groupBy(shard_id) with one reducer per shard, so a 1000-task
-    scan of a 10^10-cell filter shuffles data-proportional bytes into
-    width-proportional parallel reducers.  ``n_items`` rides only shard-0
-    rows so the global count sums cleanly."""
+    The JVM scan is NEVER coalesced here (that is the point): past the
+    driver budget the merge is a single groupBy(shard_id) with one reducer
+    per shard, so a 1000-task scan of a 10^10-cell filter shuffles
+    data-proportional bytes into width-proportional parallel reducers
+    (merge_shards_reassembled).  ``n_items`` rides only shard-0 rows so the
+    global count sums cleanly."""
     if not hasattr(sketch, "shard_fold"):
         raise ValueError(f"{sketch.kind} does not support sharded states")
     n_shards = sketch.shard_count()  # on the driver: the tasks capture it
@@ -587,6 +589,16 @@ def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
                                (sketch.shard_fold, rows), SHARD_SCHEMA)
 
 
+def _with_src(partials: DataFrame) -> DataFrame:
+    """Shard partials with their ``src`` column.  Legacy input (pre-src
+    layout): one mapInArrow task per scan partition means the physical
+    partition id IS the origin — only sound because nothing re-partitioned
+    between fold and merge."""
+    if "src" in partials.columns:
+        return partials
+    return partials.withColumn("src", F.spark_partition_id())
+
+
 def merge_shard_partials(partials: DataFrame, sketch,
                          est_partials: int | None = None) -> DataFrame:
     """(shard_id, src, n_items, state)* → ONE dense row per shard: the Arrow
@@ -598,28 +610,39 @@ def merge_shard_partials(partials: DataFrame, sketch,
     keyed by (shard_id, floor(src / fanin)) fold fanin-sized slices first
     (1000 dense 8 MB partials would otherwise be 8 GB in one task)."""
     shard_sz = sketch.state_bytes_max // sketch.shard_count()
-    if "src" not in partials.columns:
-        # legacy input (pre-src layout): one mapInArrow task per scan
-        # partition means the physical partition id IS the origin — only
-        # sound because nothing re-partitioned between fold and merge
-        partials = partials.withColumn("src", F.spark_partition_id())
-    return _merge_levels(partials, sketch, _byte_fanin(shard_sz), est_partials,
-                         keys=("shard_id",), order="src",
+    return _merge_levels(_with_src(partials), sketch, _byte_fanin(shard_sz),
+                         est_partials, keys=("shard_id",), order="src",
                          fold=type(sketch).merge_shard_blobs).drop("src")
 
 
 def merge_shards_reassembled(partials: DataFrame, sketch,
                              est_partials: int | None = None
                              ) -> tuple[bytes, int]:
-    """Sharded partials → (monolithic state blob, n_items): the per-shard
-    merge, then reassembly — the one sharded tail of the build
-    (_merge_checkpointed) and of SketchCheckpoint.resume.  Completeness is
-    checked from the blob headers by ``reassemble_shards``."""
-    rows = merge_shard_partials(partials, sketch, est_partials).collect()
+    """Sharded partials → (monolithic state blob, n_items): the one sharded
+    tail of the build (_merge_checkpointed) and of SketchCheckpoint.resume,
+    routed by merge.py's one route rule on ``est_partials`` (default: the
+    partition count) × ``state_bytes_max``.  Within the driver budget the
+    sparse shard rows are collected and each shard folds on the driver
+    (grouped by shard_id, in src order); over it, the per-shard executor
+    merge levels (merge_shard_partials) emit one dense row per shard.  Both
+    fold with ``merge_shard_blobs`` and reassemble with
+    ``reassemble_shards``, which checks completeness from the blob headers,
+    so both give the same bytes."""
+    if est_partials is None:
+        est_partials = partials.rdd.getNumPartitions()
+    cls = type(sketch)
+    if _fits_driver(est_partials, sketch):
+        rows = sorted(_with_src(partials).select(
+            "shard_id", "src", "n_items", "state").collect(),
+            key=lambda r: (r.shard_id, r.src))
+        shards = [cls.merge_shard_blobs([r.state for r in grp]) for _, grp
+                  in itertools.groupby(rows, key=lambda r: r.shard_id)]
+    else:
+        rows = merge_shard_partials(partials, sketch, est_partials).collect()
+        shards = [r.state for r in rows]
     if not rows:
         return sketch.serialize(sketch.empty()), 0
-    return (type(sketch).reassemble_shards([r.state for r in rows]),
-            int(sum(r.n_items for r in rows)))
+    return cls.reassemble_shards(shards), int(sum(r.n_items for r in rows))
 
 
 def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
@@ -632,11 +655,14 @@ def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
     SHARD_ROUTE_THRESHOLD_BYTES, the sharded column-range fold beyond it
     (build_delta_shard_partials).  Both routes run the one fold core over
     the native parquet scan when the plan is a bare scan, and both give
-    the same bytes (integer counter addition commutes).  Measured at sf1
-    (2^25-counter / 134 MB state): 143.6 s monolithic → sharded keeps full
-    scan parallelism and one parallel merge wave.  With ``checkpoint`` +
+    the same bytes (integer counter addition commutes).  The sharded
+    merge takes merge.py's one route rule too (merge_shards_reassembled):
+    a driver fold of the sparse shard rows while P × state_bytes_max fits
+    DRIVER_COLLECT_MAX_BYTES, one parallel per-shard merge wave beyond it.
+    Measured at sf1 (2^25-counter / 134 MB state): 143.6 s monolithic →
+    sharded keeps full scan parallelism.  With ``checkpoint`` +
     ``sketch_id`` the partials persist first (sharded ones at level
-    SHARD_LEVEL) and ``SketchCheckpoint.resume`` replays the same merge."""
+    SHARD_LEVEL) and ``SketchCheckpoint.resume`` replays the same route."""
     build = (build_delta_shard_partials if hasattr(sketch, "shard_fold")
              and sketch.state_bytes_max > SHARD_ROUTE_THRESHOLD_BYTES
              else build_delta_partials)

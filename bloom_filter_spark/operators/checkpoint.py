@@ -148,11 +148,11 @@ class SketchCheckpoint:
     def resume(self, spark: SparkSession, sketch_id: str,
                sketch) -> tuple[bytes, int]:
         """Rebuild the final state from the LATEST complete run's partials.
-        Layout auto-detected from the level column: SHARD_LEVEL rows merge
-        per shard and reassemble; monolithic rows go through the build's
-        router (merge_partials_auto), so resume takes the direct build's
-        route and merge levels.  Both plan from counted rows (a read-back
-        under-counts partitions)."""
+        Layout auto-detected from the level column: SHARD_LEVEL rows take
+        the build's sharded tail (merge_shards_reassembled), monolithic
+        rows the build's router (merge_partials_auto), so resume takes the
+        direct build's route and merge levels.  Both plan from counted rows
+        (a read-back under-counts partitions)."""
         base = os.path.join(self._tbl("sketch_state"), f"sketch_id={sketch_id}")
         raw = spark.read.parquet(self._latest_run_path(base))
         if raw.where(F.col("level") == SHARD_LEVEL).limit(1).count():

@@ -5,8 +5,9 @@ keyed, fanin-bounded Arrow group-fold (``_tree_level``) over *state rows
 only* — shuffle volume per level is (#rows × |state|), never the input
 data — stacked by one planner (``_merge_levels``) into one lazy plan.
 Every merge decision reads one size, the class's declared
-``state_bytes_max``: one route rule (``merge_partials_auto``: driver fold
-or merge levels) and one fanin rule (``_byte_fanin``).
+``state_bytes_max``: one route rule (``_fits_driver``: driver fold or merge
+levels, taken by ``merge_partials_auto`` and by the sharded changelog tail
+``build.merge_shards_reassembled``) and one fanin rule (``_byte_fanin``).
 
 Safety: partial blobs carry their params in the serialized header; merging
 states built under different params silently corrupts estimates, so every
@@ -85,12 +86,20 @@ def merge_partials_auto(partials: DataFrame, sketch,
     the build's row count replays the build's plan byte for byte."""
     if est_rows is None:
         est_rows = partials.rdd.getNumPartitions()
-    sz = sketch.state_bytes_max
-    if est_rows * sz > DRIVER_COLLECT_MAX_BYTES:
-        row = _merge_levels(partials, sketch, _byte_fanin(sz),
+    if not _fits_driver(est_rows, sketch):
+        row = _merge_levels(partials, sketch,
+                            _byte_fanin(sketch.state_bytes_max),
                             est_rows).collect()[0]
         return bytes(row.state), int(row.n_items)
     return merge_partials_collect(partials, sketch)
+
+
+def _fits_driver(est_rows: int, sketch) -> bool:
+    """THE route rule: ``est_rows`` partials of at most
+    ``sketch.state_bytes_max`` bytes each fit one driver collect()
+    (DRIVER_COLLECT_MAX_BYTES), so the driver folds them; otherwise the
+    executor merge levels do."""
+    return est_rows * sketch.state_bytes_max <= DRIVER_COLLECT_MAX_BYTES
 
 
 def _byte_fanin(state_bytes: int) -> int:

@@ -191,9 +191,10 @@ class CountingBloomSketch:
     # MB; shipping that as ONE blob per partition forces the merge to either
     # coalesce the scan (losing parallelism) or funnel GB-scale rows through
     # a serial fanin tree.  Sharding splits the counter array into
-    # column-range segments emitted as (shard_id, bytes) rows, so the merge
-    # becomes a single groupBy(shard_id) — state WIDTH converts to merge
-    # PARALLELISM, and per-merge-task memory is one shard, not the filter.
+    # column-range segments emitted as (shard_id, bytes) rows, so a merge
+    # past the driver budget is a single groupBy(shard_id) — state WIDTH
+    # converts to merge PARALLELISM, and per-merge-task memory is one shard,
+    # not the filter (within the budget the driver folds the shard rows).
     # Segments with few touched cells ship sparse ((u32 rel-idx, i4 val)
     # pairs): a partition's shard volume is bounded by its row count × k,
     # not by m — at scale the shuffle carries the data actually written.
@@ -259,59 +260,90 @@ class CountingBloomSketch:
     _SHARD_HEADER_LEN = 24
 
     @classmethod
+    def _shard_header(cls, blob) -> tuple[bytes, int, int, int]:
+        """(header bytes, n_shards, shard_id, cells in the shard) of a shard
+        blob; the body starts after the header and its mode byte."""
+        if len(blob) < cls._SHARD_HEADER_LEN + 1:
+            raise ValueError(f"truncated cbloom shard blob ({len(blob)} B)")
+        head = bytes(blob[:cls._SHARD_HEADER_LEN])
+        r = Reader(head)
+        m, _, _ = r.u32(), r.u32(), r.u64()
+        n_shards, shard_id = r.u32(), r.u32()
+        if not 0 <= shard_id < n_shards:
+            raise ValueError(
+                f"cbloom shard id {shard_id} outside 0..{n_shards - 1}")
+        lo, hi = shard_id * m // n_shards, (shard_id + 1) * m // n_shards
+        return head, n_shards, shard_id, hi - lo
+
+    @classmethod
     def merge_shard_blobs(cls, blobs: list) -> bytes:
         """Counter-sum N same-shard blobs → one DENSE shard blob.  All blobs
         must agree on (m, k, seed, n_shards, shard_id) — header-checked like
-        merge_blobs."""
-        head = bytes(blobs[0][:cls._SHARD_HEADER_LEN])
-        r = Reader(head)
-        m, k = r.u32(), r.u32()
-        r.u64()
-        n_shards, shard_id = r.u32(), r.u32()
-        lo = shard_id * m // n_shards
-        hi = (shard_id + 1) * m // n_shards
-        acc = np.zeros(hi - lo, dtype=_DTYPE)
+        merge_blobs — and each body must end exactly at its blob's end
+        (dense: 4 B per cell; sparse: u32 nnz + 8 B per pair, every
+        index inside the shard)."""
+        head, _, _, width = cls._shard_header(blobs[0])
+        body = cls._SHARD_HEADER_LEN + 1
+        acc = np.zeros(width, dtype=_DTYPE)
         for b in blobs:
-            b = bytes(b)
-            if b[:cls._SHARD_HEADER_LEN] != head:
+            b = memoryview(b)
+            if len(b) < body or b[:cls._SHARD_HEADER_LEN] != head:
                 raise ValueError(
                     "refusing to merge cbloom shards with different "
                     "params/seeds/shard identity")
-            r = Reader(b)
-            r.pos = cls._SHARD_HEADER_LEN
-            mode = b[r.pos]
-            r.pos += 1
-            if mode == 1:
-                nnz = r.u32()
-                idx = r.array("<u4", nnz)
-                val = r.array("<i4", nnz)
-                np.add.at(acc, idx.astype(np.int64), val.astype(_DTYPE))
+            mode = b[cls._SHARD_HEADER_LEN]
+            if mode == 0:
+                if len(b) != body + 4 * width:
+                    raise ValueError(
+                        f"dense cbloom shard body is {len(b) - body} B, "
+                        f"expected {4 * width}")
+                acc += np.frombuffer(b, "<i4", width, body)
+            elif mode == 1:
+                nnz = int.from_bytes(b[body:body + 4], "little")
+                if len(b) != body + 4 + 8 * nnz:
+                    raise ValueError(
+                        f"sparse cbloom shard body is {len(b) - body} B, "
+                        f"not 4 + 8 × its nnz")
+                idx = np.frombuffer(b, "<u4", nnz, body + 4)
+                if nnz and int(idx.max()) >= width:
+                    raise ValueError(
+                        f"sparse cbloom shard index {int(idx.max())} outside "
+                        f"its {width} cells")
+                np.add.at(acc, idx.astype(np.intp),
+                          np.frombuffer(b, "<i4", nnz, body + 4 + 4 * nnz))
             else:
-                acc += r.array("<i4", hi - lo).astype(_DTYPE)
-        return (head + b"\x00" + acc.astype("<i4").tobytes())
+                raise ValueError(f"unknown cbloom shard mode byte {mode}")
+        return b"".join([head, b"\x00", acc.astype("<i4", copy=False)])
 
     @classmethod
     def reassemble_shards(cls, blobs: list) -> bytes:
         """DENSE shard blobs (one per shard_id, any order) → the monolithic
-        serialize() layout, bit-for-bit."""
-        parsed = {}
-        m = k = seed = n_shards = None
+        serialize() layout, bit-for-bit, copying each body once."""
+        if not blobs:
+            raise ValueError("no cbloom shard blobs to reassemble")
+        bodies = {}
+        filt = None
         for b in blobs:
-            b = bytes(b)
-            r = Reader(b)
-            bm, bk, bseed, bn, sid = r.u32(), r.u32(), r.u64(), r.u32(), r.u32()
-            if m is None:
-                m, k, seed, n_shards = bm, bk, bseed, bn
-            elif (bm, bk, bseed, bn) != (m, k, seed, n_shards):
+            head, n_shards, sid, width = cls._shard_header(b)
+            if filt is None:
+                filt = head[:20]  # m | k | seed | n_shards
+            elif head[:20] != filt:
                 raise ValueError("mixed-filter shards in reassembly")
-            if b[r.pos] != 0:
+            b = memoryview(b)
+            if b[cls._SHARD_HEADER_LEN] != 0:
                 raise ValueError("reassembly expects dense shard blobs")
-            parsed[sid] = b[r.pos + 1:]
-        if sorted(parsed) != list(range(n_shards)):
+            if len(b) != cls._SHARD_HEADER_LEN + 1 + 4 * width:
+                raise ValueError(
+                    f"dense cbloom shard {sid} is {len(b)} B, expected "
+                    f"{cls._SHARD_HEADER_LEN + 1 + 4 * width}")
+            if sid in bodies:
+                raise ValueError(f"duplicate cbloom shard {sid} in reassembly")
+            bodies[sid] = b[cls._SHARD_HEADER_LEN + 1:]
+        if sorted(bodies) != list(range(n_shards)):
             raise ValueError(
-                f"incomplete shard set: have {sorted(parsed)} of {n_shards}")
-        body = b"".join(parsed[i] for i in range(n_shards))
-        return pack_u32(m) + pack_u32(k) + pack_u64(seed) + body
+                f"incomplete shard set: have {sorted(bodies)} of {n_shards}")
+        # the serialize() header (m | k | seed) is the shard header's prefix
+        return b"".join([filt[:16], *(bodies[i] for i in range(n_shards))])
 
     # -- serde (engine layout; the reference has no counting filter) -------
     header_len = 16  # u32 m | u32 k | u64 seed (counters follow)

@@ -162,6 +162,68 @@ def test_shard_merge_refuses_mismatched_identity():
             [CountingBloomSketch.merge_shard_blobs([s0])])  # missing shards
 
 
+def _shard_blobs_for_strictness():
+    """(sketch, state, dense shard-0 blob, sparse shard-0 blob) of a
+    4-shard filter: the dense blob from a filled state, the sparse one
+    from a few keys."""
+    cb = CountingBloomSketch(BloomParams(n=2000, p=0.01))
+    full, few = cb.empty(), cb.empty()
+    cb.update_i32(full, _keys(20_000, seed=1))
+    cb.update_i32(few, _keys(10, seed=2))
+    dense, sparse = cb.serialize_shard(full, 0, 4), cb.serialize_shard(few, 0, 4)
+    assert dense[24] == 0 and sparse[24] == 1
+    return cb, full, dense, sparse
+
+
+def test_shard_merge_rejects_malformed_bodies():
+    """A shard body must end exactly at its blob's end and carry a known
+    mode byte; a sparse index must lie inside the shard."""
+    cb, _, dense, sparse = _shard_blobs_for_strictness()
+    merge = CountingBloomSketch.merge_shard_blobs
+    width = (lambda lo, hi: hi - lo)(*cb.shard_bounds(0, 4))
+    with pytest.raises(ValueError, match="mode byte 2"):
+        merge([dense[:24] + b"\x02" + dense[25:]])
+    with pytest.raises(ValueError, match="dense cbloom shard body"):
+        merge([dense + b"\x00" * 4])  # trailing bytes
+    with pytest.raises(ValueError, match="dense cbloom shard body"):
+        merge([dense[:-4]])  # truncated
+    with pytest.raises(ValueError, match="sparse cbloom shard body"):
+        merge([sparse + b"\x00" * 8])
+    with pytest.raises(ValueError, match="sparse cbloom shard body"):
+        merge([sparse[:-1]])
+    with pytest.raises(ValueError, match="sparse cbloom shard body"):
+        merge([sparse[:27]])  # cut inside nnz
+    nnz = int(np.frombuffer(sparse, "<u4", 1, 25)[0])
+    idx = np.frombuffer(sparse, "<u4", nnz, 29).copy()
+    idx[-1] = width  # one past the shard's last cell
+    bad = sparse[:29] + idx.tobytes() + sparse[29 + 4 * nnz:]
+    with pytest.raises(ValueError, match="outside"):
+        merge([bad])
+    with pytest.raises(ValueError, match="truncated"):
+        merge([dense[:24]])
+    # well-formed blobs of both modes still merge
+    assert merge([dense, sparse])[24] == 0
+
+
+def test_reassemble_rejects_wrong_dense_length_and_duplicates():
+    """A dense shard with 4 trailing bytes used to reassemble into a filter
+    whose later counters were shifted (inserted keys then missed); every
+    dense body must be exactly (hi - lo) × 4 bytes, once per shard."""
+    cb, full, _, _ = _shard_blobs_for_strictness()
+    shards = [cb.serialize_shard(full, i, 4) for i in range(4)]
+    assert CountingBloomSketch.reassemble_shards(shards) == cb.serialize(full)
+    with pytest.raises(ValueError, match="dense cbloom shard 1"):
+        CountingBloomSketch.reassemble_shards(
+            [shards[0], shards[1] + b"\x00" * 4, *shards[2:]])
+    with pytest.raises(ValueError, match="dense cbloom shard 2"):
+        CountingBloomSketch.reassemble_shards(
+            [*shards[:2], shards[2][:-4], shards[3]])
+    with pytest.raises(ValueError, match="duplicate"):
+        CountingBloomSketch.reassemble_shards([*shards, shards[3]])
+    with pytest.raises(ValueError):
+        CountingBloomSketch.reassemble_shards([])
+
+
 def test_counting_bloom_rejects_xxh3_params():
     with pytest.raises(ValueError, match="splitmix64"):
         CountingBloomSketch(BloomParams(n=100, p=0.01, hash_family="xxh3"))

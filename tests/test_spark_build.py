@@ -571,21 +571,30 @@ def _shard_route(mp, sketch, n_shards):
     assert sketch.shard_count() == n_shards
 
 
+def _apart_changelog(tokens_df):
+    """Inserts of every doc id and deletes of the odd-parity half, hashed on
+    the sign so deletes land on different partitions than their inserts
+    (locally negative shards)."""
+    parity = (F.ascii(F.substring("doc_id", -1, 1)) % 2).alias("par")
+    with_par = tokens_df.select("doc_id", parity)
+    return (with_par.select("doc_id", F.lit(1).alias("sign"))
+            .unionAll(with_par.where(F.col("par") == 1)
+                      .select("doc_id", F.lit(-1).alias("sign")))
+            ).repartition(8, "sign")
+
+
 def test_cbloom_sharded_fold_bit_parity(spark, tokens_df, monkeypatch):
     """Sharded changelog fold ≡ monolithic fold bit-for-bit: deletes land on
     different partitions than their inserts (locally negative shards), shard
     rows mix sparse and dense encodings, and the reassembled blob must equal
-    the monolithic path's exactly (counter addition commutes)."""
+    the monolithic path's exactly (counter addition commutes) — on both
+    sharded merge routes: the driver fold (default budget) and the
+    per-shard executor levels (DRIVER_COLLECT_MAX_BYTES = 0)."""
     from bloom_filter_spark.operators import build_delta_sketch
+    from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
 
-    docs = tokens_df.select("doc_id")
-    parity = (F.ascii(F.substring("doc_id", -1, 1)) % 2).alias("par")
-    with_par = docs.select("doc_id", parity)
-    changelog = (with_par.select("doc_id", F.lit(1).alias("sign"))
-                 .unionAll(with_par.where(F.col("par") == 1)
-                           .select("doc_id", F.lit(-1).alias("sign")))
-                 ).repartition(8, "sign")
+    changelog = _apart_changelog(tokens_df)
 
     def fresh():
         return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
@@ -593,10 +602,13 @@ def test_cbloom_sharded_fold_bit_parity(spark, tokens_df, monkeypatch):
     mono_blob, mono_n = build_delta_sketch(changelog, fresh(), "doc_id",
                                            "sign", "str")
     for n_shards in (1, 5):
-        _shard_route(monkeypatch, fresh(), n_shards)
-        blob, n = build_delta_sketch(changelog, fresh(), "doc_id",
-                                     "sign", "str")
-        assert blob == mono_blob and n == mono_n
+        for budget in (merge_mod.DRIVER_COLLECT_MAX_BYTES, 0):
+            with monkeypatch.context() as mp:
+                _shard_route(mp, fresh(), n_shards)
+                mp.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", budget)
+                blob, n = build_delta_sketch(changelog, fresh(), "doc_id",
+                                             "sign", "str")
+            assert blob == mono_blob and n == mono_n, (n_shards, budget)
 
 
 def test_cbloom_delta_route_auto_shards_wide_state(spark, tokens_df, monkeypatch):
@@ -767,6 +779,7 @@ def test_cbloom_sharded_multilevel_merge_parity(spark, tokens_df, monkeypatch):
     mono, n_mono = build_delta_sketch(changelog, fresh(), "doc_id", "sign",
                                       "str")
     monkeypatch.setattr(merge_mod, "AUTO_TREE_THRESHOLD_BYTES", 1)  # fanin=2
+    monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", 0)  # levels
     _shard_route(monkeypatch, fresh(), 3)
     blob, n = build_delta_sketch(changelog, fresh(), "doc_id", "sign", "str")
     assert blob == mono and n == n_mono
@@ -781,12 +794,7 @@ def test_cbloom_sharded_sparse_and_dense_switch_parity(spark, tokens_df,
     from bloom_filter_spark.operators import build_delta_sketch
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
 
-    parity = (F.ascii(F.substring("doc_id", -1, 1)) % 2).alias("par")
-    with_par = tokens_df.select("doc_id", parity)
-    changelog = (with_par.select("doc_id", F.lit(1).alias("sign"))
-                 .unionAll(with_par.where(F.col("par") == 1)
-                           .select("doc_id", F.lit(-1).alias("sign")))
-                 ).repartition(8, "sign")
+    changelog = _apart_changelog(tokens_df)
     # wide filter: per-partition entries ≪ m/3 → pure sparse emission
     # narrow filter: entries ≫ m/3 → switches to dense mid-fold
     for cap in (200_000, 300):
@@ -807,35 +815,65 @@ def test_sharded_changelog_checkpoint_resume(spark, tokens_df, tmp_path,
     """Sharded (wide-state) changelog partials persist through the lineage
     table under the SHARD_LEVEL marker and resume to the SAME blob
     bit-for-bit — wide-state builds are as resumable as monolithic ones,
-    and resume() auto-detects the layout."""
+    and resume() auto-detects the layout — whether the build folded on the
+    driver (default budget) or on the executor levels (budget 0)."""
     from bloom_filter_spark.operators import (SketchCheckpoint,
                                               build_delta_sketch)
+    from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
 
-    parity = (F.ascii(F.substring("doc_id", -1, 1)) % 2).alias("par")
-    with_par = tokens_df.select("doc_id", parity)
-    changelog = (with_par.select("doc_id", F.lit(1).alias("sign"))
-                 .unionAll(with_par.where(F.col("par") == 1)
-                           .select("doc_id", F.lit(-1).alias("sign")))
-                 ).repartition(8, "sign")
+    changelog = _apart_changelog(tokens_df)
 
     def fresh():
         return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
 
     direct, n_direct = build_delta_sketch(changelog, fresh(), "doc_id",
                                           "sign", "str")
-    ck = SketchCheckpoint(str(tmp_path / "ckpt"))
-    _shard_route(monkeypatch, fresh(), 5)
-    built, n_built = build_delta_sketch(
-        changelog, fresh(), "doc_id", "sign", "str",
-        checkpoint=ck, sketch_id="cb_shard")
-    assert built == direct and n_built == n_direct
-    # resume from the persisted shard partials alone
-    blob, n = ck.resume(spark, "cb_shard", fresh())
-    assert blob == direct and n == n_direct
-    # and the final table holds it too
-    fblob, fn = ck.read_final(spark, "cb_shard")
-    assert fblob == direct and fn == n_direct
+    for budget in (merge_mod.DRIVER_COLLECT_MAX_BYTES, 0):
+        with monkeypatch.context() as mp:
+            mp.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", budget)
+            ck = SketchCheckpoint(str(tmp_path / f"ckpt{budget}"))
+            _shard_route(mp, fresh(), 5)
+            built, n_built = build_delta_sketch(
+                changelog, fresh(), "doc_id", "sign", "str",
+                checkpoint=ck, sketch_id="cb_shard")
+            assert built == direct and n_built == n_direct
+            # resume from the persisted shard partials alone
+            blob, n = ck.resume(spark, "cb_shard", fresh())
+            assert blob == direct and n == n_direct, budget
+        # and the final table holds it too
+        fblob, fn = ck.read_final(spark, "cb_shard")
+        assert fblob == direct and fn == n_direct
+
+
+def test_sharded_merge_routes_by_the_driver_budget(spark, tokens_df,
+                                                   monkeypatch):
+    """The sharded tail reads the same rule as merge_partials_auto:
+    P × state_bytes_max ≤ DRIVER_COLLECT_MAX_BYTES folds on the driver and
+    never plans merge_shard_partials; one byte less takes the levels."""
+    from bloom_filter_spark.operators import build as build_mod
+    from bloom_filter_spark.operators import merge as merge_mod
+    from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
+
+    changelog = _apart_changelog(tokens_df)
+    sk = CountingBloomSketch(BloomParams(n=10_000, p=0.01))
+    mono = build_mod.build_delta_sketch(changelog, sk, "doc_id", "sign", "str")
+    _shard_route(monkeypatch, sk, 5)
+    partials = build_mod.build_delta_shard_partials(changelog, sk, "doc_id",
+                                                    "sign", "str")
+    est = partials.rdd.getNumPartitions()
+
+    def no_levels(*a, **k):
+        raise AssertionError("executor shard merge planned")
+
+    monkeypatch.setattr(build_mod, "merge_shard_partials", no_levels)
+    monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES",
+                        est * sk.state_bytes_max)
+    assert build_mod.merge_shards_reassembled(partials, sk) == mono
+    monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES",
+                        est * sk.state_bytes_max - 1)
+    with pytest.raises(AssertionError, match="executor shard merge"):
+        build_mod.merge_shards_reassembled(partials, sk)
 
 
 def test_shard_merge_exactly_one_exchange_per_wave(spark, monkeypatch):

@@ -149,10 +149,14 @@ def main() -> None:
         merge_shard_partials(
             build_delta_shard_partials(chg, cb, "doc_id", "sign", "str"), cb),
         "Scan → MapInArrow emits column-range (shard_id, state) rows at "
-        "FULL scan parallelism (no coalesce); the only Exchange carries "
-        "shard rows into groupBy(shard_id) — state width becomes merge "
-        "parallelism, and per-reducer memory is one shard, byte-bounded by "
-        "fanin pre-levels when partials-per-shard exceed the merge budget.")
+        "FULL scan parallelism (no coalesce).  This is the route past the "
+        "driver budget (P × state_bytes_max > DRIVER_COLLECT_MAX_BYTES): "
+        "the only Exchange carries shard rows into groupBy(shard_id) — "
+        "state width becomes merge parallelism, and per-reducer memory is "
+        "one shard, byte-bounded by fanin pre-levels when partials-per-shard "
+        "exceed the merge budget.  Within the budget the plan ends at the "
+        "MapInArrow: the driver collects the sparse shard rows and folds "
+        "each shard itself.")
 
     add("Decontamination (broadcast Bloom prefilter + exact confirm)",
         dedup.contamination_check(
