@@ -16,13 +16,12 @@ the list column's flat values buffer zero-copy — one numpy view per batch.
 Every partial build — JVM-fed, native parquet scan, pre-aggregated,
 changelog — runs through ONE fold core (``_fold_fn``): fold an Arrow batch
 iterator into ``sketch.empty()`` with a per-batch step, emit the single
-(partition_id, n_items, state) row.  The sharded changelog fold is the same
+(partition_id, n_items, state) row.  The one changelog fold is the same
 loop with one start/emit hook: it starts from the sketch's own sparse
-accumulator and emits one row per column-range shard.  Both changelog
-builds share one signed step (nulls dropped in the task) and, like every
-multiset-pure build, read a bare parquet scan natively.  Every grouped
-build runs through one phase 1 (``_grouped_phase1_fn``); every merge is
-merge.py's one Arrow level.
+accumulator, folds a signed step (nulls dropped in the task), emits one row
+per column-range shard and, like every multiset-pure build, reads a bare
+parquet scan natively.  Every grouped build runs through one phase 1
+(``_grouped_phase1_fn``); every merge is merge.py's one Arrow level.
 What a sketch IS — whether its state is a pure function of the input multiset,
 how it takes weights, how long its params header is — is declared on the
 sketch class (sketches/base.py); the operators route on those declarations,
@@ -179,8 +178,7 @@ def _bound_state_volume(sel: DataFrame, sketch) -> DataFrame:
     keeps its CPU parallelism no matter how large one state is (a 1000-
     executor fleet building a GB-scale filter still scans with every
     core; only partition counts in EXCESS of the slots are trimmed).
-    Narrow sketches (bloom/HLL/CMS ≤ a few MB) are never touched.
-    Measured: 600k-doc cbloom changelog fold 93 s → 14 s at sf0.1."""
+    Narrow sketches (bloom/HLL/CMS ≤ a few MB) are never touched."""
     from .merge import AUTO_TREE_THRESHOLD_BYTES
     p = sel.rdd.getNumPartitions()
     if p * sketch.state_bytes_max > AUTO_TREE_THRESHOLD_BYTES:
@@ -477,11 +475,13 @@ def _merge_checkpointed(df: DataFrame, partials: DataFrame, sketch,
     return blob, n_items
 
 
-def _signed_step(update, value_kind: str):
-    """Fold step of both changelog builds over (key, sign) batches: rows
-    with a null key or a null sign drop under one joint validity mask (a
-    kept null sign would become an arbitrary delta), then
-    ``update(state, keys, int32 signs)``."""
+def _signed_step(update, value_kind: str, sign_col: str):
+    """Fold step of the changelog build over (key, sign) batches: rows with
+    a null key or a null sign drop under one joint validity mask (a kept
+    null sign would become an arbitrary delta), then ``update(state, keys,
+    int32 signs)``.  A sign outside int32 raises ValueError naming
+    ``sign_col`` — cast down, it would wrap (2**32 - 1 folds as −1)."""
+    lo, hi = np.iinfo(np.int32).min, np.iinfo(np.int32).max
 
     def step(state, b):
         import pyarrow.compute as pc
@@ -491,56 +491,15 @@ def _signed_step(update, value_kind: str):
             keys, signs = keys.filter(valid), signs.filter(valid)
         if len(keys) == 0:
             return 0
+        s = signs.to_numpy(zero_copy_only=False)
+        if not np.can_cast(s.dtype, np.int32) and (int(s.min()) < lo
+                                                   or int(s.max()) > hi):
+            raise ValueError(f"sign column {sign_col!r} holds a value "
+                             f"outside int32 [{lo}, {hi}]")
         update(state, _arrow_values(keys, value_kind),
-               signs.to_numpy(zero_copy_only=False).astype(np.int32))
+               s.astype(np.int32, copy=False))
         return len(keys)
     return step
-
-
-def _changelog_partials(df: DataFrame, sketch, col: str, sign_col: str,
-                        value_kind: str, out=None,
-                        schema: str = PARTIAL_SCHEMA) -> DataFrame:
-    """The one source of both changelog builds: ``_fold_fn`` (with the
-    start/emit hook ``out``) over (key, sign) batches through
-    ``_signed_step`` — read by the native parquet scan when the plan is a
-    bare scan (counter sums are multiset-pure), else by the JVM scan.  The
-    default monolithic layout ships whole states, so its JVM scan bounds
-    P × |state| (_bound_state_volume)."""
-    from pyspark.sql.types import IntegralType
-    update = getattr(sketch, f"update_delta_{value_kind}", None)
-    if update is None:
-        raise ValueError(f"{sketch.kind} does not support signed updates")
-    sign_type = df.schema[sign_col].dataType
-    if not isinstance(sign_type, IntegralType):
-        raise ValueError(f"sign column {sign_col!r} must be an integer type,"
-                         f" not {sign_type.simpleString()}")
-    fold = _fold_fn(sketch, _signed_step(update, value_kind), out)
-    partials = None
-    if sketch.multiset_pure:
-        partials = _native_scan(df, [col, sign_col], fold, schema,
-                                state_bytes=sketch.state_bytes_max)
-    if partials is None:
-        sel = df.select(F.col(col).alias("v"), F.col(sign_col).alias("s"))
-        if out is None:
-            sel = _bound_state_volume(sel, sketch)
-        partials = sel.mapInArrow(fold, schema)
-    return partials
-
-
-def build_delta_partials(df: DataFrame, sketch, col: str, sign_col: str,
-                         value_kind: str = "str") -> DataFrame:
-    """Changelog fold: one partial per partition over (key, ±1) rows.
-
-    Distributed deletes for counter-summed sketches (counting bloom):
-    inserts carry sign +1, deletes −1; partitions fold their slice with NO
-    local presence check (a partition may see a delete for a key inserted
-    elsewhere — its counters go locally negative and the merge sum restores
-    the global multiset).  Requires the classic counting-filter discipline:
-    globally, deletes ≤ inserts per key.  The sketch must implement
-    ``update_delta_{str,i32}``; the sign column must be an integer type.
-    Rows with a null key or a null sign are skipped.
-    """
-    return _changelog_partials(df, sketch, col, sign_col, value_kind)
 
 
 # ``src`` is the ORIGIN SCAN PARTITION id, persisted with the row: the
@@ -551,29 +510,43 @@ def build_delta_partials(df: DataFrame, sketch, col: str, sign_col: str,
 # fanin levels enforce — ADVICE r4).
 SHARD_SCHEMA = "shard_id int, src long, n_items long, state binary"
 
-# Above this dense-state size the monolithic changelog fold is routed to the
-# sharded path: blob-per-partition states this wide would otherwise force
-# either a scan coalesce (losing parallelism) or GB-scale rows through a
-# near-binary serial merge tree (BENCH/wide_state_fold.json).
-SHARD_ROUTE_THRESHOLD_BYTES = 32 << 20
-
 
 def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
                                value_kind: str = "str") -> DataFrame:
-    """Changelog fold emitting SHARDED partials: the fold of
-    build_delta_partials, started from the sketch's ``shard_fold`` state
-    (task memory and shard bytes track the rows a partition wrote, not the
-    filter width) and emitting ``sketch.shard_count()`` column-range rows
-    (shard_id, src, n_items, state) per partition.
+    """The one changelog fold: (key, ±1) rows → SHARDED partials, emitting
+    ``sketch.shard_count()`` column-range rows (shard_id, src, n_items,
+    state) per partition.
 
-    The JVM scan is NEVER coalesced here (that is the point): past the
-    driver budget the merge is a single groupBy(shard_id) with one reducer
-    per shard, so a 1000-task scan of a 10^10-cell filter shuffles
+    Distributed deletes for counter-summed sketches (counting bloom):
+    inserts carry sign +1, deletes −1; partitions fold their slice with NO
+    local presence check (a partition may see a delete for a key inserted
+    elsewhere — its counters go locally negative and the merge sum restores
+    the global multiset).  Requires the classic counting-filter discipline:
+    globally, deletes ≤ inserts per key.  The sketch must implement
+    ``update_delta_{str,i32}`` and ``shard_fold``; the sign column must be
+    an integer type whose values fit int32.  Rows with a null key or a null
+    sign are skipped.
+
+    ``_fold_fn`` runs ``_signed_step`` over (key, sign) batches, started
+    from the sketch's sparse ``shard_fold`` state (task memory and shard
+    bytes track the rows a partition wrote, not the filter width) — read by
+    the native parquet scan when the plan is a bare scan (counter sums are
+    multiset-pure), else by the JVM scan, which is NEVER coalesced: past
+    the driver budget the merge is a single groupBy(shard_id) with one
+    reducer per shard, so a 1000-task scan of a 10^10-cell filter shuffles
     data-proportional bytes into width-proportional parallel reducers
     (merge_shards_reassembled).  ``n_items`` rides only shard-0 rows so the
     global count sums cleanly."""
+    from pyspark.sql.types import IntegralType
+    update = getattr(sketch, f"update_delta_{value_kind}", None)
+    if update is None:
+        raise ValueError(f"{sketch.kind} does not support signed updates")
     if not hasattr(sketch, "shard_fold"):
         raise ValueError(f"{sketch.kind} does not support sharded states")
+    sign_type = df.schema[sign_col].dataType
+    if not isinstance(sign_type, IntegralType):
+        raise ValueError(f"sign column {sign_col!r} must be an integer type,"
+                         f" not {sign_type.simpleString()}")
     n_shards = sketch.shard_count()  # on the driver: the tasks capture it
 
     def rows(acc, n):
@@ -585,8 +558,17 @@ def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
             "state": pa.array(acc.shard_blobs(n_shards), pa.binary()),
         }
 
-    return _changelog_partials(df, sketch, col, sign_col, value_kind,
-                               (sketch.shard_fold, rows), SHARD_SCHEMA)
+    fold = _fold_fn(sketch, _signed_step(update, value_kind, sign_col),
+                    (sketch.shard_fold, rows))
+    partials = None
+    if sketch.multiset_pure:
+        partials = _native_scan(df, [col, sign_col], fold, SHARD_SCHEMA,
+                                state_bytes=sketch.state_bytes_max)
+    if partials is None:
+        partials = df.select(F.col(col).alias("v"),
+                             F.col(sign_col).alias("s")).mapInArrow(
+                                 fold, SHARD_SCHEMA)
+    return partials
 
 
 def _with_src(partials: DataFrame) -> DataFrame:
@@ -648,25 +630,17 @@ def merge_shards_reassembled(partials: DataFrame, sketch,
 def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
                        value_kind: str = "str", checkpoint=None,
                        sketch_id: str | None = None) -> tuple[bytes, int]:
-    """Changelog fold → merged state blob (see build_delta_partials).
-
-    Routing on the declared ``state_bytes_max``: the monolithic
-    blob-per-partition fold while the dense state stays under
-    SHARD_ROUTE_THRESHOLD_BYTES, the sharded column-range fold beyond it
-    (build_delta_shard_partials).  Both routes run the one fold core over
-    the native parquet scan when the plan is a bare scan, and both give
-    the same bytes (integer counter addition commutes).  The sharded
-    merge takes merge.py's one route rule too (merge_shards_reassembled):
-    a driver fold of the sparse shard rows while P × state_bytes_max fits
+    """Changelog fold → merged state blob: the one changelog fold
+    (build_delta_shard_partials, see there for the ±1 semantics) →
+    merge_shards_reassembled, which takes merge.py's one route rule: a
+    driver fold of the sparse shard rows while P × state_bytes_max fits
     DRIVER_COLLECT_MAX_BYTES, one parallel per-shard merge wave beyond it.
-    Measured at sf1 (2^25-counter / 134 MB state): 143.6 s monolithic →
-    sharded keeps full scan parallelism.  With ``checkpoint`` +
-    ``sketch_id`` the partials persist first (sharded ones at level
-    SHARD_LEVEL) and ``SketchCheckpoint.resume`` replays the same route."""
-    build = (build_delta_shard_partials if hasattr(sketch, "shard_fold")
-             and sketch.state_bytes_max > SHARD_ROUTE_THRESHOLD_BYTES
-             else build_delta_partials)
-    partials = build(df, sketch, col, sign_col, value_kind)
+    Integer counter addition commutes, so every route gives the bytes of a
+    single-process fold.  With ``checkpoint`` + ``sketch_id`` the partials
+    persist first (at level SHARD_LEVEL) and ``SketchCheckpoint.resume``
+    replays the same route."""
+    partials = build_delta_shard_partials(df, sketch, col, sign_col,
+                                          value_kind)
     return _merge_checkpointed(df, partials, sketch, checkpoint, sketch_id)
 
 

@@ -186,7 +186,7 @@ class CountingBloomSketch:
     def merge(self, a, b) -> np.ndarray:
         return a + b
 
-    # -- sharded serde (scale path for WIDE counter arrays) ----------------
+    # -- sharded serde (the changelog fold's layout at every width) --------
     # A full-capacity counting bloom at 10^7+ keys serializes to hundreds of
     # MB; shipping that as ONE blob per partition forces the merge to either
     # coalesce the scan (losing parallelism) or funnel GB-scale rows through

@@ -12,9 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from bloom_filter_spark.operators import (
-    build_delta_partials, build_delta_shard_partials, build_delta_sketch,
+    build_delta_shard_partials, build_delta_sketch,
     build_grouped, build_sketch, build_sketch_preagg, membership_scan)
-from bloom_filter_spark.operators import build as build_mod
 from bloom_filter_spark.operators.build import (
     _attr_through_projects, _native_grouped_partials, _native_parquet_partials)
 from bloom_filter_spark.sketches import (
@@ -145,11 +144,13 @@ def _read_by(df):
     return "native" if "Range" in plan else "jvm"
 
 
-def test_native_changelog_bit_identical(changelog, monkeypatch):
-    """Both changelog routes fold a bare parquet scan natively and give
-    the JVM source's (blob, n_items): monolithic, and sharded in the
-    sparse (wide filter) and dense (narrow filter) regimes.  A sign column
-    that is not an integer type is refused."""
+def test_native_changelog_bit_identical(changelog, monkeypatch,
+                                        reference_fold):
+    """The changelog fold reads a bare parquet scan natively and gives the
+    JVM source's (blob, n_items), both equal to the single-process
+    reference fold: with the filter's default single shard, and with 3
+    shards in the sparse (wide filter) and dense (narrow filter) regimes.
+    A sign column that is not an integer type is refused."""
     # a row-keeping Filter makes the native scan decline
     jvm_src = changelog.where(F.coalesce("sign", F.lit(0)) >= -1)
     assert jvm_src.count() == changelog.count()
@@ -160,26 +161,24 @@ def test_native_changelog_bit_identical(changelog, monkeypatch):
     def build(src, cap):
         return build_delta_sketch(src, cb(cap), "doc_id", "sign", "str")
 
-    assert _read_by(build_delta_partials(
-        changelog, cb(4000), "doc_id", "sign")) == "native"
-    assert _read_by(build_delta_partials(
-        jvm_src, cb(4000), "doc_id", "sign")) == "jvm"
-    mono = build(changelog, 4000)
-    assert mono == build(jvm_src, 4000)
-    assert mono[1] == changelog.dropna().count()
+    def check_routes(cap):
+        want = reference_fold(changelog, cb(cap), "doc_id", "sign")
+        for src, route in ((changelog, "native"), (jvm_src, "jvm")):
+            assert _read_by(build_delta_shard_partials(
+                src, cb(cap), "doc_id", "sign")) == route
+            assert build(src, cap) == want, (cap, route)
+        return want
+
+    assert cb(4000).shard_count() == 1
+    assert check_routes(4000)[1] == changelog.dropna().count()
 
     # sparse: per-split entries stay far below m/3; dense: they cross it
     for cap in (200_000, 300):
-        want = build(changelog, cap)
         with monkeypatch.context() as mp:
-            mp.setattr(build_mod, "SHARD_ROUTE_THRESHOLD_BYTES", 0)
             mp.setattr(counting_bloom, "SHARD_TARGET_BYTES",
                        -(-cb(cap).params.m * 4 // 3))
             assert cb(cap).shard_count() == 3
-            for src, route in ((changelog, "native"), (jvm_src, "jvm")):
-                assert _read_by(build_delta_shard_partials(
-                    src, cb(cap), "doc_id", "sign")) == route
-                assert build(src, cap) == want, (cap, route)
+            check_routes(cap)
 
     text_sign = changelog.withColumn("sign", F.col("sign").cast("string"))
     with pytest.raises(ValueError, match="sign"):

@@ -73,12 +73,15 @@ def test_merge_tree_runs_as_one_job_and_caches_nothing(spark, tokens_df):
     persist/count jobs: 32 partials at fanin 4 (two pre-merge levels and
     the final fold) collect in ONE Spark job and leave nothing cached.
     AQE submits every shuffle stage as its own job, so the jobs are
-    counted with AQE off, where one action is one job."""
+    counted with AQE off, where one action is one job.  The status
+    tracker is fed by the asynchronous listener bus, so the bus is drained
+    before the jobs are read; the context cleaner may unpersist earlier
+    tests' RDDs at any time, so the check is that no RDD id is added."""
     sketch = BloomSketch(BloomParams(n=60_000, p=0.01))
     partials = build_partials(tokens_df, sketch, "tokens", "i32_array",
                               repartition=32)
     sc = spark.sparkContext
-    cached = sc._jsc.sc().getPersistentRDDs().size()
+    cached = set(sc._jsc.getPersistentRDDs().keys())
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -88,8 +91,9 @@ def test_merge_tree_runs_as_one_job_and_caches_nothing(spark, tokens_df):
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert row.partition_id == 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup("merge_tree_one_job")) == 1
-    assert sc._jsc.sc().getPersistentRDDs().size() == cached
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= cached
 
 
 def test_merge_auto_routes_by_state_volume(spark, tokens_df, monkeypatch):
@@ -477,31 +481,6 @@ def test_counting_bloom_changelog_fold(spark, tokens_df):
     assert n == len(kept) + 2 * len(dele)
 
 
-def test_changelog_checkpoint_resume(spark, tokens_df, tmp_path):
-    """Changelog (±1) partials persist through the checkpoint table and
-    resume to the SAME state bit-for-bit — resumable distributed deletes."""
-    from bloom_filter_spark.operators import (SketchCheckpoint,
-                                              build_delta_partials,
-                                              build_delta_sketch)
-    from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
-
-    cb = CountingBloomSketch(BloomParams(n=10_000, p=0.01))
-    docs = tokens_df.select("doc_id")
-    parity = (F.ascii(F.substring("doc_id", -1, 1)) % 2).alias("par")
-    with_par = docs.select("doc_id", parity)
-    changelog = (with_par.select("doc_id", F.lit(1).alias("sign"))
-                 .unionAll(with_par.where(F.col("par") == 1)
-                           .select("doc_id", F.lit(-1).alias("sign"))))
-    direct_blob, _ = build_delta_sketch(changelog, cb, "doc_id", "sign", "str")
-
-    ck = SketchCheckpoint(str(tmp_path / "ckpt"))
-    partials = build_delta_partials(changelog, cb, "doc_id", "sign", "str")
-    # write_partials persists eagerly; the returned read-back is unused here
-    ck.write_partials("cbloom_log", cb, partials)
-    blob, _n = ck.resume(spark, "cbloom_log", cb)
-    assert blob == direct_blob  # resume-from-checkpoint ≡ direct fold
-
-
 def test_bucketed_tables_join_without_exchange(spark, tokens_df):
     """Co-located join via bucketing: two tables bucketed by the join key
     into the same bucket count sort-merge-join with NO Exchange on either
@@ -561,11 +540,9 @@ def test_wide_state_fold_auto_coalesces(spark, tokens_df):
 
 
 def _shard_route(mp, sketch, n_shards):
-    """Route build_delta_sketch to the sharded fold, with ``n_shards``
-    column-range shards for ``sketch``."""
-    from bloom_filter_spark.operators import build as build_mod
+    """Give ``sketch`` (and every sketch with its params) ``n_shards``
+    column-range shards in the changelog fold."""
     from bloom_filter_spark.sketches import counting_bloom
-    mp.setattr(build_mod, "SHARD_ROUTE_THRESHOLD_BYTES", 0)
     mp.setattr(counting_bloom, "SHARD_TARGET_BYTES",
                -(-sketch.params.m * 4 // n_shards))
     assert sketch.shard_count() == n_shards
@@ -583,13 +560,15 @@ def _apart_changelog(tokens_df):
             ).repartition(8, "sign")
 
 
-def test_cbloom_sharded_fold_bit_parity(spark, tokens_df, monkeypatch):
-    """Sharded changelog fold ≡ monolithic fold bit-for-bit: deletes land on
-    different partitions than their inserts (locally negative shards), shard
-    rows mix sparse and dense encodings, and the reassembled blob must equal
-    the monolithic path's exactly (counter addition commutes) — on both
-    sharded merge routes: the driver fold (default budget) and the
-    per-shard executor levels (DRIVER_COLLECT_MAX_BYTES = 0)."""
+def test_cbloom_sharded_fold_bit_parity(spark, tokens_df, monkeypatch,
+                                       reference_fold):
+    """Changelog fold ≡ the single-process reference fold bit-for-bit:
+    deletes land on different partitions than their inserts (locally
+    negative shards), shard rows mix sparse and dense encodings, and the
+    reassembled blob must equal the reference exactly (counter addition
+    commutes) — with 1 and 5 shards, on both merge routes: the driver fold
+    (default budget) and the per-shard executor levels
+    (DRIVER_COLLECT_MAX_BYTES = 0)."""
     from bloom_filter_spark.operators import build_delta_sketch
     from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
@@ -599,37 +578,15 @@ def test_cbloom_sharded_fold_bit_parity(spark, tokens_df, monkeypatch):
     def fresh():
         return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
 
-    mono_blob, mono_n = build_delta_sketch(changelog, fresh(), "doc_id",
-                                           "sign", "str")
+    want = reference_fold(changelog, fresh(), "doc_id", "sign")
     for n_shards in (1, 5):
         for budget in (merge_mod.DRIVER_COLLECT_MAX_BYTES, 0):
             with monkeypatch.context() as mp:
                 _shard_route(mp, fresh(), n_shards)
                 mp.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", budget)
-                blob, n = build_delta_sketch(changelog, fresh(), "doc_id",
-                                             "sign", "str")
-            assert blob == mono_blob and n == mono_n, (n_shards, budget)
-
-
-def test_cbloom_delta_route_auto_shards_wide_state(spark, tokens_df, monkeypatch):
-    """build_delta_sketch auto-routes: wide states (dense bytes above the
-    shard threshold) take the sharded path, narrow ones the monolithic fold
-    — and both produce the same blob."""
-    from bloom_filter_spark.operators import build as build_mod
-    from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
-
-    changelog = tokens_df.select("doc_id", F.lit(1).alias("sign")).limit(500)
-
-    def fresh():
-        return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
-
-    mono, _ = build_mod.build_delta_sketch(changelog, fresh(), "doc_id",
-                                           "sign", "str")
-    # force the auto route down the sharded path for this narrow filter
-    monkeypatch.setattr(build_mod, "SHARD_ROUTE_THRESHOLD_BYTES", 1024)
-    auto, _ = build_mod.build_delta_sketch(changelog, fresh(), "doc_id",
-                                           "sign", "str")
-    assert auto == mono
+                got = build_delta_sketch(changelog, fresh(), "doc_id",
+                                         "sign", "str")
+            assert got == want, (n_shards, budget)
 
 
 def test_cbloom_delta_fold_drops_null_signs(spark, tokens_df):
@@ -653,6 +610,28 @@ def test_cbloom_delta_fold_drops_null_signs(spark, tokens_df):
     blob_noisy, n_noisy = build_delta_sketch(noisy, fresh(), "doc_id",
                                              "sign", "str")
     assert blob_noisy == blob_clean and n_noisy == n_clean
+
+
+def test_cbloom_delta_fold_refuses_out_of_int32_signs(spark, reference_fold):
+    """A bigint sign outside int32 must raise, not wrap: cast down,
+    2**32 - 1 would fold as −1 (an insert turned into a delete) and
+    2**32 + 1 as +1.  In-range bigint signs fold like int signs."""
+    from bloom_filter_spark.operators import build_delta_sketch
+    from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
+
+    def fresh():
+        return CountingBloomSketch(BloomParams(n=1000, p=0.01))
+
+    rows = [(f"doc_{i}", 1) for i in range(200)] + [("doc_7", -1)]
+    ok = spark.createDataFrame(rows, "doc_id string, sign long")
+    assert build_delta_sketch(ok, fresh(), "doc_id", "sign",
+                              "str") == reference_fold(ok, fresh(), "doc_id",
+                                                       "sign")
+    for bad in (2**32 - 1, 2**32 + 1, -2**31 - 1):
+        df = spark.createDataFrame(rows + [("doc_x", bad)],
+                                   "doc_id string, sign long")
+        with pytest.raises(Exception, match="'sign'.*outside int32"):
+            build_delta_sketch(df, fresh(), "doc_id", "sign", "str")
 
 
 def test_grouped_auto_routes_high_cardinality_to_salted(spark, tokens_df):
@@ -762,10 +741,11 @@ def test_grouped_phase2_honours_byte_fanin(spark, tokens_df, monkeypatch):
     assert got == want and len(want) > 0
 
 
-def test_cbloom_sharded_multilevel_merge_parity(spark, tokens_df, monkeypatch):
+def test_cbloom_sharded_multilevel_merge_parity(spark, tokens_df, monkeypatch,
+                                                reference_fold):
     """When partials-per-shard exceed the byte-aware fanin, pre-merge
     levels must fold fanin-sized slices first (bounding per-task input) and
-    still reassemble bit-identically to the monolithic fold."""
+    still reassemble bit-identically to the reference fold."""
     from bloom_filter_spark.operators import build_delta_sketch
     from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
@@ -776,19 +756,19 @@ def test_cbloom_sharded_multilevel_merge_parity(spark, tokens_df, monkeypatch):
     def fresh():
         return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
 
-    mono, n_mono = build_delta_sketch(changelog, fresh(), "doc_id", "sign",
-                                      "str")
+    want = reference_fold(changelog, fresh(), "doc_id", "sign")
     monkeypatch.setattr(merge_mod, "AUTO_TREE_THRESHOLD_BYTES", 1)  # fanin=2
     monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", 0)  # levels
     _shard_route(monkeypatch, fresh(), 3)
-    blob, n = build_delta_sketch(changelog, fresh(), "doc_id", "sign", "str")
-    assert blob == mono and n == n_mono
+    assert build_delta_sketch(changelog, fresh(), "doc_id", "sign",
+                              "str") == want
 
 
 def test_cbloom_sharded_sparse_and_dense_switch_parity(spark, tokens_df,
-                                                       monkeypatch):
-    """The sparse-accumulation fold must be bit-identical to the monolithic
-    path in BOTH regimes: a wide filter where partitions stay sparse end to
+                                                       monkeypatch,
+                                                       reference_fold):
+    """The sparse-accumulation fold must be bit-identical to the reference
+    fold in BOTH regimes: a wide filter where partitions stay sparse end to
     end, and a narrow filter where every partition crosses the m/3
     break-even and switches to the dense array mid-fold."""
     from bloom_filter_spark.operators import build_delta_sketch
@@ -798,56 +778,85 @@ def test_cbloom_sharded_sparse_and_dense_switch_parity(spark, tokens_df,
     # wide filter: per-partition entries ≪ m/3 → pure sparse emission
     # narrow filter: entries ≫ m/3 → switches to dense mid-fold
     for cap in (200_000, 300):
-        mono, n_mono = build_delta_sketch(
+        want = reference_fold(
             changelog, CountingBloomSketch(BloomParams(n=cap, p=0.01)),
-            "doc_id", "sign", "str")
+            "doc_id", "sign")
         with monkeypatch.context() as mp:
             _shard_route(mp, CountingBloomSketch(BloomParams(n=cap, p=0.01)),
                          5)
-            blob, n = build_delta_sketch(
+            got = build_delta_sketch(
                 changelog, CountingBloomSketch(BloomParams(n=cap, p=0.01)),
                 "doc_id", "sign", "str")
-        assert blob == mono and n == n_mono, cap
+        assert got == want, cap
 
 
-def test_sharded_changelog_checkpoint_resume(spark, tokens_df, tmp_path,
-                                             monkeypatch):
-    """Sharded (wide-state) changelog partials persist through the lineage
-    table under the SHARD_LEVEL marker and resume to the SAME blob
-    bit-for-bit — wide-state builds are as resumable as monolithic ones,
-    and resume() auto-detects the layout — whether the build folded on the
-    driver (default budget) or on the executor levels (budget 0)."""
+def _checkpoint_resume_parity(spark, changelog, tmp_path, monkeypatch,
+                              reference_fold, n_shards):
+    """Build ``changelog`` with a checkpoint into a ``n_shards``-shard
+    filter, on the driver fold (default budget) and on the executor levels
+    (budget 0): the build, ``resume()`` from the persisted shard partials
+    alone and the final table must all equal the reference fold's blob."""
     from bloom_filter_spark.operators import (SketchCheckpoint,
                                               build_delta_sketch)
     from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
 
-    changelog = _apart_changelog(tokens_df)
-
     def fresh():
         return CountingBloomSketch(BloomParams(n=10_000, p=0.01))
 
-    direct, n_direct = build_delta_sketch(changelog, fresh(), "doc_id",
-                                          "sign", "str")
+    want = reference_fold(changelog, fresh(), "doc_id", "sign")
     for budget in (merge_mod.DRIVER_COLLECT_MAX_BYTES, 0):
         with monkeypatch.context() as mp:
             mp.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", budget)
-            ck = SketchCheckpoint(str(tmp_path / f"ckpt{budget}"))
-            _shard_route(mp, fresh(), 5)
-            built, n_built = build_delta_sketch(
+            ck = SketchCheckpoint(str(tmp_path / f"ckpt{n_shards}_{budget}"))
+            if n_shards != 1:
+                _shard_route(mp, fresh(), n_shards)
+            assert fresh().shard_count() == n_shards
+            assert build_delta_sketch(
                 changelog, fresh(), "doc_id", "sign", "str",
-                checkpoint=ck, sketch_id="cb_shard")
-            assert built == direct and n_built == n_direct
+                checkpoint=ck, sketch_id="cb_shard") == want
             # resume from the persisted shard partials alone
-            blob, n = ck.resume(spark, "cb_shard", fresh())
-            assert blob == direct and n == n_direct, budget
+            assert ck.resume(spark, "cb_shard", fresh()) == want, budget
         # and the final table holds it too
-        fblob, fn = ck.read_final(spark, "cb_shard")
-        assert fblob == direct and fn == n_direct
+        assert ck.read_final(spark, "cb_shard") == want
+    return want, fresh
+
+
+def test_changelog_checkpoint_resume(spark, tokens_df, tmp_path, monkeypatch,
+                                     reference_fold):
+    """Changelog (±1) partials persist through the checkpoint table and
+    resume to the reference fold's blob bit-for-bit — resumable
+    distributed deletes — for the filter's default single shard, with
+    resume() auto-detecting the layout: the shard partials the build
+    writes, and blob-per-partition partials (the layout of the retired
+    monolithic fold), which resume through merge_partials_auto."""
+    from bloom_filter_spark.operators import PARTIAL_SCHEMA, SketchCheckpoint
+
+    changelog = _apart_changelog(tokens_df)
+    want, fresh = _checkpoint_resume_parity(spark, changelog, tmp_path,
+                                            monkeypatch, reference_fold, 1)
+    halves = [reference_fold(changelog.where(F.col("sign") == s), fresh(),
+                             "doc_id", "sign") for s in (1, -1)]
+    legacy = spark.createDataFrame(
+        [(i, n, bytearray(b)) for i, (b, n) in enumerate(halves)],
+        PARTIAL_SCHEMA)
+    ck = SketchCheckpoint(str(tmp_path / "ckpt_monolithic"))
+    ck.write_partials("cb_mono", fresh(), legacy)
+    assert ck.resume(spark, "cb_mono", fresh()) == want
+
+
+def test_sharded_changelog_checkpoint_resume(spark, tokens_df, tmp_path,
+                                             monkeypatch, reference_fold):
+    """Sharded (5 column-range shards) changelog partials persist through
+    the lineage table under the SHARD_LEVEL marker and resume to the
+    reference fold's blob bit-for-bit, whether the build folded on the
+    driver or on the executor levels."""
+    _checkpoint_resume_parity(spark, _apart_changelog(tokens_df), tmp_path,
+                              monkeypatch, reference_fold, 5)
 
 
 def test_sharded_merge_routes_by_the_driver_budget(spark, tokens_df,
-                                                   monkeypatch):
+                                                   monkeypatch, reference_fold):
     """The sharded tail reads the same rule as merge_partials_auto:
     P × state_bytes_max ≤ DRIVER_COLLECT_MAX_BYTES folds on the driver and
     never plans merge_shard_partials; one byte less takes the levels."""
@@ -857,7 +866,7 @@ def test_sharded_merge_routes_by_the_driver_budget(spark, tokens_df,
 
     changelog = _apart_changelog(tokens_df)
     sk = CountingBloomSketch(BloomParams(n=10_000, p=0.01))
-    mono = build_mod.build_delta_sketch(changelog, sk, "doc_id", "sign", "str")
+    want = reference_fold(changelog, sk, "doc_id", "sign")
     _shard_route(monkeypatch, sk, 5)
     partials = build_mod.build_delta_shard_partials(changelog, sk, "doc_id",
                                                     "sign", "str")
@@ -869,7 +878,7 @@ def test_sharded_merge_routes_by_the_driver_budget(spark, tokens_df,
     monkeypatch.setattr(build_mod, "merge_shard_partials", no_levels)
     monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES",
                         est * sk.state_bytes_max)
-    assert build_mod.merge_shards_reassembled(partials, sk) == mono
+    assert build_mod.merge_shards_reassembled(partials, sk) == want
     monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES",
                         est * sk.state_bytes_max - 1)
     with pytest.raises(AssertionError, match="executor shard merge"):

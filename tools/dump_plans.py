@@ -145,11 +145,12 @@ def main() -> None:
     from bloom_filter_spark.sketches import CountingBloomSketch
     cb = CountingBloomSketch(BloomParams(n=600_005, p=0.01))
     chg = toks.select("doc_id", F.lit(1).alias("sign"))
-    add("Sharded counting-bloom changelog fold (wide-state path)",
+    add("Counting-bloom changelog fold (the one changelog fold, sharded)",
         merge_shard_partials(
             build_delta_shard_partials(chg, cb, "doc_id", "sign", "str"), cb),
         "Scan → MapInArrow emits column-range (shard_id, state) rows at "
-        "FULL scan parallelism (no coalesce).  This is the route past the "
+        "FULL scan parallelism (no coalesce); every changelog build, at any "
+        "filter width, takes this fold.  Shown is the merge route past the "
         "driver budget (P × state_bytes_max > DRIVER_COLLECT_MAX_BYTES): "
         "the only Exchange carries shard rows into groupBy(shard_id) — "
         "state width becomes merge parallelism, and per-reducer memory is "
