@@ -59,3 +59,10 @@ class Reader:
         arr = np.frombuffer(self.buf, dtype=dt, count=count, offset=self.pos).copy()
         self.pos += nbytes
         return arr
+
+    def end(self) -> None:
+        """Refuse bytes past the layout: a blob must end where its last
+        field does (two blobs joined end to end would read as the first)."""
+        if self.pos != len(self.buf):
+            raise ValueError(f"blob has {len(self.buf) - self.pos} bytes past "
+                             f"its {self.pos}-byte layout")

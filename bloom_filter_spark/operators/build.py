@@ -2,7 +2,8 @@
 
 Design (SURVEY.md §3.1): the build is expressed so that the *data* never
 shuffles — ``mapInArrow`` folds every input partition into one sketch state
-locally, emitting a single (partition_id, n_items, state) row per partition.
+locally, emitting a single (src, n_items, state) row per partition — the
+partial row layout of merge.py, with ``src`` the origin scan partition.
 Only those P small state rows move through the merge tree
 (operators/merge.py).  At 100 TB the scan stays embarrassingly parallel and
 the shuffle volume is P × |state|, independent of input size.
@@ -16,12 +17,13 @@ the list column's flat values buffer zero-copy — one numpy view per batch.
 Every partial build — JVM-fed, native parquet scan, pre-aggregated,
 changelog — runs through ONE fold core (``_fold_fn``): fold an Arrow batch
 iterator into ``sketch.empty()`` with a per-batch step, emit the single
-(partition_id, n_items, state) row.  The one changelog fold is the same
+(src, n_items, state) row.  The one changelog fold is the same
 loop with one start/emit hook: it starts from the sketch's own sparse
 accumulator, folds a signed step (nulls dropped in the task), emits one row
 per column-range shard and, like every multiset-pure build, reads a bare
 parquet scan natively.  Every grouped build runs through one phase 1
-(``_grouped_phase1_fn``); every merge is merge.py's one Arrow level.
+(``_grouped_phase1_fn``); every merge is merge.py's one keyed router or
+its one Arrow level.
 What a sketch IS — whether its state is a pure function of the input multiset,
 how it takes weights, how long its params header is — is declared on the
 sketch class (sketches/base.py); the operators route on those declarations,
@@ -48,7 +50,6 @@ with no salting.
 
 from __future__ import annotations
 
-import itertools
 import os
 import zlib
 
@@ -58,7 +59,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..core.hashing import StrBuf, arrow_strbuf
 from ..sketches.base import sketch_for_kind
-from .merge import (PARTIAL_SCHEMA, _byte_fanin, _fits_driver, _merge_levels,
+from .merge import (PARTIAL_SCHEMA, _byte_fanin, _merge_keyed, _merge_levels,
                     merge_partials_auto)
 
 
@@ -77,6 +78,23 @@ def _keys(values, value_kind: str):
     if value_kind not in _DTYPES:
         raise ValueError(f"unknown value_kind {value_kind}")
     return np.asarray(values, _DTYPES[value_kind])
+
+
+def _check_key_type(t, value_kind: str) -> None:
+    """ValueError for a key column of Arrow type ``t`` (a list's element
+    type) that the ``value_kind`` cast would silently change: text read as
+    numbers ("12" → 12), integers wider than the kind (2**32 + 5 → 5 as
+    i32) or integers hashed as strings.  Float columns pass."""
+    import pyarrow as pa
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        t = t.value_type
+    dtype = _DTYPES.get(_elem_kind(value_kind))
+    text = pa.types.is_string(t) or pa.types.is_large_string(t)
+    if (pa.types.is_integer(t) and (dtype is None or t.bit_width > 8 *
+                                    np.dtype(dtype).itemsize)
+            or dtype is not None and text):
+        raise ValueError(f"a {t} key column cannot be probed as "
+                         f"{value_kind} keys")
 
 
 def _update(sketch, state, values, value_kind: str) -> int:
@@ -116,7 +134,8 @@ def _elem_kind(value_kind: str) -> str:
     return "i32" if value_kind == "i32_array" else value_kind
 
 
-def _partition_id() -> int:
+def _src() -> int:
+    """The ``src`` of every partial row a task emits: its scan partition."""
     ctx = TaskContext.get()
     return ctx.partitionId() if ctx is not None else 0
 
@@ -128,9 +147,9 @@ def _fold_fn(sketch, step, out=None):
     ingested.  ``out`` is the one hook on the state the fold starts from
     and the rows it emits, a pair ``(start() -> state, rows(state, n) ->
     {column: pa.Array})``; by default ``sketch.empty()`` and the single
-    (partition_id, n_items, state) row."""
+    (src, n_items, state) row."""
     start, rows = out or (sketch.empty, lambda state, n: {
-        "partition_id": [_partition_id()], "n_items": [n],
+        "src": [_src()], "n_items": [n],
         "state": [sketch.serialize(state)]})
 
     def partial_fn(batches):
@@ -389,7 +408,7 @@ def _native_parquet_partials(df: DataFrame, sketch, col: str,
 
 def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
                    repartition: int | None = None) -> DataFrame:
-    """→ DataFrame(partition_id long, n_items long, state binary), one row per
+    """→ DataFrame(src long, n_items long, state binary), one row per
     partition.  ``value_kind``: i32_array | i32 | i64 | f64 | str."""
     sel = df.select(F.col(col).alias("v"))  # explicit column pruning
     if repartition:
@@ -455,8 +474,9 @@ def _merge_checkpointed(df: DataFrame, partials: DataFrame, sketch,
                         checkpoint, sketch_id: str | None) -> tuple[bytes, int]:
     """Partials → (final blob, n_items): one-row-per-partition partials
     through merge_partials_auto, sharded ones (a ``shard_id`` column)
-    through merge_shards_reassembled — persisting the partial and final
-    states when ``checkpoint`` and ``sketch_id`` are given."""
+    through merge_shards_reassembled — persisting the partial rows (through
+    the one ``write_partials``) and the final state when ``checkpoint`` and
+    ``sketch_id`` are given."""
     persist = checkpoint is not None and sketch_id is not None
     sharded = "shard_id" in partials.columns
     # capture BEFORE the checkpoint round-trip: a read-back packs many
@@ -464,10 +484,8 @@ def _merge_checkpointed(df: DataFrame, partials: DataFrame, sketch,
     # under-count, mis-route and mis-plan the merge (ADVICE r4)
     est_rows = partials.rdd.getNumPartitions()
     if persist:
-        write = (checkpoint.write_shard_partials if sharded
-                 else checkpoint.write_partials)
-        partials = write(sketch_id, sketch, partials,
-                         input_desc=_describe_input(df))
+        partials = checkpoint.write_partials(sketch_id, sketch, partials,
+                                             input_desc=_describe_input(df))
     merge = merge_shards_reassembled if sharded else merge_partials_auto
     blob, n_items = merge(partials, sketch, est_rows)
     if persist:
@@ -502,12 +520,9 @@ def _signed_step(update, value_kind: str, sign_col: str):
     return step
 
 
-# ``src`` is the ORIGIN SCAN PARTITION id, persisted with the row: the
-# pre-merge fanin levels group on floor(src / fanin), and deriving it from
-# spark_partition_id() at merge time would break after a checkpoint
-# write-back (re-read parquet partitions pack many same-shard rows per
-# partition, so one (shard, grp) group could exceed the byte budget the
-# fanin levels enforce — ADVICE r4).
+# the partial row keyed by shard: ``src`` (the origin scan partition)
+# persists with the row, so the fanin levels group on floor(src / fanin)
+# after a checkpoint read-back too
 SHARD_SCHEMA = "shard_id int, src long, n_items long, state binary"
 
 
@@ -553,7 +568,7 @@ def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
         import pyarrow as pa
         return {
             "shard_id": pa.array(range(n_shards), pa.int32()),
-            "src": pa.array([_partition_id()] * n_shards, pa.int64()),
+            "src": pa.array([_src()] * n_shards, pa.int64()),
             "n_items": pa.array([n] + [0] * (n_shards - 1), pa.int64()),
             "state": pa.array(acc.shard_blobs(n_shards), pa.binary()),
         }
@@ -571,60 +586,23 @@ def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
     return partials
 
 
-def _with_src(partials: DataFrame) -> DataFrame:
-    """Shard partials with their ``src`` column.  Legacy input (pre-src
-    layout): one mapInArrow task per scan partition means the physical
-    partition id IS the origin — only sound because nothing re-partitioned
-    between fold and merge."""
-    if "src" in partials.columns:
-        return partials
-    return partials.withColumn("src", F.spark_partition_id())
-
-
-def merge_shard_partials(partials: DataFrame, sketch,
-                         est_partials: int | None = None) -> DataFrame:
-    """(shard_id, src, n_items, state)* → ONE dense row per shard: the Arrow
-    merge levels keyed by shard_id, ordered by src, folding with the
-    counter-sum ``merge_shard_blobs`` — merge parallelism = n_shards, each
-    reducer holds one shard, never the whole filter.  Per-task input is
-    byte-bounded: when ``est_partials`` (default: the partition count)
-    exceeds the fanin (merge budget / dense shard bytes), pre-merge levels
-    keyed by (shard_id, floor(src / fanin)) fold fanin-sized slices first
-    (1000 dense 8 MB partials would otherwise be 8 GB in one task)."""
-    shard_sz = sketch.state_bytes_max // sketch.shard_count()
-    return _merge_levels(_with_src(partials), sketch, _byte_fanin(shard_sz),
-                         est_partials, keys=("shard_id",), order="src",
-                         fold=type(sketch).merge_shard_blobs).drop("src")
-
-
 def merge_shards_reassembled(partials: DataFrame, sketch,
                              est_partials: int | None = None
                              ) -> tuple[bytes, int]:
-    """Sharded partials → (monolithic state blob, n_items): the one sharded
-    tail of the build (_merge_checkpointed) and of SketchCheckpoint.resume,
-    routed by merge.py's one route rule on ``est_partials`` (default: the
-    partition count) × ``state_bytes_max``.  Within the driver budget the
-    sparse shard rows are collected and each shard folds on the driver
-    (grouped by shard_id, in src order); over it, the per-shard executor
-    merge levels (merge_shard_partials) emit one dense row per shard.  Both
-    fold with ``merge_shard_blobs`` and reassemble with
-    ``reassemble_shards``, which checks completeness from the blob headers,
-    so both give the same bytes."""
-    if est_partials is None:
-        est_partials = partials.rdd.getNumPartitions()
-    cls = type(sketch)
-    if _fits_driver(est_partials, sketch):
-        rows = sorted(_with_src(partials).select(
-            "shard_id", "src", "n_items", "state").collect(),
-            key=lambda r: (r.shard_id, r.src))
-        shards = [cls.merge_shard_blobs([r.state for r in grp]) for _, grp
-                  in itertools.groupby(rows, key=lambda r: r.shard_id)]
-    else:
-        rows = merge_shard_partials(partials, sketch, est_partials).collect()
-        shards = [r.state for r in rows]
+    """Sharded partials → (monolithic state blob, n_items), the sharded
+    tail of the build and of SketchCheckpoint.resume: merge.py's keyed
+    router over ``shard_id`` folds each shard with ``merge_shard_blobs``
+    (on the driver within its budget, else one reducer per shard with
+    pre-levels at one dense shard's byte fanin), then ``reassemble_shards``
+    checks completeness from the blob headers.  Both routes give the same
+    bytes."""
+    rows = _merge_keyed(partials, sketch, est_partials, keys=("shard_id",),
+                        fold=type(sketch).merge_shard_blobs,
+                        row_bytes=sketch.state_bytes_max // sketch.shard_count())
     if not rows:
         return sketch.serialize(sketch.empty()), 0
-    return cls.reassemble_shards(shards), int(sum(r.n_items for r in rows))
+    return (type(sketch).reassemble_shards([s for s, _ in rows]),
+            sum(n for _, n in rows))
 
 
 def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
@@ -636,9 +614,9 @@ def build_delta_sketch(df: DataFrame, sketch, col: str, sign_col: str,
     driver fold of the sparse shard rows while P × state_bytes_max fits
     DRIVER_COLLECT_MAX_BYTES, one parallel per-shard merge wave beyond it.
     Integer counter addition commutes, so every route gives the bytes of a
-    single-process fold.  With ``checkpoint`` + ``sketch_id`` the partials
-    persist first (at level SHARD_LEVEL) and ``SketchCheckpoint.resume``
-    replays the same route."""
+    single-process fold.  With ``checkpoint`` + ``sketch_id`` the shard
+    partials persist first and ``SketchCheckpoint.resume`` replays the same
+    route."""
     partials = build_delta_shard_partials(df, sketch, col, sign_col,
                                           value_kind)
     return _merge_checkpointed(df, partials, sketch, checkpoint, sketch_id)
@@ -693,7 +671,7 @@ def _grouped_phase1_fn(sketch, step):
                 st[1] += step(st[0], rest.filter(pa.array(codes == gi)))
         yield pa.RecordBatch.from_pydict({
             "group": pa.array(list(states.keys()), pa.string()),
-            "src": pa.array([_partition_id()] * len(states), pa.int64()),
+            "src": pa.array([_src()] * len(states), pa.int64()),
             "n_items": pa.array([v[1] for v in states.values()], pa.int64()),
             "state": pa.array([sketch.serialize(v[0]) for v in states.values()],
                               pa.binary()),
@@ -705,11 +683,12 @@ def _grouped_phase1_fn(sketch, step):
 def _merge_grouped(partials: DataFrame, sketch,
                    est_rows: int | None = None) -> DataFrame:
     """Grouped phase 2: the Arrow merge levels keyed by group, ordered by
-    src, fold each group's partials into one (group, n_items, state) row.
+    src, fold each group's partials into one (group, n_items, state) row —
+    kept a lazy DataFrame, so it calls the level planner, not the router.
     A route behind a shuffle passes ``est_rows`` (partials per group):
     under AQE, getNumPartitions would run that shuffle once more."""
     return _merge_levels(partials, sketch, _byte_fanin(sketch.state_bytes_max),
-                         est_rows, keys=("group",), order="src").drop("src")
+                         est_rows, keys=("group",)).drop("src")
 
 
 # A map-side grouped build holds ALL G group states in EVERY task; above

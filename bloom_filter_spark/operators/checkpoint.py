@@ -8,15 +8,18 @@ the identical schema and append semantics — swapping the writer to
 Iceberg catalog configured.
 
 Table layout (one directory per logical table under ``root``):
-  sketch_state:  sketch_id, kind, level, partition_id, n_items, state,
+  sketch_state:  sketch_id, kind, layout, [shard_id,] src, n_items, state,
                  params_json, input_desc, created_utc
   sketch_final:  sketch_id, kind, n_items, state, params_json, created_utc
 
+``sketch_state`` holds merge.py's partial row verbatim, versioned by
+``layout``; checkpoints are per-run, so a run in another layout is refused.
+
 Resume = read the persisted partials for a sketch_id and replay the build's
-merge plan: the same router (merge_partials_auto) planned from the same row
-count and the sketch's ``state_bytes_max``, so even order-sensitive sketches
-(KLL / t-digest compaction) resume to the direct build's bytes — reference
-round-trip invariant, /root/reference/filter/bloom/filter_test.go:187-233.
+merge plan: the same keyed router planned from the same row count and the
+sketch's ``state_bytes_max``, so even order-sensitive sketches (KLL /
+t-digest compaction) resume to the direct build's bytes — reference
+round-trip invariant of the Go Bloom filter's serialize/deserialize test.
 """
 
 from __future__ import annotations
@@ -31,15 +34,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .merge import merge_partials_auto
 
-PARTIAL_TABLE_SCHEMA = ("sketch_id string, kind string, level int, partition_id long, "
-                        "n_items long, state binary, params_json string, "
-                        "input_desc string, created_utc double")
-
-# level sentinel marking SHARDED partial layout in sketch_state: rows are
-# (shard_id-as-partition_id, n_items, column-range state), many rows per id
-# (one per scan partition) — resumed via the per-shard merge + reassembly
-# instead of the monolithic router
-SHARD_LEVEL = -1
+# the version of the partial row sketch_state holds: (shard_id,) src,
+# n_items, state — bump it whenever that row changes
+PARTIAL_LAYOUT = 1
 FINAL_TABLE_SCHEMA = ("sketch_id string, kind string, n_items long, state binary, "
                       "params_json string, created_utc double")
 
@@ -60,56 +57,31 @@ class SketchCheckpoint:
 
     # -- write ---------------------------------------------------------------
     def write_partials(self, sketch_id: str, sketch, partials: DataFrame,
-                       input_desc: str = "", level: int = 0) -> DataFrame:
-        """Persist partial rows; returns the *persisted* partials re-read from
-        storage so the downstream merge consumes checkpointed state (resume
-        equivalence is structural, not best-effort).
+                       input_desc: str = "") -> DataFrame:
+        """Persist partial rows verbatim (``src`` included: the read-back
+        partitioning would collapse origins and break the fanin byte
+        budget); returns the *persisted* partials re-read from storage so
+        the downstream merge consumes checkpointed state.
 
         Each invocation writes under its own run directory and atomically
         advances a _LATEST_RUN pointer; re-running a build with the same
         sketch_id (retry after a crash) supersedes — never duplicates —
         the previous attempt's partials."""
-        pj = params_json(sketch)
-        now = time.time()
         run_id = uuid.uuid4().hex[:12]
-        # ``src`` (origin scan partition, sharded layout) persists with the
-        # row: re-deriving it from the read-back partitioning would collapse
-        # many origins into one and break the merge's fanin byte budget
-        extra = ["src"] if "src" in partials.columns else []
         enriched = partials.select(
             F.lit(sketch_id).alias("sketch_id"),
             F.lit(sketch.kind).alias("kind"),
-            F.lit(level).alias("level"),
-            "partition_id", *extra, "n_items", "state",
-            F.lit(pj).alias("params_json"),
+            F.lit(PARTIAL_LAYOUT).alias("layout"),
+            *partials.columns,
+            F.lit(params_json(sketch)).alias("params_json"),
             F.lit(input_desc).alias("input_desc"),
-            F.lit(now).alias("created_utc"),
+            F.lit(time.time()).alias("created_utc"),
         )
         base = os.path.join(self._tbl("sketch_state"), f"sketch_id={sketch_id}")
         path = os.path.join(base, f"run={run_id}")
         enriched.write.mode("errorifexists").parquet(path)
         self._set_latest_run(base, run_id)
-        spark = partials.sparkSession
-        return (spark.read.parquet(path)
-                .where(F.col("level") == level)
-                .select("partition_id", *extra, "n_items", "state"))
-
-    def write_shard_partials(self, sketch_id: str, sketch,
-                             shard_partials: DataFrame,
-                             input_desc: str = "") -> DataFrame:
-        """Persist SHARDED partials (build_delta_shard_partials output) in
-        the same sketch_state table: shard_id rides the partition_id
-        column, ``level = SHARD_LEVEL`` marks the layout.  Returns the
-        re-read rows as (shard_id, n_items, state) so the downstream merge
-        consumes checkpointed state."""
-        extra = ["src"] if "src" in shard_partials.columns else []
-        renamed = shard_partials.select(
-            F.col("shard_id").cast("long").alias("partition_id"),
-            *extra, "n_items", "state")
-        out = self.write_partials(sketch_id, sketch, renamed, input_desc,
-                                  level=SHARD_LEVEL)
-        return out.select(F.col("partition_id").cast("int").alias("shard_id"),
-                          *extra, "n_items", "state")
+        return partials.sparkSession.read.parquet(path).select(*partials.columns)
 
     @staticmethod
     def _set_latest_run(base: str, run_id: str) -> None:
@@ -147,48 +119,40 @@ class SketchCheckpoint:
 
     def resume(self, spark: SparkSession, sketch_id: str,
                sketch) -> tuple[bytes, int]:
-        """Rebuild the final state from the LATEST complete run's partials.
-        Layout auto-detected from the level column: SHARD_LEVEL rows take
-        the build's sharded tail (merge_shards_reassembled), monolithic
-        rows the build's router (merge_partials_auto), so resume takes the
-        direct build's route and merge levels.  Both plan from counted rows
-        (a read-back under-counts partitions)."""
-        base = os.path.join(self._tbl("sketch_state"), f"sketch_id={sketch_id}")
-        raw = spark.read.parquet(self._latest_run_path(base))
-        if raw.where(F.col("level") == SHARD_LEVEL).limit(1).count():
-            from pyspark.sql import Window
+        """Rebuild the final state from the LATEST run's partials through
+        the build's own tail (merge_shards_reassembled when the rows have a
+        ``shard_id``, else merge_partials_auto), planned from the rows one
+        job counts as it checks the layout: ValueError for a run with no
+        ``layout`` column or another layout than PARTIAL_LAYOUT."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
+        base = os.path.join(self._tbl("sketch_state"), f"sketch_id={sketch_id}")
+        path = self._latest_run_path(base)
+        # the schema from one footer, read here: Spark's inference is a job
+        part = min(f for f in os.listdir(path) if f.endswith(".parquet"))
+        raw = spark.read.schema(from_arrow_schema(pq.read_schema(
+            os.path.join(path, part)))).parquet(path)
+        if "layout" not in raw.columns:
+            raise ValueError(
+                f"checkpoint {sketch_id!r} has no layout column: it was "
+                f"written before partial layout {PARTIAL_LAYOUT}; rebuild it")
+        counts = {r.layout: r["count"]
+                  for r in raw.groupBy("layout").count().collect()}
+        if set(counts) - {PARTIAL_LAYOUT}:
+            raise ValueError(
+                f"checkpoint {sketch_id!r} holds partial layout "
+                f"{sorted(counts)}, not {PARTIAL_LAYOUT}; rebuild it")
+        cnt = sum(counts.values())
+        if "shard_id" in raw.columns:
             from .build import merge_shards_reassembled
-            shards = (raw.where(F.col("level") == SHARD_LEVEL)
-                      .select(F.col("partition_id").cast("int")
-                              .alias("shard_id"),
-                              *(["src"] if "src" in raw.columns else []),
-                              "n_items", "state"))
-            # the count job runs on the PRE-window plan: it does not depend
-            # on the synthesized src, and putting it after the window would
-            # re-shuffle/sort every state blob once more
-            cnt = shards.count()
-            if "src" not in raw.columns:
-                # legacy (pre-src) checkpoint: the parquet read-back packs
-                # many same-shard rows per partition, so the merge's
-                # spark_partition_id fallback would collapse origins into
-                # one (shard, grp) group and blow the fanin byte budget —
-                # synthesize a distinct per-row src instead.  Ordering by
-                # the state hash is deterministic given distinct blobs;
-                # ties are identical blobs, for which fold order cannot
-                # matter (code-review r5).
-                w = Window.partitionBy("shard_id").orderBy(
-                    F.xxhash64("state"), "n_items")
-                shards = shards.select(
-                    "shard_id",
-                    (F.row_number().over(w) - 1).cast("long").alias("src"),
-                    "n_items", "state")
             # the shard count only sizes the level plan: reassembly checks
             # the shard set from the blob headers
             blob, n = merge_shards_reassembled(
-                shards, sketch, -(-cnt // sketch.shard_count()))
+                raw.select("shard_id", "src", "n_items", "state"), sketch,
+                -(-cnt // sketch.shard_count()))
         else:
-            partials = raw.select("partition_id", "n_items", "state")
-            blob, n = merge_partials_auto(partials, sketch, partials.count())
+            blob, n = merge_partials_auto(raw.select("src", "n_items", "state"),
+                                          sketch, cnt)
         self.write_final(sketch_id, sketch, blob, n)
         return blob, n

@@ -1,13 +1,16 @@
-"""The merge side of the mergeable aggregation: one Arrow merge level.
+"""The merge side of the mergeable aggregation: one partial row, one keyed
+router, one Arrow merge level.
 
-The fanin tree, grouped phase 2 and the per-shard counter merge are one
-keyed, fanin-bounded Arrow group-fold (``_tree_level``) over *state rows
-only* — shuffle volume per level is (#rows × |state|), never the input
-data — stacked by one planner (``_merge_levels``) into one lazy plan.
-Every merge decision reads one size, the class's declared
-``state_bytes_max``: one route rule (``_fits_driver``: driver fold or merge
-levels, taken by ``merge_partials_auto`` and by the sharded changelog tail
-``build.merge_shards_reassembled``) and one fanin rule (``_byte_fanin``).
+Every partial row is ``(key columns…, src, n_items, state)`` — no key for
+a plain build, ``shard_id`` for a sharded changelog, ``group`` for a
+grouped build — and every merge folds in ``src`` order (the origin scan
+partition), so KLL / t-digest compaction never sees arrival order.  One
+keyed router (``_merge_keyed``) folds plain and shard partials on the
+driver or, past its budget, through one keyed, fanin-bounded Arrow
+group-fold (``_tree_level``) over *state rows only*, stacked by one planner
+(``_merge_levels``, which grouped phase 2 calls directly) into one lazy
+plan.  Every merge decision reads the class's declared ``state_bytes_max``:
+one route rule (``_fits_driver``) and one fanin rule (``_byte_fanin``).
 
 Safety: partial blobs carry their params in the serialized header; merging
 states built under different params silently corrupts estimates, so every
@@ -17,10 +20,12 @@ merge first checks that the first ``sketch.header_len`` bytes are equal
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-PARTIAL_SCHEMA = "partition_id long, n_items long, state binary"
+PARTIAL_SCHEMA = "src long, n_items long, state binary"
 
 
 def merge_blobs(sketch, blobs: list, n_items: int) -> tuple[bytes, int]:
@@ -36,23 +41,6 @@ def merge_blobs(sketch, blobs: list, n_items: int) -> tuple[bytes, int]:
         _, st = cls.deserialize(bytes(b))
         acc = sketch.merge(acc, st)
     return sketch.serialize(acc), int(n_items)
-
-
-def merge_partials_collect(partials: DataFrame, sketch) -> tuple[bytes, int]:
-    """Driver-side fold of the partial states — ONE Spark job.
-
-    Correct choice when P × |state| is small (a few hundred MB-scale blobs):
-    each tree level is another shuffle stage with ~0.5-1 s of fixed
-    latency, which dominates short builds and caps scaling efficiency.
-    SURVEY.md §3.1: 'final merge (single task or driver)'.  Rows are folded
-    in partition_id order so the result is reproducible and identical to the
-    tree path for order-sensitive merges (KLL/t-digest compaction).
-    """
-    rows = sorted(partials.collect(), key=lambda r: r.partition_id)
-    if not rows:
-        return sketch.serialize(sketch.empty()), 0
-    return merge_blobs(sketch, [r.state for r in rows],
-                       sum(r.n_items for r in rows))
 
 
 # driver fold above this much partial state would strain driver memory —
@@ -74,24 +62,43 @@ DRIVER_COLLECT_MAX_BYTES = 512 << 20
 
 def merge_partials_auto(partials: DataFrame, sketch,
                         est_rows: int | None = None) -> tuple[bytes, int]:
-    """THE merge router, planned from ``sketch.state_bytes_max`` alone:
-    driver fold while est_rows × state_bytes_max fits
-    DRIVER_COLLECT_MAX_BYTES, else the executor merge levels at the byte
-    fanin.  ``est_rows`` is the partial-ROW count when the caller knows it
+    """Plain partials → (blob, n_items): the keyed router with no key.
+    ``est_rows`` is the partial-ROW count when the caller knows it
     (build_sketch passes the pre-checkpoint partition count, resume its
     counted rows — a checkpoint read-back packs many partial files per scan
     partition, so getNumPartitions there would under-count); otherwise P
     is read from the plan (one row per partition on the direct path, no
-    job).  Both routes fold in partition_id order, so a resume that passes
-    the build's row count replays the build's plan byte for byte."""
+    job).  Both routes fold in src order, so a resume that passes the
+    build's row count replays the build's plan byte for byte."""
+    rows = _merge_keyed(partials, sketch, est_rows)
+    return rows[0] if rows else (sketch.serialize(sketch.empty()), 0)
+
+
+def _merge_keyed(partials: DataFrame, sketch, est_rows: int | None,
+                 keys: tuple = (), fold=None,
+                 row_bytes: int | None = None) -> list[tuple[bytes, int]]:
+    """THE merge router → one (state, n_items) per key, in key order,
+    planned from ``sketch.state_bytes_max`` alone: while ``est_rows``
+    (default: the partition count) partials fit the driver
+    (``_fits_driver``), collect them, sort by (*keys, src) and fold each
+    key with ``fold(blobs) -> blob`` (default: header-checked
+    ``merge_blobs``); else the executor merge levels at the byte fanin of
+    ``row_bytes`` (default: ``state_bytes_max``) per row."""
     if est_rows is None:
         est_rows = partials.rdd.getNumPartitions()
-    if not _fits_driver(est_rows, sketch):
-        row = _merge_levels(partials, sketch,
-                            _byte_fanin(sketch.state_bytes_max),
-                            est_rows).collect()[0]
-        return bytes(row.state), int(row.n_items)
-    return merge_partials_collect(partials, sketch)
+    fold = fold or (lambda blobs: merge_blobs(sketch, blobs, 0)[0])
+
+    def key(r):
+        return tuple(r[k] for k in keys)
+
+    if _fits_driver(est_rows, sketch):
+        rows = sorted(partials.collect(), key=lambda r: (*key(r), r.src))
+        return [(fold([r.state for r in grp]), sum(r.n_items for r in grp))
+                for grp in (list(g) for _, g in itertools.groupby(rows, key))]
+    rows = _merge_levels(partials, sketch,
+                         _byte_fanin(row_bytes or sketch.state_bytes_max),
+                         est_rows, keys, fold).collect()
+    return [(bytes(r.state), int(r.n_items)) for r in sorted(rows, key=key)]
 
 
 def _fits_driver(est_rows: int, sketch) -> bool:
@@ -109,30 +116,30 @@ def _byte_fanin(state_bytes: int) -> int:
 
 
 def _tree_level(df: DataFrame, sketch, fanin: int | None, keys: tuple = (),
-                order: str = "partition_id", fold=None) -> DataFrame:
-    """THE merge level: ``groupBy(*keys, floor(order / fanin))`` (``keys``
+                fold=None) -> DataFrame:
+    """THE merge level: ``groupBy(*keys, floor(src / fanin))`` (``keys``
     alone when ``fanin`` is None: the final fold), then ``applyInArrow``
     folds each group with ``fold(blobs) -> blob`` (default: header-checked
-    ``merge_blobs``) and sums n_items.  FOLD ORDER: sorted by the order
-    column within a group, so KLL / t-digest never see arrival order.
-    INVARIANT (load-bearing for every byte-aware fanin): the order column
-    is renumbered to the group index (0 after the final fold), so the NEXT
-    level again packs at most ``fanin`` rows per task — original ids would
-    let level-2 groups span fanin² inputs.  Pinned by
+    ``merge_blobs``) and sums n_items.  FOLD ORDER: sorted by src within a
+    group, so KLL / t-digest never see arrival order.  INVARIANT
+    (load-bearing for every byte-aware fanin): src is renumbered to the
+    group index (0 after the final fold), so the NEXT level again packs at
+    most ``fanin`` rows per task — original ids would let level-2 groups
+    span fanin² inputs.  Pinned by
     tests/test_spark_build.py::test_merge_tree_level_renumbers_dense."""
     fold = fold or (lambda blobs: merge_blobs(sketch, blobs, 0)[0])
     schema = StructType([df.schema[k] for k in keys] + [
-        StructField(order, LongType()), StructField("n_items", LongType()),
+        StructField("src", LongType()), StructField("n_items", LongType()),
         StructField("state", BinaryType())])
     by = list(keys)
     if fanin:
-        df = df.withColumn("_grp", F.floor(F.col(order) / fanin))
+        df = df.withColumn("_grp", F.floor(F.col("src") / fanin))
         by.append("_grp")
 
     def fold_group(table):
         import pyarrow as pa
         import pyarrow.compute as pc
-        table = table.sort_by(order)
+        table = table.sort_by("src")
         state = table.column("state")
         grp = table.column("_grp")[0].as_py() if fanin else 0
         return pa.Table.from_arrays(
@@ -147,7 +154,7 @@ def _tree_level(df: DataFrame, sketch, fanin: int | None, keys: tuple = (),
 
 def _merge_levels(df: DataFrame, sketch, fanin: int,
                   est_rows: int | None = None, keys: tuple = (),
-                  order: str = "partition_id", fold=None) -> DataFrame:
+                  fold=None) -> DataFrame:
     """THE level planner: while the estimated rows per key (default: the
     partition count) exceed ``fanin``, add a ``_tree_level``; then fold
     each key once.  No persist, no count job: the merge runs in the
@@ -156,7 +163,6 @@ def _merge_levels(df: DataFrame, sketch, fanin: int,
     if est_rows is None:
         est_rows = df.rdd.getNumPartitions()
     while est_rows > fanin:
-        df = _tree_level(df, sketch, fanin, keys, order, fold)
+        df = _tree_level(df, sketch, fanin, keys, fold)
         est_rows = -(-est_rows // fanin)
-    return _tree_level(df, sketch, None, keys, order, fold)
-
+    return _tree_level(df, sketch, None, keys, fold)

@@ -26,11 +26,13 @@ import hashlib
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import BooleanType, DoubleType, LongType
 
 from ..core.hashing import compact_i32_counts
 from ..sketches.base import SKETCH_KINDS, sketch_for_kind
-from .build import _arrow_values, _elem_kind, _keys, _native_scan
+from .build import (_arrow_values, _check_key_type, _elem_kind, _keys,
+                    _native_scan)
 
 _CACHE: dict[tuple, tuple] = {}
 
@@ -81,7 +83,9 @@ def _probe_udf(spark: SparkSession, blob: bytes, kind: str, probe: str,
                key_kind: str | None, deserialize_kwargs: dict | None = None):
     """The one scalar probe factory → ``arrow_udf`` answering ``probe``
     (contains | point | rank) for every key of each Arrow batch in one
-    kernel call.  ``key_kind`` None probes float64 values (rank)."""
+    kernel call.  ``key_kind`` None probes float64 values (rank).  A key
+    column the cast would change (``_check_key_type``) fails the task with
+    ValueError."""
     method = _probe_method(kind, probe, key_kind)
     rtype, dtype, miss = _PROBES[probe]
     cast = key_kind or "f64"
@@ -90,6 +94,7 @@ def _probe_udf(spark: SparkSession, blob: bytes, kind: str, probe: str,
 
     @F.arrow_udf(rtype)
     def probe_fn(a: pa.Array) -> pa.Array:
+        _check_key_type(a.type, cast)
         sk, state = _get(bc, key)
         nulls = None
         if a.null_count:
@@ -170,10 +175,13 @@ def membership_scan(df, col: str, spark: SparkSession, blob: bytes, kind: str,
     through ``mapInArrow``.  NULL keys (and NULL arrays) are not probed.
     Returns a one-row-per-task DataFrame (n_probed, n_member); aggregate for
     totals.  Raises ValueError at creation when ``kind`` has no
-    ``contains_<element kind>``.
+    ``contains_<element kind>``, or when the cast to ``value_kind`` would
+    change the column's keys (``_check_key_type``).
     """
     elem_kind = _elem_kind(value_kind)
     method = _probe_method(kind, "contains", elem_kind)
+    sel = df.select(col)
+    _check_key_type(to_arrow_type(sel.schema[0].dataType), value_kind)
     bc = spark.sparkContext.broadcast(blob)
     key = _cache_key(blob, kind)
 
@@ -205,7 +213,6 @@ def membership_scan(df, col: str, spark: SparkSession, blob: bytes, kind: str,
 
     # no state-bytes hint: the aggregate rows are near-free to ship, so the
     # native scan keeps its ≈4× task-slot splits for straggler balance
-    sel = df.select(col)
     schema = "n_probed long, n_member long"
     out = _native_scan(sel, [col], scan, schema)
     return out if out is not None else sel.mapInArrow(scan, schema)

@@ -162,4 +162,5 @@ class BlockedBloomSketch:
         object.__setattr__(params, "m", m)
         object.__setattr__(params, "n_blocks", m // BLOCK_BITS)
         object.__setattr__(params, "n_words", m // 64)
+        r.end()
         return cls(params), state

@@ -251,4 +251,5 @@ class BloomSketch:
         object.__setattr__(params, "k", k)
         object.__setattr__(params, "m", m)
         object.__setattr__(params, "n_words", n_words)
+        r.end()
         return cls(params), state

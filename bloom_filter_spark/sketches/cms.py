@@ -177,4 +177,5 @@ class CMSSketch:
         object.__setattr__(params, "conservative", False)
         object.__setattr__(params, "w", w)
         object.__setattr__(params, "d", d)
+        r.end()
         return cls(params), state

@@ -207,4 +207,5 @@ class CountSketch:
                 f"corrupt CountSketch blob: d={d} (must be odd ≥1), "
                 f"w={w} (must be ≥2)")
         state = r.array("<i8", d * w).reshape(d, w)
+        r.end()
         return cls(CountSketchParams(w=w, d=d, seed=seed)), state

@@ -371,6 +371,7 @@ class CountingBloomSketch:
         object.__setattr__(params, "k", k)
         object.__setattr__(params, "m", m)
         object.__setattr__(params, "n_words", (m >> 6) + 1)
+        r.end()
         return cls(params), state
 
 

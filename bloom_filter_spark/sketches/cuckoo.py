@@ -279,4 +279,5 @@ class CuckooFilter:
         object.__setattr__(params, "fp_seed", fp_seed)
         object.__setattr__(params, "hash_family", hash_family)
         object.__setattr__(params, "m", m)
+        r.end()
         return cls(params), state

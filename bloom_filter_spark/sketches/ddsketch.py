@@ -267,5 +267,6 @@ class DDSketch:
         pc = r.array("<i8", np_)
         nk = r.array("<i8", nn)
         nc = r.array("<i8", nn)
+        r.end()
         return (cls(DDSketchParams(alpha, max_bins, min_value)),
                 DDState(pk, pc, nk, nc, zero, n, collapsed))

@@ -137,4 +137,5 @@ class HLLSketch:
             state[idx] = ranks
         else:
             state = r.array(np.uint8, 1 << b)
+        r.end()
         return cls(HLLParams(b=b, seed=seed)), state

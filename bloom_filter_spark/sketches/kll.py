@@ -204,4 +204,5 @@ class KLLSketch:
         for s in sizes:
             levels.append(flat[off:off + s].copy())
             off += s
+        r.end()
         return cls(KLLParams(k=k, seed=seed)), KLLState(levels, n, counter)

@@ -138,4 +138,5 @@ class KMVSketch:
         seed = r.u64()
         cnt = r.u32()
         state = KMVState(r.array("<u8", cnt))
+        r.end()
         return cls(KMVParams(k=k, seed=seed)), state

@@ -155,4 +155,5 @@ class MGSketch:
         size = r.u32()
         keys = r.array("<i8", size)
         counts = r.array("<i8", size)
+        r.end()
         return cls(MGParams(k=k)), MGState(keys, counts, n, offset)

@@ -129,4 +129,5 @@ class ReservoirSketch:
         counter = r.u64()
         size = r.u32()
         sample = r.array("<i8", size)
+        r.end()
         return cls(ReservoirParams(k=k, seed=seed)), ReservoirState(sample, n, counter)

@@ -157,4 +157,5 @@ class TDigestSketch:
         size = r.u32()
         means = r.array("<f8", size)
         weights = r.array("<f8", size)
+        r.end()
         return cls(TDigestParams(compression=compression)), TDigestState(means, weights, n, vmin, vmax)

@@ -249,25 +249,34 @@ def test_delta_cells_equivalence_and_cell_serialization():
                 cb.serialize_shard(dense, i, n_shards)
 
 
-def test_legacy_srcless_shard_checkpoint_resume(spark, tmp_path, monkeypatch,
-                                                reference_fold):
-    """A sharded checkpoint written WITHOUT the src column (pre-r5 layout)
-    must resume to the exact reference-fold blob: resume() synthesizes a
-    distinct per-row src so the fanin byte budget stays sound and the fold
-    is deterministic (code-review r5)."""
-    from bloom_filter_spark.operators.build import build_delta_shard_partials
-    from bloom_filter_spark.operators.checkpoint import SketchCheckpoint
-    from bloom_filter_spark.sketches import (BloomParams, CountingBloomSketch,
-                                             counting_bloom)
-    rows = ([(f"doc_{i}", 1) for i in range(3000)]
-            + [(f"doc_{i}", -1) for i in range(0, 3000, 5)])
-    df = spark.createDataFrame(rows, "id string, sign int").repartition(9)
+def test_resume_refuses_an_older_layout(spark, tmp_path):
+    """Checkpoints are per-run, so resume() refuses a run it cannot read
+    as the current partial layout instead of guessing: a run in the older
+    (level, partition_id) layout, which has no layout column, and a run
+    whose layout value it does not know, each raise ValueError naming the
+    layout."""
+    import os
+
+    from bloom_filter_spark.operators.checkpoint import (PARTIAL_LAYOUT,
+                                                         SketchCheckpoint)
     sk = CountingBloomSketch(BloomParams(n=5000, p=0.01))
     ck = SketchCheckpoint(str(tmp_path / "ck"))
-    monkeypatch.setattr(counting_bloom, "SHARD_TARGET_BYTES",
-                        sk.params.m * 4 // 4)  # 4 shards
-    partials = build_delta_shard_partials(df, sk, "id", "sign",
-                                          value_kind="str")
-    ck.write_shard_partials("legacy", sk, partials.drop("src"))
-    assert ck.resume(spark, "legacy", sk) == reference_fold(df, sk, "id",
-                                                            "sign")
+    state = bytearray(sk.serialize(sk.empty()))
+    lineage = "params_json string, input_desc string, created_utc double"
+    runs = {
+        "older": spark.createDataFrame(
+            [("older", "cbloom", -1, 0, 0, state, "{}", "", 0.0)],
+            "sketch_id string, kind string, level int, partition_id long, "
+            f"n_items long, state binary, {lineage}"),
+        "unknown": spark.createDataFrame(
+            [("unknown", "cbloom", PARTIAL_LAYOUT + 1, 0, 0, 0, state, "{}",
+              "", 0.0)],
+            "sketch_id string, kind string, layout int, shard_id int, "
+            f"src long, n_items long, state binary, {lineage}"),
+    }
+    for sid, run in runs.items():
+        base = os.path.join(ck.root, "sketch_state", f"sketch_id={sid}")
+        run.write.parquet(os.path.join(base, "run=r0"))
+        ck._set_latest_run(base, "r0")
+        with pytest.raises(ValueError, match="layout"):
+            ck.resume(spark, sid, sk)

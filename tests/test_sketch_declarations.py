@@ -206,6 +206,21 @@ def test_header_len_covers_params_and_gates_merge(kind):
     assert filled[:hlen] == a[:hlen]
 
 
+@pytest.mark.parametrize("kind", KINDS)
+def test_deserialize_refuses_bytes_past_the_layout(kind):
+    """A blob ends where its layout does: one trailing byte, or a second
+    blob joined end to end (which used to read as the first), raises
+    ValueError, and a filled state still round-trips."""
+    sk = _sketch(kind)
+    blob = sk.serialize(_fill(sk, _values()))
+    cls = SKETCH_KINDS[kind]
+    for bad in (blob + b"\0", blob + blob):
+        with pytest.raises(ValueError, match="past"):
+            cls.deserialize(bad)
+    back, state = cls.deserialize(blob)
+    assert back.serialize(state) == blob
+
+
 # kinds whose serialized length depends on params alone
 FIXED_SIZE = {"bloom", "blocked_bloom", "cbloom", "cms", "countsketch",
               "cuckoo"}

@@ -90,7 +90,7 @@ def test_merge_tree_runs_as_one_job_and_caches_nothing(spark, tokens_df):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert row.partition_id == 0
+    assert row.src == 0
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup("merge_tree_one_job")) == 1
     assert set(sc._jsc.getPersistentRDDs().keys()) <= cached
@@ -101,11 +101,13 @@ def test_merge_auto_routes_by_state_volume(spark, tokens_df, monkeypatch):
     threshold and the driver fold otherwise — byte-identical results."""
     from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.operators.merge import (
-        merge_partials_auto, merge_partials_collect)
+        merge_blobs, merge_partials_auto)
     sketch = BloomSketch(BloomParams(n=60_000, p=0.01))
     partials = build_partials(tokens_df, sketch, "tokens", "i32_array",
                               repartition=16).cache()
-    collect_blob, n1 = merge_partials_collect(partials, sketch)
+    rows = sorted(partials.collect(), key=lambda r: r.src)
+    collect_blob, n1 = merge_blobs(sketch, [r.state for r in rows],
+                                   sum(r.n_items for r in rows))
     # budgets 0 force the tree path (any P x |state| exceeds them)
     monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", 0)
     monkeypatch.setattr(merge_mod, "AUTO_TREE_THRESHOLD_BYTES", 0)
@@ -349,6 +351,34 @@ def test_register_sql_probes(spark, sf_small, bloom_blob):
     _, state = CountSketch.deserialize(cs_blob)
     want = cs.point_i32(state, np.array([r.token for r in got], np.int32))
     assert [r.est for r in got] == want.tolist()
+
+
+def test_probe_refuses_a_key_column_the_cast_would_change(spark):
+    """A probe casts every key to its key kind, so a column that cast would
+    change raises ValueError instead of answering for another key: a
+    bigint probed as i32 (2**32 + 5 read as the inserted 5), a string
+    probed as i32 or i64 ("12" parsed as the inserted 12), an integer
+    probed as str.  membership_scan checks the schema at call time, the
+    UDF each Arrow batch in the task; keys at their own width still
+    probe."""
+    from bloom_filter_spark.operators import membership_scan
+    sk = BloomSketch(BloomParams(n=1000, p=0.01))
+    state = sk.empty()
+    sk.update_i32(state, np.array([5, 12], np.int32))
+    blob = sk.serialize(state)
+    df = spark.createDataFrame([(2**32 + 5, "12", 12)],
+                               "big long, text string, small int")
+    for col, key_kind in (("big", "i32"), ("text", "i32"), ("text", "i64"),
+                          ("small", "str")):
+        with pytest.raises(ValueError, match="cannot be probed"):
+            membership_scan(df, col, spark, blob, "bloom", key_kind)
+        probe = membership_udf(spark, blob, "bloom", key_kind)
+        with pytest.raises(Exception, match="cannot be probed"):
+            df.select(probe(F.col(col))).collect()
+    probe = membership_udf(spark, blob, "bloom", "i32")
+    assert df.select(probe(F.col("small"))).collect()[0][0] is True
+    assert membership_scan(df, "small", spark, blob, "bloom", "i32").agg(
+        F.sum("n_member")).collect()[0][0] == 1
 
 
 def test_membership_scan_scalar_and_str(spark, sf_small, bloom_blob):
@@ -687,7 +717,7 @@ def test_merge_tree_level_renumbers_dense(spark):
         sk.update_i32(st, np.arange(pid * 10, pid * 10 + 10, dtype=np.int32))
         rows.append((pid, 10, bytearray(sk.serialize(st))))
     df = spark.createDataFrame(rows, PARTIAL_SCHEMA)
-    lvl = {r.partition_id: r.n_items
+    lvl = {r.src: r.n_items
            for r in _tree_level(df, sk, fanin=2).collect()}
     assert lvl == {0: 20, 1: 20, 2: 20}  # dense ids, fanin-sized groups
     # sparse ids (simulating skipped partials) still renumber densely at
@@ -695,9 +725,9 @@ def test_merge_tree_level_renumbers_dense(spark):
     sparse = spark.createDataFrame(
         [rows[0], (64, 10, rows[1][2]), (129, 10, rows[2][2])], PARTIAL_SCHEMA)
     lvl1 = _tree_level(sparse, sk, fanin=64)
-    ids1 = sorted(r.partition_id for r in lvl1.collect())
+    ids1 = sorted(r.src for r in lvl1.collect())
     assert ids1 == [0, 1, 2]  # floor-div groups of the sparse ids
-    ids2 = sorted(r.partition_id for r in _tree_level(lvl1, sk, 2).collect())
+    ids2 = sorted(r.src for r in _tree_level(lvl1, sk, 2).collect())
     assert ids2 == [0, 1]  # renumbered dense → next level packs ≤ fanin
 
 
@@ -848,18 +878,64 @@ def test_changelog_checkpoint_resume(spark, tokens_df, tmp_path, monkeypatch,
 def test_sharded_changelog_checkpoint_resume(spark, tokens_df, tmp_path,
                                              monkeypatch, reference_fold):
     """Sharded (5 column-range shards) changelog partials persist through
-    the lineage table under the SHARD_LEVEL marker and resume to the
+    the lineage table with their shard_id column and resume to the
     reference fold's blob bit-for-bit, whether the build folded on the
     driver or on the executor levels."""
     _checkpoint_resume_parity(spark, _apart_changelog(tokens_df), tmp_path,
                               monkeypatch, reference_fold, 5)
 
 
+def test_resume_runs_one_job_before_its_merge(spark, tokens_df, tmp_path,
+                                              monkeypatch):
+    """resume() checks the run's layout and counts its rows in ONE Spark
+    job before it hands them to the build's merge tail (the read takes its
+    schema from a footer, not from an inference job): pinned for a plain
+    run and a 5-shard changelog run.  AQE is off, so one action is one
+    job; the listener bus is drained before the jobs are read."""
+    from bloom_filter_spark.operators import build as build_mod
+    from bloom_filter_spark.operators import build_delta_sketch
+    from bloom_filter_spark.operators import checkpoint as ck_mod
+    from bloom_filter_spark.sketches import CountingBloomSketch
+
+    ck = SketchCheckpoint(str(tmp_path / "ckpt"))
+    bloom = BloomSketch(BloomParams(n=60_000, p=0.01))
+    build_sketch(tokens_df, bloom, "tokens", "i32_array", repartition=8,
+                 checkpoint=ck, sketch_id="plain")
+    cb = CountingBloomSketch(BloomParams(n=10_000, p=0.01))
+    _shard_route(monkeypatch, cb, 5)
+    build_delta_sketch(_apart_changelog(tokens_df), cb, "doc_id", "sign",
+                       "str", checkpoint=ck, sketch_id="sharded")
+
+    class AtMerge(Exception):
+        pass
+
+    def at_merge(*args):
+        raise AtMerge
+
+    monkeypatch.setattr(ck_mod, "merge_partials_auto", at_merge)
+    monkeypatch.setattr(build_mod, "merge_shards_reassembled", at_merge)
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for sid, sketch in (("plain", bloom), ("sharded", cb)):
+            group = f"resume_{sid}"
+            sc.setJobGroup(group, "resume")
+            with pytest.raises(AtMerge):
+                ck.resume(spark, sid, sketch)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, sid
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def test_sharded_merge_routes_by_the_driver_budget(spark, tokens_df,
                                                    monkeypatch, reference_fold):
     """The sharded tail reads the same rule as merge_partials_auto:
     P × state_bytes_max ≤ DRIVER_COLLECT_MAX_BYTES folds on the driver and
-    never plans merge_shard_partials; one byte less takes the levels."""
+    never plans the merge levels; one byte less takes the levels."""
     from bloom_filter_spark.operators import build as build_mod
     from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.sketches import BloomParams, CountingBloomSketch
@@ -875,7 +951,7 @@ def test_sharded_merge_routes_by_the_driver_budget(spark, tokens_df,
     def no_levels(*a, **k):
         raise AssertionError("executor shard merge planned")
 
-    monkeypatch.setattr(build_mod, "merge_shard_partials", no_levels)
+    monkeypatch.setattr(merge_mod, "_merge_levels", no_levels)
     monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES",
                         est * sk.state_bytes_max)
     assert build_mod.merge_shards_reassembled(partials, sk) == want
@@ -886,15 +962,15 @@ def test_sharded_merge_routes_by_the_driver_budget(spark, tokens_df,
 
 
 def test_shard_merge_exactly_one_exchange_per_wave(spark, monkeypatch):
-    """Plan-shape pin for merge_shard_partials (VERDICT r4 #7): each merge
+    """Plan-shape pin for the per-shard merge levels: each merge
     wave is ONE hash Exchange (the groupBy on shard_id / (shard_id, grp)).
     The trap this guards: deriving the fold key from an expression
     evaluated at merge time (e.g. Window.partitionBy(spark_partition_id))
     silently added a second full-data Exchange once before — src is now a
     persisted COLUMN, so the level grouping must not re-shuffle anything
     beyond its own groupBy."""
-    from bloom_filter_spark.operators.build import (
-        build_delta_shard_partials, merge_shard_partials)
+    from bloom_filter_spark.operators.build import build_delta_shard_partials
+    from bloom_filter_spark.operators.merge import _byte_fanin, _merge_levels
     from bloom_filter_spark.sketches import (BloomParams, CountingBloomSketch,
                                              counting_bloom)
 
@@ -907,8 +983,13 @@ def test_shard_merge_exactly_one_exchange_per_wave(spark, monkeypatch):
     partials = build_delta_shard_partials(df, sk, "id", "sign",
                                           value_kind="str")
 
+    def shard_levels(est_partials):
+        return _merge_levels(
+            partials, sk, _byte_fanin(sk.state_bytes_max // sk.shard_count()),
+            est_partials, keys=("shard_id",), fold=type(sk).merge_shard_blobs)
+
     # single wave (P <= fanin): exactly one Exchange in the whole merge
-    merged = merge_shard_partials(partials, sk, est_partials=8)
+    merged = shard_levels(8)
     plan = merged._jdf.queryExecution().executedPlan().toString()
     # the input repartition is a RoundRobin Exchange; the merge itself must
     # contribute exactly its groupBy hash Exchanges and nothing more
@@ -927,8 +1008,7 @@ def test_shard_merge_exactly_one_exchange_per_wave(spark, monkeypatch):
     while p > fanin:
         waves += 1
         p = -(-p // fanin)
-    merged_big = merge_shard_partials(partials, sk,
-                                      est_partials=1000 * fanin)
+    merged_big = shard_levels(1000 * fanin)
     plan_big = merged_big._jdf.queryExecution().executedPlan().toString()
     assert plan_big.count("Exchange hashpartitioning") == waves, \
         (waves, plan_big)

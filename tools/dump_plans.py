@@ -140,18 +140,21 @@ def main() -> None:
         "running last over SLICE-LEVEL rows (≤ 2 per key per slice), never "
         "the data. Slice boundaries come from a t-digest sketch pass.")
 
-    from bloom_filter_spark.operators import (build_delta_shard_partials,
-                                              merge_shard_partials)
+    from bloom_filter_spark.operators import build_delta_shard_partials
+    from bloom_filter_spark.operators.merge import _byte_fanin, _merge_levels
     from bloom_filter_spark.sketches import CountingBloomSketch
     cb = CountingBloomSketch(BloomParams(n=600_005, p=0.01))
     chg = toks.select("doc_id", F.lit(1).alias("sign"))
     add("Counting-bloom changelog fold (the one changelog fold, sharded)",
-        merge_shard_partials(
-            build_delta_shard_partials(chg, cb, "doc_id", "sign", "str"), cb),
-        "Scan → MapInArrow emits column-range (shard_id, state) rows at "
-        "FULL scan parallelism (no coalesce); every changelog build, at any "
-        "filter width, takes this fold.  Shown is the merge route past the "
-        "driver budget (P × state_bytes_max > DRIVER_COLLECT_MAX_BYTES): "
+        _merge_levels(
+            build_delta_shard_partials(chg, cb, "doc_id", "sign", "str"), cb,
+            _byte_fanin(cb.state_bytes_max // cb.shard_count()),
+            keys=("shard_id",), fold=type(cb).merge_shard_blobs),
+        "Scan → MapInArrow emits column-range (shard_id, src, state) rows "
+        "at FULL scan parallelism (no coalesce); every changelog build, at "
+        "any filter width, takes this fold.  Shown is the merge route past "
+        "the driver budget (P × state_bytes_max > DRIVER_COLLECT_MAX_BYTES), "
+        "the keyed router's _merge_levels keyed by shard_id: "
         "the only Exchange carries shard rows into groupBy(shard_id) — "
         "state width becomes merge parallelism, and per-reducer memory is "
         "one shard, byte-bounded by fanin pre-levels when partials-per-shard "
