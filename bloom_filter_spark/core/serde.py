@@ -32,33 +32,35 @@ def pack_f64(v: float) -> bytes:
 
 
 class Reader:
-    """Sequential little-endian reader over a bytes blob."""
+    """Sequential little-endian reader over a bytes blob.  Every read past
+    the blob's end raises ValueError (a truncated blob is a bad blob)."""
 
     def __init__(self, buf: bytes) -> None:
         self.buf = buf
         self.pos = 0
 
+    def _take(self, nbytes: int) -> int:
+        """→ the offset of the next ``nbytes`` bytes, consumed."""
+        pos = self.pos
+        if pos + nbytes > len(self.buf):
+            raise ValueError(f"blob ends at byte {len(self.buf)}, inside its "
+                             f"layout (a read needs {pos + nbytes} bytes)")
+        self.pos = pos + nbytes
+        return pos
+
     def u32(self) -> int:
-        (v,) = struct.unpack_from("<I", self.buf, self.pos)
-        self.pos += 4
-        return v
+        return struct.unpack_from("<I", self.buf, self._take(4))[0]
 
     def u64(self) -> int:
-        (v,) = struct.unpack_from("<Q", self.buf, self.pos)
-        self.pos += 8
-        return v
+        return struct.unpack_from("<Q", self.buf, self._take(8))[0]
 
     def f64(self) -> float:
-        (v,) = struct.unpack_from("<d", self.buf, self.pos)
-        self.pos += 8
-        return v
+        return struct.unpack_from("<d", self.buf, self._take(8))[0]
 
     def array(self, dtype, count: int) -> np.ndarray:
         dt = np.dtype(dtype)
-        nbytes = dt.itemsize * count
-        arr = np.frombuffer(self.buf, dtype=dt, count=count, offset=self.pos).copy()
-        self.pos += nbytes
-        return arr
+        return np.frombuffer(self.buf, dtype=dt, count=count,
+                             offset=self._take(dt.itemsize * count)).copy()
 
     def end(self) -> None:
         """Refuse bytes past the layout: a blob must end where its last

@@ -80,11 +80,12 @@ def _keys(values, value_kind: str):
     return np.asarray(values, _DTYPES[value_kind])
 
 
-def _check_key_type(t, value_kind: str) -> None:
+def _check_key_type(t, value_kind: str, use: str) -> None:
     """ValueError for a key column of Arrow type ``t`` (a list's element
     type) that the ``value_kind`` cast would silently change: text read as
     numbers ("12" → 12), integers wider than the kind (2**32 + 5 → 5 as
-    i32) or integers hashed as strings.  Float columns pass."""
+    i32) or integers hashed as strings.  Float columns pass.  ``use``
+    names the side in the message: "inserted" or "probed"."""
     import pyarrow as pa
     if pa.types.is_list(t) or pa.types.is_large_list(t):
         t = t.value_type
@@ -93,8 +94,17 @@ def _check_key_type(t, value_kind: str) -> None:
     if (pa.types.is_integer(t) and (dtype is None or t.bit_width > 8 *
                                     np.dtype(dtype).itemsize)
             or dtype is not None and text):
-        raise ValueError(f"a {t} key column cannot be probed as "
+        raise ValueError(f"a {t} key column cannot be {use} as "
                          f"{value_kind} keys")
+
+
+def _check_key_column(df: DataFrame, col: str, value_kind: str,
+                      use: str) -> None:
+    """``_check_key_type`` of column ``col`` of ``df``, from its schema on
+    the driver (no job runs)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    _check_key_type(to_arrow_type(df.select(col).schema[0].dataType),
+                    value_kind, use)
 
 
 def _update(sketch, state, values, value_kind: str) -> int:
@@ -409,7 +419,9 @@ def _native_parquet_partials(df: DataFrame, sketch, col: str,
 def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
                    repartition: int | None = None) -> DataFrame:
     """→ DataFrame(src long, n_items long, state binary), one row per
-    partition.  ``value_kind``: i32_array | i32 | i64 | f64 | str."""
+    partition.  ``value_kind``: i32_array | i32 | i64 | f64 | str; a
+    column the cast would change raises ValueError (``_check_key_type``)."""
+    _check_key_column(df, col, value_kind, "inserted")
     sel = df.select(F.col(col).alias("v"))  # explicit column pruning
     if repartition:
         sel = sel.repartition(repartition)
@@ -433,6 +445,7 @@ def build_sketch_preagg(df: DataFrame, sketch, col: str,
     """
     if sketch.weight_mode is None:
         raise ValueError(f"pre-aggregated build unsupported for {sketch.kind}")
+    _check_key_column(df, col, value_kind, "inserted")
     # The JVM pre-aggregation exists to shrink the JVM→Python boundary.
     # Under a native parquet scan there IS no boundary, and a multiset-pure
     # sketch's direct fold is bit-identical to the weighted one (same bits,
@@ -461,7 +474,9 @@ def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
     partials must never be collect()ed).  If ``checkpoint`` and
     ``sketch_id`` are given, partial and final states are persisted with
     lineage, and ``SketchCheckpoint.resume`` replays the same merge plan.
+    A key column the ``value_kind`` cast would change raises ValueError.
     """
+    _check_key_column(df, col, value_kind, "inserted")
     partials = None
     if repartition is None:
         partials = _native_parquet_partials(df, sketch, col, value_kind)
@@ -558,6 +573,7 @@ def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
         raise ValueError(f"{sketch.kind} does not support signed updates")
     if not hasattr(sketch, "shard_fold"):
         raise ValueError(f"{sketch.kind} does not support sharded states")
+    _check_key_column(df, col, value_kind, "inserted")
     sign_type = df.schema[sign_col].dataType
     if not isinstance(sign_type, IntegralType):
         raise ValueError(f"sign column {sign_col!r} must be an integer type,"
@@ -754,6 +770,7 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
     Right when the group domain is too large for G × |state| to sit in one
     task's memory, at the price of shuffling the full data once.
     """
+    _check_key_column(df, col, value_kind, "inserted")
     if strategy == "auto":
         strategy, _ = _choose_grouped_strategy(df, sketch, group_col,
                                                group_cardinality)
@@ -802,6 +819,7 @@ def build_grouped_preagg(df: DataFrame, sketch, group_col: str, col: str,
     """
     if sketch.weight_mode is None:
         raise ValueError(f"pre-aggregated grouped build unsupported for {sketch.kind}")
+    _check_key_column(df, col, value_kind, "inserted")
     v = F.explode(F.col(col)) if value_kind == "i32_array" else F.col(col)
     flat = (df.select(F.col(group_col).cast("string").alias("group"), v.alias("v"))
             .where(F.col("v").isNotNull()))  # null keys are not insertable
@@ -829,6 +847,7 @@ def build_grouped_single_writer(df: DataFrame, kind: str, params, group_col: str
     insert = f"insert_{elem_kind}"
     if not hasattr(cls, insert):
         raise ValueError(f"{kind} does not support {value_kind} values")
+    _check_key_column(df, col, value_kind, "inserted")
 
     def build_one(table):
         import pyarrow as pa

@@ -81,7 +81,9 @@ class SketchCheckpoint:
         path = os.path.join(base, f"run={run_id}")
         enriched.write.mode("errorifexists").parquet(path)
         self._set_latest_run(base, run_id)
-        return partials.sparkSession.read.parquet(path).select(*partials.columns)
+        # the schema just written: Spark's inference would be a job
+        return (partials.sparkSession.read.schema(enriched.schema)
+                .parquet(path).select(*partials.columns))
 
     @staticmethod
     def _set_latest_run(base: str, run_id: str) -> None:

@@ -1,7 +1,6 @@
 """Broadcast probe operators — the Exist/estimate side of the lifecycle.
 
-The final sketch blob is broadcast once, and every probe surface takes one
-Arrow path into the numpy kernels:
+Every probe surface takes one Arrow path into the numpy kernels:
 
 * scalar probes (``membership_udf``, ``cms_point_udf``, ``rank_udf`` and
   their SQL registrations) are ``arrow_udf``s built by ONE factory
@@ -13,28 +12,49 @@ Arrow path into the numpy kernels:
   function, fed either by the build's native parquet scan or by the JVM
   (``mapInArrow``).
 
-Deserialization is cached per executor process (keyed by broadcast id) so
-each task reuses the shared state array instead of re-parsing the blob per
-batch — the distributed analog of the reference's in-memory ``Exist`` loop
-(filter/bloom/filter.go:49-61, main.go:39-52 of the Go reference).
+Both ship the sketch through one driver-side registry (``_handle``): a
+blob is digested and broadcast once per Spark application, however many
+probes are made from it.  A ``bytes`` blob seen before is found by
+identity with no digest; an equal blob rebuilt since (or a mutable
+``bytearray``) pays one SHA-1 and reuses the broadcast.  The registry holds
+at most ``_BLOB_BYTES_MAX`` blob bytes, least recently used out first, and
+unpersists what it lets go (lazy DataFrames built from it re-fetch it).
+
+Deserialization is cached per executor process, keyed by the blob's
+content digest, so each task reuses the shared state array instead of
+re-parsing the blob per batch — the distributed analog of the reference's
+in-memory ``Exist`` loop (filter/bloom/filter.go:49-61, main.go:39-52 of
+the Go reference).  That cache holds at most ``_STATE_BYTES_MAX`` state
+bytes, least recently used out first, and always keeps the state just
+fetched.
 """
 
 from __future__ import annotations
 
 import hashlib
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F
-from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import BooleanType, DoubleType, LongType
 
 from ..core.hashing import compact_i32_counts
 from ..sketches.base import SKETCH_KINDS, sketch_for_kind
-from .build import (_arrow_values, _check_key_type, _elem_kind, _keys,
-                    _native_scan)
+from .build import (_arrow_values, _check_key_column, _check_key_type,
+                    _elem_kind, _keys, _native_scan)
 
-_CACHE: dict[tuple, tuple] = {}
+# executor process: content key → (sketch, state, state bytes), least
+# recently used first
+_CACHE: OrderedDict[tuple, tuple] = OrderedDict()
+_STATE_BYTES_MAX = 256 << 20
+
+# driver: (application id, content key) → _Handle, least recently used first
+_HANDLES: OrderedDict[tuple, "_Handle"] = OrderedDict()
+_HANDLES_LOCK = threading.Lock()
+_BLOB_BYTES_MAX = 256 << 20
 
 # probe method → (SQL result type, numpy dtype, result at a NULL key).  NaN
 # becomes SQL NULL on the way out (``from_pandas``).
@@ -48,7 +68,7 @@ _NULL_FILL = {"str": ""}
 
 
 def _cache_key(blob: bytes, kind: str, dkw: dict | None = None) -> tuple:
-    # computed ONCE driver-side at UDF creation; stable across executors.
+    # computed driver-side (``_handle``); stable across executors.
     # cryptographic digest — same-kind sketches with identical params always
     # have identical length, so a weak checksum would be the sole
     # discriminator and a 32-bit collision would silently probe wrong state.
@@ -58,15 +78,63 @@ def _cache_key(blob: bytes, kind: str, dkw: dict | None = None) -> tuple:
             tuple(sorted((dkw or {}).items())))
 
 
+@dataclass
+class _Handle:
+    blob: object  # the caller's latest equal blob: identity hits skip SHA-1
+    bc: object
+
+
+def _handle(spark: SparkSession, blob: bytes, kind: str,
+            deserialize_kwargs: dict | None = None) -> tuple:
+    """→ (broadcast, content key) of ``blob`` probed as ``kind``: one
+    broadcast per distinct content and deserializer per application.  The
+    entry holds the blob, so an identity match cannot alias a freed one;
+    only ``bytes`` match by identity (a bytearray can change in place)."""
+    sc = spark.sparkContext
+    app = sc.applicationId
+    dkw = tuple(sorted((deserialize_kwargs or {}).items()))
+    with _HANDLES_LOCK:
+        # a stopped context's broadcasts are dead: never hand one out
+        for k in [k for k in _HANDLES if k[0] != app]:
+            del _HANDLES[k]
+        if type(blob) is bytes:
+            for (_, key), h in reversed(_HANDLES.items()):
+                if h.blob is blob and key[0] == kind and key[3] == dkw:
+                    _HANDLES.move_to_end((app, key))
+                    return h.bc, key
+        key = _cache_key(blob, kind, deserialize_kwargs)
+        h = _HANDLES.get((app, key))
+        if h is not None:
+            h.blob = blob  # the next call hits by identity; the old blob frees
+            _HANDLES.move_to_end((app, key))
+            return h.bc, key
+        bc = sc.broadcast(blob)
+        if key[1] > _BLOB_BYTES_MAX:
+            return bc, key
+        _HANDLES[(app, key)] = _Handle(blob, bc)
+        held = sum(k[1][1] for k in _HANDLES)
+        while held > _BLOB_BYTES_MAX:
+            (_, old), h = _HANDLES.popitem(last=False)
+            held -= old[1]
+            # never destroy(): a lazy DataFrame built on it may still run
+            h.bc.unpersist()
+        return bc, key
+
+
 def _get(bc, key: tuple):
+    """→ (sketch, state) of the broadcast blob with content key ``key``,
+    deserialized once per executor process while it stays cached."""
     hit = _CACHE.get(key)
-    if hit is None:
-        hit = sketch_for_kind(key[0]).deserialize(bytes(bc.value),
-                                                  **dict(key[3]))
-        if len(_CACHE) > 64:  # bound executor memory across many probes
-            _CACHE.clear()
-        _CACHE[key] = hit
-    return hit
+    if hit is not None:
+        _CACHE.move_to_end(key)
+        return hit[:2]
+    sk, state = sketch_for_kind(key[0]).deserialize(bytes(bc.value),
+                                                    **dict(key[3]))
+    _CACHE[key] = (sk, state, getattr(state, "nbytes", key[1]))
+    held = sum(e[2] for e in _CACHE.values())
+    while held > _STATE_BYTES_MAX and len(_CACHE) > 1:
+        held -= _CACHE.popitem(last=False)[1][2]
+    return sk, state
 
 
 def _probe_method(kind: str, probe: str, key_kind: str | None) -> str:
@@ -89,12 +157,11 @@ def _probe_udf(spark: SparkSession, blob: bytes, kind: str, probe: str,
     method = _probe_method(kind, probe, key_kind)
     rtype, dtype, miss = _PROBES[probe]
     cast = key_kind or "f64"
-    bc = spark.sparkContext.broadcast(blob)
-    key = _cache_key(blob, kind, deserialize_kwargs)
+    bc, key = _handle(spark, blob, kind, deserialize_kwargs)
 
     @F.arrow_udf(rtype)
     def probe_fn(a: pa.Array) -> pa.Array:
-        _check_key_type(a.type, cast)
+        _check_key_type(a.type, cast, "probed")
         sk, state = _get(bc, key)
         nulls = None
         if a.null_count:
@@ -181,9 +248,8 @@ def membership_scan(df, col: str, spark: SparkSession, blob: bytes, kind: str,
     elem_kind = _elem_kind(value_kind)
     method = _probe_method(kind, "contains", elem_kind)
     sel = df.select(col)
-    _check_key_type(to_arrow_type(sel.schema[0].dataType), value_kind)
-    bc = spark.sparkContext.broadcast(blob)
-    key = _cache_key(blob, kind)
+    _check_key_column(df, col, value_kind, "probed")
+    bc, key = _handle(spark, blob, kind)
 
     def scan(batches):
         contains = state = None

@@ -221,6 +221,17 @@ def test_deserialize_refuses_bytes_past_the_layout(kind):
     assert back.serialize(state) == blob
 
 
+@pytest.mark.parametrize("kind", KINDS)
+def test_deserialize_refuses_a_truncated_blob(kind):
+    """A filled blob cut anywhere — to nothing, inside its header, one byte
+    short — raises ValueError, never struct.error."""
+    sk = _sketch(kind)
+    blob = sk.serialize(_fill(sk, _values()))
+    for cut in (0, 5, len(blob) - 1):
+        with pytest.raises(ValueError, match="inside its layout"):
+            SKETCH_KINDS[kind].deserialize(blob[:cut])
+
+
 # kinds whose serialized length depends on params alone
 FIXED_SIZE = {"bloom", "blocked_bloom", "cbloom", "cms", "countsketch",
               "cuckoo"}

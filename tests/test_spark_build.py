@@ -381,6 +381,38 @@ def test_probe_refuses_a_key_column_the_cast_would_change(spark):
         F.sum("n_member")).collect()[0][0] == 1
 
 
+@pytest.mark.parametrize("entry", [
+    "build_partials", "build_sketch", "build_sketch_preagg", "build_grouped",
+    "build_grouped_preagg", "build_grouped_single_writer",
+    "build_delta_shard_partials"])
+def test_build_refuses_a_key_column_the_cast_would_change(spark, entry):
+    """Every build entry point that takes a ``value_kind`` checks the key
+    column's type at call time, as the probes do: a bigint inserted as i32
+    (2**32 + 5 folded as 5), a string as i32 ("12" folded as 12) and an
+    integer as str raise ValueError before any job runs."""
+    from bloom_filter_spark.operators import build as build_mod
+    from bloom_filter_spark.sketches import CountingBloomSketch
+    df = spark.createDataFrame([("g", 2**32 + 5, "12", 12, 1)],
+                               "g string, big long, text string, small int, "
+                               "sign int")
+    bloom = BloomSketch(BloomParams(n=1000, p=0.01))
+    fn = getattr(build_mod, entry)
+    call = {
+        "build_grouped_single_writer": lambda col, vk: fn(
+            df, "cuckoo", CuckooParams(n=64, load_factor=0.8), "g", col, vk),
+        "build_delta_shard_partials": lambda col, vk: fn(
+            df, CountingBloomSketch(BloomParams(n=1000, p=0.01)), col,
+            "sign", vk),
+    }.get(entry)
+    if call is None:
+        grouped = entry.startswith("build_grouped")
+        call = (lambda col, vk: fn(df, bloom, "g", col, vk)) if grouped else (
+            lambda col, vk: fn(df, bloom, col, vk))
+    for col, value_kind in (("big", "i32"), ("text", "i32"), ("small", "str")):
+        with pytest.raises(ValueError, match="cannot be inserted"):
+            call(col, value_kind)
+
+
 def test_membership_scan_scalar_and_str(spark, sf_small, bloom_blob):
     from bloom_filter_spark.operators import membership_scan
     sketch, blob = bloom_blob
@@ -929,6 +961,31 @@ def test_resume_runs_one_job_before_its_merge(spark, tokens_df, tmp_path,
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_write_partials_runs_one_job(spark, tokens_df, tmp_path):
+    """write_partials runs the write and nothing else: the read-back takes
+    the schema it just wrote instead of an inference job.  AQE is off, so
+    one action is one job; the listener bus is drained before the jobs are
+    read."""
+    sketch = BloomSketch(BloomParams(n=60_000, p=0.01))
+    partials = build_partials(tokens_df, sketch, "tokens", "i32_array",
+                              repartition=8)
+    ck = SketchCheckpoint(str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("write_partials_one_job", "write_partials")
+        back = ck.write_partials("w", sketch, partials)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(
+        "write_partials_one_job")) == 1
+    assert back.columns == partials.columns
+    assert sorted(back.collect()) == sorted(partials.collect())
 
 
 def test_sharded_merge_routes_by_the_driver_budget(spark, tokens_df,
