@@ -14,8 +14,8 @@ on this host the allocation storm makes the exchange anti-scale (4.8 s at
 local[4] → 36.7 s at local[32] for a pass-through).  The Arrow path reads
 the list column's flat values buffer zero-copy — one numpy view per batch.
 
-Every partial build — JVM-fed, native parquet scan, pre-aggregated,
-changelog — runs through ONE fold core (``_fold_fn``): fold an Arrow batch
+Every partial build — JVM-fed, native parquet scan, changelog — runs
+through ONE fold core (``_fold_fn``): fold an Arrow batch
 iterator into ``sketch.empty()`` with a per-batch step, emit the single
 (src, n_items, state) row.  The one changelog fold is the same
 loop with one start/emit hook: it starts from the sketch's own sparse
@@ -25,19 +25,9 @@ parquet scan natively.  Every grouped build runs through one phase 1
 (``_grouped_phase1_fn``); every merge is merge.py's one keyed router or
 its one Arrow level.
 What a sketch IS — whether its state is a pure function of the input multiset,
-how it takes weights, how long its params header is — is declared on the
-sketch class (sketches/base.py); the operators route on those declarations,
-never on kind names.
-
-``build_sketch_preagg`` is the second scale lever: for draws from a modest
-key domain (tokens from a ~50k vocab), a JVM-side partial aggregation
-(explode → groupBy(key).count(), Tungsten hash agg with map-side combine)
-collapses the stream BEFORE it ever reaches Python — the Python workers see
-only (distinct key, weight) pairs (~50k/partition instead of millions), and
-``update_weighted`` preserves exactness for every sketch whose
-``weight_mode`` is "insensitive" or "additive".  For high-cardinality keys
-the direct path wins (no shuffle at all); the choice is a flag, not a
-heuristic.
+how long its params header is — is declared on the sketch class
+(sketches/base.py); the operators route on those declarations, never on
+kind names.
 
 Grouped builds ("one sketch per source") are the skew-prone case — the
 fixture's zipfian source weights put 45% of rows in one group.  The north
@@ -81,13 +71,18 @@ def _keys(values, value_kind: str):
 
 
 def _check_key_type(t, value_kind: str, use: str) -> None:
-    """ValueError for a key column of Arrow type ``t`` (a list's element
-    type) that the ``value_kind`` cast would silently change: text read as
+    """ValueError for a key column of Arrow type ``t`` that the
+    ``value_kind`` cast would silently change or cannot read: a list column
+    under any kind but i32_array or a scalar column under it, text read as
     numbers ("12" → 12), integers wider than the kind (2**32 + 5 → 5 as
     i32) or integers hashed as strings.  Float columns pass.  ``use``
     names the side in the message: "inserted" or "probed"."""
     import pyarrow as pa
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
+    is_list = pa.types.is_list(t) or pa.types.is_large_list(t)
+    if is_list != (value_kind == "i32_array"):
+        raise ValueError(f"a {t} key column cannot be {use} as {value_kind} "
+                         "keys: i32_array takes list columns, and only it")
+    if is_list:
         t = t.value_type
     dtype = _DTYPES.get(_elem_kind(value_kind))
     text = pa.types.is_string(t) or pa.types.is_large_string(t)
@@ -174,25 +169,12 @@ def _fold_fn(sketch, step, out=None):
 
 
 def _plain_step(sketch, value_kind: str):
-    """Fold step: unweighted update from column 0."""
+    """Fold step: ``sketch.update_<kind>`` of column 0."""
     elem_kind = _elem_kind(value_kind)
 
     def step(state, b):
         return _update(sketch, state, _arrow_values(b.column(0), value_kind),
                        elem_kind)
-    return step
-
-
-def _weighted_step(sketch, elem_kind: str):
-    """Fold step: (distinct value, count) rows → ``update_weighted``;
-    n_items is the total weight (every ingested item)."""
-
-    def step(state, b):
-        vals = _arrow_values(b.column(0), elem_kind)
-        w = b.column(1).to_numpy(zero_copy_only=False)
-        if len(vals):
-            sketch.update_weighted(state, vals, w, elem_kind)
-        return int(w.sum())
     return step
 
 
@@ -431,37 +413,6 @@ def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array
                           PARTIAL_SCHEMA)
 
 
-def build_sketch_preagg(df: DataFrame, sketch, col: str,
-                        value_kind: str = "i32_array") -> tuple[bytes, int]:
-    """JVM-pre-aggregated build: explode → Tungsten partial groupBy(key) →
-    ``update_weighted`` over (distinct key, count) pairs.
-
-    Exact for every sketch whose ``weight_mode`` is "insensitive" (a key's
-    multiplicity never matters) or "additive" (w copies ≡ one value of
-    weight w); ``weight_mode=None`` raises ValueError.  The Python boundary
-    sees only the distinct domain — for zipfian token streams that is a
-    ~3000× reduction.  n_items still counts every ingested token (sum of
-    weights).
-    """
-    if sketch.weight_mode is None:
-        raise ValueError(f"pre-aggregated build unsupported for {sketch.kind}")
-    _check_key_column(df, col, value_kind, "inserted")
-    # The JVM pre-aggregation exists to shrink the JVM→Python boundary.
-    # Under a native parquet scan there IS no boundary, and a multiset-pure
-    # sketch's direct fold is bit-identical to the weighted one (same bits,
-    # registers or counter sums; n_items still the total ingested count) —
-    # _native_parquet_partials takes exactly those sketches.
-    partials = _native_parquet_partials(df, sketch, col, value_kind)
-    if partials is not None:
-        return merge_partials_auto(partials, sketch)
-    v = F.explode(F.col(col)) if value_kind == "i32_array" else F.col(col)
-    counts = (df.select(v.alias("v")).where(F.col("v").isNotNull())
-              .groupBy("v").agg(F.count("*").alias("cnt")))
-    step = _weighted_step(sketch, _elem_kind(value_kind))
-    return merge_partials_auto(
-        counts.mapInArrow(_fold_fn(sketch, step), PARTIAL_SCHEMA), sketch)
-
-
 def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
                  repartition: int | None = None, checkpoint=None,
                  sketch_id: str | None = None) -> tuple[bytes, int]:
@@ -483,6 +434,12 @@ def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
     if partials is None:
         partials = build_partials(df, sketch, col, value_kind, repartition)
     return _merge_checkpointed(df, partials, sketch, checkpoint, sketch_id)
+
+
+# An alias kept for existing callers: the fold's in-task duplicate collapse
+# does the work of a JVM explode → groupBy(key).count() pre-aggregation
+# without its shuffle, so every build takes the one route.
+build_sketch_preagg = build_sketch
 
 
 def _merge_checkpointed(df: DataFrame, partials: DataFrame, sketch,
@@ -668,7 +625,7 @@ def _native_grouped_partials(df: DataFrame, sketch, group_col: str, col: str,
 
 def _grouped_phase1_fn(sketch, step):
     """Grouped phase 1 shared by every grouped route (map-side, salted,
-    native scan, JVM pre-aggregation) over (group, *step columns) batches:
+    native scan) over (group, *step columns) batches:
     dictionary-encode the group labels (a null label is its own group, as
     in Spark's groupBy) and fold each group's rows into that group's state
     through the same ``step`` the ungrouped fold core runs — no pandas
@@ -803,32 +760,6 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
     partials = shuffled.drop("salt").mapInArrow(phase1, GROUPED_SCHEMA)
     # a group's rows hash into at most n_salts (group, salt) partitions
     return _merge_grouped(partials, sketch, n_salts)
-
-
-def build_grouped_preagg(df: DataFrame, sketch, group_col: str, col: str,
-                         value_kind: str = "i32_array") -> DataFrame:
-    """Grouped build through a JVM partial aggregation — the skew-proof path
-    for modest key domains.
-
-    explode → groupBy(group, key).count(): the shuffle keys are (group, key)
-    PAIRS, uniformly hashed, so a 45 %-heavy group spreads over the whole
-    cluster with no salting at all; Python then sees only the per-group
-    distinct domain with weights.  Exact for every sketch whose
-    ``weight_mode`` is "insensitive" or "additive"; None raises ValueError.
-    → DataFrame(group string, n_items long, state binary).
-    """
-    if sketch.weight_mode is None:
-        raise ValueError(f"pre-aggregated grouped build unsupported for {sketch.kind}")
-    _check_key_column(df, col, value_kind, "inserted")
-    v = F.explode(F.col(col)) if value_kind == "i32_array" else F.col(col)
-    flat = (df.select(F.col(group_col).cast("string").alias("group"), v.alias("v"))
-            .where(F.col("v").isNotNull()))  # null keys are not insertable
-    counts = flat.groupBy("group", "v").agg(F.count("*").alias("cnt"))
-    step = _weighted_step(sketch, _elem_kind(value_kind))
-    partials = counts.mapInArrow(_grouped_phase1_fn(sketch, step),
-                                 GROUPED_SCHEMA)
-    return _merge_grouped(partials, sketch, int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
 
 
 def build_grouped_single_writer(df: DataFrame, kind: str, params, group_col: str,

@@ -25,7 +25,7 @@ import numpy as np
 
 from ..core import hashing, xxh3
 from ..core.serde import Reader, pack_u32, pack_u64
-from .base import hashed_update_weighted, register
+from .base import register
 
 _LN2 = math.log(2.0)
 
@@ -64,7 +64,6 @@ class BlockedBloomParams:
 class BlockedBloomSketch:
     kind = "blocked_bloom"
     multiset_pure = True
-    weight_mode = "insensitive"
 
     def __init__(self, params: BlockedBloomParams):
         self.params = params
@@ -105,6 +104,11 @@ class BlockedBloomSketch:
         hashing.set_bits(state, pos.ravel(), self.params.m)
 
     def update_i32(self, state: np.ndarray, values: np.ndarray) -> None:
+        # bits ignore multiplicity: hash only the distinct keys (same
+        # collapse as BloomSketch.update_i32, bit-identical state)
+        packed = hashing.compact_i32_counts(values)
+        if packed is not None:
+            values = packed[0]
         lo, hi = self._two_hashes(np.asarray(values, np.int32), "i32")
         self._update(state, self._positions(lo, hi))
 
@@ -115,8 +119,6 @@ class BlockedBloomSketch:
     def update_str(self, state: np.ndarray, values) -> None:
         lo, hi = self._two_hashes(values, "str")
         self._update(state, self._positions(lo, hi))
-
-    update_weighted = hashed_update_weighted
 
     def _contains(self, state: np.ndarray, pos: np.ndarray) -> np.ndarray:
         words = state[(pos >> np.uint64(6)).astype(np.int64)]

@@ -31,7 +31,7 @@ import numpy as np
 
 from ..core import hashing, xxh3
 from ..core.serde import Reader, pack_u32, pack_u64
-from .base import hashed_update_weighted, register
+from .base import register
 
 _LN2 = math.log(2.0)
 
@@ -79,7 +79,6 @@ class BloomParams:
 class BloomSketch:
     kind = "bloom"
     multiset_pure = True
-    weight_mode = "insensitive"
 
     def __init__(self, params: BloomParams):
         self.params = params
@@ -150,8 +149,6 @@ class BloomSketch:
 
     def update_str(self, state: np.ndarray, values) -> None:
         self._update_hashes(state, self._hash(values, "str"))
-
-    update_weighted = hashed_update_weighted
 
     # -- probe ------------------------------------------------------------
     def _contains_hashes(self, state: np.ndarray, h: np.ndarray) -> np.ndarray:

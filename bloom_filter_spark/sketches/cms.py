@@ -24,7 +24,7 @@ import numpy as np
 
 from ..core import hashing
 from ..core.serde import Reader, pack_u32, pack_u64, pack_f64
-from .base import hashed_update_weighted, register
+from .base import register
 
 
 @dataclass(frozen=True)
@@ -53,7 +53,6 @@ class CMSParams:
 @register
 class CMSSketch:
     kind = "cms"
-    weight_mode = "additive"
 
     # conservative update raises cells against the running estimate, so
     # its state depends on how the stream is batched
@@ -131,8 +130,6 @@ class CMSSketch:
 
     def update_str(self, state, values, weights=None) -> None:
         self._update(state, values, "str", weights)
-
-    update_weighted = hashed_update_weighted
 
     def _point(self, state, h: np.ndarray) -> np.ndarray:
         ests = np.stack([state[j, self._row_idx_from(h, j)]

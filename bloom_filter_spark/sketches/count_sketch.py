@@ -36,7 +36,7 @@ import numpy as np
 
 from ..core import hashing
 from ..core.serde import Reader, pack_u32, pack_u64
-from .base import hashed_update_weighted, register
+from .base import register
 
 _SIGN_SEED_MIX = 0x9E3779B97F4A7C15  # golden-ratio odd constant
 
@@ -59,7 +59,6 @@ class CountSketchParams:
 class CountSketch:
     kind = "countsketch"
     multiset_pure = True
-    weight_mode = "additive"
 
     def __init__(self, params: CountSketchParams):
         self.params = params
@@ -154,8 +153,6 @@ class CountSketch:
 
     def update_str(self, state, values, weights=None) -> None:
         self._update(state, values, "str", weights)
-
-    update_weighted = hashed_update_weighted
 
     def _point(self, state, h: np.ndarray, hs: np.ndarray) -> np.ndarray:
         p = self.params

@@ -53,7 +53,6 @@ SHARD_TARGET_BYTES = 8 << 20
 class CountingBloomSketch:
     kind = "cbloom"
     multiset_pure = True
-    weight_mode = None
 
     def __init__(self, params: BloomParams):
         # _hash below is splitmix64-only; silently accepting an xxh3-family

@@ -69,7 +69,6 @@ class CuckooFilter:
     kind = "cuckoo"
     # no union merge and a sequential eviction walk: single-writer only
     multiset_pure = False
-    weight_mode = None
 
     def __init__(self, params: CuckooParams):
         self.params = params

@@ -107,7 +107,6 @@ def _fold(keys_a, cnts_a, keys_b, cnts_b):
 class DDSketch:
     kind = "ddsketch"
     multiset_pure = True
-    weight_mode = "additive"
 
     def __init__(self, params: DDSketchParams):
         self.params = params
@@ -140,17 +139,12 @@ class DDSketch:
         cnts[0] = spill
         return keys, cnts, True
 
-    def update(self, state: DDState, values, weights=None) -> None:
+    def update(self, state: DDState, values) -> None:
         # NaN AND ±inf are dropped: log(inf) int64-casts to INT64_MIN,
         # which would file an infinite value at the wrong EXTREME of the
         # distribution (observed: +inf reported as the minimum)
         v = np.asarray(values, np.float64)
-        keep = np.isfinite(v)
-        w = None if weights is None else np.asarray(weights, np.int64)
-        if w is not None:
-            keep &= w > 0
-            w = w[keep]
-        v = v[keep]
+        v = v[np.isfinite(v)]
         if v.size == 0:
             return
         mv = self.params.min_value
@@ -158,9 +152,7 @@ class DDSketch:
             if not sel.any():
                 continue
             mag = v[sel] if sign == "pos" else -v[sel]
-            uk, inv = np.unique(self._keys_of(mag), return_inverse=True)
-            cnt = np.zeros(uk.size, np.int64)
-            np.add.at(cnt, inv, 1 if w is None else w[sel])
+            uk, cnt = np.unique(self._keys_of(mag), return_counts=True)
             if sign == "pos":
                 state.pos_keys, state.pos_cnts, did = self._collapse(
                     *_fold(state.pos_keys, state.pos_cnts, uk, cnt), False)
@@ -168,17 +160,11 @@ class DDSketch:
                 state.neg_keys, state.neg_cnts, did = self._collapse(
                     *_fold(state.neg_keys, state.neg_cnts, uk, cnt), True)
             state.collapsed |= did
-        zsel = np.abs(v) < mv
-        state.zero += (int(zsel.sum()) if w is None
-                       else int(w[zsel].sum()))
-        state.n += int(v.size if w is None else w.sum())
+        state.zero += int((np.abs(v) < mv).sum())
+        state.n += int(v.size)
 
     update_i32 = update
     update_f64 = update
-
-    def update_weighted(self, state: DDState, values, weights,
-                        value_kind: str = "f64") -> None:
-        self.update(state, values, weights)
 
     # -- merge ---------------------------------------------------------------
     def merge(self, a: DDState, b: DDState) -> DDState:

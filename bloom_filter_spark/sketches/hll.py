@@ -19,7 +19,7 @@ import numpy as np
 
 from ..core import hashing
 from ..core.serde import Reader, pack_u32, pack_u64
-from .base import hashed_update_weighted, register
+from .base import register
 
 
 @dataclass(frozen=True)
@@ -52,7 +52,6 @@ def _alpha(m: int) -> float:
 class HLLSketch:
     kind = "hll"
     multiset_pure = True
-    weight_mode = "insensitive"
 
     def __init__(self, params: HLLParams):
         self.params = params
@@ -81,8 +80,6 @@ class HLLSketch:
 
     def update_str(self, state, values) -> None:
         self._update_hashes(state, hashing.hash64_str(values, self.params.seed))
-
-    update_weighted = hashed_update_weighted
 
     def merge(self, a, b) -> np.ndarray:
         return np.maximum(a, b)

@@ -59,7 +59,6 @@ class KLLSketch:
     kind = "kll"
     # compaction depends on the order values arrive in
     multiset_pure = False
-    weight_mode = "additive"
 
     def __init__(self, params: KLLParams):
         self.params = params
@@ -87,29 +86,6 @@ class KLLSketch:
 
     update_i32 = update
     update_f64 = update
-
-    def update_weighted(self, state: KLLState, values: np.ndarray,
-                        weights: np.ndarray, value_kind: str = "f64") -> None:
-        """Insert each value with an integer weight — equivalent rank
-        semantics to inserting ``w`` copies: weight w decomposes in binary
-        and the value enters compactor level l once per set bit 2^l (an
-        item at level l carries weight 2^l by construction).  Enables the
-        JVM-pre-aggregated build path for KLL."""
-        vals = np.asarray(values, np.float64)
-        w = np.asarray(weights, np.int64)
-        keep = (~np.isnan(vals)) & (w > 0)
-        vals, w = vals[keep], w[keep]
-        if vals.size == 0:
-            return
-        max_bit = int(w.max()).bit_length()
-        while len(state.levels) < max_bit:
-            state.levels.append(np.empty(0, np.float64))
-        for l in range(max_bit):
-            mask = (w >> l) & 1 == 1
-            if mask.any():
-                state.levels[l] = np.concatenate([state.levels[l], vals[mask]])
-        state.n += int(w.sum())
-        self._compress(state)
 
     def _compress(self, state: KLLState) -> None:
         while sum(a.size for a in state.levels) > self._total_cap(len(state.levels)):

@@ -60,7 +60,6 @@ class KMVSketch:
     kind = "kmv"
     # the state is the k smallest distinct hashes of the input
     multiset_pure = True
-    weight_mode = None
 
     def __init__(self, params: KMVParams):
         self.params = params

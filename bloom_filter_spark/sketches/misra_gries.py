@@ -53,7 +53,6 @@ class MGSketch:
     kind = "mg"
     # the k-th-count decrement depends on the order keys arrive in
     multiset_pure = False
-    weight_mode = "additive"
 
     def __init__(self, params: MGParams):
         self.params = params
@@ -91,20 +90,6 @@ class MGSketch:
         state.n += int(vals.size)
 
     update_i32 = update_i64
-
-    def update_weighted(self, state: MGState, values: np.ndarray,
-                        weights: np.ndarray, value_kind: str = "i64") -> None:
-        vals = np.asarray(values, np.int64)
-        w = np.asarray(weights, np.int64)
-        keep = w > 0
-        vals, w = vals[keep], w[keep]
-        if vals.size == 0:
-            return
-        order = np.argsort(vals, kind="stable")
-        v_sorted, w_sorted = vals[order], w[order]
-        starts = np.flatnonzero(np.r_[True, v_sorted[1:] != v_sorted[:-1]])
-        self._fold(state, v_sorted[starts], np.add.reduceat(w_sorted, starts))
-        state.n += int(w.sum())
 
     def merge(self, a: MGState, b: MGState) -> MGState:
         out = MGState(a.keys.copy(), a.counts.copy(), a.n + b.n,

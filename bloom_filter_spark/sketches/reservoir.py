@@ -48,9 +48,8 @@ class ReservoirState:
 @register
 class ReservoirSketch:
     kind = "reservoir"
-    # a seeded random draw over arrival order; no weighted equivalent
+    # a seeded random draw over arrival order
     multiset_pure = False
-    weight_mode = None
 
     def __init__(self, params: ReservoirParams):
         self.params = params

@@ -51,7 +51,6 @@ class TDigestSketch:
     kind = "tdigest"
     # centroid boundaries depend on the order values are compressed in
     multiset_pure = False
-    weight_mode = "additive"
 
     def __init__(self, params: TDigestParams):
         self.params = params
@@ -79,30 +78,21 @@ class TDigestSketch:
         new_x = np.add.reduceat(w * x, starts) / new_w
         return new_x, new_w
 
-    def update(self, state: TDigestState, values: np.ndarray,
-               weights=None) -> None:
-        """Insert values (NaN dropped); ``weights`` gives each one an integer
-        multiplicity (rows with weight ≤ 0 dropped), else 1."""
+    def update(self, state: TDigestState, values: np.ndarray) -> None:
+        """Insert values (NaN dropped), each with weight 1."""
         vals = np.asarray(values, np.float64)
-        w = (np.ones(vals.size, np.int64) if weights is None
-             else np.asarray(weights, np.int64))
-        keep = ~np.isnan(vals) & (w > 0)
-        vals, w = vals[keep], w[keep]
+        vals = vals[~np.isnan(vals)]
         if vals.size == 0:
             return
         state.vmin = min(state.vmin, float(vals.min()))
         state.vmax = max(state.vmax, float(vals.max()))
-        state.n += int(w.sum())
+        state.n += int(vals.size)
         means = np.concatenate([state.means, vals])
-        weights = np.concatenate([state.weights, w.astype(np.float64)])
+        weights = np.concatenate([state.weights, np.ones(vals.size)])
         state.means, state.weights = self._compress(means, weights)
 
     update_i32 = update
     update_f64 = update
-
-    def update_weighted(self, state: TDigestState, values, weights,
-                        value_kind: str = "f64") -> None:
-        self.update(state, values, weights)
 
     def merge(self, a: TDigestState, b: TDigestState) -> TDigestState:
         means = np.concatenate([a.means, b.means])

@@ -4,7 +4,7 @@
     spark-submit --py-files sketchlib.zip jobs/job_build.py \
         --input /data/tokens_parquet --col tokens --value-kind i32_array \
         --kind bloom --n 65536 --p 0.01 \
-        --checkpoint /data/ckpt --sketch-id bloom_tokens_v1 [--pre-aggregate]
+        --checkpoint /data/ckpt --sketch-id bloom_tokens_v1
 
 Prints one JSON line with the build metrics (the driver-side contract the
 north rule's lineage/metrics requirement hangs off; full state + partials
@@ -58,8 +58,6 @@ def main() -> None:
     ap.add_argument("--compression", type=float, default=200.0)
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--sketch-id", default=None)
-    ap.add_argument("--pre-aggregate", action="store_true",
-                    help="JVM partial-agg path (small key domains)")
     ap.add_argument("--group-by", default=None,
                     help="build one sketch per value of this column")
     ap.add_argument("--n-salts", type=int, default=16)
@@ -71,7 +69,6 @@ def main() -> None:
 
     from bloom_filter_spark.operators import (
         SketchCheckpoint, build_grouped, build_sketch)
-    from bloom_filter_spark.operators.build import build_sketch_preagg
     from bloom_filter_spark.session import get_spark
 
     spark = get_spark(f"sketch-build-{args.kind}")
@@ -91,10 +88,6 @@ def main() -> None:
             for r in rows:
                 ck.write_final(f"{args.sketch_id}/{r.group}", sketch,
                                bytes(r.state), int(r.n_items))
-    elif args.pre_aggregate:
-        blob, n_items = build_sketch_preagg(df, sketch, args.col, args.value_kind)
-        if ck and args.sketch_id:
-            ck.write_final(args.sketch_id, sketch, blob, n_items)
     else:
         blob, n_items = build_sketch(df, sketch, args.col, args.value_kind,
                                      checkpoint=ck, sketch_id=args.sketch_id)

@@ -79,14 +79,6 @@ def test_serde_roundtrip_and_params():
     assert st2.n == 7
 
 
-def test_weighted_equals_repeated():
-    sk = DDSketch(DDSketchParams())
-    a, b = sk.empty(), sk.empty()
-    sk.update_weighted(a, np.array([2.0, 5.0, -3.0]), np.array([3, 2, 4]))
-    sk.update(b, np.array([2.0] * 3 + [5.0] * 2 + [-3.0] * 4))
-    assert sk.serialize(a) == sk.serialize(b)
-
-
 def test_collapse_keeps_upper_quantiles():
     """Over max_bins the LOWEST buckets collapse; the paper's guarantee:
     quantiles whose rank falls ABOVE the collapsed mass stay α-accurate.
@@ -195,34 +187,3 @@ def test_bracket_matches_exact_rank():
         assert lo <= sv[r] <= hi            # the distributed-check contract
         assert int((sv < lo).sum()) <= r
         assert int((sv <= hi).sum()) >= r + 1
-
-
-@pytest.mark.usefixtures("spark")
-def test_preagg_build_bit_equals_direct(spark, sf_small):
-    """DDSketch is weight-additive-exact, so the distinct-domain
-    pre-aggregated build must produce the IDENTICAL blob as the direct
-    partials path (the property the supports_weights dispatch claims)."""
-    from bloom_filter_spark.operators import build_sketch, build_sketch_preagg
-    sk = DDSketch(DDSketchParams(alpha=0.01))
-    toks = spark.read.parquet(f"{sf_small}/tokens.parquet")
-    direct, n1 = build_sketch(toks, sk, "n_tok", "f64")
-    pre, n2 = build_sketch_preagg(toks, sk, "n_tok", "f64")
-    assert n1 == n2
-    assert direct == pre
-
-
-@pytest.mark.usefixtures("spark")
-def test_grouped_preagg_bit_equals_mapside(spark, sf_small):
-    """Grouped pre-aggregated build ≡ grouped map-side build, blob-for-blob
-    (both orders collapse to the same sorted key-count arrays)."""
-    from bloom_filter_spark.operators import build_grouped
-    from bloom_filter_spark.operators.build import build_grouped_preagg
-    sk = DDSketch(DDSketchParams(alpha=0.01))
-    toks = spark.read.parquet(f"{sf_small}/tokens.parquet")
-    a = {r.group: bytes(r.state) for r in build_grouped(
-        toks.selectExpr("source as group", "n_tok as v"), sk, "group", "v",
-        "f64", strategy="mapside").collect()}
-    b = {r.group: bytes(r.state) for r in build_grouped_preagg(
-        toks.selectExpr("source as group", "n_tok as v"), sk, "group", "v",
-        "f64").collect()}
-    assert a == b and len(a) >= 2

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from bloom_filter_spark.operators import (
     build_delta_shard_partials, build_delta_sketch,
-    build_grouped, build_sketch, build_sketch_preagg, membership_scan)
+    build_grouped, build_sketch, membership_scan)
 from bloom_filter_spark.operators.build import (
     _attr_through_projects, _native_grouped_partials, _native_parquet_partials)
 from bloom_filter_spark.sketches import (
@@ -71,14 +71,6 @@ def test_native_build_bit_identical(tokens, sketch, col, value_kind):
     if isinstance(sketch, DDSketch):  # one store collapses, one does not
         _, state = DDSketch.deserialize(blob_native)
         assert state.collapsed == (sketch.params.max_bins == 16)
-
-
-def test_native_preagg_reroute_matches_direct(tokens):
-    sk = lambda: BloomSketch(BloomParams(n=4096, p=0.01))  # noqa: E731
-    blob_pre, n_pre = build_sketch_preagg(tokens, sk(), "tokens", "i32_array")
-    blob_dir, n_dir = build_sketch(tokens, sk(), "tokens", "i32_array",
-                                   repartition=5)
-    assert blob_pre == blob_dir and n_pre == n_dir
 
 
 def test_native_grouped_bit_identical(tokens):

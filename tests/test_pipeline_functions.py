@@ -285,42 +285,6 @@ def test_bloom_prefilter_join_identical_results(spark):
     assert got == want
 
 
-def test_kll_weighted_equals_repeated_semantics():
-    from bloom_filter_spark.sketches import KLLParams, KLLSketch
-    sk = KLLSketch(KLLParams(k=200))
-    rng = np.random.default_rng(11)
-    vals = rng.uniform(0, 100, 2000)
-    weights = rng.integers(1, 50, 2000)
-    ws = sk.empty()
-    sk.update_weighted(ws, vals, weights)
-    assert ws.n == int(weights.sum())
-    expanded = np.repeat(vals, weights)
-    sv = np.sort(expanded)
-    qs = np.array([0.1, 0.5, 0.9])
-    est = sk.quantiles(ws, qs)
-    ranks = np.searchsorted(sv, est, side="right") / sv.size
-    assert np.abs(ranks - qs).max() <= sk.params.rank_error * 2
-
-
-def test_kll_preagg_build(spark):
-    from bloom_filter_spark.operators import build_sketch, build_sketch_preagg
-    from bloom_filter_spark.sketches import KLLParams, KLLSketch
-    from bloom_filter_spark.sources import ensure_fixtures
-    toks = spark.read.parquet(f"{ensure_fixtures('sf0.001')}/tokens.parquet")
-    sk = KLLSketch(KLLParams(k=200))
-    pre, n = build_sketch_preagg(toks, sk, "tokens", "i32_array")
-    direct, n2 = build_sketch(toks, sk, "tokens", "i32_array")
-    assert n == n2
-    _, ps = KLLSketch.deserialize(pre)
-    _, ds = KLLSketch.deserialize(direct)
-    assert ps.n == ds.n
-    import numpy as np2
-    q1 = sk.quantiles(ps, [0.25, 0.5, 0.75])
-    q2 = sk.quantiles(ds, [0.25, 0.5, 0.75])
-    # both within bound of each other (different compaction randomness)
-    assert np2.abs(np2.asarray(q1) - np2.asarray(q2)).max() <= 60
-
-
 def test_repartition_by_quantiles_balances_skew(spark):
     from bloom_filter_spark.functions.joins import repartition_by_quantiles
     from bloom_filter_spark.sources import ensure_fixtures

@@ -3,7 +3,7 @@
 These lock the Catalyst behaviors the engine's 100 TB story depends on:
 filter pushdown reaching the parquet scan, column pruning (narrow
 ReadSchema) in front of every UDF, broadcast joins for dimensions, and
-map-side partial aggregation in the pre-aggregated build.
+shuffle-free build and probe plans.
 """
 
 from pyspark.sql import functions as F
@@ -36,16 +36,6 @@ def test_dimension_joins_broadcast(spark):
     p = _plan(q)
     assert p.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin" not in p
-
-
-def test_preagg_has_mapside_partial_aggregation(spark, sf_small):
-    flat = (spark.read.parquet(f"{sf_small}/tokens.parquet")
-            .select(F.explode("tokens").alias("v")))
-    counts = flat.groupBy("v").agg(F.count("*").alias("cnt"))
-    p = _plan(counts)
-    # two HashAggregates (partial below the exchange, final above)
-    assert p.count("HashAggregate") >= 2
-    assert "Exchange hashpartitioning(v" in p
 
 
 def test_probe_plan_is_single_stage(spark, sf_small):

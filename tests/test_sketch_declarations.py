@@ -1,7 +1,6 @@
-"""Sketch declarations (multiset_pure, weight_mode, header_len,
-state_bytes_max, update_weighted) hold for every registered kind, and the
-operators route on them instead of on kind names.  No Spark session
-needed."""
+"""Sketch declarations (multiset_pure, header_len, state_bytes_max) hold
+for every registered kind, and the operators route on them instead of on
+kind names.  No Spark session needed."""
 
 from __future__ import annotations
 
@@ -43,19 +42,19 @@ PARAMS = {
 # the routing the operators had when these facts lived in kind tuples, with
 # the three order-free kinds (ddsketch, cbloom, kmv) since declared pure
 EXPECTED = {
-    "bloom": (True, "insensitive"),
-    "blocked_bloom": (True, "insensitive"),
-    "hll": (True, "insensitive"),
-    "cms": (True, "additive"),
-    "countsketch": (True, "additive"),
-    "kll": (False, "additive"),
-    "tdigest": (False, "additive"),
-    "mg": (False, "additive"),
-    "ddsketch": (True, "additive"),
-    "cbloom": (True, None),
-    "cuckoo": (False, None),
-    "reservoir": (False, None),
-    "kmv": (True, None),
+    "bloom": True,
+    "blocked_bloom": True,
+    "hll": True,
+    "cms": True,
+    "countsketch": True,
+    "kll": False,
+    "tdigest": False,
+    "mg": False,
+    "ddsketch": True,
+    "cbloom": True,
+    "cuckoo": False,
+    "reservoir": False,
+    "kmv": True,
 }
 
 KINDS = sorted(SKETCH_KINDS)
@@ -78,7 +77,6 @@ def _values(seed=0, n=5000):
 
 
 PURE = [k for k in KINDS if _sketch(k).multiset_pure]
-WEIGHTED_PURE = [k for k in PURE if _sketch(k).weight_mode is not None]
 
 
 def test_every_registered_kind_has_params():
@@ -88,16 +86,12 @@ def test_every_registered_kind_has_params():
 @pytest.mark.parametrize("kind", KINDS)
 def test_declares_all_three_attributes(kind):
     cls = SKETCH_KINDS[kind]
-    for attr in ("multiset_pure", "weight_mode", "header_len",
-                 "state_bytes_max"):
+    for attr in ("multiset_pure", "header_len", "state_bytes_max"):
         assert hasattr(cls, attr), f"{kind} lacks {attr}"
     sk = _sketch(kind)
     assert isinstance(sk.multiset_pure, bool)
-    assert sk.weight_mode in ("insensitive", "additive", None)
     assert isinstance(cls.header_len, int) and cls.header_len > 0
-    # a weighted route needs update_weighted, and only a weighted route has it
-    assert hasattr(sk, "update_weighted") == (sk.weight_mode is not None)
-    assert (sk.multiset_pure, sk.weight_mode) == EXPECTED[kind]
+    assert sk.multiset_pure == EXPECTED[kind]
 
 
 def test_conservative_cms_is_not_multiset_pure():
@@ -151,44 +145,24 @@ def test_collapsed_ddsketch_is_multiset_pure():
     _assert_order_free(sk, v, "f64")
 
 
-@pytest.mark.parametrize("value_kind", ["i32", "i64", "str"])
-@pytest.mark.parametrize("kind", WEIGHTED_PURE)
-def test_update_weighted_equals_repeated_plain_update(kind, value_kind):
-    sk = _sketch(kind)
-    if not _has_update(sk, value_kind):
-        pytest.skip(f"{kind} has no {value_kind} update")
-    v = _values()
-    if value_kind == "i64":
-        v = v.astype(np.int64) * 5_000_000_000  # beyond int32
-    uniq, counts = np.unique(v, return_counts=True)
-    rep = np.repeat(uniq, counts)
-    if value_kind == "str":
-        uniq, rep = [f"k{x}" for x in uniq], [f"k{x}" for x in rep]
-    weighted = sk.empty()
-    sk.update_weighted(weighted, uniq, counts, value_kind)
-    plain = sk.empty()
-    _update(sk, plain, rep, value_kind)
-    assert sk.serialize(weighted) == sk.serialize(plain)
-
-
 def test_cms_weighted_i64_key_is_never_undercounted():
+    """A key beyond int32 counted with a weight through ``update_i64`` is
+    never estimated below that weight."""
     sk = CMSSketch(CMSParams(eps=0.01, delta=0.01))
     st = sk.empty()
-    sk.update_weighted(st, np.array([5_000_000_000], np.int64),
-                       np.array([1], np.int64), "i64")
-    assert sk.point_i64(st, np.array([5_000_000_000], np.int64))[0] >= 1
+    sk.update_i64(st, np.array([5_000_000_000], np.int64),
+                  np.array([3], np.int64))
+    assert sk.point_i64(st, np.array([5_000_000_000], np.int64))[0] >= 3
 
 
-def test_tdigest_update_weighted_drops_nan_like_update():
+def test_tdigest_update_drops_nan():
     sk = TDigestSketch(TDigestParams(100))
     with_nan = sk.empty()
-    sk.update_weighted(with_nan, np.array([1.0, 2.0, math.nan, 3.0]),
-                       np.array([2, 1, 5, 3]))
+    sk.update(with_nan, np.array([1.0, 2.0, math.nan, 3.0, math.nan]))
     without = sk.empty()
-    sk.update_weighted(without, np.array([1.0, 2.0, 3.0]),
-                       np.array([2, 1, 3]))
+    sk.update(without, np.array([1.0, 2.0, 3.0]))
     assert sk.serialize(with_nan) == sk.serialize(without)
-    assert with_nan.vmin == 1.0 and with_nan.vmax == 3.0 and with_nan.n == 6
+    assert with_nan.vmin == 1.0 and with_nan.vmax == 3.0 and with_nan.n == 3
     assert np.isfinite(sk.quantiles(with_nan, [0.1, 0.5, 0.9])).all()
 
 

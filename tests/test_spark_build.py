@@ -275,20 +275,17 @@ def test_mismatched_params_merge_refused(spark, tokens_df):
 
 
 def test_grouped_paths_produce_identical_states(spark, tokens_df):
-    """Salted, map-side, and JVM-preagg grouped builds are bit-identical
-    (HLL register-max merge is order-insensitive, so every strategy must
-    land on the same registers)."""
-    from bloom_filter_spark.operators import build_grouped_preagg
+    """Salted and map-side grouped builds are bit-identical (HLL
+    register-max merge is order-insensitive, so every strategy must land
+    on the same registers)."""
     sk = HLLSketch(HLLParams(b=12))
     a = {r.group: bytes(r.state) for r in build_grouped(
         tokens_df, sk, "source", "tokens", "i32_array",
         n_salts=8, salt_on="doc_id", strategy="salted").collect()}
-    b = {r.group: bytes(r.state) for r in build_grouped_preagg(
-        tokens_df, sk, "source", "tokens").collect()}
-    c = {r.group: bytes(r.state) for r in build_grouped(
+    b = {r.group: bytes(r.state) for r in build_grouped(
         tokens_df, sk, "source", "tokens", "i32_array",
         strategy="mapside").collect()}
-    assert a == b == c
+    assert a == b
     ns = {r.group: r.n_items for r in build_grouped(
         tokens_df, sk, "source", "tokens", "i32_array",
         strategy="mapside").collect()}
@@ -297,23 +294,21 @@ def test_grouped_paths_produce_identical_states(spark, tokens_df):
     assert ns == exact_n
 
 
-def test_preagg_direct_identical_cms(spark, tokens_df):
+def test_build_sketch_preagg_is_build_sketch(spark, tokens_df):
+    """``build_sketch_preagg`` is an alias of ``build_sketch``: over a
+    non-bare plan (a row-keeping Filter, so the JVM scan feeds the fold)
+    even an order-sensitive KLL comes back with the same bytes."""
     from bloom_filter_spark.operators import build_sketch_preagg
-    # i64 keys far beyond int32 (a JVM-fed plan: the hash is computed)
-    hashed = tokens_df.select(F.xxhash64("doc_id").alias("h"))
-    for sk in (CMSSketch(CMSParams(eps=0.001, delta=0.01)),
-               CountSketch(CountSketchParams(w=1 << 12, d=5))):
-        for df, col, value_kind in ((tokens_df, "tokens", "i32_array"),
-                                    (hashed, "h", "i64")):
-            direct, n1 = build_sketch(df, sk, col, value_kind)
-            pre, n2 = build_sketch_preagg(df, sk, col, value_kind)
-            assert direct == pre and n1 == n2
+    assert build_sketch_preagg is build_sketch
+    df = tokens_df.where(F.col("n_tok") >= 0)
+    sk = KLLSketch(KLLParams(k=200))
+    assert (build_sketch_preagg(df, sk, "tokens", "i32_array")
+            == build_sketch(df, sk, "tokens", "i32_array"))
 
 
 def test_grouped_routes_keep_null_group(spark):
     """A null group label is its own group on every grouped route (as in
     Spark's groupBy): its rows are counted, never silently dropped."""
-    from bloom_filter_spark.operators import build_grouped_preagg
     df = spark.createDataFrame(
         [("a", [1, 2]), (None, [3]), ("a", [2, 4]), ("b", [5, 6, 7])],
         "source string, tokens array<int>").repartition(2)
@@ -323,11 +318,10 @@ def test_grouped_routes_keep_null_group(spark):
                       strategy="mapside"),
         build_grouped(df, sk, "source", "tokens", "i32_array", n_salts=4,
                       strategy="salted"),
-        build_grouped_preagg(df, sk, "source", "tokens"),
     ]
     states = [{r.group: (r.n_items, bytes(r.state)) for r in g.collect()}
               for g in routes]
-    assert states[0] == states[1] == states[2]
+    assert states[0] == states[1]
     assert states[0][None][0] == 1
     assert sum(n for n, _ in states[0].values()) == 8
 
@@ -383,8 +377,7 @@ def test_probe_refuses_a_key_column_the_cast_would_change(spark):
 
 @pytest.mark.parametrize("entry", [
     "build_partials", "build_sketch", "build_sketch_preagg", "build_grouped",
-    "build_grouped_preagg", "build_grouped_single_writer",
-    "build_delta_shard_partials"])
+    "build_grouped_single_writer", "build_delta_shard_partials"])
 def test_build_refuses_a_key_column_the_cast_would_change(spark, entry):
     """Every build entry point that takes a ``value_kind`` checks the key
     column's type at call time, as the probes do: a bigint inserted as i32
@@ -411,6 +404,46 @@ def test_build_refuses_a_key_column_the_cast_would_change(spark, entry):
     for col, value_kind in (("big", "i32"), ("text", "i32"), ("small", "str")):
         with pytest.raises(ValueError, match="cannot be inserted"):
             call(col, value_kind)
+
+
+def _list_and_scalar_keys(spark):
+    """One row of a list<int> column (length 1: as a scalar it would fold
+    silently) and one of a scalar int column, with a blob to probe."""
+    sk = BloomSketch(BloomParams(n=1000, p=0.01))
+    state = sk.empty()
+    sk.update_i32(state, np.array([5], np.int32))
+    df = spark.createDataFrame([([5], 5)], "toks array<int>, one int")
+    return df, sk, sk.serialize(state)
+
+
+def test_scalar_key_column_is_refused_as_i32_array(spark):
+    """i32_array reads a list column's flat values; a scalar int column
+    under it raises ValueError at call time (it used to pass the check and
+    kill the task with an AttributeError on ``flatten``)."""
+    from bloom_filter_spark.operators import membership_scan
+    df, sk, blob = _list_and_scalar_keys(spark)
+    with pytest.raises(ValueError, match="cannot be inserted as i32_array"):
+        build_sketch(df, sk, "one")
+    with pytest.raises(ValueError, match="cannot be probed as i32_array"):
+        membership_scan(df, "one", spark, blob, "bloom")
+
+
+def test_list_key_column_is_refused_as_scalar_keys(spark):
+    """A list column under a scalar kind raises ValueError at call time:
+    it used to fold as if flattened when every list held one key, and
+    fail in the task otherwise."""
+    from bloom_filter_spark.operators import membership_scan
+    df, sk, blob = _list_and_scalar_keys(spark)
+    for value_kind in ("i32", "i64", "f64"):
+        with pytest.raises(ValueError, match="cannot be inserted"):
+            build_sketch(df, sk, "toks", value_kind)
+    with pytest.raises(ValueError, match="cannot be probed as i32 keys"):
+        membership_scan(df, "toks", spark, blob, "bloom", "i32")
+    # the same columns under their own kinds still build and probe
+    assert build_sketch(df, sk, "toks")[1] == 1
+    assert build_sketch(df, sk, "one", "i32")[1] == 1
+    assert membership_scan(df, "one", spark, blob, "bloom", "i32").agg(
+        F.sum("n_member")).collect()[0][0] == 1
 
 
 def test_membership_scan_scalar_and_str(spark, sf_small, bloom_blob):
@@ -771,7 +804,6 @@ def test_grouped_phase2_honours_byte_fanin(spark, tokens_df, monkeypatch):
     every group's (n_items, state) is unchanged.  Planning phase 2 runs no
     Spark job on any route (under AQE, reading the partition count of a
     shuffled input would run its shuffle)."""
-    from bloom_filter_spark.operators import build_grouped_preagg
     from bloom_filter_spark.operators import merge as merge_mod
 
     sc = spark.sparkContext
@@ -780,8 +812,6 @@ def test_grouped_phase2_honours_byte_fanin(spark, tokens_df, monkeypatch):
         for strategy in ("mapside", "salted"):
             build_grouped(tokens_df, HLLSketch(HLLParams(b=12)), "source",
                           "tokens", num_partitions=16, strategy=strategy)
-        build_grouped_preagg(tokens_df, HLLSketch(HLLParams(b=12)), "source",
-                             "tokens")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("grouped_planning") == []

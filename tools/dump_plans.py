@@ -45,13 +45,6 @@ def main() -> None:
         "Probe is scan → MapInArrow, shuffle-free; the sketch state arrives "
         "via broadcast, not join.")
 
-    flat = toks.select(F.explode("tokens").alias("v"))
-    add("JVM pre-aggregated build (partial agg)",
-        flat.groupBy("v").agg(F.count("*").alias("cnt")),
-        "Two HashAggregates — Tungsten partial (map-side combine) below the "
-        "Exchange, final above: the shuffle carries distinct keys, not the "
-        "token stream.")
-
     from bloom_filter_spark.operators import build_grouped
     from bloom_filter_spark.sketches import HLLParams, HLLSketch
     add("Grouped build — map-side strategy (default)",
