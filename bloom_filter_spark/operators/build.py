@@ -44,6 +44,7 @@ import os
 import zlib
 
 import numpy as np
+from py4j.protocol import Py4JError
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
 
@@ -178,32 +179,49 @@ def _plain_step(sketch, value_kind: str):
     return step
 
 
-def _bound_state_volume(sel: DataFrame, sketch) -> DataFrame:
-    """Auto-coalesce the fold input when P × |state| would flood the merge.
+def _parallelism(spark) -> tuple[int, int]:
+    """→ (task slots, ``spark.sql.files.openCostInBytes``) of ``spark``:
+    the two cluster figures ``_task_count`` reads."""
+    sc = spark.sparkContext
+    task_cpus = int(sc.getConf().get("spark.task.cpus", "1") or "1")
+    open_cost = spark._jsparkSession.sessionState().conf() \
+        .filesOpenCostInBytes()
+    return max(1, sc.defaultParallelism // task_cpus), int(open_cost)
 
-    For WIDE states (a 600k-capacity counting bloom serializes to ~33 MB)
-    the per-partition partial — not the input rows — dominates the merge:
-    64 partials × 33 MB is 2.1 GB through the tree.  Coalesce (no shuffle)
-    to keep total state volume around the merge router's byte budget —
-    but NEVER below the cluster's concurrent task slots, so the scan phase
-    keeps its CPU parallelism no matter how large one state is (a 1000-
-    executor fleet building a GB-scale filter still scans with every
-    core; only partition counts in EXCESS of the slots are trimmed).
-    Narrow sketches (bloom/HLL/CMS ≤ a few MB) are never touched."""
-    from .merge import AUTO_TREE_THRESHOLD_BYTES
+
+def _task_count(units: int, state_bytes: int, slots: int, open_cost: int,
+                scan_bytes: int | None = None) -> int:
+    """THE parallelism rule → how many tasks fold ``units`` indivisible
+    input pieces into partials of at most ``state_bytes`` bytes each, on a
+    cluster of ``slots`` task slots.
+
+    A native scan (``scan_bytes``: the compressed bytes of the projected
+    column chunks of its ``units`` row groups) cuts at most 4× the slots,
+    which balances stragglers on large inputs, and no split below
+    ``open_cost`` bytes but the last: Spark's "bytes worth one task", which
+    its own file scan obeys.  An input under one open cost is one task, so
+    a caller's aggregate or ``groupBy`` plans no exchange.  A JVM fold
+    (``scan_bytes`` None) keeps the ``units`` partitions Spark planned.
+
+    Wide states: once one state passes 256 KiB, each further partial costs
+    a serialize and a merge of it, so both paths trim to the slots (never
+    below them: scan parallelism stays).  On a 4-vCPU VM (4 slots), a
+    1.5 MB CMS build over the sf0.1 tokens took 4.1 CPU-s as 16 splits and
+    3.4 as 4."""
+    n = units
+    if scan_bytes is not None:
+        n = min(n, 4 * slots, -(-scan_bytes // open_cost))
+    if state_bytes > 1 << 18:
+        n = min(n, slots)
+    return max(1, n)
+
+
+def _bound_state_volume(sel: DataFrame, sketch) -> DataFrame:
+    """The JVM fold's input, coalesced (no shuffle) to ``_task_count`` of
+    its partitions: a wide state trims them to the task slots."""
     p = sel.rdd.getNumPartitions()
-    if p * sketch.state_bytes_max > AUTO_TREE_THRESHOLD_BYTES:
-        sc = sel.sparkSession.sparkContext
-        task_cpus = int(sc.getConf().get("spark.task.cpus", "1") or "1")
-        slots = max(1, sc.defaultParallelism // task_cpus)
-        # ONE monotone rule: partitions beyond the cluster's task slots are
-        # pure merge overhead — extra waves of the same scan CPU, each
-        # shipping another |state| — so once the state volume exceeds the
-        # budget, trim to the slots (full CPU parallelism, minimum merge
-        # bytes).  Never below the slots: scan parallelism is sacred.
-        if slots < p:
-            return sel.coalesce(slots)
-    return sel
+    n = _task_count(p, sketch.state_bytes_max, *_parallelism(sel.sparkSession))
+    return sel.coalesce(n) if n < p else sel
 
 
 def _attr_through_projects(df: DataFrame, cols: list[str]):
@@ -254,26 +272,29 @@ def _attr_through_projects(df: DataFrame, cols: list[str]):
                 return names, files
             else:
                 return None
-    except Exception:
+    except Py4JError:  # a plan node without the accessors read above
         return None
 
 
 def _parquet_splits(spark, files: list[str], need_cols: list[str],
                     need_types: dict[str, str] | None = None,
-                    state_bytes: int | None = None):
+                    state_bytes: int = 0):
     """Driver-side metadata pass: verify every file physically carries the
     needed top-level columns (+ optional Arrow type constraints), then pack
-    all (file, row-group) units into ≈4× the cluster's task slots of
-    round-robin splits.  Returns list[dict[file, [rg,...]]] or None."""
+    all (file, row-group) units round-robin into ``_task_count`` splits,
+    sized from the footers' compressed bytes of those columns and the
+    partials' ``state_bytes``.  Returns list[dict[file, [rg,...]]], or None
+    when a file is missing, unreadable as parquet or lacks a column."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     units: list[tuple[str, int]] = []
+    scan_bytes = 0
     for f in files:
         if not os.path.exists(f):
             return None
         try:
             pf = pq.ParquetFile(f)
-        except Exception:
+        except (OSError, pa.ArrowInvalid):
             return None
         schema = pf.schema_arrow
         for c in need_cols:
@@ -286,18 +307,19 @@ def _parquet_splits(spark, files: list[str], need_cols: list[str],
                 if want == "string" and not (pa.types.is_string(t)
                                              or pa.types.is_large_string(t)):
                     return None
-        units.extend((f, rg) for rg in range(pf.metadata.num_row_groups))
+        md = pf.metadata
+        for rg in range(md.num_row_groups):
+            chunks = md.row_group(rg)
+            for j in range(chunks.num_columns):
+                path = chunks.column(j).path_in_schema
+                if any(path == c or path.startswith(c + ".")
+                       for c in need_cols):
+                    scan_bytes += chunks.column(j).total_compressed_size
+            units.append((f, rg))
     if not units:
         return None
-    sc = spark.sparkContext
-    task_cpus = int(sc.getConf().get("spark.task.cpus", "1") or "1")
-    slots = max(1, sc.defaultParallelism // task_cpus)
-    # 4× slots balances stragglers when partials are near-free to ship;
-    # past ~256 KB per state the merge collect pays state-volume, not scan
-    # balance, so wide states emit exactly one partial per slot (never
-    # fewer — scan parallelism is sacred, same rule as _bound_state_volume)
-    n_splits = min(len(units),
-                   slots if (state_bytes or 0) > (1 << 18) else 4 * slots)
+    n_splits = _task_count(len(units), state_bytes, *_parallelism(spark),
+                           scan_bytes=scan_bytes)
     splits: list[dict] = [dict() for _ in range(n_splits)]
     for i, (f, rg) in enumerate(units):
         splits[i % n_splits].setdefault(f, []).append(rg)
@@ -344,7 +366,7 @@ def _iter_rg_tables(split: dict, cols: list[str], lookahead: int = 2):
 
 def _native_scan(df: DataFrame, cols: list[str], fn, schema: str,
                  str_cols: tuple = (),
-                 state_bytes: int | None = None) -> DataFrame | None:
+                 state_bytes: int = 0) -> DataFrame | None:
     """Native-scan source of the builds and of ``membership_scan``: one task
     per split of a driver ``range`` reads its parquet row groups with
     pyarrow (vectorized C++ decode, no JVM row↔Arrow transposition) and
@@ -353,8 +375,11 @@ def _native_scan(df: DataFrame, cols: list[str], fn, schema: str,
     every build line's CPU).  Taken only when the plan is provably a bare
     projected parquet scan (``str_cols`` already parquet strings); else
     None.  The splits re-partition the rows, so a build caller must also
-    know its sketch is ``multiset_pure``.  ``state_bytes`` sizes the split
-    count (see _parquet_splits)."""
+    know its sketch is ``multiset_pure``.  The split count is
+    ``_task_count`` of the row groups, their projected bytes and the
+    partials' ``state_bytes`` (0 for the probe's count rows); one split
+    plans as a single partition, so the caller's aggregate or ``groupBy``
+    adds no exchange."""
     info = _attr_through_projects(df, cols)
     if info is None:
         return None

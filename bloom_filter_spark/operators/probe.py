@@ -277,8 +277,9 @@ def membership_scan(df, col: str, spark: SparkSession, blob: bytes, kind: str,
             "n_member": pa.array([hits], pa.int64()),
         })
 
-    # no state-bytes hint: the aggregate rows are near-free to ship, so the
-    # native scan keeps its ≈4× task-slot splits for straggler balance
+    # no state-bytes hint: the count rows are near-free to ship, so the
+    # native scan's splits follow the input's bytes alone (_task_count); an
+    # input under one open cost is one task and the caller's agg one stage
     schema = "n_probed long, n_member long"
     out = _native_scan(sel, [col], scan, schema)
     return out if out is not None else sel.mapInArrow(scan, schema)
