@@ -62,6 +62,18 @@ def _stage_totals(stages, ids):
             for k, v in tot.items()}
 
 
+# the lines that scan the tokens fixture, and those that read documents
+TOKENS_LINES = (
+    "bloom_build", "bloom_probe_20k", "bloom_probe_full_stream", "hll_build",
+    "cms_build", "countsketch_build", "kll_build_tokens", "tdigest_build_ntok",
+    "ddsketch_build_ntok", "bloom_build_preagg", "hll_grouped_by_source",
+    "hll_grouped_by_source_salted")
+DOCS_LINES = (
+    "dedup_minhash_lsh", "embedding_cosine_topk", "embedding_lsh_neardup",
+    "embedding_ivf_topk", "dedup_simhash", "weighted_sample_topk",
+    "text_contamination")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default=None)
@@ -93,11 +105,22 @@ def main() -> None:
     if spark.sparkContext.uiWebUrl is None:
         raise SystemExit("bench_extra needs the UI: SPARK_GRAFT_UI=true")
     sc = spark.sparkContext
+
+    def wanted(*names) -> bool:
+        """Whether any of the lines ``names`` runs: set-up that feeds only
+        lines left out of ``--lines`` is skipped."""
+        return only is None or not only.isdisjoint(names)
+
+    doc_lines = ("bloom_doc_build_str", "bloom_doc_probe_stream_str")
     tokens = spark.read.parquet(f"{fx}/tokens.parquet")
-    n_tokens = tokens.select(F.sum("n_tok")).collect()[0][0]
-    tokens.select(F.sum(F.size("tokens"))).collect()
-    build_sketch(tokens.limit(2000), BloomSketch(BloomParams(n=1024, p=0.01)),
-                 "tokens", "i32_array", repartition=cpus)
+    n_tokens = None
+    if wanted(*TOKENS_LINES, *doc_lines):
+        n_tokens = tokens.select(F.sum("n_tok")).collect()[0][0]
+    if wanted(*TOKENS_LINES):  # warm-ups of the tokens scan and the fold
+        tokens.select(F.sum(F.size("tokens"))).collect()
+        build_sketch(tokens.limit(2000),
+                     BloomSketch(BloomParams(n=1024, p=0.01)),
+                     "tokens", "i32_array", repartition=cpus)
 
     results: dict[str, dict] = {}
 
@@ -132,10 +155,12 @@ def main() -> None:
     bloom = BloomSketch(BloomParams(n=65_536, p=0.01))
     built = timed("bloom_build",
                   lambda: build_sketch(tokens, bloom, "tokens", "i32_array"))
-    if built is None:
+    if built is None and wanted("bloom_probe_20k", "bloom_probe_full_stream"):
         built = build_sketch(tokens, bloom, "tokens", "i32_array")
-    blob, n_built = built
-    assert n_built == n_tokens
+    blob = None
+    if built is not None:
+        blob, n_built = built
+        assert n_built == n_tokens
 
     def probe_all():
         probe = membership_udf(spark, blob, "bloom", "i32")
@@ -187,22 +212,24 @@ def main() -> None:
     from bloom_filter_spark.operators import build_delta_sketch
     from bloom_filter_spark.plans.queries import _parity_changelog
     from bloom_filter_spark.sketches import CountingBloomSketch
-    _, changelog, cb_full = _parity_changelog(spark, sf_dir)
-    changelog_sub = changelog.where(F.crc32(F.col("doc_id")) % 3 == 0)
-    cb = CountingBloomSketch(BloomParams(n=cb_full.params.n // 3 + 16, p=0.01))
-    timed("cbloom_changelog_build", lambda: build_delta_sketch(
-        changelog_sub, cb, "doc_id", "sign", "str")[1])
+    if wanted("cbloom_changelog_build"):
+        _, changelog, cb_full = _parity_changelog(spark, sf_dir)
+        changelog_sub = changelog.where(F.crc32(F.col("doc_id")) % 3 == 0)
+        cb = CountingBloomSketch(BloomParams(n=cb_full.params.n // 3 + 16,
+                                             p=0.01))
+        timed("cbloom_changelog_build", lambda: build_delta_sketch(
+            changelog_sub, cb, "doc_id", "sign", "str")[1])
 
-    n_ids = min(max(int(n_tokens // 4), 100_000), 4_000_000)
+    n_ids = min(max(int((n_tokens or 0) // 4), 100_000), 4_000_000)
     doc_ids = spark.range(n_ids).select(
         F.concat(F.lit("doc_"), F.lpad(F.col("id").cast("string"), 9, "0"))
          .alias("doc_id"))
     bloom_doc = BloomSketch(BloomParams(n=n_ids, p=0.01))
     built_doc = timed("bloom_doc_build_str", lambda: build_sketch(
         doc_ids, bloom_doc, "doc_id", "str"))
-    if built_doc is None:
+    if built_doc is None and wanted("bloom_doc_probe_stream_str"):
         built_doc = build_sketch(doc_ids, bloom_doc, "doc_id", "str")
-    doc_blob, n_doc = built_doc
+    doc_blob = built_doc[0] if built_doc is not None else None
 
     def probe_doc_stream():
         from bloom_filter_spark.operators import membership_scan
@@ -216,10 +243,12 @@ def main() -> None:
     timed("bloom_doc_probe_stream_str", probe_doc_stream)
 
     docs_dir = sf_dir
-    if not os.path.exists(f"{docs_dir}/documents.parquet"):
+    if not wanted(*DOCS_LINES):
+        docs_dir = None
+    elif not os.path.exists(f"{docs_dir}/documents.parquet"):
         from bloom_filter_spark.sources.fixtures import ensure_doc_fixtures
         docs_dir = ensure_doc_fixtures(sf_name)
-    if os.path.exists(f"{docs_dir}/documents.parquet"):
+    if docs_dir and os.path.exists(f"{docs_dir}/documents.parquet"):
         from bloom_filter_spark.functions import dedup, similarity
         docs = spark.read.parquet(f"{docs_dir}/documents.parquet")
         timed("dedup_minhash_lsh", lambda: dedup.minhash_lsh_pairs(
@@ -240,7 +269,8 @@ def main() -> None:
             docs.where(F.col("doc_id") % 10 != 0),
             docs.where(F.col("doc_id") % 10 == 0)).count())
 
-    if os.path.exists(f"{sf_dir}/events.parquet"):
+    if wanted("events_asof_join", "events_range_join") and \
+            os.path.exists(f"{sf_dir}/events.parquet"):
         from bloom_filter_spark.functions.joins import asof_join, range_join
         from bloom_filter_spark.plans.pipeline_queries import (
             ERR_WINDOW_US, event_projections)

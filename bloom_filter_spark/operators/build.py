@@ -24,6 +24,17 @@ per column-range shard and, like every multiset-pure build, reads a bare
 parquet scan natively.  Every grouped build runs through one phase 1
 (``_grouped_phase1_fn``); every merge is merge.py's one keyed router or
 its one Arrow level.
+
+A bare parquet scan feeds every build natively (``_native_scan``), in one
+of two ways.  A multiset-pure fold re-splits the row groups by the one
+parallelism rule.  An order-sensitive fold (KLL, t-digest, Misra–Gries,
+reservoir, conservative CMS: its state depends on the order the batches
+arrive in, KLL± VLDB 2021) replays the JVM scan instead: the JVM plan's
+own file partitions, parquet's midpoint rule for the row groups, and the
+Arrow runner's ``maxRecordsPerBatch`` cut, so its bytes equal the JVM
+fold's.  A plan the replay cannot reproduce keeps the JVM fold and logs
+why.
+
 What a sketch IS — whether its state is a pure function of the input multiset,
 how long its params header is — is declared on the sketch class
 (sketches/base.py); the operators route on those declarations, never on
@@ -181,9 +192,11 @@ def _plain_step(sketch, value_kind: str):
 
 def _parallelism(spark) -> tuple[int, int]:
     """→ (task slots, ``spark.sql.files.openCostInBytes``) of ``spark``:
-    the two cluster figures ``_task_count`` reads."""
+    the two cluster figures ``_task_count`` reads.  ``spark.task.cpus`` is
+    one lookup on the live conf (``sc.getConf()`` would copy every entry
+    over py4j, about 170 round trips)."""
     sc = spark.sparkContext
-    task_cpus = int(sc.getConf().get("spark.task.cpus", "1") or "1")
+    task_cpus = int(sc._conf.get("spark.task.cpus", "1") or "1")
     open_cost = spark._jsparkSession.sessionState().conf() \
         .filesOpenCostInBytes()
     return max(1, sc.defaultParallelism // task_cpus), int(open_cost)
@@ -216,12 +229,25 @@ def _task_count(units: int, state_bytes: int, slots: int, open_cost: int,
     return max(1, n)
 
 
-def _bound_state_volume(sel: DataFrame, sketch) -> DataFrame:
+def _bound_state_volume(sel: DataFrame, sketch) -> tuple[DataFrame, int]:
     """The JVM fold's input, coalesced (no shuffle) to ``_task_count`` of
-    its partitions: a wide state trims them to the task slots."""
+    its partitions (a wide state trims them to the task slots), and its
+    partition count."""
     p = sel.rdd.getNumPartitions()
     n = _task_count(p, sketch.state_bytes_max, *_parallelism(sel.sparkSession))
-    return sel.coalesce(n) if n < p else sel
+    return (sel.coalesce(n), n) if n < p else (sel, p)
+
+
+def _local_path(uri: str) -> str | None:
+    """A ``file:`` URI or a bare path → the local path; None for remote
+    storage (any other ``scheme://``)."""
+    if uri.startswith("file:"):
+        uri = uri[5:]
+        while uri.startswith("//"):
+            uri = uri[1:]
+    elif "://" in uri:
+        return None
+    return uri
 
 
 def _attr_through_projects(df: DataFrame, cols: list[str]):
@@ -258,17 +284,9 @@ def _attr_through_projects(df: DataFrame, cols: list[str]):
                 fmt = rel.fileFormat().getClass().getSimpleName()
                 if "Parquet" not in fmt:
                     return None
-                files = []
-                for f in df.inputFiles():
-                    if f.startswith("file:"):
-                        f = f[5:]
-                        while f.startswith("//"):
-                            f = f[1:]
-                    elif "://" in f:
-                        return None  # remote storage — JVM scan path
-                    files.append(f)
-                if not files:
-                    return None
+                files = [_local_path(f) for f in df.inputFiles()]
+                if not files or None in files:
+                    return None  # remote storage — JVM scan path
                 return names, files
             else:
                 return None
@@ -276,19 +294,14 @@ def _attr_through_projects(df: DataFrame, cols: list[str]):
         return None
 
 
-def _parquet_splits(spark, files: list[str], need_cols: list[str],
-                    need_types: dict[str, str] | None = None,
-                    state_bytes: int = 0):
-    """Driver-side metadata pass: verify every file physically carries the
-    needed top-level columns (+ optional Arrow type constraints), then pack
-    all (file, row-group) units round-robin into ``_task_count`` splits,
-    sized from the footers' compressed bytes of those columns and the
-    partials' ``state_bytes``.  Returns list[dict[file, [rg,...]]], or None
-    when a file is missing, unreadable as parquet or lacks a column."""
+def _footers(files: list[str], need_cols: list[str],
+             need_types: dict[str, str] | None = None) -> dict | None:
+    """Driver-side metadata pass → {file: parquet FileMetaData} when every
+    file is readable parquet that physically carries the needed top-level
+    columns (+ optional Arrow type constraints); else None."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    units: list[tuple[str, int]] = []
-    scan_bytes = 0
+    footers = {}
     for f in files:
         if not os.path.exists(f):
             return None
@@ -307,40 +320,178 @@ def _parquet_splits(spark, files: list[str], need_cols: list[str],
                 if want == "string" and not (pa.types.is_string(t)
                                              or pa.types.is_large_string(t)):
                     return None
-        md = pf.metadata
-        for rg in range(md.num_row_groups):
-            chunks = md.row_group(rg)
-            for j in range(chunks.num_columns):
-                path = chunks.column(j).path_in_schema
-                if any(path == c or path.startswith(c + ".")
-                       for c in need_cols):
-                    scan_bytes += chunks.column(j).total_compressed_size
-            units.append((f, rg))
+        footers[f] = pf.metadata
+    return footers
+
+
+def _chunks(md, rg: int, cols: list[str]):
+    """The column chunks of row group ``rg`` of footer ``md`` that project
+    the top-level columns ``cols``."""
+    chunks = md.row_group(rg)
+    for j in range(chunks.num_columns):
+        c = chunks.column(j)
+        path = c.path_in_schema
+        if any(path == x or path.startswith(x + ".") for x in cols):
+            yield c
+
+
+def _packed_splits(spark, footers: dict, cols: list[str],
+                   state_bytes: int = 0) -> list | None:
+    """Splits of a multiset-pure fold: every (file, row group) unit packed
+    round-robin into ``_task_count`` splits, sized from the footers'
+    compressed bytes of ``cols`` and the partials' ``state_bytes``.
+    → list of splits, each a list of (file, row group); None for no row
+    group at all."""
+    units = [(f, rg) for f, md in footers.items()
+             for rg in range(md.num_row_groups)]
     if not units:
         return None
+    scan_bytes = sum(c.total_compressed_size for f, rg in units
+                     for c in _chunks(footers[f], rg, cols))
     n_splits = _task_count(len(units), state_bytes, *_parallelism(spark),
                            scan_bytes=scan_bytes)
-    splits: list[dict] = [dict() for _ in range(n_splits)]
-    for i, (f, rg) in enumerate(units):
-        splits[i % n_splits].setdefault(f, []).append(rg)
+    splits: list[list] = [[] for _ in range(n_splits)]
+    for i, u in enumerate(units):
+        splits[i % n_splits].append(u)
     return splits
 
 
-def _iter_rg_tables(split: dict, cols: list[str], lookahead: int = 2):
-    """Yield this split's row groups as pyarrow Tables IN ORDER, decoding
-    up to ``lookahead`` groups ahead on one reader thread — parquet decode
-    releases the GIL, so it overlaps the caller's kernel work and reclaims
-    the vCPU that spark.task.cpus=2 reserves for the (idle, on this path)
-    JVM feed thread.  Measured 1.5× on a full single-task pass (decode
-    1.5 s ‖ kernel 0.9 s → 1.5 s total).  Deterministic: results are
-    consumed in submission order, so fold order — and therefore every
-    sketch state — is identical to the sequential loop."""
+def _rg_midpoint(rg) -> int:
+    """Parquet's split rule: the reader of a file piece [start, start +
+    length) reads the row groups whose midpoint it holds — the first
+    column chunk's dictionary-or-data page offset plus half the group's
+    total compressed size."""
+    first = rg.column(0)
+    start = first.data_page_offset
+    if first.has_dictionary_page and first.dictionary_page_offset < start:
+        start = first.dictionary_page_offset
+    size = sum(rg.column(j).total_compressed_size
+               for j in range(rg.num_columns))
+    return start + size // 2
+
+
+def _arrow_bytes_bound(md, rg: int, cols: list[str], schema) -> int:
+    """An upper bound on the Arrow bytes of row group ``rg``'s ``cols``
+    (values, validity, offsets), from the footer alone.  A fixed-width
+    leaf holds its value count × width.  A variable-width value's bytes
+    all sit somewhere in its chunk (a plain page, a dictionary page, delta
+    suffixes), so each is at most the chunk's uncompressed size U: a
+    plain-encoded chunk holds at most U bytes, any other at most one U per
+    value."""
+    import pyarrow as pa
+    rows = md.row_group(rg).num_rows
+    total = 0
+    for c in _chunks(md, rg, cols):
+        t = schema.field(c.path_in_schema.split(".")[0]).type
+        while pa.types.is_list(t) or pa.types.is_large_list(t):
+            t = t.value_type
+        try:
+            values = c.num_values * -(-t.bit_width // 8)
+        except ValueError:  # variable width: 4-byte offsets, plus the data
+            plain = not c.has_dictionary_page and set(c.encodings) <= {
+                "PLAIN", "RLE", "BIT_PACKED"}
+            u = c.total_uncompressed_size
+            values = c.num_values * 4 + (u if plain else c.num_values * u)
+        total += values + c.num_values + 8 * (rows + 1)
+    return total
+
+
+def _batch_bytes_bound(units: list[tuple[int, int]], rows: int) -> int:
+    """The largest Arrow bytes bound of any ``rows``-row batch cut from the
+    concatenation of ``units`` (row count, bytes bound) in order: a batch
+    is bounded by the whole bounds of the units it touches."""
+    worst = cur = filled = 0
+    for n, b in units:
+        if n == 0:
+            continue
+        cur += b
+        while filled + n >= rows:  # this unit completes the current batch
+            worst = max(worst, cur)
+            n -= rows - filled
+            filled, cur = 0, (b if n else 0)
+        filled += n
+    return max(worst, cur)
+
+
+# why an order-sensitive fold keeps the JVM scan (logged on the
+# bloom_filter_spark logger, asserted by tests/test_native_scan.py)
+REPLAY_NOT_BARE = "the plan is not a bare parquet scan"
+REPLAY_COALESCE = "the JVM fold would coalesce its partitions"
+REPLAY_BYTE_CUT = ("a batch could come near "
+                   "spark.sql.execution.arrow.maxBytesPerBatch")
+REPLAY_UNCOVERED = "the file partitions do not read each row group once"
+
+
+def _replayed_splits(df: DataFrame, cols: list[str], phys: list[str],
+                     footers: dict, state_bytes: int):
+    """Splits of an order-sensitive fold, replaying the JVM scan of the
+    same projected DataFrame: one split per ``FilePartition`` of its
+    ``FileSourceScanExec`` (in partition order, an empty one included),
+    holding the row groups whose midpoint (``_rg_midpoint``) lies in one
+    of its file pieces, in piece order — the rows the JVM feeds that
+    partition's ``mapInArrow``, in the same order.  → (splits, rows per
+    Arrow batch: the live ``maxRecordsPerBatch``), or the reason
+    (``REPLAY_*``) the replay would not give the JVM fold's batches."""
+    leaves = df.select(*cols)._jdf.queryExecution().executedPlan() \
+        .collectLeaves()
+    scan = leaves.apply(0) if leaves.size() == 1 else None
+    if scan is None or \
+            scan.getClass().getSimpleName() != "FileSourceScanExec":
+        return REPLAY_NOT_BARE
+    parts = scan.inputRDD().partitions()
+    if _task_count(len(parts), state_bytes,
+                   *_parallelism(df.sparkSession)) < len(parts):
+        return REPLAY_COALESCE
+    mids = {f: [_rg_midpoint(md.row_group(i))
+                for i in range(md.num_row_groups)]
+            for f, md in footers.items()}
+    splits = []
+    for part in parts:
+        units = []
+        for piece in part.files():
+            f = _local_path(piece.filePath().toString())
+            if f not in mids:
+                return REPLAY_UNCOVERED
+            lo = piece.start()
+            hi = lo + piece.length()
+            units += [(f, rg) for rg, m in enumerate(mids[f]) if lo <= m < hi]
+        splits.append(units)
+    read = [u for units in splits for u in units]
+    if len(read) != len(set(read)) or len(read) != sum(len(m) for m in
+                                                       mids.values()):
+        return REPLAY_UNCOVERED
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    rows = int(conf.arrowMaxRecordsPerBatch())
+    cut = int(conf.arrowMaxBytesPerBatch())
+    if rows <= 0:
+        rows = 1 << 62  # no record cut: a partition is one batch
+    if cut < (1 << 31) - 1:  # Int.MaxValue: no byte cut
+        schemas = {f: md.schema.to_arrow_schema()
+                   for f, md in footers.items()}
+        for units in splits:
+            sized = [(footers[f].row_group(rg).num_rows,
+                      _arrow_bytes_bound(footers[f], rg, phys, schemas[f]))
+                     for f, rg in units]
+            if _batch_bytes_bound(sized, rows) > cut // 2:
+                return REPLAY_BYTE_CUT
+    return splits, rows
+
+
+def _iter_rg_tables(split: list, cols: list[str], lookahead: int = 2):
+    """Yield this split's (file, row group) units as pyarrow Tables IN
+    ORDER, decoding up to ``lookahead`` groups ahead on one reader thread —
+    parquet decode releases the GIL, so it overlaps the caller's kernel
+    work and reclaims the vCPU that spark.task.cpus=2 reserves for the
+    (idle, on this path) JVM feed thread.  Measured 1.5× on a full
+    single-task pass (decode 1.5 s ‖ kernel 0.9 s → 1.5 s total).
+    Deterministic: results are consumed in submission order, so fold order
+    — and therefore every sketch state — is identical to the sequential
+    loop."""
     from collections import deque
     from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
 
-    units = [(p, rg) for p, rgs in split.items() for rg in rgs]
     handles: dict = {}
 
     def read(p, rg):
@@ -351,7 +502,7 @@ def _iter_rg_tables(split: dict, cols: list[str], lookahead: int = 2):
 
     with ThreadPoolExecutor(1) as pool:
         futs = deque()
-        it = iter(units)
+        it = iter(split)
         for _ in range(lookahead):
             u = next(it, None)
             if u is not None:
@@ -364,63 +515,132 @@ def _iter_rg_tables(split: dict, cols: list[str], lookahead: int = 2):
             yield t
 
 
+def _recut(tables, rows: int):
+    """Concatenate ``tables`` in order and cut them into RecordBatches of
+    ``rows`` rows (the last one shorter), as Spark's Arrow runner cuts a
+    partition's rows at ``maxRecordsPerBatch`` across row-group and file
+    boundaries."""
+    import pyarrow as pa
+
+    def batch(t):
+        return pa.RecordBatch.from_arrays(
+            [c.combine_chunks() for c in t.columns], t.column_names)
+
+    pending, n = [], 0
+    for t in tables:
+        pending.append(t)
+        n += t.num_rows
+        if n < rows:
+            continue
+        cat = pa.concat_tables(pending)
+        off = 0
+        while n - off >= rows:
+            yield batch(cat.slice(off, rows))
+            off += rows
+        pending, n = [cat.slice(off)], n - off
+    if n:
+        yield batch(pa.concat_tables(pending))
+
+
 def _native_scan(df: DataFrame, cols: list[str], fn, schema: str,
-                 str_cols: tuple = (),
-                 state_bytes: int = 0) -> DataFrame | None:
+                 str_cols: tuple = (), state_bytes: int = 0,
+                 replay: bool = False) -> tuple[DataFrame, int] | None:
     """Native-scan source of the builds and of ``membership_scan``: one task
     per split of a driver ``range`` reads its parquet row groups with
     pyarrow (vectorized C++ decode, no JVM row↔Arrow transposition) and
     feeds them to ``fn`` as RecordBatches of ``cols`` — measured ~25× less
     CPU than the JVM scan → Arrow exchange (the JVM boundary was ~90% of
     every build line's CPU).  Taken only when the plan is provably a bare
-    projected parquet scan (``str_cols`` already parquet strings); else
-    None.  The splits re-partition the rows, so a build caller must also
-    know its sketch is ``multiset_pure``.  The split count is
-    ``_task_count`` of the row groups, their projected bytes and the
-    partials' ``state_bytes`` (0 for the probe's count rows); one split
-    plans as a single partition, so the caller's aggregate or ``groupBy``
-    adds no exchange."""
+    projected parquet scan (``str_cols`` already parquet strings).
+    → (source, split count), or None: the caller keeps the JVM scan, and
+    the reason goes to the ``bloom_filter_spark`` logger.
+
+    Two ways to plan the splits:
+
+    * a multiset-pure fold (``replay`` False) may re-partition the rows:
+      ``_task_count`` of the row groups, their projected bytes and the
+      partials' ``state_bytes`` (0 for the probe's count rows), one
+      batch per row group.  One split plans as a single partition, so the
+      caller's aggregate or ``groupBy`` adds no exchange.
+    * an order-sensitive fold (``replay`` True: KLL, t-digest, MG,
+      reservoir, conservative CMS) replays the JVM scan instead
+      (``_replayed_splits``): task i is the JVM's partition i and emits
+      src i, and its rows are re-cut into the JVM's Arrow batches, so the
+      same ``fn`` folds the same batches into the same bytes.
+      ``state_bytes`` here is what the JVM fold coalesces on (0: it never
+      does); a fold it would coalesce keeps the JVM scan."""
+    import logging
+    log = logging.getLogger("bloom_filter_spark")
     info = _attr_through_projects(df, cols)
     if info is None:
+        log.info("native scan declined: %s", REPLAY_NOT_BARE)
         return None
     phys, files = info
-    if len(set(phys)) < len(phys):
+    footers = None
+    if len(set(phys)) == len(phys):
+        footers = _footers(files, phys, need_types={
+            p: "string" for c, p in zip(cols, phys) if c in str_cols})
+    if footers is None:
+        log.info("native scan declined: a file is missing, unreadable or "
+                 "lacks a column")
         return None
     spark = df.sparkSession
-    splits = _parquet_splits(
-        spark, files, phys,
-        need_types={p: "string" for c, p in zip(cols, phys) if c in str_cols},
-        state_bytes=state_bytes)
-    if splits is None:
-        return None
+    batch_rows = None
+    if replay:
+        planned = _replayed_splits(df, cols, phys, footers, state_bytes)
+        if isinstance(planned, str):
+            log.info("native scan declined: %s", planned)
+            return None
+        splits, batch_rows = planned
+    else:
+        splits = _packed_splits(spark, footers, phys, state_bytes)
+        if splits is None:
+            log.info("native scan declined: the files hold no row group")
+            return None
     bc = spark.sparkContext.broadcast(splits)
 
     def native_fn(batches):
         import pyarrow as pa
 
-        def rg_batches():
+        def tables():
             for b in batches:
                 for sid in b.column(0).to_pylist():
                     for t in _iter_rg_tables(bc.value[sid], phys):
-                        yield pa.RecordBatch.from_arrays(
-                            [t.column(p).combine_chunks() for p in phys],
-                            cols)
+                        yield pa.Table.from_arrays(
+                            [t.column(p) for p in phys], cols)
 
-        yield from fn(rg_batches())
+        if batch_rows is not None:
+            yield from fn(_recut(tables(), batch_rows))
+        else:
+            yield from fn(pa.RecordBatch.from_arrays(
+                [c.combine_chunks() for c in t.columns], cols)
+                for t in tables())
 
     driver = spark.range(0, len(splits), 1, len(splits))
-    return driver.mapInArrow(native_fn, schema)
+    return driver.mapInArrow(native_fn, schema), len(splits)
 
 
 def _native_parquet_partials(df: DataFrame, sketch, col: str,
-                             value_kind: str) -> DataFrame | None:
-    """Native-scan partials of ``build_sketch`` (see _native_scan)."""
-    if not sketch.multiset_pure:
-        return None
+                             value_kind: str) -> tuple[DataFrame, int] | None:
+    """Native-scan partials of ``build_sketch`` and their count (see
+    _native_scan): re-split for a multiset-pure sketch, the JVM scan
+    replayed for an order-sensitive one."""
     return _native_scan(df, [col],
                         _fold_fn(sketch, _plain_step(sketch, value_kind)),
-                        PARTIAL_SCHEMA,
-                        state_bytes=sketch.state_bytes_max)
+                        PARTIAL_SCHEMA, state_bytes=sketch.state_bytes_max,
+                        replay=not sketch.multiset_pure)
+
+
+def _jvm_partials(df: DataFrame, sketch, col: str, value_kind: str,
+                  repartition: int | None) -> tuple[DataFrame, int]:
+    """The JVM-fed partials of ``build_partials`` and their count."""
+    sel = df.select(F.col(col).alias("v"))  # explicit column pruning
+    if repartition:
+        sel, n = sel.repartition(repartition), repartition
+    else:
+        sel, n = _bound_state_volume(sel, sketch)
+    return sel.mapInArrow(_fold_fn(sketch, _plain_step(sketch, value_kind)),
+                          PARTIAL_SCHEMA), n
 
 
 def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
@@ -429,13 +649,7 @@ def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array
     partition.  ``value_kind``: i32_array | i32 | i64 | f64 | str; a
     column the cast would change raises ValueError (``_check_key_type``)."""
     _check_key_column(df, col, value_kind, "inserted")
-    sel = df.select(F.col(col).alias("v"))  # explicit column pruning
-    if repartition:
-        sel = sel.repartition(repartition)
-    else:
-        sel = _bound_state_volume(sel, sketch)
-    return sel.mapInArrow(_fold_fn(sketch, _plain_step(sketch, value_kind)),
-                          PARTIAL_SCHEMA)
+    return _jvm_partials(df, sketch, col, value_kind, repartition)[0]
 
 
 def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
@@ -453,12 +667,12 @@ def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
     A key column the ``value_kind`` cast would change raises ValueError.
     """
     _check_key_column(df, col, value_kind, "inserted")
-    partials = None
+    native = None
     if repartition is None:
-        partials = _native_parquet_partials(df, sketch, col, value_kind)
-    if partials is None:
-        partials = build_partials(df, sketch, col, value_kind, repartition)
-    return _merge_checkpointed(df, partials, sketch, checkpoint, sketch_id)
+        native = _native_parquet_partials(df, sketch, col, value_kind)
+    partials, n = native or _jvm_partials(df, sketch, col, value_kind,
+                                          repartition)
+    return _merge_checkpointed(df, partials, sketch, checkpoint, sketch_id, n)
 
 
 # An alias kept for existing callers: the fold's in-task duplicate collapse
@@ -468,18 +682,21 @@ build_sketch_preagg = build_sketch
 
 
 def _merge_checkpointed(df: DataFrame, partials: DataFrame, sketch,
-                        checkpoint, sketch_id: str | None) -> tuple[bytes, int]:
+                        checkpoint, sketch_id: str | None,
+                        est_rows: int | None = None) -> tuple[bytes, int]:
     """Partials → (final blob, n_items): one-row-per-partition partials
     through merge_partials_auto, sharded ones (a ``shard_id`` column)
     through merge_shards_reassembled — persisting the partial rows (through
     the one ``write_partials``) and the final state when ``checkpoint`` and
-    ``sketch_id`` are given."""
+    ``sketch_id`` are given.  ``est_rows``: the partials' partition count
+    when the caller planned it (default: read from the plan)."""
     persist = checkpoint is not None and sketch_id is not None
     sharded = "shard_id" in partials.columns
     # capture BEFORE the checkpoint round-trip: a read-back packs many
     # partial rows per parquet partition, so its getNumPartitions would
     # under-count, mis-route and mis-plan the merge (ADVICE r4)
-    est_rows = partials.rdd.getNumPartitions()
+    if est_rows is None:
+        est_rows = partials.rdd.getNumPartitions()
     if persist:
         partials = checkpoint.write_partials(sketch_id, sketch, partials,
                                              input_desc=_describe_input(df))
@@ -573,15 +790,14 @@ def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
 
     fold = _fold_fn(sketch, _signed_step(update, value_kind, sign_col),
                     (sketch.shard_fold, rows))
-    partials = None
+    native = None
     if sketch.multiset_pure:
-        partials = _native_scan(df, [col, sign_col], fold, SHARD_SCHEMA,
-                                state_bytes=sketch.state_bytes_max)
-    if partials is None:
-        partials = df.select(F.col(col).alias("v"),
-                             F.col(sign_col).alias("s")).mapInArrow(
-                                 fold, SHARD_SCHEMA)
-    return partials
+        native = _native_scan(df, [col, sign_col], fold, SHARD_SCHEMA,
+                              state_bytes=sketch.state_bytes_max)
+    if native is not None:
+        return native[0]
+    return df.select(F.col(col).alias("v"),
+                     F.col(sign_col).alias("s")).mapInArrow(fold, SHARD_SCHEMA)
 
 
 def merge_shards_reassembled(partials: DataFrame, sketch,
@@ -634,18 +850,20 @@ GROUPED_SCHEMA = "group string, src long, n_items long, state binary"
 
 
 def _native_grouped_partials(df: DataFrame, sketch, group_col: str, col: str,
-                             value_kind: str) -> DataFrame | None:
-    """Map-side grouped build over a NATIVE parquet scan (see _native_scan):
-    (group, values) row groups fold through the same phase 1 the JVM-fed
-    path uses.  The group column must already be a parquet string column
-    (the plan-side cast("string") must be an identity for the fold to see
-    identical labels)."""
-    if not sketch.multiset_pure:
-        return None
+                             value_kind: str) -> tuple[DataFrame, int] | None:
+    """Map-side grouped build over a NATIVE parquet scan (see _native_scan)
+    → (phase-1 partials, split count): (group, values) row groups fold
+    through the same phase 1 the JVM-fed path uses, re-split for a
+    multiset-pure sketch and the JVM scan replayed for an order-sensitive
+    one (the JVM's map-side phase 1 never coalesces).  The group column
+    must already be a parquet string column (the plan-side cast("string")
+    must be an identity for the fold to see identical labels)."""
+    replay = not sketch.multiset_pure
     phase1 = _grouped_phase1_fn(sketch, _plain_step(sketch, value_kind))
     return _native_scan(df, [group_col, col], phase1, GROUPED_SCHEMA,
                         str_cols=(group_col,),
-                        state_bytes=sketch.state_bytes_max)
+                        state_bytes=0 if replay else sketch.state_bytes_max,
+                        replay=replay)
 
 
 def _grouped_phase1_fn(sketch, step):
@@ -678,13 +896,18 @@ def _grouped_phase1_fn(sketch, step):
     return phase1
 
 
-def _merge_grouped(partials: DataFrame, sketch,
-                   est_rows: int | None = None) -> DataFrame:
+def _merge_grouped(partials: DataFrame, sketch, est_rows: int,
+                   one_split: bool = False) -> DataFrame:
     """Grouped phase 2: the Arrow merge levels keyed by group, ordered by
     src, fold each group's partials into one (group, n_items, state) row —
     kept a lazy DataFrame, so it calls the level planner, not the router.
-    A route behind a shuffle passes ``est_rows`` (partials per group):
-    under AQE, getNumPartitions would run that shuffle once more."""
+    ``est_rows``: partials per group (a route behind a shuffle must not
+    read getNumPartitions: under AQE it would run that shuffle once more).
+    ``one_split``: phase 1 ran as one task, so every group already has its
+    one row, and the merge of one state is that state byte for byte
+    (pinned for every mergeable kind): phase 2 is skipped."""
+    if one_split:
+        return partials.drop("src")
     return _merge_levels(partials, sketch, _byte_fanin(sketch.state_bytes_max),
                          est_rows, keys=("group",)).drop("src")
 
@@ -759,17 +982,20 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
     phase1 = _grouped_phase1_fn(sketch, _plain_step(sketch, value_kind))
 
     if strategy == "mapside":
-        partials = None
+        native = None
         if not num_partitions:
-            partials = _native_grouped_partials(df, sketch, group_col, col,
-                                                value_kind)
-        if partials is None:
+            native = _native_grouped_partials(df, sketch, group_col, col,
+                                              value_kind)
+        if native is None:
             base = df.select(F.col(group_col).cast("string").alias("group"),
                              F.col(col).alias("v"))
             if num_partitions:
                 base = base.repartition(num_partitions)
             partials = base.mapInArrow(phase1, GROUPED_SCHEMA)
-        return _merge_grouped(partials, sketch, num_partitions or None)
+            native = partials, num_partitions or \
+                partials.rdd.getNumPartitions()
+        partials, n = native
+        return _merge_grouped(partials, sketch, n, one_split=n == 1)
 
     if strategy != "salted":
         raise ValueError(f"unknown grouped-build strategy {strategy!r}")

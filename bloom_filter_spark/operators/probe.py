@@ -281,5 +281,5 @@ def membership_scan(df, col: str, spark: SparkSession, blob: bytes, kind: str,
     # native scan's splits follow the input's bytes alone (_task_count); an
     # input under one open cost is one task and the caller's agg one stage
     schema = "n_probed long, n_member long"
-    out = _native_scan(sel, [col], scan, schema)
-    return out if out is not None else sel.mapInArrow(scan, schema)
+    native = _native_scan(sel, [col], scan, schema)
+    return native[0] if native is not None else sel.mapInArrow(scan, schema)

@@ -22,8 +22,10 @@ Each registered class also declares what it is; the operators route on
 these declarations, never on kind names:
 
     multiset_pure   the merged state depends only on the input multiset, so
-                    re-partitioned routes (the native parquet scan) give
-                    bit-identical blobs.  False is always safe.
+                    re-partitioned routes (the native parquet scan's own
+                    splits) give bit-identical blobs.  False is always
+                    safe: the native scan then replays the JVM scan's
+                    partitions and batches instead.
     header_len      bytes of serialized params/seed that must be equal
                     before two blobs may merge (merge_blobs).
     state_bytes_max the serialized worst case, derived from the class's own

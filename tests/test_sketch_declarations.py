@@ -351,3 +351,13 @@ def test_merge_and_build_operators_have_one_arrow_merge_level():
                and any(isinstance(n, ast.Attribute) and n.attr == "applyInArrow"
                        for n in ast.walk(fn))}
     assert folders == {"_tree_level"}
+
+
+@pytest.mark.parametrize("kind", [k for k in KINDS if k != "cuckoo"])
+def test_merge_of_one_state_is_that_state(kind):
+    """The merge of a single partial returns its bytes unchanged, filled
+    or empty — what lets a one-task grouped build skip phase 2."""
+    sk = _sketch(kind)
+    for state in (sk.empty(), _fill(sk, _values())):
+        blob = sk.serialize(state)
+        assert merge_blobs(sk, [blob], 7) == (blob, 7)

@@ -631,7 +631,8 @@ def test_wide_state_fold_auto_coalesces(spark, tokens_df):
     assert parts >= min(slots, 64)
     # narrow sketch: input parallelism untouched
     narrow = BloomSketch(BloomParams(n=65_536, p=0.01))
-    assert _bound_state_volume(many, narrow).rdd.getNumPartitions() == 64
+    kept, n = _bound_state_volume(many, narrow)
+    assert kept.rdd.getNumPartitions() == n == 64
 
 
 def _shard_route(mp, sketch, n_shards):

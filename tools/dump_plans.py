@@ -39,6 +39,17 @@ def main() -> None:
         "Scan reads ONLY `tokens`; one MapInArrow; **no Exchange** — the "
         "build never shuffles data, only the per-partition state rows move.")
 
+    from bloom_filter_spark.operators.build import _native_parquet_partials
+    from bloom_filter_spark.sketches import KLLParams, KLLSketch
+    add("Order-sensitive sketch build (KLL, replayed native scan)",
+        _native_parquet_partials(toks, KLLSketch(KLLParams(k=200)), "tokens",
+                                 "i32_array")[0],
+        "A driver Range of one row per JVM scan partition feeds one "
+        "MapInArrow: each task reads the row groups whose midpoint its JVM "
+        "partition's file pieces hold and re-cuts them at "
+        "`maxRecordsPerBatch`, so the KLL / t-digest fold sees the JVM "
+        "route's batches without the JVM scan. **No Exchange.**")
+
     blob, _ = build_sketch(toks.limit(1000), sk, "tokens", "i32_array")
     add("Bulk membership probe",
         membership_scan(toks, "tokens", spark, blob, "bloom"),
