@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import hashing
@@ -540,7 +541,7 @@ def _free_local_checkpoint(df: DataFrame) -> None:
     checkpoint blocks (unrecoverable 'Checkpoint block not found')."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
+    except Py4JError:
         pass  # private plan shape changed — blocks fall back to GC cleanup
 
 

@@ -43,8 +43,9 @@ kind names.
 Grouped builds ("one sketch per source") are the skew-prone case — the
 fixture's zipfian source weights put 45% of rows in one group.  The north
 rule's salted repartition is implemented as a two-phase aggregation:
-``groupBy(source, salt)`` partials (caps any single task at group/n_salts)
-→ ``groupBy(source)`` merge of the tiny states.  Cuckoo filters, which have
+``groupBy(source, salt)`` partials (caps any single task at group/salts,
+with no salt below one open cost of input) → ``groupBy(source)`` merge of
+the tiny states, skipped at one salt.  Cuckoo filters, which have
 no sound union-merge (SURVEY.md §2.3), use the single-writer grouped path
 with no salting.
 """
@@ -215,6 +216,8 @@ def _task_count(units: int, state_bytes: int, slots: int, open_cost: int,
     its own file scan obeys.  An input under one open cost is one task, so
     a caller's aggregate or ``groupBy`` plans no exchange.  A JVM fold
     (``scan_bytes`` None) keeps the ``units`` partitions Spark planned.
+    The salted grouped build passes ``n_salts`` as ``units`` and the
+    plan's estimated input bytes as ``scan_bytes``: its salt count.
 
     Wide states: once one state passes 256 KiB, each further partial costs
     a serialize and a merge of it, so both paths trim to the slots (never
@@ -840,7 +843,7 @@ def _describe_input(df: DataFrame) -> str:
     try:
         files = df.inputFiles()
         return ";".join(sorted(files)[:16]) + (f";+{len(files)-16}" if len(files) > 16 else "")
-    except Exception:
+    except Py4JError:  # the JVM cannot list this plan's files
         return "<derived>"
 
 
@@ -903,13 +906,54 @@ def _merge_grouped(partials: DataFrame, sketch, est_rows: int,
     kept a lazy DataFrame, so it calls the level planner, not the router.
     ``est_rows``: partials per group (a route behind a shuffle must not
     read getNumPartitions: under AQE it would run that shuffle once more).
-    ``one_split``: phase 1 ran as one task, so every group already has its
-    one row, and the merge of one state is that state byte for byte
-    (pinned for every mergeable kind): phase 2 is skipped."""
+    ``one_split``: every group already has its one row — map-side phase 1
+    ran as one task, or salted phase 1 ran at one salt (each group hashes
+    into one shuffle partition) — and the merge of one state is that
+    state byte for byte (pinned for every mergeable kind): phase 2 is
+    skipped."""
     if one_split:
         return partials.drop("src")
     return _merge_levels(partials, sketch, _byte_fanin(sketch.state_bytes_max),
                          est_rows, keys=("group",)).drop("src")
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's plan-time size estimate of ``df`` in bytes, the figure
+    Spark's own broadcast decisions read: no job runs, and a plan of
+    unknown size reads ``spark.sql.defaultSizeInBytes`` (Long.MaxValue)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+
+
+def _salted_partials(df: DataFrame, sketch, group_col: str, col: str,
+                     value_kind: str, n_salts: int, salt_on: str | None,
+                     num_partitions: int | None) -> tuple[DataFrame, int]:
+    """Salted phase 1 → (partials, salt count): the rows shuffle by
+    (group, salt) and fold through the shared phase 1.  The salt count is
+    the one parallelism rule over the plan's estimated input bytes, with
+    ``n_salts`` as its ceiling: no salt holds less than one open cost.  At
+    one salt the shuffle is by group alone, so each group lands in one
+    partition (AQE coalesces whole partitions, never splits one) and phase
+    1 emits one row per group."""
+    slots, open_cost = _parallelism(df.sparkSession)
+    est = _plan_bytes(df.select(group_col, col))
+    salts = _task_count(n_salts, 0, slots, open_cost, scan_bytes=est)
+    import logging
+    logging.getLogger("bloom_filter_spark").info(
+        "build_grouped salted: %d salt(s) of n_salts=%d for ~%d estimated "
+        "input bytes at a %d-byte open cost; phase 2 %s", salts, n_salts,
+        est, open_cost, "skipped" if salts == 1 else "runs")
+    cols = [F.col(group_col).cast("string").alias("group")]
+    if salts > 1:
+        salt_src = (F.xxhash64(F.col(salt_on)) if salt_on
+                    else F.xxhash64(F.monotonically_increasing_id()))
+        cols.append(F.pmod(salt_src, F.lit(salts)).alias("salt"))
+    base = df.select(*cols, F.col(col).alias("v"))
+    keys = base.columns[:-1]
+    shuffled = (base.repartition(num_partitions, *keys) if num_partitions
+                else base.repartition(*keys))
+    phase1 = _grouped_phase1_fn(sketch, _plain_step(sketch, value_kind))
+    return shuffled.drop("salt").mapInArrow(phase1, GROUPED_SCHEMA), salts
 
 
 # A map-side grouped build holds ALL G group states in EVERY task; above
@@ -971,15 +1015,21 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
 
     ``strategy="salted"``: the north rule's explicit salted repartition —
     phase 1 after ``repartition(group, salt)`` (caps any single task at
-    group/n_salts rows), phase 2 merges the n_salts states per group.
-    Right when the group domain is too large for G × |state| to sit in one
+    group/salts rows), phase 2 merges the salts' states per group.  Right
+    when the group domain is too large for G × |state| to sit in one
     task's memory, at the price of shuffling the full data once.
+    ``n_salts`` is an upper bound: the salt count is the one parallelism
+    rule, ``_task_count(n_salts, 0, slots, open cost, scan_bytes=<the
+    plan's estimated input bytes>)``, so no salt holds less than one
+    ``spark.sql.files.openCostInBytes`` and a plan of unknown size keeps
+    up to ``n_salts``.  At one salt every group hashes into one shuffle
+    partition, phase 1 already emits one row per group, and phase 2 is
+    skipped.
     """
     _check_key_column(df, col, value_kind, "inserted")
     if strategy == "auto":
         strategy, _ = _choose_grouped_strategy(df, sketch, group_col,
                                                group_cardinality)
-    phase1 = _grouped_phase1_fn(sketch, _plain_step(sketch, value_kind))
 
     if strategy == "mapside":
         native = None
@@ -991,7 +1041,9 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
                              F.col(col).alias("v"))
             if num_partitions:
                 base = base.repartition(num_partitions)
-            partials = base.mapInArrow(phase1, GROUPED_SCHEMA)
+            partials = base.mapInArrow(
+                _grouped_phase1_fn(sketch, _plain_step(sketch, value_kind)),
+                GROUPED_SCHEMA)
             native = partials, num_partitions or \
                 partials.rdd.getNumPartitions()
         partials, n = native
@@ -999,18 +1051,10 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
 
     if strategy != "salted":
         raise ValueError(f"unknown grouped-build strategy {strategy!r}")
-    salt_src = (F.xxhash64(F.col(salt_on)) if salt_on
-                else F.xxhash64(F.monotonically_increasing_id()))
-    base = df.select(
-        F.col(group_col).cast("string").alias("group"),
-        F.pmod(salt_src, F.lit(n_salts)).alias("salt"),
-        F.col(col).alias("v"),
-    )
-    shuffled = base.repartition(num_partitions, "group", "salt") if num_partitions \
-        else base.repartition("group", "salt")
-    partials = shuffled.drop("salt").mapInArrow(phase1, GROUPED_SCHEMA)
-    # a group's rows hash into at most n_salts (group, salt) partitions
-    return _merge_grouped(partials, sketch, n_salts)
+    partials, salts = _salted_partials(df, sketch, group_col, col, value_kind,
+                                       n_salts, salt_on, num_partitions)
+    # a group's rows hash into at most `salts` (group, salt) partitions
+    return _merge_grouped(partials, sketch, salts, one_split=salts == 1)
 
 
 def build_grouped_single_writer(df: DataFrame, kind: str, params, group_col: str,

@@ -195,8 +195,11 @@ class CountingBloomSketch:
     # converts to merge PARALLELISM, and per-merge-task memory is one shard,
     # not the filter (within the budget the driver folds the shard rows).
     # Segments with few touched cells ship sparse ((u32 rel-idx, i4 val)
-    # pairs): a partition's shard volume is bounded by its row count × k,
-    # not by m — at scale the shuffle carries the data actually written.
+    # pairs, indices strictly ascending): a partition's shard volume is
+    # bounded by its row count × k, not by m — at scale the shuffle carries
+    # the data actually written.  A sparse fold emits those pairs straight
+    # from its summed cells (no dense segment unless the shard is at least
+    # half full), and the merge adds them into one dense accumulator.
     # Layout (LE): u32 m | u32 k | u64 seed | u32 n_shards | u32 shard_id |
     #              u8 mode | mode 0: dense <i4 cells[lo:hi]
     #                       | mode 1: u32 nnz | <u4 rel_idx×nnz | <i4 val×nnz
@@ -209,22 +212,32 @@ class CountingBloomSketch:
         m = self.params.m
         return shard_id * m // n_shards, (shard_id + 1) * m // n_shards
 
-    def _emit_segment(self, seg: np.ndarray, shard_id: int,
-                      n_shards: int) -> bytes:
+    def _emit_cells(self, rel: np.ndarray, vals, width: int, shard_id: int,
+                    n_shards: int, seg: np.ndarray | None = None) -> bytes:
+        """Shard blob of a ``width``-cell shard whose nonzero cells are
+        ``rel`` (shard-relative, strictly ascending) holding ``vals``:
+        sparse below 50% fill, else dense.  A caller holding the dense
+        shard passes it as ``seg`` and ``vals`` None: it is copied as is,
+        and read at ``rel`` only for a sparse blob."""
         p = self.params
         header = (pack_u32(p.m) + pack_u32(p.k) + pack_u64(p.seed)
                   + pack_u32(n_shards) + pack_u32(shard_id))
-        nz = np.flatnonzero(seg)
-        if nz.size * 8 < seg.size * 4:  # sparse wins below 50% fill
-            return (header + b"\x01" + pack_u32(nz.size)
-                    + nz.astype("<u4").tobytes()
-                    + seg[nz].astype("<i4").tobytes())
+        if rel.size * 8 < width * 4:  # sparse wins below 50% fill
+            vals = seg[rel] if vals is None else vals
+            return (header + b"\x01" + pack_u32(rel.size)
+                    + rel.astype("<u4").tobytes()
+                    + vals.astype("<i4").tobytes())
+        if seg is None:
+            seg = np.zeros(width, dtype=_DTYPE)
+            seg[rel] = vals
         return header + b"\x00" + seg.astype("<i4").tobytes()
 
     def serialize_shard(self, state: np.ndarray, shard_id: int,
                         n_shards: int) -> bytes:
         lo, hi = self.shard_bounds(shard_id, n_shards)
-        return self._emit_segment(state[lo:hi], shard_id, n_shards)
+        seg = state[lo:hi]
+        return self._emit_cells(np.flatnonzero(seg), None, hi - lo, shard_id,
+                                n_shards, seg)
 
     # -- sparse accumulation (per-task memory ∝ data, not filter width) ----
     def delta_cells(self, values, signs, kind: str
@@ -237,19 +250,6 @@ class CountingBloomSketch:
     def _cells(self, h: np.ndarray, delta) -> tuple[np.ndarray, np.ndarray]:
         d = np.broadcast_to(np.asarray(delta, _DTYPE), h.shape)
         return self._indices(h).ravel(), np.tile(d, self.params.k)
-
-    def serialize_shard_from_cells(self, idx: np.ndarray, delta: np.ndarray,
-                                   shard_id: int, n_shards: int) -> bytes:
-        """Shard blob straight from sparse (cell, delta) pairs: transient
-        memory = one shard segment + the pairs, never the full counter
-        array.  ``idx`` may contain cells outside the shard (they are
-        masked) and duplicate cells (they sum)."""
-        lo, hi = self.shard_bounds(shard_id, n_shards)
-        seg = np.zeros(hi - lo, dtype=_DTYPE)
-        m_ = (idx >= lo) & (idx < hi)
-        if m_.any():
-            np.add.at(seg, idx[m_] - lo, delta[m_])
-        return self._emit_segment(seg, shard_id, n_shards)
 
     def shard_fold(self) -> "ShardFold":
         """Empty state of the sharded changelog fold: ``update_delta_*``
@@ -304,12 +304,16 @@ class CountingBloomSketch:
                         f"sparse cbloom shard body is {len(b) - body} B, "
                         f"not 4 + 8 × its nnz")
                 idx = np.frombuffer(b, "<u4", nnz, body + 4)
-                if nnz and int(idx.max()) >= width:
+                if nnz > 1 and not (idx[1:] > idx[:-1]).all():
                     raise ValueError(
-                        f"sparse cbloom shard index {int(idx.max())} outside "
+                        "sparse cbloom shard indices are not strictly "
+                        "ascending")
+                if nnz and int(idx[-1]) >= width:
+                    raise ValueError(
+                        f"sparse cbloom shard index {int(idx[-1])} outside "
                         f"its {width} cells")
-                np.add.at(acc, idx.astype(np.intp),
-                          np.frombuffer(b, "<i4", nnz, body + 4 + 4 * nnz))
+                # distinct indices: a plain fancy add is exact
+                acc[idx] += np.frombuffer(b, "<i4", nnz, body + 4 + 4 * nnz)
             else:
                 raise ValueError(f"unknown cbloom shard mode byte {mode}")
         return b"".join([head, b"\x00", acc.astype("<i4", copy=False)])
@@ -409,13 +413,23 @@ class ShardFold:
         if self.dense is not None:
             return [sk.serialize_shard(self.dense, i, n_shards)
                     for i in range(n_shards)]
-        # one sort, then each shard slices its contiguous cell range —
-        # emission is O(E log E + shards), not O(shards × E)
+        # one sort, duplicate cells summed and zero sums dropped, then each
+        # shard emits its contiguous slice — O(E log E + shards), and no
+        # dense segment for a shard under half full.  Sums commute, so an
+        # unstable sort gives the same cells.
         idx, delta = self._pairs()
-        order = np.argsort(idx, kind="stable")
+        order = np.argsort(idx)
         idx, delta = idx[order], delta[order]
-        lows = [sk.shard_bounds(i, n_shards)[0] for i in range(n_shards)]
-        cuts = np.searchsorted(idx, lows + [sk.params.m])
-        return [sk.serialize_shard_from_cells(
-            idx[cuts[i]:cuts[i + 1]], delta[cuts[i]:cuts[i + 1]], i, n_shards)
-            for i in range(n_shards)]
+        if idx.size:
+            starts = np.flatnonzero(np.concatenate(([True],
+                                                    idx[1:] != idx[:-1])))
+            idx = idx[starts]
+            delta = np.add.reduceat(delta, starts, dtype=_DTYPE)
+            live = delta != 0
+            idx, delta = idx[live], delta[live]
+        bounds = [sk.shard_bounds(i, n_shards) for i in range(n_shards)]
+        cuts = np.searchsorted(idx, [lo for lo, _ in bounds] + [sk.params.m])
+        return [sk._emit_cells(idx[cuts[i]:cuts[i + 1]] - lo,
+                               delta[cuts[i]:cuts[i + 1]], hi - lo, i,
+                               n_shards)
+                for i, (lo, hi) in enumerate(bounds)]

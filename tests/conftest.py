@@ -14,6 +14,39 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def several_splits(spark):
+    """Spark's open cost lowered to 1 KiB for one test, so the native scan
+    cuts every small fixture into more than one split (at the default
+    4 MiB each is one task and the route pins would be single-split)."""
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    yield
+    spark.conf.set(key, prev)
+
+
+@pytest.fixture
+def salt_regimes(spark):
+    """→ a generator over both regimes of the salted grouped build, to
+    loop a test body over.  The salt count is the one parallelism rule
+    over the plan's estimated input bytes, so at the default open cost
+    every fixture here (sf0.001 tokens: 1.1 MB) runs one salt and skips
+    phase 2 ("one_salt"); with the open cost lowered to 1 byte any
+    nonempty input runs min(n_salts, 4 × slots) salts and phase 2
+    ("several_salts")."""
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+
+    def regimes():
+        yield "one_salt"
+        spark.conf.set(key, "1")
+        yield "several_salts"
+        spark.conf.set(key, prev)
+    yield regimes
+    spark.conf.set(key, prev)  # also when a loop body failed
+
+
 @pytest.fixture(scope="session")
 def sf_small():
     """Materialized sf0.001 fixture dir (tokens + probe tables)."""

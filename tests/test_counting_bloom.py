@@ -199,6 +199,12 @@ def test_shard_merge_rejects_malformed_bodies():
     bad = sparse[:29] + idx.tobytes() + sparse[29 + 4 * nnz:]
     with pytest.raises(ValueError, match="outside"):
         merge([bad])
+    for i, j in ((0, 1), (1, 0)):  # a repeated, then a descending index
+        order = idx.copy()
+        order[i] = idx[j]
+        bad = sparse[:29] + order.tobytes() + sparse[29 + 4 * nnz:]
+        with pytest.raises(ValueError, match="strictly ascending"):
+            merge([bad])
     with pytest.raises(ValueError, match="truncated"):
         merge([dense[:24]])
     # well-formed blobs of both modes still merge
@@ -231,9 +237,9 @@ def test_counting_bloom_rejects_xxh3_params():
 
 def test_delta_cells_equivalence_and_cell_serialization():
     """Sparse accumulation building blocks: np.add.at of delta_cells pairs
-    must reproduce _apply_delta exactly, and serialize_shard_from_cells
-    must equal serialize_shard of the materialized state (out-of-range and
-    duplicate cells included)."""
+    must reproduce _apply_delta exactly, and a sparse shard fold of those
+    pairs must emit serialize_shard of the materialized state, shard for
+    shard (duplicate cells and cancelling deltas included)."""
     cb = CountingBloomSketch(BloomParams(n=2000, p=0.01))
     keys = _keys(1500, seed=5)
     signs = np.where(_keys(1500, seed=6) % 3 == 0, -1, 1).astype(np.int32)
@@ -243,10 +249,38 @@ def test_delta_cells_equivalence_and_cell_serialization():
     replay = cb.empty()
     np.add.at(replay, idx, d)
     np.testing.assert_array_equal(replay, dense)
+    fold = cb.shard_fold()
+    fold.add(idx, d)
+    assert fold.dense is None  # the sparse regime emits these blobs
     for n_shards in (1, 4, 7):
-        for i in range(n_shards):
-            assert cb.serialize_shard_from_cells(idx, d, i, n_shards) == \
-                cb.serialize_shard(dense, i, n_shards)
+        assert fold.shard_blobs(n_shards) == [
+            cb.serialize_shard(dense, i, n_shards) for i in range(n_shards)]
+
+
+def test_sparse_fold_takes_the_dense_layout_past_half_fill(monkeypatch):
+    """A sparse fold's shard at or past half fill is emitted dense, as
+    serialize_shard of the materialized state emits it; the others stay
+    sparse.  Two-cell shards (SHARD_TARGET_BYTES shrunk to 8) make both
+    layouts appear in one fold."""
+    from bloom_filter_spark.sketches import counting_bloom
+    monkeypatch.setattr(counting_bloom, "SHARD_TARGET_BYTES", 8)
+    cb = CountingBloomSketch(BloomParams(n=200, p=0.01))
+    keys = _keys(60, seed=7)
+    signs = np.where(np.arange(60) % 4 == 0, -1, 1).astype(np.int32)
+    dense = cb.empty()
+    cb.update_delta_i32(dense, keys, signs)
+    fold = cb.shard_fold()
+    cb.update_delta_i32(fold, keys, signs)
+    assert fold.dense is None
+    n_shards = cb.shard_count()
+    assert n_shards == cb.params.m // 2
+    blobs = fold.shard_blobs(n_shards)
+    assert blobs == [cb.serialize_shard(dense, i, n_shards)
+                     for i in range(n_shards)]
+    assert {b[24] for b in blobs} == {0, 1}  # both layouts emitted
+    merged = [CountingBloomSketch.merge_shard_blobs([b, b]) for b in blobs]
+    assert (CountingBloomSketch.reassemble_shards(merged)
+            == cb.serialize(2 * dense))
 
 
 def test_resume_refuses_an_older_layout(spark, tmp_path):

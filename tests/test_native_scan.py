@@ -32,18 +32,6 @@ def tokens(spark):
     return spark.read.parquet(f"{fx}/tokens.parquet")
 
 
-@pytest.fixture
-def several_splits(spark):
-    """Spark's open cost lowered to 1 KiB for one test, so the native scan
-    cuts every small fixture here into more than one split (at the default
-    4 MiB each is one task and the route pins would be single-split)."""
-    key = "spark.sql.files.openCostInBytes"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "1024")
-    yield
-    spark.conf.set(key, prev)
-
-
 def _splits(partials) -> int:
     """Splits the native source of ``partials`` planned: one per task."""
     if isinstance(partials, tuple):  # (source, split count)

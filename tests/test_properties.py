@@ -135,7 +135,7 @@ def test_bytes_hash_injective_on_length_extension(b):
 def test_cbloom_shard_cycle_any_state(vals, signs, n_shards, n_parts):
     """Sharded serde cycle quantified over arbitrary signed states, shard
     counts (including non-dividing) and partition splits: per-partition
-    sparse cell emission → per-shard merge → reassembly must equal the
+    shard fold emission → per-shard merge → reassembly must equal the
     monolithic serialize() of the sequential fold bit-for-bit — even when
     intermediate partitions hold locally-negative counters."""
     from bloom_filter_spark.sketches import CountingBloomSketch
@@ -150,10 +150,10 @@ def test_cbloom_shard_cycle_any_state(vals, signs, n_shards, n_parts):
     shard_blobs = []
     for p_ in range(n_parts):
         part, ps = arr[bounds[p_]:bounds[p_ + 1]], sgn[bounds[p_]:bounds[p_ + 1]]
-        idx, d = (cb.delta_cells(part, ps, "i32") if part.size
-                  else (np.empty(0, np.int64), np.empty(0, np.int32)))
-        shard_blobs.append([cb.serialize_shard_from_cells(idx, d, i, n_shards)
-                            for i in range(n_shards)])
+        fold = cb.shard_fold()
+        if part.size:
+            cb.update_delta_i32(fold, part, ps)
+        shard_blobs.append(fold.shard_blobs(n_shards))
     merged = [CountingBloomSketch.merge_shard_blobs(
         [shard_blobs[p_][i] for p_ in range(n_parts)])
         for i in range(n_shards)]

@@ -70,9 +70,10 @@ def test_checkpoint_rerun_supersedes_not_duplicates(spark, sf_small, tmp_path):
     assert blob3 == blob1 and n3 == n1
 
 
-def test_grouped_skips_null_values(spark):
+def test_grouped_skips_null_values(spark, salt_regimes):
     """A null value is never counted or inserted, on either grouped
-    route: the group's state is the state of its non-null values."""
+    route (the salted one at one salt and at several): the group's state
+    is the state of its non-null values."""
     from bloom_filter_spark.operators import build_grouped
     from bloom_filter_spark.sketches import BloomParams, BloomSketch
     df = spark.createDataFrame(
@@ -80,11 +81,17 @@ def test_grouped_skips_null_values(spark):
     sk = BloomSketch(BloomParams(n=64, p=0.01))
     want = sk.empty()
     sk.update_i32(want, np.array([5, 7], np.int32))
-    for strategy in ("mapside", "salted"):
+
+    def check(strategy, regime=""):
         rows = build_grouped(df, sk, "source", "v", "i32", n_salts=4,
                              strategy=strategy).collect()
-        assert [(r.group, r.n_items) for r in rows] == [("g1", 2)], strategy
-        assert bytes(rows[0].state) == sk.serialize(want), strategy
+        assert [(r.group, r.n_items) for r in rows] == [("g1", 2)], \
+            (strategy, regime)
+        assert bytes(rows[0].state) == sk.serialize(want), (strategy, regime)
+
+    check("mapside")
+    for regime in salt_regimes():
+        check("salted", regime)
 
 
 def test_lsh_signatures_respect_string_ids(spark):

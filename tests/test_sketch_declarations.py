@@ -295,7 +295,7 @@ def test_build_operators_never_reach_into_a_sketch_state():
     and no sharding or repartition knob on a ``build_delta*`` function."""
     import bloom_filter_spark.operators.build as build
     tree = ast.parse(open(os.path.abspath(build.__file__)).read())
-    helpers = {"shard_bounds", "delta_cells", "serialize_shard_from_cells"}
+    helpers = {"shard_bounds", "delta_cells", "_emit_cells"}
     offenders = []
     for node in ast.walk(tree):
         name = (node.attr if isinstance(node, ast.Attribute)

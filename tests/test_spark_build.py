@@ -13,9 +13,11 @@ from bloom_filter_spark.operators import (
 )
 from bloom_filter_spark.operators.merge import _merge_levels
 from bloom_filter_spark.sketches import (
-    BloomParams, BloomSketch, CMSParams, CMSSketch, CountSketch,
-    CountSketchParams, CuckooParams, HLLParams, HLLSketch, KLLParams,
-    KLLSketch, TDigestParams, TDigestSketch,
+    BlockedBloomParams, BlockedBloomSketch, BloomParams, BloomSketch,
+    CMSParams, CMSSketch, CountingBloomSketch, CountSketch,
+    CountSketchParams, CuckooParams, DDSketch, DDSketchParams, HLLParams,
+    HLLSketch, KLLParams, KLLSketch, KMVParams, KMVSketch, TDigestParams,
+    TDigestSketch,
 )
 
 
@@ -185,20 +187,23 @@ def test_kll_tdigest_distributed_quantiles(spark, tokens_df):
         assert np.abs(ranks - np.array(qs)).max() <= bound
 
 
-def test_grouped_build_salted(spark, tokens_df):
-    # per-source HLL with salt fan-out; estimates match per-source exact counts
+def test_grouped_build_salted(spark, tokens_df, salt_regimes):
+    # per-source HLL with salt fan-out; estimates match per-source exact
+    # counts at one salt and at several
     sketch = HLLSketch(HLLParams(b=12))
-    grouped = build_grouped(tokens_df, sketch, "source", "tokens",
-                            "i32_array", n_salts=8, salt_on="doc_id",
-                            strategy="salted").collect()
     exact = {r.source: r.cnt for r in
              tokens_df.select("source", F.explode("tokens").alias("t"))
              .groupBy("source").agg(F.countDistinct("t").alias("cnt")).collect()}
-    assert len(grouped) == len(exact)
-    for row in grouped:
-        _, state = HLLSketch.deserialize(bytes(row.state))
-        est = sketch.estimate(state)
-        assert abs(est - exact[row.group]) / exact[row.group] <= 5 * sketch.params.std_error
+    for regime in salt_regimes():
+        grouped = build_grouped(tokens_df, sketch, "source", "tokens",
+                                "i32_array", n_salts=8, salt_on="doc_id",
+                                strategy="salted").collect()
+        assert len(grouped) == len(exact), regime
+        for row in grouped:
+            _, state = HLLSketch.deserialize(bytes(row.state))
+            est = sketch.estimate(state)
+            assert abs(est - exact[row.group]) / exact[row.group] \
+                <= 5 * sketch.params.std_error, regime
 
 
 def test_cuckoo_grouped_single_writer(spark, tokens_df):
@@ -274,18 +279,20 @@ def test_mismatched_params_merge_refused(spark, tokens_df):
         _merge_levels(both, BloomSketch(BloomParams(n=1000, p=0.01)), 4).collect()
 
 
-def test_grouped_paths_produce_identical_states(spark, tokens_df):
+def test_grouped_paths_produce_identical_states(spark, tokens_df,
+                                                salt_regimes):
     """Salted and map-side grouped builds are bit-identical (HLL
     register-max merge is order-insensitive, so every strategy must land
-    on the same registers)."""
+    on the same registers), at one salt and at several."""
     sk = HLLSketch(HLLParams(b=12))
-    a = {r.group: bytes(r.state) for r in build_grouped(
-        tokens_df, sk, "source", "tokens", "i32_array",
-        n_salts=8, salt_on="doc_id", strategy="salted").collect()}
     b = {r.group: bytes(r.state) for r in build_grouped(
         tokens_df, sk, "source", "tokens", "i32_array",
         strategy="mapside").collect()}
-    assert a == b
+    for regime in salt_regimes():
+        a = {r.group: bytes(r.state) for r in build_grouped(
+            tokens_df, sk, "source", "tokens", "i32_array",
+            n_salts=8, salt_on="doc_id", strategy="salted").collect()}
+        assert a == b, regime
     ns = {r.group: r.n_items for r in build_grouped(
         tokens_df, sk, "source", "tokens", "i32_array",
         strategy="mapside").collect()}
@@ -306,22 +313,23 @@ def test_build_sketch_preagg_is_build_sketch(spark, tokens_df):
             == build_sketch(df, sk, "tokens", "i32_array"))
 
 
-def test_grouped_routes_keep_null_group(spark):
+def test_grouped_routes_keep_null_group(spark, salt_regimes):
     """A null group label is its own group on every grouped route (as in
-    Spark's groupBy): its rows are counted, never silently dropped."""
+    Spark's groupBy), at one salt and at several: its rows are counted,
+    never silently dropped."""
     df = spark.createDataFrame(
         [("a", [1, 2]), (None, [3]), ("a", [2, 4]), ("b", [5, 6, 7])],
         "source string, tokens array<int>").repartition(2)
     sk = HLLSketch(HLLParams(b=10))
-    routes = [
-        build_grouped(df, sk, "source", "tokens", "i32_array",
-                      strategy="mapside"),
-        build_grouped(df, sk, "source", "tokens", "i32_array", n_salts=4,
-                      strategy="salted"),
-    ]
-    states = [{r.group: (r.n_items, bytes(r.state)) for r in g.collect()}
-              for g in routes]
-    assert states[0] == states[1]
+    states = [{r.group: (r.n_items, bytes(r.state)) for r in build_grouped(
+        df, sk, "source", "tokens", "i32_array",
+        strategy="mapside").collect()}]
+    for _ in salt_regimes():
+        states.append({r.group: (r.n_items, bytes(r.state))
+                       for r in build_grouped(
+                           df, sk, "source", "tokens", "i32_array",
+                           n_salts=4, strategy="salted").collect()})
+    assert states[0] == states[1] == states[2]
     assert states[0][None][0] == 1
     assert sum(n for n, _ in states[0].values()) == 8
 
@@ -748,10 +756,11 @@ def test_grouped_auto_routes_high_cardinality_to_salted(spark, tokens_df):
 
 
 def test_grouped_auto_salted_fallback_matches_mapside(spark, tokens_df,
-                                                      monkeypatch):
+                                                      monkeypatch,
+                                                      salt_regimes):
     """End-to-end auto route down the salted fallback: HLL merge is
     commutative and serde canonical, so the fallback's grouped states must
-    equal the map-side default bit-for-bit."""
+    equal the map-side default bit-for-bit, at one salt and at several."""
     from bloom_filter_spark.operators import build as build_mod
     from bloom_filter_spark.sketches import HLLParams, HLLSketch
 
@@ -763,8 +772,169 @@ def test_grouped_auto_salted_fallback_matches_mapside(spark, tokens_df,
 
     mapside = run()
     monkeypatch.setattr(build_mod, "MAPSIDE_STATE_BUDGET_BYTES", 1)
-    salted = run()
-    assert salted == mapside and len(mapside) > 0
+    for regime in salt_regimes():
+        assert run() == mapside and len(mapside) > 0, regime
+
+
+def test_salt_count_is_the_parallelism_rule():
+    """The salted build's salt count is ``_task_count(n_salts, 0, slots,
+    open cost, scan_bytes=<estimated input bytes>)`` (no Spark job): no
+    salt below one open cost, ``n_salts`` an upper bound, and a plan of
+    unknown size (Long.MaxValue) keeps up to ``n_salts``."""
+    from bloom_filter_spark.operators.build import _task_count
+
+    def salts(est, n_salts=16, slots=4):
+        return _task_count(n_salts, 0, slots, 4 << 20, scan_bytes=est)
+
+    assert salts(0) == 1
+    assert salts(387_757) == 1  # perfbench changelog-skew
+    assert salts(1_100_000) == 1  # sf0.001 tokens
+    assert salts(11_600_000) == 3  # sf0.01 tokens
+    assert salts(114_600_000) == 16  # sf0.1 tokens: n_salts kept
+    assert salts(2**63 - 1) == 16
+    assert salts(2**63 - 1, n_salts=4) == 4
+    assert salts(2**63 - 1, slots=2) == 8  # 4 × slots caps it too
+
+
+def test_salted_input_estimate_runs_no_job(spark, tokens_df):
+    """The salt count reads Catalyst's plan-time size estimate: a parquet
+    scan reads its projected file bytes, an RDD-backed DataFrame reads
+    Long.MaxValue, and neither runs a Spark job."""
+    from bloom_filter_spark.operators.build import _plan_bytes
+    sc = spark.sparkContext
+    rdd_df = spark.createDataFrame(
+        sc.parallelize([("a", 1)]), "g string, v int")
+    sc.setJobGroup("salt_estimate", "salted input estimate")
+    try:
+        est = _plan_bytes(tokens_df.select("source", "tokens"))
+        unknown = _plan_bytes(rdd_df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("salt_estimate") == []
+    assert 0 < est < 4 << 20
+    assert unknown == 2**63 - 1
+
+
+def _salted_plan(tokens_df, caplog):
+    """(executed plan text, log lines) of a salted HLL build by source."""
+    import logging
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger="bloom_filter_spark"):
+        df = build_grouped(tokens_df, HLLSketch(HLLParams(b=12)), "source",
+                           "tokens", "i32_array", salt_on="doc_id",
+                           strategy="salted")
+    return (df._jdf.queryExecution().executedPlan().toString(),
+            [m for m in caplog.messages if "build_grouped salted" in m])
+
+
+def test_salted_plan_skips_phase2_under_one_open_cost(tokens_df, caplog):
+    """Under one open cost of estimated input the salted build runs one
+    salt: one hash Exchange (by group) under phase 1 and no phase-2
+    FlatMapGroupsInArrow; the decision is logged."""
+    plan, logged = _salted_plan(tokens_df, caplog)
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "FlatMapGroupsInArrow" not in plan
+    assert len(logged) == 1
+    assert "1 salt(s) of n_salts=16" in logged[0]
+    assert f"at a {4 << 20}-byte open cost" in logged[0]
+    assert logged[0].endswith("phase 2 skipped")
+
+
+def test_salted_plan_keeps_phase2_past_one_open_cost(tokens_df, caplog,
+                                                     several_splits):
+    """With the open cost lowered to 1 KiB the 1.1 MB input runs
+    n_salts salts and the plan keeps phase 2."""
+    plan, logged = _salted_plan(tokens_df, caplog)
+    assert plan.count("Exchange hashpartitioning") == 2
+    assert "FlatMapGroupsInArrow" in plan
+    assert len(logged) == 1
+    assert "16 salt(s) of n_salts=16" in logged[0]
+    assert logged[0].endswith("phase 2 runs")
+
+
+def test_one_salt_phase1_emits_one_row_per_group(spark, tokens_df):
+    """At one salt the input shuffles by group alone, so every group lands
+    in one shuffle partition (AQE, on in this session, coalesces whole
+    partitions and never splits one) and phase 1 already emits one row
+    per group: skipping phase 2 returns one row per group."""
+    from bloom_filter_spark.operators.build import _salted_partials
+    conf = spark.conf
+    assert conf.get("spark.sql.adaptive.enabled") == "true"
+    assert conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    wide = spark.range(20_000).select(
+        (F.col("id") % 997).cast("string").alias("g"),
+        F.col("id").cast("int").alias("v"))
+    sk = HLLSketch(HLLParams(b=10))
+    for df, group_col, col, kind, n_rows in (
+            (tokens_df, "source", "tokens", "i32_array",
+             tokens_df.select(F.sum("n_tok")).first()[0]),
+            (wide, "g", "v", "i32", 20_000)):
+        partials, salts = _salted_partials(df, sk, group_col, col, kind, 16,
+                                           None, None)
+        assert salts == 1
+        rows = partials.collect()
+        groups = [r.group for r in rows]
+        assert len(groups) == len(set(groups)) > 1
+        assert sum(r.n_items for r in rows) == n_rows
+
+
+_MULTISET_PURE = [
+    (BloomSketch(BloomParams(n=4096, p=0.01)), "tokens", "i32_array"),
+    (BlockedBloomSketch(BlockedBloomParams(n=4096, p=0.01)), "tokens",
+     "i32_array"),
+    (CountingBloomSketch(BloomParams(n=512, p=0.05)), "tokens", "i32_array"),
+    (HLLSketch(HLLParams(b=12)), "tokens", "i32_array"),
+    (CMSSketch(CMSParams(eps=0.01, delta=0.01)), "tokens", "i32_array"),
+    (CountSketch(CountSketchParams(w=1 << 10, d=5)), "tokens", "i32_array"),
+    (KMVSketch(KMVParams(k=64)), "tokens", "i32_array"),
+    (DDSketch(DDSketchParams(alpha=0.01)), "n_tok", "f64"),
+]
+
+
+def test_salted_bytes_equal_in_both_regimes_for_multiset_pure_kinds(
+        spark, tokens_df, salt_regimes):
+    """Every multiset-pure kind's grouped states are the same bytes at one
+    salt, at several salts and on the map-side route."""
+    from bloom_filter_spark.operators.build import _salted_partials
+    from bloom_filter_spark.sketches import SKETCH_KINDS
+    pure = {kind for kind, cls in SKETCH_KINDS.items()
+            if cls.multiset_pure is not False}  # CMS: a params property
+    assert {sk.kind for sk, _, _ in _MULTISET_PURE} == pure
+    want = {sk.kind: {r.group: (r.n_items, bytes(r.state))
+                      for r in build_grouped(tokens_df, sk, "source", col,
+                                             kind, strategy="mapside")
+                      .collect()}
+            for sk, col, kind in _MULTISET_PURE}
+    for regime, n in zip(salt_regimes(), (1, 16)):
+        for sk, col, kind in _MULTISET_PURE:
+            assert _salted_partials(tokens_df, sk, "source", col, kind, 16,
+                                    "doc_id", None)[1] == n
+            got = {r.group: (r.n_items, bytes(r.state))
+                   for r in build_grouped(tokens_df, sk, "source", col, kind,
+                                          salt_on="doc_id",
+                                          strategy="salted").collect()}
+            assert got == want[sk.kind] and got, (regime, sk.kind)
+
+
+def test_describe_input_propagates_a_non_py4j_error(tokens_df, monkeypatch):
+    """``_describe_input`` falls back to "<derived>" only when the JVM
+    cannot list the files (a Py4JError); any other error propagates."""
+    from py4j.protocol import Py4JError
+
+    from bloom_filter_spark.operators.build import _describe_input
+    assert "tokens.parquet" in _describe_input(tokens_df)
+
+    def raise_(exc):
+        def inputs(self):
+            raise exc
+        return inputs
+
+    cls = type(tokens_df)
+    monkeypatch.setattr(cls, "inputFiles", raise_(Py4JError("no")))
+    assert _describe_input(tokens_df) == "<derived>"
+    monkeypatch.setattr(cls, "inputFiles", raise_(RuntimeError("boom")))
+    with pytest.raises(RuntimeError, match="boom"):
+        _describe_input(tokens_df)
 
 
 def test_merge_tree_level_renumbers_dense(spark):

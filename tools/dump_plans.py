@@ -48,7 +48,8 @@ def main() -> None:
         "MapInArrow: each task reads the row groups whose midpoint its JVM "
         "partition's file pieces hold and re-cuts them at "
         "`maxRecordsPerBatch`, so the KLL / t-digest fold sees the JVM "
-        "route's batches without the JVM scan. **No Exchange.**")
+        "route's batches without the JVM scan. **No Exchange.** (Eight JVM "
+        "partitions of the sf0.1 tokens at `local[8]`, so eight tasks.)")
 
     blob, _ = build_sketch(toks.limit(1000), sk, "tokens", "i32_array")
     add("Bulk membership probe",
@@ -70,9 +71,22 @@ def main() -> None:
         build_grouped(toks, HLLSketch(HLLParams(b=12)), "source", "tokens",
                       n_salts=16, salt_on="doc_id", strategy="salted"),
         "Explicit `repartition(group, salt)` below phase 1 caps any one "
-        "task at group/n_salts rows (north-rule skew defense) at the price "
+        "task at group/salts rows (north-rule skew defense) at the price "
         "of one full-data Exchange — the right trade only when G × |state| "
-        "can't sit in a single task's memory.")
+        "can't sit in a single task's memory.  The salt count is the one "
+        "parallelism rule over Catalyst's size estimate (here ~115 MB, so "
+        "all 16 salts), and the second Exchange feeds phase 2, the "
+        "per-group merge of the salts' states.")
+
+    small = spark.read.parquet(f"{ensure_fixtures('sf0.001')}/tokens.parquet")
+    add("Grouped build — salted strategy under one open cost",
+        build_grouped(small, HLLSketch(HLLParams(b=12)), "source", "tokens",
+                      n_salts=16, salt_on="doc_id", strategy="salted"),
+        "The sf0.001 tokens (~1.1 MB estimated) hold less than one "
+        "`spark.sql.files.openCostInBytes`, so the build runs one salt: "
+        "the only Exchange hashes by group, each group lands in one "
+        "partition, phase 1 emits its one row, and phase 2 "
+        "(FlatMapGroupsInArrow) is skipped.")
 
     add("Dimension join (top customer per nation)",
         relational.top_customer_per_nation(spark, "/root/testdata/sf0.001"),
