@@ -59,6 +59,8 @@ import numpy as np
 from py4j.protocol import Py4JError
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (IntegerType, StringType, StructField,
+                               StructType)
 
 from ..core.hashing import StrBuf, arrow_strbuf
 from ..sketches.base import sketch_for_kind
@@ -109,10 +111,16 @@ def _check_key_type(t, value_kind: str, use: str) -> None:
 def _check_key_column(df: DataFrame, col: str, value_kind: str,
                       use: str) -> None:
     """``_check_key_type`` of column ``col`` of ``df``, from its schema on
-    the driver (no job runs)."""
+    the driver (no job runs).  A plain top-level field name reads
+    ``df.schema``, which PySpark keeps per DataFrame (no py4j round trip
+    after the first); any other name (nested, quoted, differently cased,
+    ambiguous or missing) is resolved by Spark through ``df.select``, which
+    raises its own errors."""
     from pyspark.sql.pandas.types import to_arrow_type
-    _check_key_type(to_arrow_type(df.select(col).schema[0].dataType),
-                    value_kind, use)
+    fields = [f for f in df.schema.fields if f.name.lower() == col.lower()]
+    if len(fields) != 1 or fields[0].name != col or "." in col or "`" in col:
+        fields = df.select(col).schema.fields
+    _check_key_type(to_arrow_type(fields[0].dataType), value_kind, use)
 
 
 def _update(sketch, state, values, value_kind: str) -> int:
@@ -545,7 +553,7 @@ def _recut(tables, rows: int):
         yield batch(pa.concat_tables(pending))
 
 
-def _native_scan(df: DataFrame, cols: list[str], fn, schema: str,
+def _native_scan(df: DataFrame, cols: list[str], fn, schema: StructType,
                  str_cols: tuple = (), state_bytes: int = 0,
                  replay: bool = False) -> tuple[DataFrame, int] | None:
     """Native-scan source of the builds and of ``membership_scan``: one task
@@ -740,7 +748,8 @@ def _signed_step(update, value_kind: str, sign_col: str):
 # the partial row keyed by shard: ``src`` (the origin scan partition)
 # persists with the row, so the fanin levels group on floor(src / fanin)
 # after a checkpoint read-back too
-SHARD_SCHEMA = "shard_id int, src long, n_items long, state binary"
+SHARD_SCHEMA = StructType([StructField("shard_id", IntegerType()),
+                           *PARTIAL_SCHEMA.fields])
 
 
 def build_delta_shard_partials(df: DataFrame, sketch, col: str, sign_col: str,
@@ -849,7 +858,8 @@ def _describe_input(df: DataFrame) -> str:
 
 # phase-1 rows carry their origin partition as ``src``: phase 2 orders its
 # fold and its fanin levels by it, then drops it
-GROUPED_SCHEMA = "group string, src long, n_items long, state binary"
+GROUPED_SCHEMA = StructType([StructField("group", StringType()),
+                             *PARTIAL_SCHEMA.fields])
 
 
 def _native_grouped_partials(df: DataFrame, sketch, group_col: str, col: str,
@@ -873,21 +883,63 @@ def _grouped_phase1_fn(sketch, step):
     """Grouped phase 1 shared by every grouped route (map-side, salted,
     native scan) over (group, *step columns) batches:
     dictionary-encode the group labels (a null label is its own group, as
-    in Spark's groupBy) and fold each group's rows into that group's state
-    through the same ``step`` the ungrouped fold core runs — no pandas
-    object columns, no per-row Python (rows are split with Arrow compute)."""
+    in Spark's groupBy), split each batch into its groups' slices with
+    Arrow compute (a batch of one group is its own slice, uncopied) and
+    fold them into the groups' states through the same ``step`` the
+    ungrouped fold core runs — no pandas object columns, no per-row
+    Python.  One row per group, in first-seen order.
+
+    A multiset-pure sketch buffers each group's slices and folds them
+    with ONE ``step`` call per flush (several slices are concatenated,
+    one is folded as it is): every call of a sketch update has a fixed
+    cost, which on many groups × small batches outweighs the data work
+    (perfbench ``changelog-skew``: 10 batches × 32 groups of ~156 string
+    keys per task).  Its state depends only on the multiset of items, so
+    the chunking cannot move its bytes.  The buffer flushes at the end of
+    the partition, or once its Arrow bytes plus the G group states pass a
+    quarter of ``MAPSIDE_STATE_BUDGET_BYTES`` (the map-side route's
+    per-task budget; the buffer passes that quarter by at most one
+    batch).  Where the states alone fill that quarter — the salted
+    fallback's regime — every batch flushes.  An order-sensitive sketch
+    (KLL, t-digest, Misra–Gries, reservoir, conservative CMS) has a
+    share of 0, so it flushes every batch: one fold per (batch, group),
+    the batches its bytes are pinned to."""
+    share = MAPSIDE_STATE_BUDGET_BYTES // 4 if sketch.multiset_pure else 0
+    state_bytes = sketch.state_bytes_max
 
     def phase1(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
-        states: dict = {}
+        states: dict = {}  # label → [state, n_items, buffered slices]
+
+        def flush():
+            for st in states.values():
+                held, st[2] = st[2], []
+                if len(held) > 1:
+                    held = [pa.RecordBatch.from_arrays(
+                        [pa.concat_arrays([s.column(i) for s in held])
+                         for i in range(held[0].num_columns)],
+                        held[0].schema.names)]
+                if held:
+                    st[1] += step(st[0], held[0])
+
+        buffered = 0
         for b in batches:
             enc = pc.dictionary_encode(b.column(0), null_encoding="encode")
-            codes = enc.indices.to_numpy(zero_copy_only=False)
+            labels = enc.dictionary.to_pylist()
             rest = pa.RecordBatch.from_arrays(b.columns[1:], b.schema.names[1:])
-            for gi, gname in enumerate(enc.dictionary.to_pylist()):
-                st = states.setdefault(gname, [sketch.empty(), 0])
-                st[1] += step(st[0], rest.filter(pa.array(codes == gi)))
+            codes = enc.indices.to_numpy(zero_copy_only=False)
+            for gi, gname in enumerate(labels):
+                st = states.get(gname)
+                if st is None:
+                    st = states[gname] = [sketch.empty(), 0, []]
+                st[2].append(rest if len(labels) == 1
+                             else rest.filter(pa.array(codes == gi)))
+            buffered += rest.nbytes
+            if buffered + len(states) * state_bytes > share:
+                flush()
+                buffered = 0
+        flush()
         yield pa.RecordBatch.from_pydict({
             "group": pa.array(list(states.keys()), pa.string()),
             "src": pa.array([_src()] * len(states), pa.int64()),

@@ -25,7 +25,11 @@ import itertools
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-PARTIAL_SCHEMA = "src long, n_items long, state binary"
+# a StructType, not a DDL string, which every mapInArrow would send to the
+# JVM's parser
+PARTIAL_SCHEMA = StructType([StructField("src", LongType()),
+                             StructField("n_items", LongType()),
+                             StructField("state", BinaryType())])
 
 
 def merge_blobs(sketch, blobs: list, n_items: int) -> tuple[bytes, int]:
@@ -128,9 +132,7 @@ def _tree_level(df: DataFrame, sketch, fanin: int | None, keys: tuple = (),
     span fanin² inputs.  Pinned by
     tests/test_spark_build.py::test_merge_tree_level_renumbers_dense."""
     fold = fold or (lambda blobs: merge_blobs(sketch, blobs, 0)[0])
-    schema = StructType([df.schema[k] for k in keys] + [
-        StructField("src", LongType()), StructField("n_items", LongType()),
-        StructField("state", BinaryType())])
+    schema = StructType([df.schema[k] for k in keys] + PARTIAL_SCHEMA.fields)
     by = list(keys)
     if fanin:
         df = df.withColumn("_grp", F.floor(F.col("src") / fanin))

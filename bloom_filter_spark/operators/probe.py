@@ -39,7 +39,8 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F
-from pyspark.sql.types import BooleanType, DoubleType, LongType
+from pyspark.sql.types import (BooleanType, DoubleType, LongType,
+                               StructField, StructType)
 
 from ..core.hashing import compact_i32_counts
 from ..sketches.base import SKETCH_KINDS, sketch_for_kind
@@ -229,6 +230,11 @@ def register_sql_probes(spark: SparkSession, prefix: str, blob: bytes, kind: str
     spark.udf.register(f"{prefix}_{name}", udf)
 
 
+# membership_scan's per-task count row
+_COUNT_SCHEMA = StructType([StructField("n_probed", LongType()),
+                            StructField("n_member", LongType())])
+
+
 def membership_scan(df, col: str, spark: SparkSession, blob: bytes, kind: str,
                     value_kind: str = "i32_array"):
     """Bulk membership over a whole table — the Exist() hot loop at scale.
@@ -280,6 +286,7 @@ def membership_scan(df, col: str, spark: SparkSession, blob: bytes, kind: str,
     # no state-bytes hint: the count rows are near-free to ship, so the
     # native scan's splits follow the input's bytes alone (_task_count); an
     # input under one open cost is one task and the caller's agg one stage
-    schema = "n_probed long, n_member long"
-    native = _native_scan(sel, [col], scan, schema)
-    return native[0] if native is not None else sel.mapInArrow(scan, schema)
+    native = _native_scan(sel, [col], scan, _COUNT_SCHEMA)
+    if native is not None:
+        return native[0]
+    return sel.mapInArrow(scan, _COUNT_SCHEMA)

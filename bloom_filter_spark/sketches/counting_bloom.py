@@ -364,7 +364,8 @@ class CountingBloomSketch:
         m = r.u32()
         k = r.u32()
         seed = r.u64()
-        state = r.array("<i4", m).astype(_DTYPE)
+        # Reader.array returns its own writable copy: no second one
+        state = r.array("<i4", m).astype(_DTYPE, copy=False)
         params = object.__new__(BloomParams)
         object.__setattr__(params, "n", n or 0)
         object.__setattr__(params, "p", p or 0.0)

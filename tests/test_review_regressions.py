@@ -235,3 +235,29 @@ def test_token_fixtures_land_when_doc_twins_exist(tmp_path):
         assert os.path.exists(os.path.join(out, f)), f
     # idempotent re-entry takes the marker fast path
     assert ensure_fixtures("sf0.001", root=root) == out
+
+
+def test_check_correctness_refuses_an_unknown_query(monkeypatch, capsys):
+    """The correctness gate exits 2 on a query name it does not know,
+    before any session starts, instead of reporting ALL OK after running
+    no query."""
+    import importlib.util
+    import os
+    import sys
+
+    import bloom_filter_spark.session as session
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "check_correctness.py")
+    spec = importlib.util.spec_from_file_location("check_correctness", path)
+    cc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cc)
+
+    def no_session(*a, **k):
+        raise AssertionError("a session started")
+    monkeypatch.setattr(session, "get_spark", no_session)
+    monkeypatch.setattr(sys, "argv", ["check_correctness.py", "sf0.01",
+                                      "typo"])
+    assert cc.main() == 2
+    out = capsys.readouterr()
+    assert "no such query: typo" in out.err
+    assert "ALL OK" not in out.out

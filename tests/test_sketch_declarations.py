@@ -129,10 +129,13 @@ def _assert_order_free(sk, v, value_kind):
 @pytest.mark.parametrize("kind", PURE)
 def test_multiset_pure_ignores_order_and_chunking(kind):
     sk = _sketch(kind)
-    kinds = [vk for vk in ("i32", "i64", "f64") if _has_update(sk, vk)]
+    kinds = [vk for vk in ("i32", "i64", "f64", "str")
+             if _has_update(sk, vk)]
     assert kinds
     for value_kind in kinds:
-        _assert_order_free(sk, _values(), value_kind)
+        v = _values()
+        _assert_order_free(sk, v.astype(str) if value_kind == "str" else v,
+                           value_kind)
 
 
 def test_collapsed_ddsketch_is_multiset_pure():

@@ -454,6 +454,26 @@ def test_list_key_column_is_refused_as_scalar_keys(spark):
         F.sum("n_member")).collect()[0][0] == 1
 
 
+def test_key_check_reads_a_plain_field_from_the_schema(spark, monkeypatch):
+    """A plain top-level key column is typed from ``df.schema`` (kept per
+    DataFrame, no new ``select``); any other name — differently cased or
+    nested — is still resolved by Spark's own ``select``."""
+    from bloom_filter_spark.operators.build import _check_key_column
+    df = spark.createDataFrame([([1, 2], (3,))],
+                               "toks array<int>, s struct<x: int>")
+    assert df.schema.names == ["toks", "s"]  # read before select is patched
+
+    def refuse(self, *cols):
+        raise LookupError(f"select{cols}")
+    monkeypatch.setattr(type(df), "select", refuse)
+    _check_key_column(df, "toks", "i32_array", "inserted")
+    with pytest.raises(ValueError, match="cannot be inserted as i32 "):
+        _check_key_column(df, "toks", "i32", "inserted")
+    for name in ("TOKS", "s.x"):
+        with pytest.raises(LookupError, match=name):
+            _check_key_column(df, name, "i32", "inserted")
+
+
 def test_membership_scan_scalar_and_str(spark, sf_small, bloom_blob):
     from bloom_filter_spark.operators import membership_scan
     sketch, blob = bloom_blob

@@ -4,6 +4,9 @@ row count + schema width + order-insensitive value hash (columns sorted by
 name, floats rounded to 9 significant digits).
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+
+Exit 0 when every selected query matches its oracle, 1 on any failure, 2
+on a usage error: an unknown query name, or a selection that ran no query.
 """
 
 from __future__ import annotations
@@ -51,6 +54,11 @@ def main() -> int:
         del argv[i:i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
+    import __spark_entry__ as entrymod
+    unknown = sorted(only - set(entrymod.queries()))
+    if unknown:
+        print(f"error: no such query: {', '.join(unknown)}", file=sys.stderr)
+        return 2
     # fixture-backed oracles must read the SAME scale the queries run at;
     # they resolve the name under /root/testdata, so a custom sf_dir outside
     # that root would silently point them at the wrong data (ADVICE r6)
@@ -61,7 +69,6 @@ def main() -> int:
         return 2
     os.environ["SPARK_GRAFT_ORACLE_SF"] = os.path.basename(
         sf_dir.rstrip("/"))
-    import __spark_entry__ as entrymod
     from bloom_filter_spark.session import get_spark
 
     spark = get_spark("correctness-check")
@@ -120,6 +127,9 @@ def main() -> int:
         else:
             print(f"ok    {name}: rows={len(sdf)} hash match ({took:.1f}s)")
             record[name] = {"ok": True, "rows": len(sdf), "sec": round(took, 2)}
+    if not record:
+        print("error: no query ran", file=sys.stderr)
+        return 2
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     if json_path:
         import json as _json
