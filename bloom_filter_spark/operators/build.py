@@ -608,15 +608,16 @@ def _native_scan(df: DataFrame, cols: list[str], fn, schema: StructType,
         if splits is None:
             log.info("native scan declined: the files hold no row group")
             return None
-    bc = spark.sparkContext.broadcast(splits)
-
+    # the splits ride in the task closure: PySpark broadcasts a pickled
+    # command past its 1 MiB threshold itself, so only a large split list
+    # pays a broadcast, and a small one saves its py4j round trips
     def native_fn(batches):
         import pyarrow as pa
 
         def tables():
             for b in batches:
                 for sid in b.column(0).to_pylist():
-                    for t in _iter_rg_tables(bc.value[sid], phys):
+                    for t in _iter_rg_tables(splits[sid], phys):
                         yield pa.Table.from_arrays(
                             [t.column(p) for p in phys], cols)
 

@@ -70,7 +70,7 @@ _NULL_FILL = {"str": ""}
 
 def _cache_key(blob: bytes, kind: str, dkw: dict | None = None) -> tuple:
     # computed driver-side (``_handle``); stable across executors.
-    # cryptographic digest — same-kind sketches with identical params always
+    # cryptographic digest — same-kind sketches with identical params mostly
     # have identical length, so a weak checksum would be the sole
     # discriminator and a 32-bit collision would silently probe wrong state.
     # deserialize kwargs (e.g. hash_family) are part of the identity: the

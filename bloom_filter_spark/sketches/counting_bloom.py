@@ -185,7 +185,15 @@ class CountingBloomSketch:
     def merge(self, a, b) -> np.ndarray:
         return a + b
 
-    # -- sharded serde (the changelog fold's layout at every width) --------
+    # -- one encoding rule for every blob ----------------------------------
+    # Every counter blob picks its body by ONE rule, the shorter of two:
+    # sparse below half fill, dense otherwise (``_body``; HLL picks its
+    # sparse layout the same way).  It covers the monolithic serialize()
+    # blob and each column-range shard blob.
+    #   dense body:  <i4 × cells
+    #   sparse body: u8 1 | u32 nnz | <u4 idx × nnz | <i4 val × nnz
+    #                (indices strictly ascending, no value 0)
+    #
     # A full-capacity counting bloom at 10^7+ keys serializes to hundreds of
     # MB; shipping that as ONE blob per partition forces the merge to either
     # coalesce the scan (losing parallelism) or funnel GB-scale rows through
@@ -194,15 +202,13 @@ class CountingBloomSketch:
     # past the driver budget is a single groupBy(shard_id) — state WIDTH
     # converts to merge PARALLELISM, and per-merge-task memory is one shard,
     # not the filter (within the budget the driver folds the shard rows).
-    # Segments with few touched cells ship sparse ((u32 rel-idx, i4 val)
-    # pairs, indices strictly ascending): a partition's shard volume is
-    # bounded by its row count × k, not by m — at scale the shuffle carries
-    # the data actually written.  A sparse fold emits those pairs straight
-    # from its summed cells (no dense segment unless the shard is at least
-    # half full), and the merge adds them into one dense accumulator.
-    # Layout (LE): u32 m | u32 k | u64 seed | u32 n_shards | u32 shard_id |
-    #              u8 mode | mode 0: dense <i4 cells[lo:hi]
-    #                       | mode 1: u32 nnz | <u4 rel_idx×nnz | <i4 val×nnz
+    # With the rule, a partition's shard volume is bounded by its row count
+    # × k, not by m: a sparse fold emits its summed cells with no dense
+    # segment, the merge sums sparse shards without one, and reassembly
+    # concatenates them — no step holds m counters for a lightly filled
+    # filter.  Shard layout (LE):
+    #   u32 m | u32 k | u64 seed | u32 n_shards | u32 shard_id |
+    #   u8 mode 0 | dense body   or   sparse body (its mode byte is 1)
     def shard_count(self) -> int:
         """Number of column-range shards so a dense shard ≈
         SHARD_TARGET_BYTES."""
@@ -212,32 +218,19 @@ class CountingBloomSketch:
         m = self.params.m
         return shard_id * m // n_shards, (shard_id + 1) * m // n_shards
 
-    def _emit_cells(self, rel: np.ndarray, vals, width: int, shard_id: int,
-                    n_shards: int, seg: np.ndarray | None = None) -> bytes:
-        """Shard blob of a ``width``-cell shard whose nonzero cells are
-        ``rel`` (shard-relative, strictly ascending) holding ``vals``:
-        sparse below 50% fill, else dense.  A caller holding the dense
-        shard passes it as ``seg`` and ``vals`` None: it is copied as is,
-        and read at ``rel`` only for a sparse blob."""
+    def _emit_cells(self, width: int, shard_id: int, n_shards: int,
+                    rel=None, vals=None, seg=None) -> bytes:
+        """Shard blob of ``width`` cells, given as in ``_body``."""
         p = self.params
-        header = (pack_u32(p.m) + pack_u32(p.k) + pack_u64(p.seed)
-                  + pack_u32(n_shards) + pack_u32(shard_id))
-        if rel.size * 8 < width * 4:  # sparse wins below 50% fill
-            vals = seg[rel] if vals is None else vals
-            return (header + b"\x01" + pack_u32(rel.size)
-                    + rel.astype("<u4").tobytes()
-                    + vals.astype("<i4").tobytes())
-        if seg is None:
-            seg = np.zeros(width, dtype=_DTYPE)
-            seg[rel] = vals
-        return header + b"\x00" + seg.astype("<i4").tobytes()
+        return b"".join([pack_u32(p.m), pack_u32(p.k), pack_u64(p.seed),
+                         pack_u32(n_shards), pack_u32(shard_id),
+                         *_body(width, rel, vals, seg, dense_mode=b"\x00")])
 
     def serialize_shard(self, state: np.ndarray, shard_id: int,
                         n_shards: int) -> bytes:
         lo, hi = self.shard_bounds(shard_id, n_shards)
-        seg = state[lo:hi]
-        return self._emit_cells(np.flatnonzero(seg), None, hi - lo, shard_id,
-                                n_shards, seg)
+        return self._emit_cells(hi - lo, shard_id, n_shards,
+                                seg=state[lo:hi])
 
     # -- sparse accumulation (per-task memory ∝ data, not filter width) ----
     def delta_cells(self, values, signs, kind: str
@@ -275,56 +268,68 @@ class CountingBloomSketch:
         return head, n_shards, shard_id, hi - lo
 
     @classmethod
-    def merge_shard_blobs(cls, blobs: list) -> bytes:
-        """Counter-sum N same-shard blobs → one DENSE shard blob.  All blobs
-        must agree on (m, k, seed, n_shards, shard_id) — header-checked like
-        merge_blobs — and each body must end exactly at its blob's end
-        (dense: 4 B per cell; sparse: u32 nnz + 8 B per pair, every
-        index inside the shard)."""
-        head, _, _, width = cls._shard_header(blobs[0])
+    def _shard_cells(cls, b, width: int, what: str = "shard"):
+        """→ (dense <i4 cells, None) or (None, (idx, vals)) of shard blob
+        ``b`` of ``width`` cells, its body checked: a dense body is exactly
+        4 B per cell, a sparse one as ``_sparse_cells`` checks."""
+        b = memoryview(b)
         body = cls._SHARD_HEADER_LEN + 1
-        acc = np.zeros(width, dtype=_DTYPE)
+        if len(b) < body:
+            raise ValueError(f"truncated cbloom {what} blob ({len(b)} B)")
+        mode = b[cls._SHARD_HEADER_LEN]
+        if mode == 0:
+            if len(b) != body + 4 * width:
+                raise ValueError(f"dense cbloom {what} body is "
+                                 f"{len(b) - body} B, expected {4 * width}")
+            return np.frombuffer(b, "<i4", width, body), None
+        if mode == 1:
+            return None, _sparse_cells(b, body, width, what)
+        raise ValueError(f"unknown cbloom {what} mode byte {mode}")
+
+    @classmethod
+    def merge_shard_blobs(cls, blobs: list) -> bytes:
+        """Counter-sum N same-shard blobs → one shard blob by the encoding
+        rule.  All blobs must agree on (m, k, seed, n_shards, shard_id) —
+        header-checked like merge_blobs — and each body must pass
+        ``_shard_cells``.  A lone blob is returned as it is; sparse blobs
+        whose cells sum to few pairs merge without a dense segment."""
+        head, _, _, width = cls._shard_header(blobs[0])
+        cells = []
         for b in blobs:
-            b = memoryview(b)
-            if len(b) < body or b[:cls._SHARD_HEADER_LEN] != head:
+            if bytes(b[:cls._SHARD_HEADER_LEN]) != head:
                 raise ValueError(
                     "refusing to merge cbloom shards with different "
                     "params/seeds/shard identity")
-            mode = b[cls._SHARD_HEADER_LEN]
-            if mode == 0:
-                if len(b) != body + 4 * width:
-                    raise ValueError(
-                        f"dense cbloom shard body is {len(b) - body} B, "
-                        f"expected {4 * width}")
-                acc += np.frombuffer(b, "<i4", width, body)
-            elif mode == 1:
-                nnz = int.from_bytes(b[body:body + 4], "little")
-                if len(b) != body + 4 + 8 * nnz:
-                    raise ValueError(
-                        f"sparse cbloom shard body is {len(b) - body} B, "
-                        f"not 4 + 8 × its nnz")
-                idx = np.frombuffer(b, "<u4", nnz, body + 4)
-                if nnz > 1 and not (idx[1:] > idx[:-1]).all():
-                    raise ValueError(
-                        "sparse cbloom shard indices are not strictly "
-                        "ascending")
-                if nnz and int(idx[-1]) >= width:
-                    raise ValueError(
-                        f"sparse cbloom shard index {int(idx[-1])} outside "
-                        f"its {width} cells")
-                # distinct indices: a plain fancy add is exact
-                acc[idx] += np.frombuffer(b, "<i4", nnz, body + 4 + 4 * nnz)
-            else:
-                raise ValueError(f"unknown cbloom shard mode byte {mode}")
-        return b"".join([head, b"\x00", acc.astype("<i4", copy=False)])
+            cells.append(cls._shard_cells(b, width))
+        if len(blobs) == 1:
+            return bytes(blobs[0])
+        if all(seg is None for seg, _ in cells) and (
+                8 * sum(c[0].size for _, c in cells) < width):
+            rel, vals = _sum_cells(np.concatenate([c[0] for _, c in cells]),
+                                   np.concatenate([c[1] for _, c in cells]),
+                                   presorted=True)
+            return b"".join([head, *_body(width, rel, vals,
+                                          dense_mode=b"\x00")])
+        acc = np.zeros(width, dtype=_DTYPE)
+        for seg, sparse in cells:
+            if seg is not None:
+                acc += seg
+            else:  # distinct indices: a plain fancy add is exact
+                acc[sparse[0]] += sparse[1]
+        return b"".join([head, *_body(width, seg=acc, dense_mode=b"\x00")])
 
     @classmethod
     def reassemble_shards(cls, blobs: list) -> bytes:
-        """DENSE shard blobs (one per shard_id, any order) → the monolithic
-        serialize() layout, bit-for-bit, copying each body once."""
+        """Shard blobs (one per shard_id, any order, either encoding) → the
+        monolithic serialize() blob, bit-for-bit.  The rule applies to the
+        filter's total nonzero cells: below half fill the shards' cells
+        are concatenated at their offsets; otherwise dense bodies are
+        copied as they are and only sparse shards are expanded.  A dense
+        shard is at least half full (the rule), so when every shard is
+        dense no cell is counted."""
         if not blobs:
             raise ValueError("no cbloom shard blobs to reassemble")
-        bodies = {}
+        shards = {}
         filt = None
         for b in blobs:
             head, n_shards, sid, width = cls._shard_header(b)
@@ -332,40 +337,74 @@ class CountingBloomSketch:
                 filt = head[:20]  # m | k | seed | n_shards
             elif head[:20] != filt:
                 raise ValueError("mixed-filter shards in reassembly")
-            b = memoryview(b)
-            if b[cls._SHARD_HEADER_LEN] != 0:
-                raise ValueError("reassembly expects dense shard blobs")
-            if len(b) != cls._SHARD_HEADER_LEN + 1 + 4 * width:
-                raise ValueError(
-                    f"dense cbloom shard {sid} is {len(b)} B, expected "
-                    f"{cls._SHARD_HEADER_LEN + 1 + 4 * width}")
-            if sid in bodies:
+            if sid in shards:
                 raise ValueError(f"duplicate cbloom shard {sid} in reassembly")
-            bodies[sid] = b[cls._SHARD_HEADER_LEN + 1:]
-        if sorted(bodies) != list(range(n_shards)):
+            shards[sid] = cls._shard_cells(b, width, f"shard {sid}")
+        if sorted(shards) != list(range(n_shards)):
             raise ValueError(
-                f"incomplete shard set: have {sorted(bodies)} of {n_shards}")
-        # the serialize() header (m | k | seed) is the shard header's prefix
-        return b"".join([filt[:16], *(bodies[i] for i in range(n_shards))])
+                f"incomplete shard set: have {sorted(shards)} of {n_shards}")
+        m = int.from_bytes(filt[:4], "little")
+        ordered = [shards[i] for i in range(n_shards)]
+        if any(seg is None for seg, _ in ordered):
+            nnz = sum(c[0].size if seg is None else np.count_nonzero(seg)
+                      for seg, c in ordered)
+            if _sparse_wins(nnz, m):
+                rel, vals = [], []
+                for sid, (seg, c) in enumerate(ordered):
+                    if seg is not None:
+                        nz = np.flatnonzero(seg)
+                        c = nz, seg[nz]
+                    rel.append(c[0].astype(np.int64) + sid * m // n_shards)
+                    vals.append(c[1])
+                # the serialize() header (m | k | seed) is the shard
+                # header's prefix
+                return b"".join([filt[:16], *_body(m, np.concatenate(rel),
+                                                   np.concatenate(vals))])
+        bodies = []
+        for sid, (seg, c) in enumerate(ordered):
+            if seg is None:
+                lo, hi = sid * m // n_shards, (sid + 1) * m // n_shards
+                seg = np.zeros(hi - lo, dtype=_DTYPE)
+                seg[c[0]] = c[1]
+            bodies.append(seg)
+        return b"".join([filt[:16], *bodies])
 
     # -- serde (engine layout; the reference has no counting filter) -------
-    header_len = 16  # u32 m | u32 k | u64 seed (counters follow)
+    header_len = 16  # u32 m | u32 k | u64 seed (the body follows)
+    # the dense layout: the sparse one is only chosen when it is shorter
     state_bytes_max = property(lambda self: 16 + self.params.m * 4)
 
     def serialize(self, state: np.ndarray) -> bytes:
+        """LE u32 m | u32 k | u64 seed | body by the encoding rule: the
+        dense body (16 + 4m B, even — the layout every older blob has) at
+        or past half fill, else the sparse one (21 + 8·nnz B, odd)."""
         p = self.params
-        header = pack_u32(p.m) + pack_u32(p.k) + pack_u64(p.seed)
-        return header + state.astype("<i4").tobytes()
+        return b"".join([pack_u32(p.m), pack_u32(p.k), pack_u64(p.seed),
+                         *_body(p.m, seg=state)])
 
     @classmethod
     def deserialize(cls, blob: bytes, n: int | None = None,
                     p: float | None = None):
+        """Either layout of ``serialize`` → (sketch, dense counters).  A
+        blob of 16 + 4m bytes (or longer: refused) is dense, a shorter one
+        whose mode byte is 1 sparse; any other ends inside its layout."""
         r = Reader(blob)
         m = r.u32()
         k = r.u32()
         seed = r.u64()
-        # Reader.array returns its own writable copy: no second one
-        state = r.array("<i4", m).astype(_DTYPE, copy=False)
+        dense = 16 + 4 * m
+        if dense > len(blob) > 16 and blob[16] == 1:
+            idx, vals = _sparse_cells(memoryview(blob), 17, m, "blob")
+            state = np.zeros(m, dtype=_DTYPE)
+            state[idx] = vals
+        elif len(blob) < dense:
+            raise ValueError(
+                f"cbloom blob ends at byte {len(blob)}, inside its layout: "
+                f"a dense one needs {dense} B, a sparse one mode byte 1")
+        else:
+            # Reader.array returns its own writable copy: no second one
+            state = r.array("<i4", m).astype(_DTYPE, copy=False)
+            r.end()
         params = object.__new__(BloomParams)
         object.__setattr__(params, "n", n or 0)
         object.__setattr__(params, "p", p or 0.0)
@@ -375,8 +414,84 @@ class CountingBloomSketch:
         object.__setattr__(params, "k", k)
         object.__setattr__(params, "m", m)
         object.__setattr__(params, "n_words", (m >> 6) + 1)
-        r.end()
         return cls(params), state
+
+
+def _sparse_wins(nnz: int, width: int) -> bool:
+    """THE encoding rule: 8 B per nonzero cell beat 4 B per cell below half
+    fill."""
+    return 2 * nnz < width
+
+
+def _body(width: int, rel=None, vals=None, seg=None,
+          dense_mode: bytes = b"") -> list:
+    """Body of ``width`` cells by the encoding rule, as parts for
+    ``b"".join``: the sparse body, or ``dense_mode`` (the shard layout's
+    mode byte 0; nothing in the monolithic one) and the dense cells.  The
+    cells come as ``rel`` (nonzero, strictly ascending) holding ``vals``,
+    or as the dense ``seg``, copied as it is and searched for its nonzero
+    cells only when the body is sparse."""
+    nnz = np.count_nonzero(seg) if rel is None else rel.size
+    if _sparse_wins(nnz, width):
+        if rel is None:
+            rel = np.flatnonzero(seg)
+        vals = seg[rel] if vals is None else vals
+        return [b"\x01", pack_u32(rel.size), rel.astype("<u4"),
+                vals.astype("<i4")]
+    if seg is None:
+        seg = np.zeros(width, dtype=_DTYPE)
+        seg[rel] = vals
+    return [dense_mode, seg.astype("<i4", copy=False)]
+
+
+def _sparse_cells(b: memoryview, off: int, width: int, what: str
+                  ) -> tuple[np.ndarray, np.ndarray]:
+    """(idx, vals) of the sparse body after its mode byte at ``off`` in
+    ``b``, checked: it ends exactly at the blob's end, holds fewer cells
+    than half of ``width`` (the rule), and its indices are strictly
+    ascending and inside ``width``, its values nonzero."""
+    if len(b) < off + 4:
+        raise ValueError(f"sparse cbloom {what} body is {len(b) - off} B, "
+                         f"not 4 + 8 × its nnz")
+    nnz = int.from_bytes(b[off:off + 4], "little")
+    if len(b) != off + 4 + 8 * nnz:
+        raise ValueError(
+            f"sparse cbloom {what} body is {len(b) - off} B, not 4 + 8 × "
+            f"its nnz {nnz}: it ends "
+            + ("inside its layout" if len(b) < off + 4 + 8 * nnz
+               else f"{len(b) - off - 4 - 8 * nnz} bytes past its layout"))
+    if not _sparse_wins(nnz, width):
+        raise ValueError(f"sparse cbloom {what} holds {nnz} of {width} "
+                         f"cells: at half fill the body is dense")
+    idx = np.frombuffer(b, "<u4", nnz, off + 4)
+    vals = np.frombuffer(b, "<i4", nnz, off + 4 + 4 * nnz)
+    if nnz > 1 and not (idx[1:] > idx[:-1]).all():
+        raise ValueError(
+            f"sparse cbloom {what} indices are not strictly ascending")
+    if nnz and int(idx[-1]) >= width:
+        raise ValueError(f"sparse cbloom {what} index {int(idx[-1])} "
+                         f"outside its {width} cells")
+    if not vals.all():
+        raise ValueError(f"sparse cbloom {what} holds a zero value")
+    return idx, vals
+
+
+def _sum_cells(idx: np.ndarray, vals: np.ndarray, presorted: bool = False
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """(cells, sums) of (cell, delta) pairs: strictly ascending cells, the
+    deltas of a cell summed, zero sums dropped.  Sums commute, so an
+    unstable sort gives the same cells; ``presorted``: ``idx`` is a
+    concatenation of ascending runs, which a stable sort merges."""
+    order = np.argsort(idx, kind="stable" if presorted else None)
+    idx, vals = idx[order], vals[order]
+    if idx.size:
+        starts = np.flatnonzero(np.concatenate(([True],
+                                                idx[1:] != idx[:-1])))
+        idx = idx[starts]
+        vals = np.add.reduceat(vals, starts, dtype=_DTYPE)
+        live = vals != 0
+        idx, vals = idx[live], vals[live]
+    return idx, vals
 
 
 class ShardFold:
@@ -416,21 +531,11 @@ class ShardFold:
                     for i in range(n_shards)]
         # one sort, duplicate cells summed and zero sums dropped, then each
         # shard emits its contiguous slice — O(E log E + shards), and no
-        # dense segment for a shard under half full.  Sums commute, so an
-        # unstable sort gives the same cells.
-        idx, delta = self._pairs()
-        order = np.argsort(idx)
-        idx, delta = idx[order], delta[order]
-        if idx.size:
-            starts = np.flatnonzero(np.concatenate(([True],
-                                                    idx[1:] != idx[:-1])))
-            idx = idx[starts]
-            delta = np.add.reduceat(delta, starts, dtype=_DTYPE)
-            live = delta != 0
-            idx, delta = idx[live], delta[live]
+        # dense segment for a shard under half full
+        idx, delta = _sum_cells(*self._pairs())
         bounds = [sk.shard_bounds(i, n_shards) for i in range(n_shards)]
         cuts = np.searchsorted(idx, [lo for lo, _ in bounds] + [sk.params.m])
-        return [sk._emit_cells(idx[cuts[i]:cuts[i + 1]] - lo,
-                               delta[cuts[i]:cuts[i + 1]], hi - lo, i,
-                               n_shards)
+        return [sk._emit_cells(hi - lo, i, n_shards,
+                               idx[cuts[i]:cuts[i + 1]] - lo,
+                               delta[cuts[i]:cuts[i + 1]])
                 for i, (lo, hi) in enumerate(bounds)]

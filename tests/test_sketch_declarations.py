@@ -209,7 +209,8 @@ def test_deserialize_refuses_a_truncated_blob(kind):
             SKETCH_KINDS[kind].deserialize(blob[:cut])
 
 
-# kinds whose serialized length depends on params alone
+# kinds whose serialized length depends on params alone once 10^6 values
+# fill them (cbloom: at or past half fill, where its blob is dense)
 FIXED_SIZE = {"bloom", "blocked_bloom", "cbloom", "cms", "countsketch",
               "cuckoo"}
 
