@@ -212,13 +212,17 @@ def main() -> None:
     from bloom_filter_spark.operators import build_delta_sketch
     from bloom_filter_spark.plans.queries import _parity_changelog
     from bloom_filter_spark.sketches import CountingBloomSketch
-    if wanted("cbloom_changelog_build"):
+    if wanted("cbloom_changelog_build", "cbloom_changelog_build_dense"):
         _, changelog, cb_full = _parity_changelog(spark, sf_dir)
         changelog_sub = changelog.where(F.crc32(F.col("doc_id")) % 3 == 0)
         cb = CountingBloomSketch(BloomParams(n=cb_full.params.n // 3 + 16,
                                              p=0.01))
         timed("cbloom_changelog_build", lambda: build_delta_sketch(
             changelog_sub, cb, "doc_id", "sign", "str")[1])
+        # the whole changelog into the same filter: past half full (63% at
+        # sf0.1), so its blobs take the dense layout
+        timed("cbloom_changelog_build_dense", lambda: build_delta_sketch(
+            changelog, cb, "doc_id", "sign", "str")[1])
 
     n_ids = min(max(int((n_tokens or 0) // 4), 100_000), 4_000_000)
     doc_ids = spark.range(n_ids).select(

@@ -187,9 +187,10 @@ class CountingBloomSketch:
 
     # -- one encoding rule for every blob ----------------------------------
     # Every counter blob picks its body by ONE rule, the shorter of two:
-    # sparse below half fill, dense otherwise (``_body``; HLL picks its
-    # sparse layout the same way).  It covers the monolithic serialize()
-    # blob and each column-range shard blob.
+    # sparse where 5 + 8·nnz < 4·cells — below half fill for an even cell
+    # count — dense otherwise (``_body``; HLL picks its sparse layout the
+    # same way).  It covers the monolithic serialize() blob and each
+    # column-range shard blob.
     #   dense body:  <i4 × cells
     #   sparse body: u8 1 | u32 nnz | <u4 idx × nnz | <i4 val × nnz
     #                (indices strictly ascending, no value 0)
@@ -291,8 +292,7 @@ class CountingBloomSketch:
         """Counter-sum N same-shard blobs → one shard blob by the encoding
         rule.  All blobs must agree on (m, k, seed, n_shards, shard_id) —
         header-checked like merge_blobs — and each body must pass
-        ``_shard_cells``.  A lone blob is returned as it is; sparse blobs
-        whose cells sum to few pairs merge without a dense segment."""
+        ``_shard_cells``.  A lone blob is returned as it is."""
         head, _, _, width = cls._shard_header(blobs[0])
         cells = []
         for b in blobs:
@@ -303,13 +303,6 @@ class CountingBloomSketch:
             cells.append(cls._shard_cells(b, width))
         if len(blobs) == 1:
             return bytes(blobs[0])
-        if all(seg is None for seg, _ in cells) and (
-                8 * sum(c[0].size for _, c in cells) < width):
-            rel, vals = _sum_cells(np.concatenate([c[0] for _, c in cells]),
-                                   np.concatenate([c[1] for _, c in cells]),
-                                   presorted=True)
-            return b"".join([head, *_body(width, rel, vals,
-                                          dense_mode=b"\x00")])
         acc = np.zeros(width, dtype=_DTYPE)
         for seg, sparse in cells:
             if seg is not None:
@@ -325,8 +318,9 @@ class CountingBloomSketch:
         filter's total nonzero cells: below half fill the shards' cells
         are concatenated at their offsets; otherwise dense bodies are
         copied as they are and only sparse shards are expanded.  A dense
-        shard is at least half full (the rule), so when every shard is
-        dense no cell is counted."""
+        shard holds at least ``_dense_min`` of its cells (the rule), so
+        when every shard is dense and has an even width no cell is
+        counted."""
         if not blobs:
             raise ValueError("no cbloom shard blobs to reassemble")
         shards = {}
@@ -345,7 +339,11 @@ class CountingBloomSketch:
                 f"incomplete shard set: have {sorted(shards)} of {n_shards}")
         m = int.from_bytes(filt[:4], "little")
         ordered = [shards[i] for i in range(n_shards)]
-        if any(seg is None for seg, _ in ordered):
+        # a dense shard holds at least _dense_min of its cells: where those
+        # floors reach the filter's (always, for even widths) the blob is
+        # dense without a count
+        if any(seg is None for seg, _ in ordered) or sum(
+                _dense_min(seg.size) for seg, _ in ordered) < _dense_min(m):
             nnz = sum(c[0].size if seg is None else np.count_nonzero(seg)
                       for seg, c in ordered)
             if _sparse_wins(nnz, m):
@@ -377,7 +375,8 @@ class CountingBloomSketch:
     def serialize(self, state: np.ndarray) -> bytes:
         """LE u32 m | u32 k | u64 seed | body by the encoding rule: the
         dense body (16 + 4m B, even — the layout every older blob has) at
-        or past half fill, else the sparse one (21 + 8·nnz B, odd)."""
+        or past half fill (always, for m = 1), else the sparse one
+        (21 + 8·nnz B, odd and shorter)."""
         p = self.params
         return b"".join([pack_u32(p.m), pack_u32(p.k), pack_u64(p.seed),
                          *_body(p.m, seg=state)])
@@ -387,20 +386,27 @@ class CountingBloomSketch:
                     p: float | None = None):
         """Either layout of ``serialize`` → (sketch, dense counters).  A
         blob of 16 + 4m bytes (or longer: refused) is dense, a shorter one
-        whose mode byte is 1 sparse; any other ends inside its layout."""
+        whose mode byte is 1 sparse (its length is then odd); any other,
+        and one that the sparse layout does not fit, ends inside its
+        layout."""
         r = Reader(blob)
         m = r.u32()
         k = r.u32()
         seed = r.u64()
         dense = 16 + 4 * m
-        if dense > len(blob) > 16 and blob[16] == 1:
-            idx, vals = _sparse_cells(memoryview(blob), 17, m, "blob")
+        if len(blob) < dense:
+            # a truncated dense blob can look sparse: the error says both
+            try:
+                if len(blob) <= 16 or blob[16] != 1:
+                    raise ValueError("no mode byte 1")
+                idx, vals = _sparse_cells(memoryview(blob), 17, m, "blob")
+            except ValueError as e:
+                raise ValueError(
+                    f"cbloom blob ends at byte {len(blob)}, inside its "
+                    f"layout: a dense one needs {dense} B; as sparse: {e}"
+                ) from None
             state = np.zeros(m, dtype=_DTYPE)
             state[idx] = vals
-        elif len(blob) < dense:
-            raise ValueError(
-                f"cbloom blob ends at byte {len(blob)}, inside its layout: "
-                f"a dense one needs {dense} B, a sparse one mode byte 1")
         else:
             # Reader.array returns its own writable copy: no second one
             state = r.array("<i4", m).astype(_DTYPE, copy=False)
@@ -417,10 +423,17 @@ class CountingBloomSketch:
         return cls(params), state
 
 
+def _dense_min(width: int) -> int:
+    """Fewest nonzero cells a dense body of ``width`` cells holds: from
+    there on the sparse body (5 + 8·nnz B) is no shorter than the dense
+    cells (4·width B).  Half of ``width`` when it is even."""
+    return (2 * width + 1) // 4
+
+
 def _sparse_wins(nnz: int, width: int) -> bool:
-    """THE encoding rule: 8 B per nonzero cell beat 4 B per cell below half
-    fill."""
-    return 2 * nnz < width
+    """THE encoding rule: sparse only where it is shorter — below half
+    fill for an even width, never for a width of 1."""
+    return nnz < _dense_min(width)
 
 
 def _body(width: int, rel=None, vals=None, seg=None,
@@ -447,8 +460,8 @@ def _body(width: int, rel=None, vals=None, seg=None,
 def _sparse_cells(b: memoryview, off: int, width: int, what: str
                   ) -> tuple[np.ndarray, np.ndarray]:
     """(idx, vals) of the sparse body after its mode byte at ``off`` in
-    ``b``, checked: it ends exactly at the blob's end, holds fewer cells
-    than half of ``width`` (the rule), and its indices are strictly
+    ``b``, checked: it ends exactly at the blob's end, is shorter than the
+    dense body of ``width`` cells (the rule), and its indices are strictly
     ascending and inside ``width``, its values nonzero."""
     if len(b) < off + 4:
         raise ValueError(f"sparse cbloom {what} body is {len(b) - off} B, "
@@ -462,7 +475,7 @@ def _sparse_cells(b: memoryview, off: int, width: int, what: str
                else f"{len(b) - off - 4 - 8 * nnz} bytes past its layout"))
     if not _sparse_wins(nnz, width):
         raise ValueError(f"sparse cbloom {what} holds {nnz} of {width} "
-                         f"cells: at half fill the body is dense")
+                         f"cells: its dense body is no longer")
     idx = np.frombuffer(b, "<u4", nnz, off + 4)
     vals = np.frombuffer(b, "<i4", nnz, off + 4 + 4 * nnz)
     if nnz > 1 and not (idx[1:] > idx[:-1]).all():
@@ -476,13 +489,12 @@ def _sparse_cells(b: memoryview, off: int, width: int, what: str
     return idx, vals
 
 
-def _sum_cells(idx: np.ndarray, vals: np.ndarray, presorted: bool = False
+def _sum_cells(idx: np.ndarray, vals: np.ndarray
                ) -> tuple[np.ndarray, np.ndarray]:
     """(cells, sums) of (cell, delta) pairs: strictly ascending cells, the
     deltas of a cell summed, zero sums dropped.  Sums commute, so an
-    unstable sort gives the same cells; ``presorted``: ``idx`` is a
-    concatenation of ascending runs, which a stable sort merges."""
-    order = np.argsort(idx, kind="stable" if presorted else None)
+    unstable sort gives the same cells."""
+    order = np.argsort(idx)
     idx, vals = idx[order], vals[order]
     if idx.size:
         starts = np.flatnonzero(np.concatenate(([True],

@@ -43,7 +43,7 @@ def _fold(sk, keys, signs=None) -> np.ndarray:
     return state
 
 
-def _parent_blob(sk, state) -> bytes:
+def _older_blob(sk, state) -> bytes:
     """The layout every blob had before the rule: header and m counters."""
     p = sk.params
     return (np.array([p.m, p.k], "<u4").tobytes()
@@ -53,8 +53,10 @@ def _parent_blob(sk, state) -> bytes:
 @pytest.mark.parametrize("where", HALF)
 def test_rule_picks_the_layout_and_dense_keeps_its_bytes(where):
     """Below half fill the blob is sparse (21 + 8·nnz B, odd); at and past
-    half it is the parent's dense layout byte for byte.  A dense blob of
-    the parent's layout, of any fill, still reads as the same state."""
+    half it is the older dense layout byte for byte.  A dense blob of
+    the older layout, of any fill, still reads as the same state.  A
+    one-cell filter is dense even when empty: its sparse blob (21 B) would
+    be longer than the dense one (20 B)."""
     sk = _sketch()
     state = _fold(sk, _fill(sk, where))
     nnz = np.count_nonzero(state)
@@ -62,12 +64,21 @@ def test_rule_picks_the_layout_and_dense_keeps_its_bytes(where):
     if where == "below":
         assert len(blob) == 21 + 8 * nnz and blob[16] == 1
     else:
-        assert blob == _parent_blob(sk, state)
-    for b in (blob, _parent_blob(sk, state)):
+        assert blob == _older_blob(sk, state)
+    for b in (blob, _older_blob(sk, state)):
         back, got = CB.deserialize(b)
         np.testing.assert_array_equal(got, state)
         assert (back.params.m, back.params.k) == (sk.params.m, sk.params.k)
     assert len(CB.deserialize(sk.serialize(sk.empty()))[1]) == sk.params.m
+    one = CB(BloomParams(n=1, p=0.7))
+    assert one.params.m == 1
+    for state in (one.empty(), np.array([2], np.int32)):
+        blob = one.serialize(state)
+        assert blob == _older_blob(one, state)
+        assert len(blob) <= one.state_bytes_max
+        np.testing.assert_array_equal(CB.deserialize(blob)[1], state)
+        assert CB.merge_shard_blobs([one.serialize_shard(state, 0, 1)] * 2
+                                    )[24] == 0
 
 
 def _sparse_corruptions(blob: bytes, off: int, width: int) -> dict:
@@ -125,30 +136,54 @@ def test_every_reader_refuses_a_bad_sparse_body():
 
 
 def test_truncated_dense_blob_ends_inside_its_layout():
+    """Also where the cut leaves an odd length and counter 0 is 1, so the
+    blob's byte 16 reads as the sparse mode byte.  (Length tells the
+    layouts apart, so a cut that leaves a well-formed sparse blob — here
+    21 B, counter 1 being 0 — reads as that blob.)"""
     sk = _sketch()
-    blob = sk.serialize(_fold(sk, _fill(sk, "above")))
-    for cut in (len(blob) - 1, len(blob) - 4, 17):
+    state = _fold(sk, _fill(sk, "above"))
+    state[0] = 1
+    blob = sk.serialize(state)
+    assert blob[16] == 1 and len(blob) % 2 == 0
+    for cut in (len(blob) - 1, len(blob) - 4, len(blob) - 9, 17, 29):
         with pytest.raises(ValueError, match="inside its layout"):
             CB.deserialize(blob[:cut])
 
 
-def test_a_lone_sparse_shard_passes_through(monkeypatch):
+def test_a_lone_sparse_shard_passes_through():
     """merge_shard_blobs returns a lone valid shard as it is, and sums
-    sparse shards into the shard blob of the summed state: by sorting few
-    cells (cancelling ones included), by a dense accumulator past an
-    eighth of the shard's cells."""
+    shards into the shard blob of the summed state by the rule, cancelling
+    cells included."""
     sk = _sketch()
     keys = _fill(sk, "below")
     a, b = _fold(sk, keys[:2]), _fold(sk, keys[2:4])
     neg = _fold(sk, keys[:2], [-1, -1])
-    sa, sb, sn = (sk.serialize_shard(s, 0, 1) for s in (a, b, neg))
-    assert sa[24] == sb[24] == sn[24] == 1
+    full = _fold(sk, keys + _fill(sk, "above"))
+    sa, sb, sn, sf = (sk.serialize_shard(s, 0, 1) for s in (a, b, neg, full))
+    assert sa[24] == sb[24] == sn[24] == 1 and sf[24] == 0
     assert CB.merge_shard_blobs([sa]) == sa
-    nnz = np.count_nonzero(a)
-    assert 8 * (nnz + np.count_nonzero(b) + nnz) < sk.params.m <= 8 * 8 * nnz
     for blobs, total in (([sa, sb], a + b), ([sa, sn], a + neg),
-                         ([sa, sb, sn], b), ([sa] * 8, 8 * a)):
+                         ([sa, sb, sn], b), ([sa] * 8, 8 * a),
+                         ([sf, sa], full + a), ([sf, sn, sa], full)):
         assert CB.merge_shard_blobs(blobs) == sk.serialize_shard(total, 0, 1)
+
+
+def test_dense_shards_of_odd_width_can_reassemble_sparse():
+    """Three shards of 170, 171 and 171 cells, each holding the fewest
+    cells a dense body has (85): every shard is dense, yet the 255 cells
+    are under half of the 512, so the reassembled blob is sparse."""
+    sk = _sketch()
+    assert sk.params.m == 512
+    state = sk.empty()
+    for i in range(3):
+        lo, _ = sk.shard_bounds(i, 3)
+        state[lo:lo + 85] = 1 + i
+    shards = [sk.serialize_shard(state, i, 3) for i in range(3)]
+    assert [s[24] for s in shards] == [0, 0, 0]
+    assert sk.serialize(state)[16] == 1
+    assert CB.reassemble_shards(shards[::-1]) == sk.serialize(state)
+    merged = [CB.merge_shard_blobs([s, s]) for s in shards]
+    assert CB.reassemble_shards(merged) == sk.serialize(2 * state)
 
 
 @pytest.mark.parametrize("where", HALF)
